@@ -459,7 +459,9 @@ def connected_components(
     # the Arrow path is two contiguous int64 buffers matching the stated
     # ~32 MB budget.
     probe = und.limit(small_graph_edges + 1).toPandas()
-    if len(probe) <= small_graph_edges:  # both orientations: ≤1M input pairs
+    # both orientations: ≤1M input pairs. A null endpoint has no union-find
+    # key, so its graph takes the distributed path, which keeps it.
+    if len(probe) <= small_graph_edges and not probe.isna().any(axis=None):
         us = probe["u"].tolist()
         vs = probe["v"].tolist()
         parent: dict = {}

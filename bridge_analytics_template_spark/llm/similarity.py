@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, cosine, sign_bucket
-from ..partitioning import ensure_parallelism
+from ..partitioning import ensure_parallelism, sizing_rows
 
 
 def _ranked(pairs: DataFrame, k: int) -> DataFrame:
@@ -393,19 +393,26 @@ def _auto_block_size(n: int) -> int:
     return min(b, 4096)
 
 
-def _pack_blocks(vectors, id_col, vec_col, block_size, blk_name, rows_name, n_rows=None):
+def _pack_blocks(vectors, id_col, vec_col, block_size, n_blocks, blk_name, rows_name, n_rows):
     """Contiguous block ids in id order (operators/rowids.py — range
     partition, no global window), each block packed into ONE row
     (collect_list of (id, vec): B·d doubles ≈ block_size·dim·8 bytes).
-    Shared packing stage of the blocked-GEMM joins below. ``n_rows``: the
-    callers below always just counted the input for block sizing — passing
-    it through skips the id-assign's internal sizing job (r10)."""
+    Shared packing stage of the blocked-GEMM joins below. ``n_rows`` is
+    the caller's sizing estimate and ``n_blocks`` the block grid built from
+    it: a block id past the grid raises instead of silently falling out of
+    the block-pair join, so an under-estimate fails loudly."""
     from ..operators.rowids import assign_contiguous_ids
 
     v = vectors.select(F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("v"))
     ranked = assign_contiguous_ids(v, "vid", id_name="_rk", n_rows=n_rows)
+    blk = (F.col("_rk") / F.lit(block_size)).cast("long")
     return (
-        ranked.withColumn(blk_name, (F.col("_rk") / F.lit(block_size)).cast("long"))
+        ranked.withColumn(
+            blk_name,
+            F.when(blk < n_blocks, blk).otherwise(
+                F.raise_error(F.lit(f"blocked GEMM: more rows than the {n_rows}-row estimate"))
+            ),
+        )
         .groupBy(blk_name)
         .agg(F.collect_list(F.struct(F.col("vid"), F.col("v"))).alias(rows_name))
     )
@@ -478,23 +485,13 @@ def blocked_cosine_pairs(
     instead of per-pair interpreted folds. Block ids ascend with the vector
     id, so blk_a ≤ blk_b plus an elementwise id_a < id_b mask yields each
     unordered pair exactly once.
-
-    Sizing (r11): ``n`` feeds the block size, the grid bound and the
-    id-assign balance — never the pair set (an OVER-estimate only adds
-    empty grid rows the inner block join drops) — so it comes from the
-    parquet-footer row count (no job) and falls back to ``count()`` when
-    leaves aren't stat-able.
     """
-    from ..partitioning import estimated_scan_rows
-
     spark = vectors.sparkSession
-    n = estimated_scan_rows(vectors)
-    if n is None:
-        n = vectors.count()
+    n = sizing_rows(vectors)
     if block_size is None:
         block_size = _auto_block_size(n)
     n_blocks = max(1, -(-n // block_size))
-    packed = _pack_blocks(vectors, id_col, vec_col, block_size, "_blk", "rows", n_rows=n)
+    packed = _pack_blocks(vectors, id_col, vec_col, block_size, n_blocks, "_blk", "rows", n)
     pair_index = spark.range(n_blocks).select(
         F.col("id").alias("blk_a"),
         F.explode(F.sequence(F.col("id"), F.lit(n_blocks - 1))).alias("blk_b"),
@@ -521,27 +518,16 @@ def blocked_cosine_cross_pairs(
     block meets every right block exactly once) and no id-ordering mask —
     the two relations are disjoint by contract, so (id_l, id_r) already
     names each cross pair once. Shuffle volume is (n_l·n_r/B)·d, never
-    n_l·n_r rows.
-
-    Sizing (r11): footer row counts like :func:`blocked_cosine_pairs` —
-    for filtered sides the footer count is an UPPER bound (the whole
-    file), which only costs empty grid rows and a possibly one-step-larger
-    block size; the pair set is invariant."""
-    from ..partitioning import estimated_scan_rows
-
+    n_l·n_r rows."""
     spark = left.sparkSession
-    n_l, n_r = estimated_scan_rows(left), estimated_scan_rows(right)
-    if n_l is None:
-        n_l = left.count()
-    if n_r is None:
-        n_r = right.count()
+    n_l, n_r = sizing_rows(left), sizing_rows(right)
     if block_size is None:
         # size to the LARGER side — it dominates both shuffle and flops
         block_size = _auto_block_size(max(n_l, n_r))
     nb_l = max(1, -(-n_l // block_size))
     nb_r = max(1, -(-n_r // block_size))
-    a = _pack_blocks(left, id_col, vec_col, block_size, "blk_a", "rows_a", n_rows=n_l)
-    b = _pack_blocks(right, id_col, vec_col, block_size, "blk_b", "rows_b", n_rows=n_r)
+    a = _pack_blocks(left, id_col, vec_col, block_size, nb_l, "blk_a", "rows_a", n_l)
+    b = _pack_blocks(right, id_col, vec_col, block_size, nb_r, "blk_b", "rows_b", n_r)
     pair_index = spark.range(nb_l).select(
         F.col("id").alias("blk_a"),
         F.explode(F.sequence(F.lit(0), F.lit(nb_r - 1))).alias("blk_b"),

@@ -34,7 +34,8 @@ SMALL_GRAPH_ARCS = 2_000_000
 def try_collect_arcs(arcs: DataFrame, max_arcs: int | None = None):
     """ONE bounded action: ``limit(max+1).toPandas()`` materializes the arc
     lineage and returns ``(src_ids, dst_ids)`` int64 arrays iff the graph
-    fits, else None (the over-bound probe wastes only the bounded fetch).
+    fits and has no null endpoint, else None (the over-bound probe wastes
+    only the bounded fetch).
     Column order in ``arcs`` must be (src, dst). ``max_arcs`` defaults to
     the module's SMALL_GRAPH_ARCS at call time (monkeypatchable in tests
     to force the distributed path).
@@ -49,7 +50,8 @@ def try_collect_arcs(arcs: DataFrame, max_arcs: int | None = None):
     if max_arcs is None:
         max_arcs = SMALL_GRAPH_ARCS
     pdf = arcs.limit(max_arcs + 1).toPandas()
-    if len(pdf) > max_arcs:
+    if len(pdf) > max_arcs or pdf.isna().any(axis=None):
+        # a null endpoint has no int64 form: the distributed loop keeps it
         return None
     src = pdf.iloc[:, 0].to_numpy(dtype=np.int64)
     dst = pdf.iloc[:, 1].to_numpy(dtype=np.int64)

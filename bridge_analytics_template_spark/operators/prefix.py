@@ -39,32 +39,12 @@ def partitioned_cumsum(
     """Add ``cum_name`` = running sum of ``value_col`` in ``order_cols``
     order, fully distributed. When ``total_name`` is given, also add the
     grand total as a constant column (it falls out of the offset pass for
-    free — no extra job, no unpartitioned window).
+    free — no extra job, no unpartitioned window). ``n`` only sets cost
+    (partitioning.py's sizing contract); an input small enough for one
+    bucket with no grand total requested runs no driver-blocking job."""
+    from ..partitioning import sizing_rows
 
-    Sizing (r11): ``n`` only feeds the boundary-sample rate and the
-    one-bucket cutover — never the values (the cumsum is a pure function
-    of the global order) — so the exact ``count()`` job is replaced by the
-    parquet-footer row count of the plan's leaves (an UPPER bound for any
-    non-expanding plan; estimated_scan_rows), falling back to ``count()``
-    when leaves aren't stat-able. Callers whose plan EXPANDS rows far past
-    its scan (a large explode) should not rely on the one-bucket cutover —
-    every current caller is a filter/aggregate/join at or below scan
-    cardinality (events_peak_concurrency's 2x interval union is the worst
-    case, still bounded by 2x). When the input is small enough for one
-    bucket AND no grand total is requested, the per-bucket sums job is
-    skipped too — offsets are trivially {0: 0} — so plan construction runs
-    ZERO driver-blocking jobs."""
-    from ..partitioning import estimated_scan_rows
-
-    n = estimated_scan_rows(df)
-    if n is None:
-        n = df.count()
-        if n == 0:
-            out = df.withColumn(cum_name, F.col(value_col))
-            if total_name is not None:
-                out = out.withColumn(total_name, F.col(value_col))
-            return out.where(F.lit(False))
-
+    n = sizing_rows(df)
     bounds = deterministic_bounds(df, order_cols, num_partitions, n)
     bucket_expr = bucket_expression(df, order_cols, bounds)
 
@@ -82,13 +62,6 @@ def partitioned_cumsum(
             .agg(F.sum(value_col).alias("s"))
             .collect()
         )
-        if not sums:
-            # actually-empty input discovered by the sums job (the footer
-            # estimate is pre-filter): same empty frame as the n == 0 path
-            out = df.withColumn(cum_name, F.col(value_col))
-            if total_name is not None:
-                out = out.withColumn(total_name, F.col(value_col))
-            return out.where(F.lit(False))
         by_bkt = {r["_bkt"]: r["s"] for r in sums}
         offsets, acc = {}, 0
         for bkt in sorted(by_bkt):

@@ -91,31 +91,20 @@ def assign_contiguous_ids(
 
     ``n_rows``: the exact input row count, when the caller already knows it
     (e.g. just materialized a persisted aggregate with ``count()``) — skips
-    the sizing work. A wrong POSITIVE value only skews the sample rate and
-    bucket balance, never the ids (the routing and local indexing are pure
-    row functions). ``n_rows <= 0`` is treated as UNKNOWN (r11, ADVICE): 0
-    used to short-circuit into the empty-input early return and silently
-    drop every row of a non-empty frame.
-
-    When unknown, n comes from the parquet-footer row count of the plan's
-    leaves (estimated_scan_rows — no job; an UPPER bound for any
-    non-expanding plan, and n never affects the ids themselves), falling
-    back to one column-pruned ``count()`` job when leaves aren't
-    stat-able. A caller whose plan EXPANDS rows well past its scan (a
-    large explode) should pass ``n_rows`` so the one-bucket cutover isn't
-    taken on an under-estimate.
+    the sizing work; ``n_rows <= 0`` is treated as unknown. Otherwise n
+    comes from ``partitioning.sizing_rows``. Either way n only sets cost
+    (sample rate, bucket balance, the one-bucket cutover), never the ids:
+    the routing and local indexing are pure row functions, and an empty
+    input simply routes to one bucket with no rows.
     """
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
 
     if n_rows is not None and n_rows > 0:
         n = n_rows
     else:
-        from ..partitioning import estimated_scan_rows
+        from ..partitioning import sizing_rows
 
-        est = estimated_scan_rows(df)
-        n = est if est is not None else df.count()
-    if n == 0:
-        return df.withColumn(id_name, F.lit(0).cast("long")).where(F.lit(False))
+        n = sizing_rows(df)
 
     # Job 2: deterministic hash sample of the keys (never df.sample — seeds
     # are execution-dependent; xxhash64 of the key is a pure row function).

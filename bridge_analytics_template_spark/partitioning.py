@@ -1,36 +1,76 @@
-"""Partitioning utilities.
+"""Partitioning utilities and the package's one plan-leaf sizing path.
 
 At cluster scale, inputs arrive in many partitions and these helpers are
 no-ops; on small/local inputs (one parquet file → one partition) they unlock
 the CPU-bound operators (hashing, shingling, vector folds) that would
 otherwise run single-threaded regardless of cores.
+
+Sizing contract. Every size the package plans by comes from
+:func:`leaf_stats`: the parquet footers of the analyzed plan's leaves,
+counted once per leaf OCCURRENCE (a self-union counts its files twice),
+read through one memoized footer reader. It is *unknown* (None) when any
+leaf is not a file relation (a local relation, ``range``, an RDD) or a file
+is not a local parquet file. The row count is a pre-filter file count:
+exact for a scan, an upper bound through filters, aggregates and
+non-multiplying joins, and an UNDER-count past an explode or a
+row-multiplying join.
+
+An estimate ``n`` may change cost, never rows. Consumers use it only for
+sample rates, one-bucket cutovers, block sizes and bucket counts; the one
+value-bearing use — the blocked-GEMM block grid — fails loudly
+(``raise_error``) on an under-count instead of dropping pairs.
+:func:`sizing_rows` is the single "estimate, else ``count()``" entry point.
+Callers pass ``n_rows`` (``assign_contiguous_ids``) when they already hold
+an exact count, or when their plan expands rows far past its scan so the
+cost is not planned off an under-count.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+from typing import NamedTuple
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
+#: Leaf files above which footer probing costs more than the answer is
+#: worth (many files ⇒ the scan is parallel anyway).
+_MAX_LEAF_FILES = 10_000
 
-def _parquet_row_groups(files: list[str]) -> int | None:
-    """Total row-group count across the plan's parquet leaves, or None when
-    it can't be determined cheaply (non-local scheme, non-parquet files).
-    Row groups — not Spark's byte-range splits — are parquet's real
-    parallelism unit: a single-row-group file reports 32 input splits but
-    31 of them are empty."""
-    try:
-        import pyarrow.parquet as pq
 
-        total = 0
-        for f in files:
-            if not f.endswith(".parquet"):
-                return None
-            path = f[7:] if f.startswith("file://") else f
-            total += pq.ParquetFile(path).metadata.num_row_groups
-        return total
-    except Exception:
-        return None
+class LeafStats(NamedTuple):
+    rows: int  # footer rows summed per leaf occurrence (pre-filter)
+    row_groups: int  # parquet's real parallelism unit
+    partitions: int  # Spark's FilePartition packing estimate
+
+
+@functools.lru_cache(maxsize=65_536)
+def _footer(path: str, size: int, mtime_ns: int) -> tuple[int, int]:
+    """(rows, row groups) of one parquet footer — the package's only footer
+    read. ``size``/``mtime_ns`` are part of the cache key so a rewritten
+    file is read again."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    return md.num_rows, md.num_row_groups
+
+
+def _leaf_files(df: DataFrame) -> list[str] | None:
+    """Input files of every leaf occurrence of the analyzed plan (repeated
+    when a leaf repeats, unlike ``df.inputFiles()``), or None when a leaf
+    is not a file relation."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    files: list[str] = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            return None
+        files.extend(rel.inputFiles())
+    return files
 
 
 def _parse_bytes(s: str) -> int:
@@ -46,60 +86,50 @@ def _parse_bytes(s: str) -> int:
     return int(s)
 
 
-def _packed_partition_estimate(
-    df: DataFrame, files: list[str], target: int
-) -> int | None:
-    """Estimate how many partitions Spark's FilePartition packing will plan
-    for these leaves, using the same formula as
-    ``FilePartition.maxSplitBytes`` (size + openCostInBytes padding packed
-    into maxSplitBytes bins). Returns None when file sizes aren't locally
-    stat-able (remote scheme) or there are too many leaves to probe cheaply
-    (>10k ⇒ the probe itself would cost more than the answer is worth)."""
-    if len(files) > 10_000:
-        return None
+def leaf_stats(df: DataFrame) -> LeafStats | None:
+    """Driver-side stats of the plan's parquet leaves — no Spark job.
+
+    ``partitions`` mirrors ``FilePartition.maxSplitBytes`` (file sizes plus
+    openCostInBytes padding, packed into maxSplitBytes bins): 500 tiny
+    files can plan as 4 tasks. ``row_groups`` sees through byte-range
+    splits: a one-row-group file plans 32 splits, 31 of them empty."""
     try:
+        files = _leaf_files(df)
+        if files is None or len(files) > _MAX_LEAF_FILES:
+            return None
         conf = df.sparkSession.conf
-        max_part = _parse_bytes(
-            conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-        )
-        open_cost = _parse_bytes(
-            conf.get("spark.sql.files.openCostInBytes", str(4 << 20))
-        )
-        cores = df.sparkSession.sparkContext.defaultParallelism
-        total = 0
-        for f in files:
-            path = f[7:] if f.startswith("file://") else f
-            total += os.stat(path).st_size + open_cost
-        bytes_per_core = max(total // max(cores, 1), open_cost)
-        max_split = min(max_part, bytes_per_core)
-        return max(1, -(-total // max(max_split, 1)))
-    except Exception:
-        return None
-
-
-def estimated_scan_rows(df: DataFrame) -> int | None:
-    """Exact total row count of the plan's parquet leaves from footer
-    metadata — a driver-side stat, NO Spark job. Returns None when the
-    leaves aren't locally stat-able parquet files or there are too many to
-    probe cheaply (>10k ⇒ the probe would cost more than the answer).
-    Counts FILE rows, i.e. pre-filter: an upper bound on what any
-    downstream operator can see, which is exactly what memory sizing
-    wants."""
-    files = df.inputFiles()
-    if not files or len(files) > 10_000:
-        return None
-    try:
-        import pyarrow.parquet as pq
-
-        total = 0
+        max_part = _parse_bytes(conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20)))
+        open_cost = _parse_bytes(conf.get("spark.sql.files.openCostInBytes", str(4 << 20)))
+        rows = row_groups = padded = 0
         for f in files:
             if not f.endswith(".parquet"):
                 return None
             path = f[7:] if f.startswith("file://") else f
-            total += pq.ParquetFile(path).metadata.num_rows
-        return total
-    except Exception:
+            st = os.stat(path)
+            r, g = _footer(path, st.st_size, st.st_mtime_ns)
+            rows += r
+            row_groups += g
+            padded += st.st_size + open_cost
+    except (OSError, ValueError, Py4JError):  # unreadable leaf: unknown is always safe
         return None
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    max_split = min(max_part, max(padded // max(cores, 1), open_cost))
+    return LeafStats(rows, row_groups, max(1, -(-padded // max(max_split, 1))))
+
+
+def estimated_scan_rows(df: DataFrame) -> int | None:
+    """Footer row count of the plan's leaves (see the module's sizing
+    contract), or None when unknown."""
+    stats = leaf_stats(df)
+    return None if stats is None else stats.rows
+
+
+def sizing_rows(df: DataFrame) -> int:
+    """The row count to size a plan by: the footer estimate, or one
+    column-pruned ``count()`` job when it is unknown. The package's only
+    sizing ``count()``."""
+    n = estimated_scan_rows(df)
+    return df.count() if n is None else n
 
 
 def adaptive_group_buckets(
@@ -126,37 +156,18 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     execution of every CPU-heavy stage after it; when the input is already
     wide, returns the plan untouched.
 
-    Two narrowness signals, both cheap driver-side checks:
-
-    * fewer planned partitions than the target (classic small input);
-    * enough BYTE-RANGE splits but too few parquet ROW GROUPS — Spark
-      plans ``maxPartitionBytes`` splits over a single-row-group file, but
-      every split except one is empty, so the scan still runs one task.
-      Detected from the parquet footers of the plan's leaves (skipped when
-      the leaf count already reaches the target: many files ⇒ already
-      parallel, and footer probing 100k objects would itself be a cost).
+    The leaf stats answer first, from local metadata: too few parquet row
+    groups ⇒ widen; enough packed scan partitions ⇒ keep. Only an unknown
+    or narrow-looking packing pays the ``df.rdd`` fallback, a full
+    logical→RDD plan translation (~50 ms of driver latency per build).
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # Parquet-footer probe FIRST: it answers from local metadata, while the
-    # ``df.rdd`` fallback pays a full logical→RDD plan translation (~50 ms
-    # of driver latency per query build). Many leaves ⇒ already parallel;
-    # few row groups ⇒ repartition — both decided without touching df.rdd.
-    files = df.inputFiles()
-    if files:
-        if len(files) >= target:
-            # Many leaves does NOT mean many scan partitions: Spark
-            # bin-packs small files (maxPartitionBytes/openCostInBytes), so
-            # 500 tiny files can plan as 4 tasks (ADVICE r5). Estimate the
-            # packed partition count from local file sizes — one os.stat
-            # per file, no plan translation; only when the estimate (or a
-            # failed stat) says "narrow" do we pay the df.rdd fallback.
-            packed = _packed_partition_estimate(df, files, target)
-            if packed is not None and packed >= target:
-                return df
-        else:
-            row_groups = _parquet_row_groups(files)
-            if row_groups is not None and row_groups < target:
-                return df.repartition(target)
+    stats = leaf_stats(df)
+    if stats is not None:
+        if stats.row_groups < target:
+            return df.repartition(target)
+        if stats.partitions >= target:
+            return df
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -467,8 +467,6 @@ def graph_pagerank_ppm(spark, sf_dir):
     Scale shape per iteration: one co-keyed join of the (src-partitioned,
     persisted) arc+degree relation with the rank vector and one dst-keyed
     re-aggregation — the same 1-shuffle/round loop as operators/pagerank.py."""
-    from ..operators.graph_local import pagerank_ppm_local, try_collect_arcs
-
     e = load(spark, sf_dir, "events").select("event_id", "user_id")
     nxt = e.select((F.col("event_id") - 1).alias("event_id"), F.col("user_id").alias("next_user"))
     arcs = (
@@ -476,6 +474,13 @@ def graph_pagerank_ppm(spark, sf_dir):
         .where(F.col("next_user") != F.col("user_id"))
         .select(F.col("user_id").alias("src"), F.col("next_user").alias("dst"))
     )
+    return _pagerank_ppm(spark, arcs)
+
+
+def _pagerank_ppm(spark, arcs):
+    """graph_pagerank_ppm over an (src, dst) arc relation."""
+    from ..operators.graph_local import pagerank_ppm_local, try_collect_arcs
+
     # Bounded small-graph fast path (r10): exact integer loop on the
     # driver within the arc bound — bit-identical ranks, no per-iteration
     # stage latency; distributed loop unchanged above it.

@@ -1112,15 +1112,19 @@ def llm_ann_recall_report(spark, sf_dir):
         "ivfpq": lambda: ivfpq_knn(q, e, k=5),
     }
 
-    def run(fn):
+    def run(name, fn):
         # build the pipeline and fetch its |Q|·k id pairs in THIS thread,
         # so the five jobs overlap; Arrow fetch (toPandas) of two int64
         # columns, same as the graph fast-path probe.
         pdf = fn().select("query_id", "neighbor_id").toPandas()
-        return set(zip(pdf["query_id"].tolist(), pdf["neighbor_id"].tolist()))
+        pairs = set(zip(pdf["query_id"].tolist(), pdf["neighbor_id"].tolist()))
+        if len(pairs) != len(pdf):
+            # a duplicated neighbor would silently shrink the set-based recall
+            raise AssertionError(f"{name}: duplicated (query_id, neighbor_id) rows")
+        return pairs
 
     with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        futures = {name: pool.submit(run, fn) for name, fn in builders.items()}
+        futures = {name: pool.submit(run, name, fn) for name, fn in builders.items()}
         pairs = {name: f.result() for name, f in futures.items()}
     brute_pairs = pairs["brute"]
     n_brute = len(brute_pairs)

@@ -488,22 +488,21 @@ def test_ensure_parallelism_row_group_aware(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from bridge_analytics_template_spark.partitioning import (
-        _parquet_row_groups,
-        ensure_parallelism,
-    )
+    from bridge_analytics_template_spark.partitioning import ensure_parallelism, leaf_stats
 
     path = str(tmp_path / "one_rg.parquet")
     pq.write_table(
         pa.table({"x": list(range(200_000)), "t": ["y" * 40] * 200_000}), path,
         row_group_size=1_000_000,
     )
-    assert _parquet_row_groups([path]) == 1
     df = spark.read.parquet(path)
+    assert leaf_stats(df).row_groups == 1
     widened = ensure_parallelism(df, min_partitions=8)
     assert widened.rdd.getNumPartitions() >= 8
-    # Non-parquet leaves: helper declines rather than guessing.
-    assert _parquet_row_groups(["/tmp/nope.csv"]) is None
+    # Non-parquet leaves: the stats decline rather than guess.
+    csv = str(tmp_path / "t.csv")
+    df.limit(3).write.csv(csv)
+    assert leaf_stats(spark.read.csv(csv)) is None
 
 
 def test_ensure_parallelism_bin_packed_tiny_files(spark, tmp_path):
@@ -515,9 +514,9 @@ def test_ensure_parallelism_bin_packed_tiny_files(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from bridge_analytics_template_spark.partitioning import (
-        _packed_partition_estimate,
         _parse_bytes,
         ensure_parallelism,
+        leaf_stats,
     )
 
     d = tmp_path / "tiny"
@@ -526,7 +525,7 @@ def test_ensure_parallelism_bin_packed_tiny_files(spark, tmp_path):
         pq.write_table(pa.table({"x": [i]}), str(d / f"p{i}.parquet"))
     df = spark.read.parquet(str(d))
     actual = df.rdd.getNumPartitions()
-    est = _packed_partition_estimate(df, df.inputFiles(), 999)
+    est = leaf_stats(df).partitions
     # The estimate mirrors Spark's FilePartition formula — same ballpark
     # as what Spark actually planned, never the leaf count.
     assert est is not None and est <= 64

@@ -21,11 +21,6 @@ from bridge_analytics_template_spark.queries import QUERIES  # noqa: E402
 from bridge_analytics_template_spark.session import get_spark  # noqa: E402
 
 
-def job_count(sc) -> int:
-    t = sc.statusTracker()
-    return len(t.getJobIdsForGroup(None)) if False else 0
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
