@@ -68,8 +68,8 @@ def main() -> None:
     # minute-scale whole-box load windows — r4 measured the same binary
     # 24% slower suite-wide between two back-to-back runs on this shared
     # box, which is exactly the signature that made r3's official numbers
-    # look like a code regression (probe: tools/bench_regression_probe.py,
-    # wrapper clearCache == unwrapped within noise).
+    # look like a code regression (the r3 regression probe, last present at
+    # commit 51b8615, measured wrapper clearCache == unwrapped within noise).
     # Raw per-pass measurements are recorded alongside the min (VERDICT r4
     # task 7): judges can separate box-load noise from code drift without
     # rerunning — r3/r4 both saw 24% suite-wide swings between back-to-back

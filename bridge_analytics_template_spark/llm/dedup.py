@@ -630,9 +630,7 @@ def simhash_near_dups(df: DataFrame, max_hamming: int = 3, **kw) -> DataFrame:
     )
 
 
-def prefix_filtered_pairs(
-    shingle_arrays: DataFrame, min_jaccard: float = 0.5, persist_index: bool = True
-) -> DataFrame:
+def prefix_filtered_pairs(shingle_arrays: DataFrame, min_jaccard: float = 0.5) -> DataFrame:
     """EXACT set-similarity self-join with prefix filtering (the
     PPJoin/AllPairs family — Bayardo et al. WWW'07, Xiao et al. WWW'08):
     same answer as the full inverted-index join of
@@ -695,8 +693,7 @@ def prefix_filtered_pairs(
         .where(f"rn2 <= n2 - ceil({min_jaccard} * n) + 1")
         .select("doc", "n", "shingle")
     )
-    if persist_index:
-        prefixes = track(prefixes.persist())
+    prefixes = track(prefixes.persist())
     # The index persist is load-bearing at scale (r5 plan read): WITHOUT it
     # the executed plan duplicates the whole prefix subtree — freq
     # aggregate, hub join and window sort run TWICE (alias exprIds defeat

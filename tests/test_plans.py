@@ -6,9 +6,13 @@ benchmark does.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from bridge_analytics_template_spark.queries import QUERIES
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def plan_of(spark, sf_dir, name: str) -> str:
@@ -314,13 +318,18 @@ def test_advanced_ops_plan_shapes(spark, sf_dir):
     assert "Window [" not in plan
 
     # winnowing: in-row pipeline — the only exchanges are the r11
-    # round-robin scan widen (the fixture is one single-row-group file, so
-    # the md5+window-min pass otherwise runs in ONE task) and the final
-    # orderBy range exchange; no HASH shuffle anywhere (nothing is keyed).
+    # round-robin scan widen (present exactly when ensure_parallelism widens
+    # the documents scan, e.g. a one-row-group file whose md5+window-min
+    # pass would otherwise run in ONE task) and the final orderBy range
+    # exchange; no HASH shuffle anywhere (nothing is keyed).
+    from bridge_analytics_template_spark.catalog import load
+    from bridge_analytics_template_spark.partitioning import ensure_parallelism
+
     plan = plan_of(spark, sf_dir, "llm_winnowing")
     assert plan.count("Exchange") <= 2
     assert "Exchange hashpartitioning" not in plan
-    assert "RoundRobinPartitioning" in plan
+    scan = load(spark, sf_dir, "documents").select("doc_id", "text")
+    assert ("RoundRobinPartitioning" in plan) == (ensure_parallelism(scan) is not scan)
 
 
 def test_shuffled_hash_join_chosen(spark, sf_dir):
@@ -367,7 +376,7 @@ def test_driver_window_integrity():
         latest: dict[str, dict] = {}
         latest_round: dict[str, int] = {}
         for path in sorted(
-            glob.glob("/root/repo/CORRECTNESS_r*.json"),
+            glob.glob(str(ROOT / "CORRECTNESS_r*.json")),
             key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),
         ):
             rnd = int(re.search(r"_r(\d+)", path).group(1))
@@ -702,7 +711,7 @@ def test_scale_sweep_ratio_gate_drift_vs_regression():
     wall survives as a backstop when no sentinel exists."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(ROOT / "tools"))
     from scale_sweep import is_over
 
     # calibration: query measured 40s, sentinel 5s, ratio pinned 10

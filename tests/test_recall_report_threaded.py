@@ -5,19 +5,57 @@ report branches to: five ANN pipelines built and materialized on driver
 threads (bounded |Q|*k fetches — the probe set is already driver-collected
 by the brute/PQ precondition), exact set-intersection hit counts, one
 local 4-row result. Values must be identical to the serial join+aggregate
-form, which tools/experiments_r11.py preserves verbatim.
+form, kept verbatim below as the reference (``recall_report_serial``).
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
+
+from bridge_analytics_template_spark.catalog import load
+from bridge_analytics_template_spark.llm.similarity import knn_bruteforce_np, knn_lsh
 
 pytestmark = pytest.mark.usefixtures("spark")
 
 
+def recall_report_serial(spark, sf_dir):
+    """r10 llm_ann_recall_report: the five method pipelines built
+    sequentially — each trainer's driver-blocking collect jobs (probe set,
+    hash-ordered samples, centroids) run back to back."""
+    from bridge_analytics_template_spark.llm.pq import ivfpq_knn, pq_knn
+    from bridge_analytics_template_spark.llm.similarity import ivf_knn
+
+    e = load(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") % 50 == 0)
+    brute = knn_bruteforce_np(q, e, k=5).select("query_id", "neighbor_id")
+    methods = {
+        "lsh": knn_lsh(q, e, k=5),
+        "ivf": ivf_knn(q, e, k=5),
+        "pq": pq_knn(q, e, k=5),
+        "ivfpq": ivfpq_knn(q, e, k=5),
+    }
+    reports = []
+    for name, df in methods.items():
+        hits = brute.join(df.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"])
+        reports.append(
+            brute.agg(F.count(F.lit(1)).alias("n_brute"))
+            .crossJoin(hits.agg(F.count(F.lit(1)).alias("n_hits")))
+            .select(
+                F.lit(name).alias("method"),
+                "n_brute",
+                "n_hits",
+                (F.col("n_hits").cast("double") / F.col("n_brute")).alias("recall_at_5"),
+            )
+        )
+    out = reports[0]
+    for r in reports[1:]:
+        out = out.unionByName(r)
+    return out.orderBy("method")
+
+
 def test_threaded_report_matches_serial_form(spark):
     from bridge_analytics_template_spark.queries import QUERIES
-    from tools.experiments_r11 import recall_report_serial
 
     q = QUERIES["llm_ann_recall_report"]
     fn = getattr(q, "__wrapped__", q)

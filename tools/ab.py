@@ -8,7 +8,8 @@ REVERSED under interleaving. This harness is the only trustworthy way to
 attribute a perf delta to code on this machine; every perf claim in NOTES
 must cite it.
 
-Method (generalizes tools/ab_r7.py, which settled both r6 regressions):
+Method (generalizes the round-7 two-pair A/B script that settled both r6
+regressions; last present at commit 51b8615):
 
 * variants run ROUND-ROBIN (A, B, A, B, ...) so ambient load hits every
   variant equally within each pass;
@@ -18,32 +19,52 @@ Method (generalizes tools/ab_r7.py, which settled both r6 regressions):
   one-sided contention spikes; the cache is cleared between every run);
 * with exactly two variants the PAIRED per-pass deltas are printed too —
   if the sign of (B - A) is stable across passes the difference is code,
-  if it flips it is noise.
+  if it flips it is noise;
+* every timed run splits into a build (the variant's call, which returns
+  the DataFrame) and an exec (the timed action), each under its own Spark
+  job group, so a pass also reports how long the build took and how many
+  jobs each phase ran. A build job re-executes its whole upstream
+  lineage before the action starts. Jobs a variant starts on its own
+  worker threads carry no job group and are not counted.
 
 Usage::
 
-    python tools/ab.py QUERY_A [QUERY_B ...] [--n 5] [--sf DIR]
+    python tools/ab.py QUERY_A [QUERY_B ...] [--n 5] [--sf DIR] [--action count|noop]
 
 A variant is either a registered query name (the
 bridge_analytics_template_spark registry) or ``module:callable`` where the
 callable takes ``(spark, sf_dir) -> DataFrame`` — the hook for measuring a
-toggled/experimental shape against HEAD without editing the registry.
+toggled/experimental shape against HEAD without editing the registry. Old
+shapes live in git history; measure one in place with e.g.::
+
+    mkdir -p /tmp/exp && git show SHA:tools/OLD.py > /tmp/exp/old.py
+    PYTHONPATH=/tmp/exp python tools/ab.py QUERY old:CALLABLE --action noop
+
+Prints one ``RESULT {json}`` line: per variant label, ``min`` and
+``passes`` (build + action seconds per pass), plus per-pass ``build_s``,
+``exec_s``, ``build_jobs`` and ``exec_jobs``; with two variants, also
+``paired_delta_b_minus_a``.
 """
 
 from __future__ import annotations
 
 import argparse
 import importlib
+import itertools
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bridge_analytics_template_spark.queries import QUERIES  # noqa: E402
 from bridge_analytics_template_spark.session import get_spark  # noqa: E402
 
 WARM_SF = "/root/testdata/sf0.001"
+
+_RUN_IDS = itertools.count()
 
 
 def resolve(spec: str):
@@ -54,6 +75,75 @@ def resolve(spec: str):
     q = QUERIES[spec]
     # time the query body, not the registration wrapper
     return getattr(q, "__wrapped__", q)
+
+
+def _act(df, action: str) -> None:
+    if action == "noop":
+        df.write.format("noop").mode("overwrite").save()
+    else:
+        df.count()
+
+
+def _timed_run(spark, fn, sf: str, action: str) -> dict:
+    """One build + action, each phase under its own job group."""
+    sc = spark.sparkContext
+    i = next(_RUN_IDS)
+    build_group, exec_group = f"ab-build-{i}", f"ab-exec-{i}"
+    try:
+        sc.setJobGroup(build_group, "ab build")
+        t0 = time.perf_counter()
+        df = fn(spark, sf)
+        t1 = time.perf_counter()
+        sc.setJobGroup(exec_group, "ab exec")
+        _act(df, action)
+        t2 = time.perf_counter()
+    finally:
+        sc.setJobGroup(None, None)
+        spark.catalog.clearCache()
+    tracker = sc.statusTracker()
+    return {
+        "pass": round(t2 - t0, 3),
+        "build_s": round(t1 - t0, 3),
+        "exec_s": round(t2 - t1, 3),
+        "build_jobs": len(tracker.getJobIdsForGroup(build_group)),
+        "exec_jobs": len(tracker.getJobIdsForGroup(exec_group)),
+    }
+
+
+def measure(spark, specs: list[str], n: int, sf: str, action: str) -> dict:
+    """Warm every variant, then run ``n`` interleaved passes; returns the
+    ``RESULT`` dict (see the module docstring)."""
+    # label by position so duplicate specs stay DISTINCT runs — an A/A
+    # calibration (`ab.py q q`) must measure the box's real noise, not
+    # collapse both variants onto one timing list and report fabricated
+    # perfect stability (review finding r8)
+    labels = [
+        spec if specs.count(spec) == 1 else f"{spec}#{i}" for i, spec in enumerate(specs)
+    ]
+    fns = [(lab, resolve(spec)) for lab, spec in zip(labels, specs)]
+
+    for _, f in fns:  # compile every plan shape before timing
+        _act(f(spark, WARM_SF), action)
+        spark.catalog.clearCache()
+
+    runs: dict[str, list[dict]] = {lab: [] for lab in labels}
+    for _ in range(n):
+        for lab, f in fns:
+            runs[lab].append(_timed_run(spark, f, sf, action))
+    out: dict = {}
+    for lab, rs in runs.items():
+        passes = [r["pass"] for r in rs]
+        out[lab] = {"min": min(passes), "passes": passes}
+        for k in ("build_s", "exec_s", "build_jobs", "exec_jobs"):
+            out[lab][k] = [r[k] for r in rs]
+    if len(labels) == 2:
+        a, b = (out[lab]["passes"] for lab in labels)
+        deltas = [round(tb - ta, 3) for ta, tb in zip(a, b)]
+        out["paired_delta_b_minus_a"] = {
+            "per_pass": deltas,
+            "sign_stable": len({d > 0 for d in deltas}) == 1,
+        }
+    return out
 
 
 def main() -> None:
@@ -70,44 +160,7 @@ def main() -> None:
         "immune to count()'s subtree pruning)",
     )
     args = ap.parse_args()
-
-    # label by position so duplicate specs stay DISTINCT runs — an A/A
-    # calibration (`ab.py q q`) must measure the box's real noise, not
-    # collapse both variants onto one timing list and report fabricated
-    # perfect stability (review finding r8)
-    labels = [
-        spec if args.variants.count(spec) == 1 else f"{spec}#{i}"
-        for i, spec in enumerate(args.variants)
-    ]
-    fns = [(lab, resolve(spec)) for lab, spec in zip(labels, args.variants)]
-    spark = get_spark("ab")
-
-    def act(df):
-        if args.action == "noop":
-            df.write.format("noop").mode("overwrite").save()
-        else:
-            df.count()
-
-    for _, f in fns:  # compile every plan shape before timing
-        act(f(spark, WARM_SF))
-        spark.catalog.clearCache()
-
-    times: dict[str, list[float]] = {lab: [] for lab, _ in fns}
-    for _ in range(args.n):
-        for lab, f in fns:
-            t0 = time.time()
-            act(f(spark, args.sf))
-            times[lab].append(round(time.time() - t0, 3))
-            spark.catalog.clearCache()
-
-    out = {lab: {"min": min(v), "passes": v} for lab, v in times.items()}
-    if len(labels) == 2:
-        a, b = labels
-        deltas = [round(tb - ta, 3) for ta, tb in zip(times[a], times[b])]
-        out["paired_delta_b_minus_a"] = {
-            "per_pass": deltas,
-            "sign_stable": len({d > 0 for d in deltas}) == 1,
-        }
+    out = measure(get_spark("ab"), args.variants, args.n, args.sf, args.action)
     print("RESULT " + json.dumps(out))
 
 

@@ -7,16 +7,18 @@ backtick-quoted query name in COVERAGE.md must still exist in the registry.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bridge_analytics_template_spark.queries import QUERIES  # noqa: E402
 
 
 def main() -> int:
-    text = open("/root/repo/COVERAGE.md").read()
+    text = open(os.path.join(ROOT, "COVERAGE.md")).read()
     documented = set(re.findall(r"`([a-z0-9_]+)`", text))
     registered = set(QUERIES)
     undocumented = sorted(registered - documented)

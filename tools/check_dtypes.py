@@ -19,9 +19,11 @@ trust `tools/check_oracle.py` (type-tagged row compare) as the gate.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402

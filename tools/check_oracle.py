@@ -18,7 +18,8 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 
@@ -193,8 +194,12 @@ def main() -> int:
         return self_test(spark, con, args.sf)
 
     import __spark_entry__ as e
+    from bridge_analytics_template_spark.queries import ORACLES
 
     qs, oracles = e.queries(), e.oracle_sql()
+    # A callable oracle missing from oracle_sql() is a generator that threw:
+    # oracle_sql() silently leaves that query rows-only, so it fails here.
+    degraded = {n for n, v in ORACLES.items() if callable(v) and n not in oracles}
     names = args.names or (list(qs)[: args.first] if args.first else list(qs))
     n_pass = n_fail = 0
     for name in names:
@@ -203,7 +208,9 @@ def main() -> int:
             sdf = qs[name](spark, args.sf)
             srows = sdf.collect()
             scols, svals = frame_to_rows(sdf.columns, [tuple(r) for r in srows])
-            if name not in oracles:
+            if name in degraded:
+                ok, status = False, "oracle generator failed (rows-only)"
+            elif name not in oracles:
                 ok = not args.require_oracle
                 status = (
                     f"rows-only ({len(svals)} rows)"

@@ -5,16 +5,23 @@ pushed filters, broadcast exchanges, partial aggregates, single-shuffle
 as-of, shuffle-free MinHash signatures.
 
     python tools/dump_plans.py
+    python tools/dump_plans.py NAME [NAME ...]
+
+With names (a registered query or ``module:callable``, as in ``ab.py``),
+prints each one's ``explain("formatted")`` at sf0.1 — the bench fixture, so
+Exchange counts and join strategies match what the bench executes — to
+stdout instead; redirect to keep a before/after pair.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+from ab import ROOT, resolve  # also puts this checkout first on sys.path
 
-from bridge_analytics_template_spark.queries import QUERIES  # noqa: E402
-from bridge_analytics_template_spark.session import get_spark  # noqa: E402
+from bridge_analytics_template_spark.queries import QUERIES
+from bridge_analytics_template_spark.session import get_spark
 
 SHOW = [
     ("flagship", "scan→filter→broadcast-join→partial/final agg→top-k"),
@@ -74,10 +81,17 @@ SHOW = [
 ]
 
 SF = "/root/testdata/sf0.01"
+SPEC_SF = "/root/testdata/sf0.1"
 
 
 def main() -> None:
     spark = get_spark("plans")
+    if sys.argv[1:]:
+        for spec in sys.argv[1:]:
+            print(f"== {spec} ==")
+            resolve(spec)(spark, SPEC_SF).explain("formatted")
+            spark.catalog.clearCache()
+        return
     out = [
         "# PLANS — physical plans of representative queries (sf0.01)",
         "",
@@ -89,7 +103,7 @@ def main() -> None:
     for name, why in SHOW:
         plan = QUERIES[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
         out.append(f"## {name}\n\n*{why}*\n\n```\n{plan.strip()}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

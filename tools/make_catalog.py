@@ -8,10 +8,12 @@ navigable index the COVERAGE.md matrix links into.
 from __future__ import annotations
 
 import inspect
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bridge_analytics_template_spark.queries import ORACLES, QUERIES  # noqa: E402
 
@@ -54,7 +56,7 @@ def main() -> None:
     ]
     for name, loc, tier, doc in sorted(rows):
         out.append(f"| `{name}` | `{loc}` | {tier} | {doc} |")
-    with open("/root/repo/CATALOG.md", "w") as f:
+    with open(os.path.join(ROOT, "CATALOG.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"CATALOG.md: {len(rows)} queries ({n_oracle} oracle)")
 

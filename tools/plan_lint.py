@@ -19,11 +19,13 @@ Writes PLANLINT.md and exits non-zero on any non-whitelisted failure.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bridge_analytics_template_spark.queries import QUERIES  # noqa: E402
 from bridge_analytics_template_spark.session import get_spark  # noqa: E402
@@ -121,7 +123,7 @@ def main() -> int:
             out.append(f"| `{name}` | build error | | | | |")
         else:
             out.append(f"| `{name}` | {upw} | {cart} | {pyudf} | {bnlj} | {nexch} |")
-    with open("/root/repo/PLANLINT.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANLINT.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"\n{len(rows)} plans, {len(failures)} findings -> PLANLINT.md")
     return 1 if failures else 0

@@ -21,11 +21,13 @@ generous backstop (e.g. sentinel itself broken by a config change).
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bridge_analytics_template_spark.queries import QUERIES  # noqa: E402
 from bridge_analytics_template_spark.session import get_spark  # noqa: E402

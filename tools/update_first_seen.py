@@ -16,17 +16,12 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bridge_analytics_template_spark.queries import QUERIES  # noqa: E402
 
-PATH = os.path.join(
-    os.path.dirname(__file__),
-    "..",
-    "bridge_analytics_template_spark",
-    "queries",
-    "_first_seen.json",
-)
+PATH = os.path.join(ROOT, "bridge_analytics_template_spark", "queries", "_first_seen.json")
 
 
 def main() -> None:
@@ -37,7 +32,7 @@ def main() -> None:
         first = {}
     rounds = [
         int(re.search(r"_r(\d+)", p).group(1))
-        for p in glob.glob("/root/repo/CORRECTNESS_r*.json")
+        for p in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))
     ]
     current = (max(rounds) + 1) if rounds else 1
     added = [n for n in QUERIES if n not in first]
