@@ -7,6 +7,12 @@ if the match count is 0 or >1. Here the predicate is a Catalyst expression
 ``limit(2).collect()`` — never a full count over the dataset, which matters
 when the underlying table is 100 TB: Spark stops scanning once two matching
 rows are found.
+
+The session (``session.get_spark``) sets the take's first job to one wave
+of partitions (``spark.sql.limit.initialNumPartitions`` = cores). The
+normal one-match lookup must read every partition to prove there is no
+second row, so on an input of at most one wave it runs one job, not a
+1-partition job followed by one over the rest.
 """
 
 from __future__ import annotations

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import functools
 import os
+import sys
 from typing import NamedTuple
 
 from py4j.protocol import Py4JError
@@ -45,15 +46,22 @@ class LeafStats(NamedTuple):
     partitions: int  # Spark's FilePartition packing estimate
 
 
+#: Footer key under which Spark's Parquet writer stores the written
+#: schema as JSON; Spark's own schema inference returns that value.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
 @functools.lru_cache(maxsize=65_536)
-def _footer(path: str, size: int, mtime_ns: int) -> tuple[int, int]:
-    """(rows, row groups) of one parquet footer — the package's only footer
-    read. ``size``/``mtime_ns`` are part of the cache key so a rewritten
-    file is read again."""
+def _footer(path: str, size: int, mtime_ns: int) -> tuple[int, int, str | None]:
+    """(rows, row groups, Spark schema JSON or None) of one parquet footer —
+    the package's only footer read. ``size``/``mtime_ns`` are part of the
+    cache key so a rewritten file is read again. The schema is interned:
+    the files of one table share one copy in the cache."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
-    return md.num_rows, md.num_row_groups
+    schema = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    return md.num_rows, md.num_row_groups, None if schema is None else sys.intern(schema.decode())
 
 
 def _leaf_files(df: DataFrame) -> list[str] | None:
@@ -106,7 +114,7 @@ def leaf_stats(df: DataFrame) -> LeafStats | None:
                 return None
             path = f[7:] if f.startswith("file://") else f
             st = os.stat(path)
-            r, g = _footer(path, st.st_size, st.st_mtime_ns)
+            r, g, _ = _footer(path, st.st_size, st.st_mtime_ns)
             rows += r
             row_groups += g
             padded += st.st_size + open_cost

@@ -13,6 +13,7 @@ across engines while the last float ulp is not.
 from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..catalog import load
 from ..functions.text import (
@@ -926,17 +927,19 @@ def llm_dedup_cascade(spark, sf_dir):
     # run them on two driver threads so the cheap aggregate back-fills the
     # near-dup job's stage tail instead of queueing behind it (r11, guide
     # §2.6; the near-dup pipeline is ~2x the aggregate's wall).
+    # inheritable_thread_target: the pool's jobs run under the caller's job group
     from concurrent.futures import ThreadPoolExecutor
 
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_sizes = pool.submit(
+        f_sizes = pool.submit(inherit(
             lambda: d.agg(
                 F.count(F.lit(1)).alias("n_docs"),
                 F.countDistinct(F.md5("text")).alias("n_k1"),
                 F.countDistinct(fp).alias("n_k2"),
             ).collect()[0]
-        )
-        f_near = pool.submit(near.count)
+        ))
+        f_near = pool.submit(inherit(near.count))
         sizes, n_near = f_sizes.result(), f_near.result()
     n_docs, n_k1, n_k2 = int(sizes["n_docs"]), int(sizes["n_k1"]), int(sizes["n_k2"])
     return spark.createDataFrame(
@@ -1123,8 +1126,10 @@ def llm_ann_recall_report(spark, sf_dir):
             raise AssertionError(f"{name}: duplicated (query_id, neighbor_id) rows")
         return pairs
 
+    # inheritable_thread_target: the pool's jobs run under the caller's job group
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        futures = {name: pool.submit(run, name, fn) for name, fn in builders.items()}
+        futures = {name: pool.submit(inherit(run), name, fn) for name, fn in builders.items()}
         pairs = {name: f.result() for name, f in futures.items()}
     brute_pairs = pairs["brute"]
     n_brute = len(brute_pairs)

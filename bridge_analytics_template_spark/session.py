@@ -2,7 +2,8 @@
 
 Local-mode settings mirror what a cluster deployment would set per-executor:
 AQE on (runtime re-planning, skew-join splitting, partition coalescing),
-shuffle partitions sized to cores rather than the 200 default, Arrow enabled
+shuffle partitions sized to cores rather than the 200 default, a take whose
+first job reads one wave of partitions (cores) rather than one, Arrow enabled
 for the Pandas-UDF slow path, and a UTC session timezone so timestamp
 semantics match columnar stores (and the DuckDB oracle).
 """
@@ -26,6 +27,12 @@ def get_spark(app_name: str = "bridge-analytics-spark", cores: int | None = None
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n))
+        # A take's first job reads one wave of partitions, not one
+        # partition: a lookup's limit(2) guard must read every partition
+        # when exactly one row matches, which is then one job instead of a
+        # 1-partition job and a job over the rest. It still stops once the
+        # limit is met; only its first job is wider.
+        .config("spark.sql.limit.initialNumPartitions", str(n))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

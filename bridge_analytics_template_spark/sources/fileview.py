@@ -13,7 +13,7 @@ not a secondary lookup.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 #: Default entity-metadata columns a file view exposes (default.yaml:9
@@ -43,8 +43,7 @@ def file_view(
     """
     paths = [scope] if isinstance(scope, str) else list(scope)
     df = spark.read.format(fmt).load(paths)
-    for alias, src in METADATA_COLS.items():
-        df = df.withColumn(alias, F.col(src))
+    df = df.withColumns({alias: F.col(src) for alias, src in METADATA_COLS.items()})
     if annotation_col:
         df = promote_annotations(df, annotation_col)
     return df
@@ -52,13 +51,17 @@ def file_view(
 
 def promote_annotations(df: DataFrame, map_col: str) -> DataFrame:
     """Two-pass map→column promotion (SURVEY.md §4 custom op): pass 1 infers
-    the key universe (distinct map keys — a cheap aggregate over just the
-    keys), pass 2 projects ``element_at`` per key. Sparse keys yield nulls,
-    matching the view semantics of annotation columns absent on some files."""
-    keys = sorted(
-        r[0]
-        for r in df.select(F.explode(F.map_keys(F.col(map_col))).alias("k")).distinct().collect()
-    )
+    the key universe, pass 2 projects ``element_at`` per key. Sparse keys
+    yield nulls, matching the view semantics of annotation columns absent on
+    some files.
+
+    Pass 1 is one observed pass over just the exploded keys: a ``noop``
+    write carrying a ``collect_set`` ``Observation``, so each task merges
+    its partial key set into the driver. One job and no shuffle, where a
+    ``distinct().collect()`` runs a shuffle-map job and a result job."""
+    obs = Observation()
+    keys = df.select(F.explode(F.map_keys(F.col(map_col))).alias("k"))
+    keys.observe(obs, F.collect_set("k").alias("keys")).write.format("noop").mode("overwrite").save()
     cols = [F.col(c) for c in df.columns if c != map_col]
-    cols += [F.element_at(F.col(map_col), F.lit(k)).alias(k) for k in keys]
+    cols += [F.element_at(F.col(map_col), F.lit(k)).alias(k) for k in sorted(obs.get["keys"])]
     return df.select(cols)

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import sys
 from pathlib import Path
 
@@ -21,3 +22,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn) -> (fn(), jobs)``: the Spark jobs ``fn`` ran, counted
+    through a job group of its own, as ``tools/ab.py`` counts a phase."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-jobs-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, "jobs_of")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

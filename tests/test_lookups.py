@@ -56,3 +56,18 @@ def test_assert_unique_direct(entities):
     assert assert_unique(entities.filter(F.col("id") == "syn2"))["name"] == "parquet"
     with pytest.raises(LookupError0):
         filter_unique(entities, F.col("id") == "nope")
+
+
+def test_one_match_scans_every_partition_in_one_job(spark, jobs_of):
+    """The normal lookup: one match, in the last of four partitions. The
+    limit(2) guard must read all four to rule out a second row, and the
+    session's first take covers them in one wave: one job, not a
+    1-partition job followed by one over the rest."""
+    df = spark.range(0, 400, 1, 4)
+    row, jobs = jobs_of(lambda: filter_unique(df, F.col("id") == 399))
+    assert row["id"] == 399
+    assert jobs == 1
+    with pytest.raises(LookupErrorMany):
+        filter_unique(df, F.col("id").isin(0, 399))  # partitions 0 and 3
+    with pytest.raises(LookupError0):
+        filter_unique(df, F.col("id") == 400)

@@ -10,11 +10,14 @@ form, kept verbatim below as the reference (``recall_report_serial``).
 
 from __future__ import annotations
 
+import concurrent.futures
+
 import pytest
 from pyspark.sql import functions as F
 
 from bridge_analytics_template_spark.catalog import load
 from bridge_analytics_template_spark.llm.similarity import knn_bruteforce_np, knn_lsh
+from tools.ab import measure
 
 pytestmark = pytest.mark.usefixtures("spark")
 
@@ -70,3 +73,40 @@ def test_threaded_report_matches_serial_form(spark):
     assert all(r["n_brute"] > 0 for r in got)
     assert all(0.0 <= r["recall_at_5"] <= 1.0 for r in got)
     spark.catalog.clearCache()
+
+
+class CallingThreadExecutor:
+    """``ThreadPoolExecutor`` stand-in that runs each submitted call at once
+    on the calling thread, so every job carries the caller's job group."""
+
+    def __init__(self, max_workers=None):
+        pass
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        return False
+
+    def submit(self, fn, *args, **kwargs):
+        future = concurrent.futures.Future()
+        future.set_result(fn(*args, **kwargs))
+        return future
+
+
+@pytest.mark.parametrize(
+    "name, table", [("llm_ann_recall_report", "embeddings"), ("llm_dedup_cascade", "documents")]
+)
+def test_pool_jobs_count_as_build_jobs(spark, monkeypatch, name, table):
+    """The jobs a query starts on its driver thread pool are attributed to
+    the caller's job group: ``tools/ab.py`` counts as many build jobs as for
+    the same body run serially on the calling thread. (``recall_report_serial``
+    above is not that reference: it fetches nothing at build time, so its
+    method pipelines run in the exec phase.)"""
+    sf = "/root/testdata/sf0.01"
+    load(spark, sf, table)  # the scan's schema job runs once per session: not in either pass
+    threaded = measure(spark, [name], 1, sf, "count")[name]
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", CallingThreadExecutor)
+    serial = measure(spark, [name], 1, sf, "count")[name]
+    assert threaded["build_jobs"] == serial["build_jobs"]
+    assert serial["build_jobs"][0] > 0

@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import os
 import tempfile
+from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from bridge_analytics_template_spark.catalog import load
@@ -614,3 +616,162 @@ def test_python_sink_empty_commit_reads_empty(spark, tmp_path):
     out = read_manifested(spark, path, "doc_id long")
     assert out.count() == 0
     assert out.schema.fieldNames() == ["doc_id"]
+
+
+# --- Footer-resolved read-back and one-pass annotation keys ------------------
+
+
+def _typed_sink(spark, base):
+    """A ``write_partitioned`` sink with every column family the read-back
+    must round-trip, a non-nullable column and field metadata."""
+    df = spark.range(0, 30, 1, 3).select(
+        F.lit("appA").alias("app"),
+        F.concat(F.lit("s"), (F.col("id") % 3).cast("string")).alias("study"),
+        "id",
+        F.timestamp_seconds(F.col("id") * 86_400).alias("ts"),
+        (F.col("id") % 2 == 0).alias("flag"),
+        F.col("id").cast("decimal(12,3)").alias("amount"),
+        F.create_map(F.lit("k"), F.col("id").cast("string")).alias("ann"),
+        F.array(F.col("id"), F.col("id") + 1).alias("arr"),
+        F.struct(F.col("id").alias("x"), F.col("id").cast("string").alias("y")).alias("st"),
+        F.col("id").cast("string").alias("note", metadata={"comment": "free text"}),
+    )
+    write_partitioned(df, base)
+    return df
+
+
+def test_read_partitioned_footer_schema_equals_inference(spark, tmp_path, jobs_of):
+    base = str(tmp_path / "sink")
+    _typed_sink(spark, base)
+    assert {"_SUCCESS", "._SUCCESS.crc"} <= set(os.listdir(base))  # hidden, not a fallback
+    back, jobs = jobs_of(lambda: read_partitioned(spark, base))
+    want = spark.read.parquet(base).schema
+    assert jobs == 0  # the schema came from the footers
+    assert back.schema == want
+    assert back.schema.json() == want.json()  # nullability and field metadata too
+    assert back.schema["note"].metadata == {"comment": "free text"}
+    assert sorted(back.collect()) == sorted(spark.read.parquet(base).collect())
+
+
+def _assert_fallback(spark, base, jobs_of):
+    back, jobs = jobs_of(lambda: read_partitioned(spark, base))
+    assert jobs == 1  # Spark's schema-inference job
+    assert back.schema == spark.read.parquet(base).schema
+    return back
+
+
+def test_read_partitioned_falls_back_without_spark_footers(spark, tmp_path, jobs_of):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = tmp_path / "arrow"
+    for study in ("s0", "s1"):
+        part = base / "app=appA" / f"study={study}"
+        part.mkdir(parents=True)
+        pq.write_table(pa.table({"id": [1, 2], "v": ["a", None]}), part / "part-0.parquet")
+    back = _assert_fallback(spark, str(base), jobs_of)
+    assert back.count() == 4
+
+
+def test_read_partitioned_falls_back_on_summary_files(spark, tmp_path, jobs_of):
+    import pyarrow.parquet as pq
+
+    base = str(tmp_path / "sink")
+    _typed_sink(spark, base)
+    data = next(p for p in Path(base).rglob("part-*.parquet"))
+    pq.write_metadata(pq.read_schema(data), os.path.join(base, "_common_metadata"))
+    names = {p.name for p in Path(base).rglob("*")}
+    assert {"_SUCCESS", "_common_metadata"} <= names
+    assert any(n.endswith(".crc") for n in names)
+    _assert_fallback(spark, base, jobs_of)
+
+
+def test_read_partitioned_rereads_a_rewritten_footer(spark, tmp_path, jobs_of):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = str(tmp_path / "sink")
+    _typed_sink(spark, base)
+    assert jobs_of(lambda: read_partitioned(spark, base))[1] == 0
+    # Same path, new schema, no Spark footer key: the memo key (size, mtime)
+    # must miss, so the stale Spark schema is not reused.
+    data = next(p for p in Path(base).rglob("part-*.parquet"))
+    pq.write_table(pa.table({"id": [7], "extra": ["x"]}), data)
+    _assert_fallback(spark, base, jobs_of)
+
+
+def test_read_partitioned_keeps_every_study_column(spark, tmp_path):
+    """Studies promoted with different annotation keys share one sink: the
+    read-back must hold the union of their columns, not one file's schema
+    (the columns of the study written second were dropped)."""
+    base = str(tmp_path / "sink")
+    first = spark.createDataFrame([("a", "s0", "r0", {"k1": "x"})], "app string, study string, recordId string, ann map<string,string>")
+    second = spark.createDataFrame(
+        [("a", "s1", "r1", {"k1": "y", "k2": "z"})], "app string, study string, recordId string, ann map<string,string>"
+    )
+    write_partitioned(promote_annotations(first, "ann"), base, dynamic_overwrite=True)
+    write_partitioned(promote_annotations(second, "ann"), base, dynamic_overwrite=True)
+    back = read_partitioned(spark, base)
+    assert {"recordId", "k1", "k2", "app", "study"} == set(back.columns)
+    rows = {r["study"]: r for r in back.collect()}
+    assert rows["s1"]["k2"] == "z" and rows["s1"]["k1"] == "y"
+    assert rows["s0"]["k2"] is None and rows["s0"]["k1"] == "x"
+
+
+def test_read_partitioned_raises_on_incompatible_study_types(spark, tmp_path):
+    base = str(tmp_path / "sink")
+    schema = "app string, study string, v {}"
+    write_partitioned(spark.createDataFrame([("a", "s0", 1)], schema.format("int")), base, dynamic_overwrite=True)
+    write_partitioned(spark.createDataFrame([("a", "s1", True)], schema.format("boolean")), base, dynamic_overwrite=True)
+    with pytest.raises(Exception, match="cannot be merged"):
+        read_partitioned(spark, base)
+
+
+def file_view_two_pass(spark, scope, annotation_col):
+    """``file_view`` before one-pass key discovery, kept as the reference:
+    one ``withColumn`` per metadata column, then the key universe from a
+    ``distinct().collect()`` of the exploded map keys."""
+    from bridge_analytics_template_spark.sources.fileview import METADATA_COLS
+
+    df = spark.read.parquet(scope)
+    for alias, src in METADATA_COLS.items():
+        df = df.withColumn(alias, F.col(src))
+    keys = sorted(
+        r[0]
+        for r in df.select(F.explode(F.map_keys(F.col(annotation_col))).alias("k")).distinct().collect()
+    )
+    cols = [F.col(c) for c in df.columns if c != annotation_col]
+    cols += [F.element_at(F.col(annotation_col), F.lit(k)).alias(k) for k in keys]
+    return df.select(cols)
+
+
+_ANNOTATIONS = {
+    "dotted_and_spaced_keys": [[("a.b", "1"), ("c d", "2")], None, [], [("plain", "3"), ("a.b", "4")]],
+    "all_null_maps": [None, None, None],
+    "empty_input": [],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_ANNOTATIONS))
+def test_file_view_matches_two_pass_form(spark, tmp_path, case):
+    from collections import Counter
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    maps = _ANNOTATIONS[case]
+    # file_size collides with a metadata column: replaced in place, not appended
+    table = pa.table({
+        "recordId": [f"r{i}" for i in range(len(maps))],
+        "file_size": pa.array(["raw"] * len(maps), pa.string()),
+        "annotations": pa.array(maps, pa.map_(pa.string(), pa.string())),
+    })
+    scope = tmp_path / "raw"
+    scope.mkdir()
+    pq.write_table(table, scope / "export-000.parquet")
+    pq.write_table(table.slice(0, len(maps) // 2), scope / "export-001.parquet")
+    got = file_view(spark, str(scope), annotation_col="annotations")
+    want = file_view_two_pass(spark, str(scope), "annotations")
+    assert got.columns == want.columns
+    assert got.schema == want.schema
+    assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))

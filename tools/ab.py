@@ -25,7 +25,10 @@ regressions; last present at commit 51b8615):
   job group, so a pass also reports how long the build took and how many
   jobs each phase ran. A build job re-executes its whole upstream
   lineage before the action starts. Jobs a variant starts on its own
-  worker threads carry no job group and are not counted.
+  worker threads are counted only when the thread inherits the caller's
+  local properties (``pyspark.util.inheritable_thread_target``, as the
+  package's driver thread pools do); a plain thread's jobs carry no job
+  group and are not counted.
 
 Usage::
 
