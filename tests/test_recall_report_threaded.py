@@ -11,6 +11,7 @@ form, kept verbatim below as the reference (``recall_report_serial``).
 from __future__ import annotations
 
 import concurrent.futures
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -97,13 +98,13 @@ class CallingThreadExecutor:
 @pytest.mark.parametrize(
     "name, table", [("llm_ann_recall_report", "embeddings"), ("llm_dedup_cascade", "documents")]
 )
-def test_pool_jobs_count_as_build_jobs(spark, monkeypatch, name, table):
+def test_pool_jobs_count_as_build_jobs(spark, sf_dir, monkeypatch, name, table):
     """The jobs a query starts on its driver thread pool are attributed to
     the caller's job group: ``tools/ab.py`` counts as many build jobs as for
     the same body run serially on the calling thread. (``recall_report_serial``
     above is not that reference: it fetches nothing at build time, so its
     method pipelines run in the exec phase.)"""
-    sf = "/root/testdata/sf0.01"
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
     load(spark, sf, table)  # the scan's schema job runs once per session: not in either pass
     threaded = measure(spark, [name], 1, sf, "count")[name]
     monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", CallingThreadExecutor)
