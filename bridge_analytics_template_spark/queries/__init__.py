@@ -6,7 +6,7 @@ verification driver.
 
 from __future__ import annotations
 
-from .registry import ORACLES, QUERIES, query  # noqa: F401
+from .registry import ORACLES, ORDERS, QUERIES, ordered, query  # noqa: F401
 
 # Import for side effect: each module registers its queries.
 from . import relational  # noqa: E402,F401

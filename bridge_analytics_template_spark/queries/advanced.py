@@ -53,6 +53,7 @@ _HH_DEN = 50  # support threshold: share >= 1/50 = 2% of all tokens
     HAVING COUNT(*) * {_HH_DEN} >= (SELECT COUNT(*) FROM toks)
     ORDER BY n DESC, tok
     """,
+    order_by=("n DESC", "tok"),
 )
 def llm_heavy_hitters(spark, sf_dir):
     """Exact frequent-token mining, sketch-pruned: per-partition candidate
@@ -94,7 +95,6 @@ def llm_heavy_hitters(spark, sf_dir):
         .crossJoin(F.broadcast(total))
         .where(F.col("n") * _HH_DEN >= F.col("n_tokens"))
         .select("tok", "n")
-        .orderBy(F.desc("n"), "tok")
     )
 
 
@@ -124,6 +124,7 @@ def llm_heavy_hitters(spark, sf_dir):
     SELECT hops, COUNT(*) AS n_nodes, CAST(SUM(node) AS BIGINT) AS sum_node
     FROM dist GROUP BY hops ORDER BY hops
     """,
+    order_by=("hops",),
 )
 def graph_shortest_paths(spark, sf_dir):
     """Multi-source BFS, <= 3 hops, over the event hand-off graph (same edge
@@ -180,7 +181,6 @@ def graph_shortest_paths(spark, sf_dir):
     return (
         dist.groupBy("hops")
         .agg(F.count(F.lit(1)).alias("n_nodes"), F.sum("node").alias("sum_node"))
-        .orderBy("hops")
     )
 
 
@@ -212,6 +212,7 @@ def graph_shortest_paths(spark, sf_dir):
     SELECT status, COUNT(*) AS n, CAST(SUM(k) AS BIGINT) AS key_sum
     FROM d GROUP BY status ORDER BY status
     """,
+    order_by=("status",),
 )
 def snapshot_diff(spark, sf_dir):
     """Version-to-version dataset diff (added / removed / changed /
@@ -250,7 +251,6 @@ def snapshot_diff(spark, sf_dir):
         )
         .groupBy("status")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("k").alias("key_sum"))
-        .orderBy("status")
     )
 
 
@@ -344,6 +344,7 @@ _AES_KEY = "0123456789abcdef"  # 16-byte demo key (AES-128)
            (octet_length(encode(c_name)) // 16 + 1) * 16 AS ct_len
     FROM customer ORDER BY c_custkey
     """,
+    order_by=("c_custkey",),
 )
 def f_crypto_roundtrip(spark, sf_dir):
     """Column-level encryption round-trip (PII-at-rest shape):
@@ -361,7 +362,7 @@ def f_crypto_roundtrip(spark, sf_dir):
         "c_custkey",
         dec.alias("name_rt"),
         F.octet_length(enc).cast("long").alias("ct_len"),
-    ).orderBy("c_custkey")
+    )
 
 
 # --- Calendar seasonality --------------------------------------------------
@@ -381,6 +382,7 @@ def f_crypto_roundtrip(spark, sf_dir):
            CAST(SUM(cents) AS BIGINT) AS cents_sum
     FROM b GROUP BY 1, 2 ORDER BY 1, 2
     """,
+    order_by=("dow", "hr"),
 )
 def events_seasonality(spark, sf_dir):
     """Day-of-week x hour-of-day activity heatmap. Both engines derive the
@@ -402,7 +404,6 @@ def events_seasonality(spark, sf_dir):
             F.countDistinct("user_id").alias("n_users"),
             F.sum("cents").alias("cents_sum"),
         )
-        .orderBy("dow", "hr")
     )
 
 
@@ -434,6 +435,7 @@ def events_seasonality(spark, sf_dir):
       LEFT JOIN vcp u3 ON u3.user_id = u.user_id)
     SELECT level, COUNT(*) AS n_users FROM lvl GROUP BY 1 ORDER BY 1
     """,
+    order_by=("level",),
 )
 def events_window_funnel(spark, sf_dir):
     """Time-bounded funnel (view -> click -> purchase, all within 1 hour of
@@ -475,7 +477,6 @@ def events_window_funnel(spark, sf_dir):
         .select(level.alias("level"))
         .groupBy("level")
         .agg(F.count(F.lit(1)).alias("n_users"))
-        .orderBy("level")
     )
 
 
@@ -494,6 +495,7 @@ def events_window_funnel(spark, sf_dir):
            len(regexp_extract_all(seq, 'vc*p')) AS n_funnel_runs
     FROM s ORDER BY user_id
     """,
+    order_by=("user_id",),
 )
 def events_pattern_runs(spark, sf_dir):
     """Complex-event regex over per-user ordered event sequences (the
@@ -519,7 +521,6 @@ def events_pattern_runs(spark, sf_dir):
             F.length(F.regexp_replace("seq", "[^v]", "")).cast("long").alias("n_v"),
             F.regexp_count("seq", F.lit("vc*p")).cast("long").alias("n_funnel_runs"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -547,6 +548,7 @@ _WIN_W = 4  # winnowing window (shingle hashes per window)
                i -> list_min(hs[i:i+{_WIN_W - 1}])))), ',') AS fp
     FROM g ORDER BY doc_id
     """.replace("{toks}", "string_split_regex(trim(lower(text)), '\\s+')"),
+    order_by=("doc_id",),
 )
 def llm_winnowing(spark, sf_dir):
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken 2003, the
@@ -593,7 +595,7 @@ def llm_winnowing(spark, sf_dir):
     # winnowing expression over every row a second time.
     from ..caching import track
 
-    return track(fps.persist()).orderBy("doc_id")
+    return track(fps.persist())
 
 
 # --- Cohort lifetime value -------------------------------------------------
@@ -612,6 +614,7 @@ def llm_winnowing(spark, sf_dir):
     FROM o JOIN first ON o.o_custkey = first.o_custkey
     GROUP BY 1, 2 ORDER BY 1, 2
     """,
+    order_by=("cohort", "offset_m"),
 )
 def q_cohort_ltv(spark, sf_dir):
     """Cohorted lifetime value: customers grouped by first-order month
@@ -631,7 +634,6 @@ def q_cohort_ltv(spark, sf_dir):
             F.countDistinct("o_custkey").alias("n_active"),
             F.sum("cents").alias("cents_sum"),
         )
-        .orderBy("cohort", "offset_m")
     )
 
 
@@ -664,7 +666,7 @@ _RRF_SQL = f"""
     """
 
 
-@query("llm_hybrid_rrf", sql=_RRF_SQL)
+@query("llm_hybrid_rrf", sql=_RRF_SQL, order_by=("rrf_ppm DESC", "doc_id"))
 def llm_hybrid_rrf(spark, sf_dir):
     """Hybrid retrieval for probe id 3: fuse the BM25 lexical top-10 (doc
     3's tokens as the query) with the embedding cosine top-10 (vec 3 as the
@@ -700,7 +702,7 @@ def llm_hybrid_rrf(spark, sf_dir):
         rrf.cast("long").alias("rrf_ppm"),
         F.coalesce("r_lex", F.lit(0)).cast("long").alias("r_lex"),
         F.coalesce("r_sem", F.lit(0)).cast("long").alias("r_sem"),
-    ).orderBy(F.desc("rrf_ppm"), "doc_id")
+    )
 
 
 # --- Leakage-safe train/val split (cluster-aware) --------------------------
@@ -728,7 +730,7 @@ _LEAKAGE_SAFE_SQL = f"""
     """
 
 
-@query("train_split_leakage_safe", sql=_LEAKAGE_SAFE_SQL)
+@query("train_split_leakage_safe", sql=_LEAKAGE_SAFE_SQL, order_by=("split", "lang"))
 def train_split_leakage_safe(spark, sf_dir):
     """Cluster-aware train/val split: hash the near-dup CLUSTER
     representative (min doc id of the 5-gram-Jaccard component, same edge
@@ -756,7 +758,6 @@ def train_split_leakage_safe(spark, sf_dir):
         rep.select(split.alias("split"), "lang")
         .groupBy("split", "lang")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("split", "lang")
     )
 
 
@@ -948,6 +949,7 @@ _NDCG_CASE = "CASE rnk " + " ".join(
            CAST((SUM(rel * {_NDCG_CASE}) * 1000000) // {_NDCG_IDCG} AS BIGINT) AS ndcg_ppm
     FROM j GROUP BY 1 ORDER BY 1
     """,
+    order_by=("query_id",),
 )
 def llm_binary_quant_ndcg(spark, sf_dir):
     """Retrieval-quality report for 1-bit (sign) embedding quantization:
@@ -988,7 +990,6 @@ def llm_binary_quant_ndcg(spark, sf_dir):
             "dcg",
             F.expr(f"dcg * 1000000 DIV {_NDCG_IDCG}").alias("ndcg_ppm"),
         )
-        .orderBy("query_id")
     )
 
 
@@ -1011,6 +1012,7 @@ def llm_binary_quant_ndcg(spark, sf_dir):
            CAST(SUM(cents) AS BIGINT) AS cents_sum
     FROM r GROUP BY 1 ORDER BY 1
     """,
+    order_by=("decile",),
 )
 def q_decile_bins(spark, sf_dir):
     """Exact decile bucketization of per-customer revenue — the quantile
@@ -1045,7 +1047,6 @@ def q_decile_bins(spark, sf_dir):
             F.max("cents").alias("max_cents"),
             F.sum("cents").alias("cents_sum"),
         )
-        .orderBy("decile")
     )
 
 
@@ -1064,6 +1065,7 @@ def q_decile_bins(spark, sf_dir):
     SELECT doc_id, lang, (i * 1000000) // greatest(n - 1, 1) AS pct_ppm
     FROM r ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_length_quantile(spark, sf_dir):
     """Quantile normalization of document length WITHIN language (the
@@ -1084,7 +1086,6 @@ def llm_length_quantile(spark, sf_dir):
             F.count(F.lit(1)).over(wn).alias("n"),
         )
         .select("doc_id", "lang", F.expr("i * 1000000 DIV greatest(n - 1, 1)").alias("pct_ppm"))
-        .orderBy("doc_id")
     )
 
 
@@ -1131,6 +1132,7 @@ def llm_length_quantile(spark, sf_dir):
     SELECT status, COUNT(*) AS n_pairs, CAST(SUM(key_sum) AS BIGINT) AS keys_sum
     FROM j GROUP BY status ORDER BY status
     """,
+    order_by=("status",),
 )
 def llm_dedup_agreement(spark, sf_dir):
     """Multi-signal dedup agreement matrix: which near-dup pairs does the
@@ -1171,7 +1173,6 @@ def llm_dedup_agreement(spark, sf_dir):
         j.select(status.alias("status"), key_sum.alias("key_sum"))
         .groupBy("status")
         .agg(F.count(F.lit(1)).alias("n_pairs"), F.sum("key_sum").alias("keys_sum"))
-        .orderBy("status")
     )
 
 
@@ -1201,6 +1202,7 @@ def llm_dedup_agreement(spark, sf_dir):
     SELECT vec_id, abs_err_ppm, min_code, max_code, n_saturated
     FROM err ORDER BY vec_id
     """,
+    order_by=("vec_id",),
 )
 def emb_quantize_error(spark, sf_dir):
     """int8 scalar-quantization calibration report: per-vector max-abs
@@ -1240,7 +1242,7 @@ def emb_quantize_error(spark, sf_dir):
         F.size(F.filter(F.col("codes"), lambda c: F.abs(c) == 127)).cast("long").alias(
             "n_saturated"
         ),
-    ).orderBy("vec_id")
+    )
 
 
 # --- Balanced dataloader sharding -------------------------------------------
@@ -1260,6 +1262,7 @@ _N_SHARDS = 8
            MIN(doc_id) AS first_doc
     FROM r GROUP BY 1 ORDER BY 1
     """,
+    order_by=("shard",),
 )
 def train_shard_assign(spark, sf_dir):
     """Balanced dataloader sharding: documents ranked by size descending,
@@ -1282,7 +1285,6 @@ def train_shard_assign(spark, sf_dir):
             F.sum("n_chars").alias("total_chars"),
             F.min("doc_id").alias("first_doc"),
         )
-        .orderBy("shard")
     )
 
 
@@ -1445,6 +1447,7 @@ def profile_join_explosion(spark, sf_dir):
     SELECT bucket, COUNT(*) AS n, MAX(late_s) AS max_late_s
     FROM b GROUP BY bucket ORDER BY bucket
     """,
+    order_by=("bucket",),
 )
 def events_watermark_report(spark, sf_dir):
     """Watermark calibration: how late does event time arrive behind each
@@ -1476,7 +1479,6 @@ def events_watermark_report(spark, sf_dir):
         .select(bucket.alias("bucket"), "late_s")
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"), F.max("late_s").alias("max_late_s"))
-        .orderBy("bucket")
     )
 
 
@@ -1503,6 +1505,7 @@ _TE_M = 10  # smoothing pseudo-count
                 AS DOUBLE) AS encoded_cents
     FROM per, g ORDER BY per.c_nationkey
     """,
+    order_by=("c_nationkey",),
 )
 def q_target_encoding(spark, sf_dir):
     """Smoothed target encoding of nation → mean order value (the
@@ -1528,7 +1531,6 @@ def q_target_encoding(spark, sf_dir):
     return (
         per.crossJoin(F.broadcast(g))
         .select("c_nationkey", "n", "sum_cents", enc.alias("encoded_cents"))
-        .orderBy("c_nationkey")
     )
 
 
@@ -1555,6 +1557,7 @@ def q_target_encoding(spark, sf_dir):
             FROM j jj) AS BIGINT) AS tvd_ppm
     FROM j, t ORDER BY j.v
     """,
+    order_by=("v",),
 )
 def profile_distribution_drift(spark, sf_dir):
     """Snapshot-to-snapshot distribution drift of a categorical column as
@@ -1595,7 +1598,6 @@ def profile_distribution_drift(spark, sf_dir):
     return (
         withT.select("v", "n1", "n2", num.alias("tvd_num"))
         .crossJoin(F.broadcast(tvd))
-        .orderBy("v")
     )
 
 
@@ -1619,6 +1621,7 @@ def profile_distribution_drift(spark, sf_dir):
     FROM dau JOIN wau ON dau.d = wau.d
     ORDER BY dau.d
     """,
+    order_by=("d",),
 )
 def events_dau_wau(spark, sf_dir):
     """DAU / trailing-7-day WAU / stickiness (DAU/WAU) — the product-health
@@ -1638,7 +1641,6 @@ def events_dau_wau(spark, sf_dir):
     return (
         dau.join(wau, "d")
         .select("d", "dau", "wau", F.expr("dau * 1000000 DIV wau").alias("stickiness_ppm"))
-        .orderBy("d")
     )
 
 
@@ -1789,6 +1791,7 @@ def emb_drift_report(spark, sf_dir):
            CAST(SUM(w_ppm) AS BIGINT) AS eff_docs_ppm
     FROM w GROUP BY lang ORDER BY lang
     """,
+    order_by=("lang",),
 )
 def llm_soft_dedup_weights(spark, sf_dir):
     """Soft deduplication: instead of dropping duplicates, weight every
@@ -1804,7 +1807,6 @@ def llm_soft_dedup_weights(spark, sf_dir):
         .select("lang", F.expr("1000000 DIV n_copies").alias("w_ppm"))
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("w_ppm").alias("eff_docs_ppm"))
-        .orderBy("lang")
     )
 
 
@@ -1883,6 +1885,7 @@ def events_funnel_latency(spark, sf_dir):
                  JOIN sizes sb ON i.lang_b = sb.lang
     ORDER BY lang_a, lang_b
     """,
+    order_by=("lang_a", "lang_b"),
 )
 def llm_vocab_overlap(spark, sf_dir):
     """Cross-language vocabulary overlap matrix (pairwise Jaccard of
@@ -1914,7 +1917,6 @@ def llm_vocab_overlap(spark, sf_dir):
             "n_b",
             F.expr("n_inter * 1000000 DIV (n_a + n_b - n_inter)").alias("jaccard_ppm"),
         )
-        .orderBy("lang_a", "lang_b")
     )
 
 
@@ -1934,6 +1936,7 @@ def llm_vocab_overlap(spark, sf_dir):
            MAX(cents) AS p100
     FROM q GROUP BY event_type ORDER BY event_type
     """,
+    order_by=("event_type",),
 )
 def events_tail_percentiles(spark, sf_dir):
     """Per-type tail percentiles (p50/p95/p99/max) of the event value — the
@@ -1956,7 +1959,6 @@ def events_tail_percentiles(spark, sf_dir):
             pd_(0.99).alias("p99"),
             F.max("cents").alias("p100"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1979,6 +1981,7 @@ def events_tail_percentiles(spark, sf_dir):
            CAST((SUM(n_space) * 1000000) // SUM(n_all) AS BIGINT) AS space_ppm
     FROM c GROUP BY lang ORDER BY lang
     """,
+    order_by=("lang",),
 )
 def llm_charset_profile(spark, sf_dir):
     """Per-language character-class composition (alpha/digit/space ppm) —
@@ -2004,7 +2007,6 @@ def llm_charset_profile(spark, sf_dir):
             F.expr("SUM(n_digit) * 1000000 DIV SUM(n_all)").alias("digit_ppm"),
             F.expr("SUM(n_space) * 1000000 DIV SUM(n_all)").alias("space_ppm"),
         )
-        .orderBy("lang")
     )
 
 
@@ -2021,6 +2023,7 @@ def llm_charset_profile(spark, sf_dir):
                   '-8', substr(x, 18, 3), '-', substr(x, 21, 12)) AS stable_uuid
     FROM h ORDER BY c_custkey
     """,
+    order_by=("c_custkey",),
 )
 def f_deterministic_uuid(spark, sf_dir):
     """Name-based deterministic UUIDs (UUIDv3 shape: md5 of a namespaced
@@ -2037,4 +2040,4 @@ def f_deterministic_uuid(spark, sf_dir):
         F.substring(x, 18, 3), F.lit("-"),
         F.substring(x, 21, 12),
     )
-    return c.select("c_custkey", uuid.alias("stable_uuid")).orderBy("c_custkey")
+    return c.select("c_custkey", uuid.alias("stable_uuid"))

@@ -27,6 +27,7 @@ from .registry import query
                 WHEN COUNT(*) = 1 THEN 'unique' ELSE 'many' END AS cardinality
     FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
     """,
+    order_by=("o_orderstatus",),
 )
 def agg_count_guard(spark, sf_dir):
     """A1: count with 0/1/many classification — the reference's
@@ -39,7 +40,6 @@ def agg_count_guard(spark, sf_dir):
             n.alias("n"),
             F.when(n == 0, "none").when(n == 1, "unique").otherwise("many").alias("cardinality"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -53,6 +53,7 @@ def agg_count_guard(spark, sf_dir):
     FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
     GROUP BY 1 ORDER BY 1
     """,
+    order_by=("nation",),
 )
 def agg_groupby(spark, sf_dir):
     """A2: per-group hash aggregate with the full agg family (the per-study
@@ -69,7 +70,6 @@ def agg_groupby(spark, sf_dir):
             F.min("s_acctbal").alias("min_bal"),
             F.max("s_acctbal").alias("max_bal"),
         )
-        .orderBy("nation")
     )
 
 
@@ -79,6 +79,7 @@ def agg_groupby(spark, sf_dir):
     SELECT c_mktsegment, COUNT(DISTINCT c_nationkey) AS n_nations, COUNT(*) AS n_custs
     FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment
     """,
+    order_by=("c_mktsegment",),
 )
 def agg_count_distinct(spark, sf_dir):
     """A3: count-distinct (expand + two-phase agg under the hood)."""
@@ -89,7 +90,6 @@ def agg_count_distinct(spark, sf_dir):
             F.countDistinct("c_nationkey").alias("n_nations"),
             F.count(F.lit(1)).alias("n_custs"),
         )
-        .orderBy("c_mktsegment")
     )
 
 
@@ -102,6 +102,7 @@ def agg_count_distinct(spark, sf_dir):
            TRUE AS approx_ok
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
+    order_by=("l_returnflag",),
 )
 def agg_approx_count_distinct(spark, sf_dir):
     """A4: HyperLogLog++ cardinality — the 100 TB substitute for exact
@@ -131,7 +132,6 @@ def agg_approx_count_distinct(spark, sf_dir):
                 <= F.col("exact_orders") * 0.06
             ).alias("approx_ok"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -147,6 +147,7 @@ def agg_approx_count_distinct(spark, sf_dir):
     SELECT 'ALL', COUNT(DISTINCT o_custkey), COUNT(*), TRUE FROM orders
     ORDER BY o_orderpriority
     """,
+    order_by=("o_orderpriority",),
 )
 def agg_hll_sketch(spark, sf_dir):
     """A4b: mergeable HLL sketches (Apache DataSketches binary form) — the
@@ -194,7 +195,7 @@ def agg_hll_sketch(spark, sf_dir):
             ok(F.col("_est"), F.col("exact_custs")),
         )
     )
-    return leaf.unionByName(total).orderBy("o_orderpriority")
+    return leaf.unionByName(total)
 
 
 @query(
@@ -206,6 +207,7 @@ def agg_hll_sketch(spark, sf_dir):
            10000.0 * (FLOOR(l_extendedprice / 10000.0) + 1) AS hi
     FROM lineitem GROUP BY 1, 3, 4 ORDER BY bucket
     """,
+    order_by=("bucket",),
 )
 def agg_histogram(spark, sf_dir):
     """Equi-width histogram via width_bucket — the one-pass distribution
@@ -220,7 +222,6 @@ def agg_histogram(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
         .withColumn("lo", (F.col("bucket") - 1).cast("double") * 10000.0)
         .withColumn("hi", F.col("bucket").cast("double") * 10000.0)
-        .orderBy("bucket")
     )
 
 
@@ -236,6 +237,7 @@ def agg_histogram(spark, sf_dir):
     GROUP BY ROLLUP (r.r_name, n.n_name)
     ORDER BY g_region, g_nation, region NULLS FIRST, nation NULLS FIRST
     """,
+    order_by=("g_region", "g_nation", "region", "nation"),
 )
 def agg_rollup(spark, sf_dir):
     """A5: hierarchy rollup region → nation → grand total (the
@@ -254,7 +256,6 @@ def agg_rollup(spark, sf_dir):
             F.count(F.lit(1)).alias("n_custs"),
             dsum(dmoney("c_acctbal"), "total_bal"),
         )
-        .orderBy("g_region", "g_nation", F.col("region").asc_nulls_first(), F.col("nation").asc_nulls_first())
     )
 
 
@@ -268,6 +269,7 @@ def agg_rollup(spark, sf_dir):
     GROUP BY CUBE (l_returnflag, l_linestatus)
     ORDER BY g_rf, g_ls, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
     """,
+    order_by=("g_rf", "g_ls", "l_returnflag", "l_linestatus"),
 )
 def agg_cube(spark, sf_dir):
     """A5: full cube over the two flag dimensions."""
@@ -278,11 +280,6 @@ def agg_cube(spark, sf_dir):
             F.grouping("l_returnflag").alias("g_rf"),
             F.grouping("l_linestatus").alias("g_ls"),
             F.count(F.lit(1)).alias("n"),
-        )
-        .orderBy(
-            "g_rf", "g_ls",
-            F.col("l_returnflag").asc_nulls_first(),
-            F.col("l_linestatus").asc_nulls_first(),
         )
     )
 
@@ -296,6 +293,7 @@ def agg_cube(spark, sf_dir):
            {sql_dsum(f"CASE WHEN o_orderstatus = 'O' THEN {sql_money('o_totalprice')} ELSE CAST(0 AS DECIMAL(12,2)) END", "open_value")}
     FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
+    order_by=("o_orderpriority",),
 )
 def agg_conditional(spark, sf_dir):
     """A6: filtered/conditional aggregates (count of isFirstAssessment-style
@@ -309,7 +307,6 @@ def agg_conditional(spark, sf_dir):
             F.count_if(F.col("o_totalprice") > 200000).alias("n_big"),
             dsum(F.when(F.col("o_orderstatus") == "O", dmoney("o_totalprice")).otherwise(zero), "open_value"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -320,6 +317,7 @@ def agg_conditional(spark, sf_dir):
            array_to_string(list_sort(list(DISTINCT n_name)), '|') AS nations
     FROM nation GROUP BY 1 ORDER BY 1
     """,
+    order_by=("regionkey",),
 )
 def agg_collect_set(spark, sf_dir):
     """A7: rebuild array cells from rows — the scopeIds array shape
@@ -331,7 +329,6 @@ def agg_collect_set(spark, sf_dir):
         load(spark, sf_dir, "nation")
         .groupBy(F.col("n_regionkey").alias("regionkey"))
         .agg(F.array_join(F.array_sort(F.collect_set("n_name")), "|").alias("nations"))
-        .orderBy("regionkey")
     )
 
 
@@ -343,6 +340,7 @@ def agg_collect_set(spark, sf_dir):
            quantile_cont(c_acctbal, 0.9) AS p90
     FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment
     """,
+    order_by=("c_mktsegment",),
 )
 def agg_percentiles(spark, sf_dir):
     """A8: exact interpolated percentiles (score-distribution semantics for
@@ -355,7 +353,6 @@ def agg_percentiles(spark, sf_dir):
             F.percentile("c_acctbal", 0.5).alias("p50"),
             F.percentile("c_acctbal", 0.9).alias("p90"),
         )
-        .orderBy("c_mktsegment")
     )
 
 
@@ -375,6 +372,7 @@ def agg_percentiles(spark, sf_dir):
            END AS stddev_bal
     FROM customer GROUP BY c_nationkey ORDER BY c_nationkey
     """,
+    order_by=("c_nationkey",),
 )
 def agg_stddev_moments(spark, sf_dir):
     """A8: sample stddev from exact decimal moments — deterministic under
@@ -395,7 +393,6 @@ def agg_stddev_moments(spark, sf_dir):
             s2.alias("s2"),
             F.when(n > 1, F.sqrt(F.greatest(F.lit(0.0), var))).alias("stddev_bal"),
         )
-        .orderBy("c_nationkey")
     )
 
 
@@ -408,6 +405,7 @@ def agg_stddev_moments(spark, sf_dir):
            percentile_disc(0.9) WITHIN GROUP (ORDER BY l_extendedprice) AS price_p90_disc
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
+    order_by=("l_returnflag",),
 )
 def agg_mode_pdisc(spark, sf_dir):
     """Inverse-distribution aggregates: mode + percentile_disc (WITHIN
@@ -429,7 +427,6 @@ def agg_mode_pdisc(spark, sf_dir):
                 "percentile_disc(0.9) WITHIN GROUP (ORDER BY l_extendedprice)"
             ).alias("price_p90_disc"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -439,6 +436,7 @@ def agg_mode_pdisc(spark, sf_dir):
     SELECT o_orderpriority AS item, COUNT(*) AS n
     FROM orders GROUP BY 1 ORDER BY n DESC, item LIMIT 5
     """,
+    order_by=("n DESC", "item"),
 )
 def agg_approx_top_k(spark, sf_dir):
     """Heavy hitters via approx_top_k (Spark 4) — a bounded-memory sketch
@@ -451,7 +449,6 @@ def agg_approx_top_k(spark, sf_dir):
         o.agg(F.expr("approx_top_k(o_orderpriority, 5, 100)").alias("t"))
         .select(F.explode("t").alias("e"))
         .select(F.col("e.item").alias("item"), F.col("e.count").alias("n"))
-        .orderBy(F.desc("n"), "item")
     )
 
 
@@ -568,6 +565,7 @@ def agg_hll_intersect(spark, sf_dir):
     FROM m WHERE n > 3 AND s2 / n - (s1 / n) * (s1 / n) > 0
     ORDER BY c_nationkey
     """,
+    order_by=("c_nationkey",),
 )
 def agg_skew_kurtosis(spark, sf_dir):
     """A8+: population skewness and excess kurtosis from EXACT raw moments —
@@ -612,5 +610,4 @@ def agg_skew_kurtosis(spark, sf_dir):
             (m3 / (m2 * F.sqrt(m2))).alias("skewness"),
             (m4 / (m2 * m2) - F.lit(3.0)).alias("ex_kurtosis"),
         )
-        .orderBy("c_nationkey")
     )

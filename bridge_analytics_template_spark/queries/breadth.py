@@ -20,6 +20,7 @@ from .registry import query
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
     ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
     """,
+    order_by=("l_returnflag", "l_linestatus"),
 )
 def agg_grouping_sets(spark, sf_dir):
     """A5: explicit GROUPING SETS (the general form of rollup/cube)."""
@@ -29,7 +30,6 @@ def agg_grouping_sets(spark, sf_dir):
         SELECT l_returnflag, l_linestatus, COUNT(*) AS n
         FROM lineitem
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
         """
     )
 
@@ -47,6 +47,7 @@ def agg_grouping_sets(spark, sf_dir):
     WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey)
     ORDER BY c_custkey
     """,
+    order_by=("c_custkey",),
 )
 def w_rank_family(spark, sf_dir):
     """W1 extension: the full rank family (rank / dense_rank / percent_rank
@@ -60,7 +61,7 @@ def w_rank_family(spark, sf_dir):
         F.percent_rank().over(w).alias("prnk"),
         F.cume_dist().over(w).alias("cdist"),
         F.ntile(4).over(w).alias("quartile"),
-    ).orderBy("c_custkey")
+    )
 
 
 @query(
@@ -72,6 +73,7 @@ def w_rank_family(spark, sf_dir):
            MAX(o_orderkey) AS max_key, MIN(o_orderkey) AS min_key
     FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
     """,
+    order_by=("o_orderstatus",),
 )
 def agg_min_max_by(spark, sf_dir):
     """A2 extension: argmin/argmax aggregates (min_by/max_by) keyed on the
@@ -85,7 +87,6 @@ def agg_min_max_by(spark, sf_dir):
             F.max("o_orderkey").alias("max_key"),
             F.min("o_orderkey").alias("min_key"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -97,6 +98,7 @@ def agg_min_max_by(spark, sf_dir):
     WHERE substring(md5(concat(CAST(l_orderkey AS VARCHAR), '_', CAST(l_linenumber AS VARCHAR))), 1, 2) <= '0c'
     GROUP BY 1 ORDER BY 1
     """,
+    order_by=("l_returnflag",),
 )
 def s_sample_hash(spark, sf_dir):
     """Deterministic content-hash sampling (~5%, rows where the md5 prefix
@@ -111,7 +113,6 @@ def s_sample_hash(spark, sf_dir):
         l.filter(F.substring(F.md5(key), 1, 2) <= "0c")
         .groupBy("l_returnflag")
         .agg(F.count(F.lit(1)).alias("n_sampled"))
-        .orderBy("l_returnflag")
     )
 
 
@@ -123,6 +124,7 @@ def s_sample_hash(spark, sf_dir):
            COUNT(*) AS n
     FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
     """,
+    order_by=("o_orderstatus",),
 )
 def agg_listagg(spark, sf_dir):
     """A7 extension: LISTAGG/string_agg semantics — deterministic via
@@ -135,7 +137,6 @@ def agg_listagg(spark, sf_dir):
             F.array_join(F.array_sort(F.collect_set("o_orderpriority")), ",").alias("priorities"),
             F.count(F.lit(1)).alias("n"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -149,6 +150,7 @@ def agg_listagg(spark, sf_dir):
            bit_or(l_linenumber) AS bor
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
+    order_by=("l_returnflag",),
 )
 def agg_bool_bit(spark, sf_dir):
     """A6 extension: boolean (every/any) and bitwise aggregate family."""
@@ -161,7 +163,6 @@ def agg_bool_bit(spark, sf_dir):
             F.bit_and("l_linenumber").alias("band"),
             F.bit_or("l_linenumber").alias("bor"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -174,6 +175,7 @@ def agg_bool_bit(spark, sf_dir):
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_closed_price
     FROM orders ORDER BY o_orderkey
     """,
+    order_by=("o_orderkey",),
 )
 def w_last_ignore_nulls(spark, sf_dir):
     """W2 extension: last_value(... IGNORE NULLS) — carry the latest
@@ -188,7 +190,7 @@ def w_last_ignore_nulls(spark, sf_dir):
     masked = F.when(F.col("o_orderstatus") == "O", F.lit(None)).otherwise(F.col("o_totalprice"))
     return o.select(
         "o_orderkey", F.last(masked, ignorenulls=True).over(w).alias("last_closed_price")
-    ).orderBy("o_orderkey")
+    )
 
 
 @query(
@@ -229,6 +231,7 @@ def join_full_outer(spark, sf_dir):
     GROUP BY 2
     ORDER BY op, o_orderstatus
     """,
+    order_by=("op", "o_orderstatus"),
 )
 def set_ops_all(spark, sf_dir):
     """U2 completion: bag-semantics set ops (EXCEPT ALL / INTERSECT ALL) —
@@ -248,7 +251,7 @@ def set_ops_all(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.lit("intersect_all").alias("op"), "o_orderstatus", "n")
     )
-    return ex.unionAll(it).orderBy("op", "o_orderstatus")
+    return ex.unionAll(it)
 
 
 @query(
@@ -260,6 +263,7 @@ def set_ops_all(spark, sf_dir):
       ON a.k IS NOT DISTINCT FROM b.k
     ORDER BY left_key, right_key
     """,
+    order_by=("left_key", "right_key"),
 )
 def join_null_safe(spark, sf_dir):
     """J1 edge semantics: null-safe equality join (`<=>` / IS NOT DISTINCT
@@ -271,7 +275,6 @@ def join_null_safe(spark, sf_dir):
     return (
         a.join(b, F.col("a.k").eqNullSafe(F.col("b.k")))
         .select(F.col("a.n_nationkey").alias("left_key"), F.col("b.n_nationkey").alias("right_key"))
-        .orderBy("left_key", "right_key")
     )
 
 
@@ -290,6 +293,7 @@ def join_null_safe(spark, sf_dir):
     WHERE o_orderstatus = 'F'
     GROUP BY r_name, n_name ORDER BY r_name, n_name
     """,
+    order_by=("r_name", "n_name"),
 )
 def star_join_revenue(spark, sf_dir):
     """TPC-H Q5 shape: the full star — fact through orders/customer to the
@@ -311,7 +315,6 @@ def star_join_revenue(spark, sf_dir):
         .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
         .groupBy("r_name", "n_name")
         .agg(dsum(revenue, "revenue"), F.count(F.lit(1)).alias("n_items"))
-        .orderBy("r_name", "n_name")
     )
 
 
@@ -326,6 +329,7 @@ def star_join_revenue(spark, sf_dir):
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     ORDER BY o_orderkey
     """,
+    order_by=("o_orderkey",),
 )
 def w_nth_value(spark, sf_dir):
     """W1 completion: first_value / nth_value over a running frame."""
@@ -339,7 +343,7 @@ def w_nth_value(spark, sf_dir):
         "o_orderkey",
         F.nth_value("o_totalprice", 2).over(w).alias("second_price"),
         F.first("o_totalprice").over(w).alias("first_price"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @query(
@@ -355,6 +359,7 @@ def w_nth_value(spark, sf_dir):
            COUNT(*) AS n
     FROM lineitem GROUP BY l_linenumber ORDER BY l_linenumber
     """,
+    order_by=("l_linenumber",),
 )
 def f_bitwise(spark, sf_dir):
     """F-family completion: bitwise scalar ops (and/or/xor/shifts/popcount)
@@ -374,7 +379,6 @@ def f_bitwise(spark, sf_dir):
             F.bit_count(ln).alias("popcnt"),
             "n",
         )
-        .orderBy("l_linenumber")
     )
 
 
@@ -388,6 +392,7 @@ def f_bitwise(spark, sf_dir):
           FROM lineitem GROUP BY l_linenumber)
     ORDER BY l_linenumber
     """,
+    order_by=("l_linenumber",),
 )
 def f_try_arith(spark, sf_dir):
     """F8 extension: ANSI-safe arithmetic — try_divide returns NULL on
@@ -404,7 +409,7 @@ def f_try_arith(spark, sf_dir):
         F.try_add(F.lit(max_long).cast("long"), F.col("l_linenumber").cast("long")).alias(
             "overflow_add"
         ),
-    ).orderBy("l_linenumber")
+    )
 
 
 @query(
@@ -433,6 +438,7 @@ def f_try_arith(spark, sf_dir):
            CAST(n AS BIGINT) AS n
     FROM m ORDER BY l_returnflag
     """,
+    order_by=("l_returnflag",),
 )
 def agg_corr(spark, sf_dir):
     """A8 extension: Pearson correlation / sample covariance between price
@@ -475,7 +481,6 @@ def agg_corr(spark, sf_dir):
             ).alias("qty_price_covar"),
             F.col("n").cast("long").alias("n"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -490,6 +495,7 @@ def agg_corr(spark, sf_dir):
     FROM generate_series(DATE '2024-01-01', DATE '2024-03-31', INTERVAL 1 DAY) AS t(d)
     ORDER BY cal_date
     """,
+    order_by=("cal_date",),
 )
 def gen_date_dim(spark, sf_dir):
     """Generated calendar dimension — sequence + explode, no input table
@@ -506,7 +512,7 @@ def gen_date_dim(spark, sf_dir):
         F.month("cal_date").cast("long").alias("m"),
         dow.cast("long").alias("dow"),
         dow.isin(0, 6).alias("is_weekend"),
-    ).orderBy("cal_date")
+    )
 
 
 @query(
@@ -524,6 +530,7 @@ def gen_date_dim(spark, sf_dir):
              AS days_to_cutoff
     FROM lineitem ORDER BY l_orderkey, l_linenumber
     """,
+    order_by=("l_orderkey", "l_linenumber"),
 )
 def f_datetime_parts(spark, sf_dir):
     """F3 extension: the calendar-part family beyond year/month/day —
@@ -543,7 +550,7 @@ def f_datetime_parts(spark, sf_dir):
         F.last_day(d).alias("month_end"),
         F.make_date(F.year(d), F.month(d), F.lit(1)).alias("month_start"),
         F.datediff(F.lit("1998-12-01").cast("date"), d).alias("days_to_cutoff"),
-    ).orderBy("l_orderkey", "l_linenumber")
+    )
 
 
 @query(
@@ -557,6 +564,7 @@ def f_datetime_parts(spark, sf_dir):
       ON l.user_id = r.user_id AND l.ts >= r.ts
     ORDER BY l.event_id
     """,
+    order_by=("event_id",),
 )
 def join_asof_tolerance(spark, sf_dir):
     """J8 extension: as-of join with a match-age bound — each purchase takes
@@ -574,7 +582,7 @@ def join_asof_tolerance(spark, sf_dir):
         purchases, signups, keys=["user_id"], left_ts="ts", right_ts="signup_ts",
         right_cols=["signup_ts"], tolerance_s=3600,
     )
-    return out.select("event_id", "user_id", "ts", "signup_ts_asof").orderBy("event_id")
+    return out.select("event_id", "user_id", "ts", "signup_ts_asof")
 
 
 @query(
@@ -585,6 +593,7 @@ def join_asof_tolerance(spark, sf_dir):
            array_to_string(list(event_type ORDER BY ts, event_id), '>') AS path
     FROM events GROUP BY 1, 2 ORDER BY user_id, day
     """,
+    order_by=("user_id", "day"),
 )
 def events_paths(spark, sf_dir):
     """Per-user-day ordered event path (clickstream path extraction): the
@@ -608,7 +617,6 @@ def events_paths(spark, sf_dir):
                 ">",
             ).alias("path"),
         )
-        .orderBy("user_id", "day")
     )
 
 
@@ -625,6 +633,7 @@ def events_paths(spark, sf_dir):
     FROM c_orders GROUP BY c_count
     ORDER BY custdist DESC, c_count DESC
     """,
+    order_by=("custdist DESC", "c_count DESC"),
 )
 def agg_order_distribution(spark, sf_dir):
     """TPC-H Q13 shape — two-level aggregation: per-customer order counts
@@ -642,7 +651,6 @@ def agg_order_distribution(spark, sf_dir):
     return (
         per_cust.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
     )
 
 
@@ -702,6 +710,7 @@ def graph_triangles(spark, sf_dir):
            concat('{"lang":"', lang, '","n_chars":', n_chars, '}') AS packed_json
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def f_struct(spark, sf_dir):
     """Struct-column surgery: build a struct, rewrite one field in place
@@ -718,7 +727,7 @@ def f_struct(spark, sf_dir):
         s.getField("lang").alias("lang_f"),
         s2.getField("n_chars").alias("chars2"),
         F.to_json(dropped).alias("packed_json"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -730,6 +739,7 @@ def f_struct(spark, sf_dir):
     FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     GROUP BY 1 ORDER BY 1
     """,
+    order_by=("o_orderpriority",),
 )
 def s_bucketed_join(spark, sf_dir):
     """Bucketed-table co-located join: both fact tables are stored
@@ -753,7 +763,6 @@ def s_bucketed_join(spark, sf_dir):
             F.count(F.lit(1)).alias("n_items"),
             usum(money_units("l_quantity"), 2, "sum_qty"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -769,6 +778,7 @@ def s_bucketed_join(spark, sf_dir):
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
     """,
+    order_by=("gid", "l_returnflag", "l_linestatus"),
 )
 def agg_grouping_id(spark, sf_dir):
     """A5 companion: grouping_id() distinguishes a REAL null key from a
@@ -780,11 +790,6 @@ def agg_grouping_id(spark, sf_dir):
         l.rollup("l_returnflag", "l_linestatus")
         .agg(F.grouping_id().cast("int").alias("gid"), F.count(F.lit(1)).alias("n"))
         .select("l_returnflag", "l_linestatus", "gid", "n")
-        .orderBy(
-            "gid",
-            F.col("l_returnflag").asc_nulls_first(),
-            F.col("l_linestatus").asc_nulls_first(),
-        )
     )
 
 
@@ -797,6 +802,7 @@ def agg_grouping_id(spark, sf_dir):
            format('{} chars in {}', n_chars, lang) AS sentence
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def f_format(spark, sf_dir):
     """String formatting family: printf-style format_string with width /
@@ -809,7 +815,7 @@ def f_format(spark, sf_dir):
         F.format_string("%s-%05d", F.col("lang"), F.col("doc_id")).alias("tag"),
         F.format_string("%.2f", F.col("n_chars").cast("double") / 100).alias("chars_pct"),
         F.concat(F.col("n_chars"), F.lit(" chars in "), F.col("lang")).alias("sentence"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -829,6 +835,7 @@ def f_format(spark, sf_dir):
              AS n_outliers
     FROM u GROUP BY user_id ORDER BY user_id
     """,
+    order_by=("user_id",),
 )
 def events_outliers(spark, sf_dir):
     """Per-user z-score anomaly detection with EXACT integer arithmetic:
@@ -859,7 +866,6 @@ def events_outliers(spark, sf_dir):
             F.max("n").alias("n_events"),
             F.count(F.when(is_out, 1)).alias("n_outliers"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -878,6 +884,7 @@ def events_outliers(spark, sf_dir):
     FROM lineitem l JOIN p ON l.l_returnflag = p.l_returnflag
     GROUP BY l.l_returnflag ORDER BY l.l_returnflag
     """,
+    order_by=("l_returnflag",),
 )
 def agg_winsorized(spark, sf_dir):
     """Winsorized (clipped) aggregation — robust statistics at scale: clip
@@ -906,7 +913,6 @@ def agg_winsorized(spark, sf_dir):
                 / 100.0
             ).alias("winsorized_sum"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -919,6 +925,7 @@ def agg_winsorized(spark, sf_dir):
            CAST(ts AS TIMESTAMP) AS roundtrip
     FROM events WHERE event_id % 100 = 0 ORDER BY event_id
     """,
+    order_by=("event_id",),
 )
 def f_timezone(spark, sf_dir):
     """Timezone conversion: UTC instants rendered as wall-clock time in a
@@ -932,7 +939,7 @@ def f_timezone(spark, sf_dir):
         ny.alias("ny_ts"),
         F.hour(ny).alias("ny_hour"),
         F.to_utc_timestamp(ny, "America/New_York").alias("roundtrip"),
-    ).orderBy("event_id")
+    )
 
 
 @query(
@@ -949,6 +956,7 @@ def f_timezone(spark, sf_dir):
            array_to_string(list_filter(['x', NULL, 'y'], v -> v IS NOT NULL), '|') AS compacted
     FROM t ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def f_array_edit(spark, sf_dir):
     """Array-edit family (Spark 3.4/3.5 surface): append / prepend /
@@ -970,7 +978,7 @@ def f_array_edit(spark, sf_dir):
         F.array_join(
             F.array_compact(F.array(F.lit("x"), F.lit(None), F.lit("y"))), "|"
         ).alias("compacted"),
-    ).orderBy("doc_id")
+    )
 
 
 _LPA_SQL = """
@@ -1023,7 +1031,7 @@ _LPA_SQL = """
 """
 
 
-@query("graph_label_prop", sql=_LPA_SQL)
+@query("graph_label_prop", sql=_LPA_SQL, order_by=("n_nodes DESC", "label"))
 def graph_label_prop(spark, sf_dir):
     """Community detection via deterministic synchronous label propagation
     (operators/labelprop.py) over the same event hand-off graph as
@@ -1045,7 +1053,6 @@ def graph_label_prop(spark, sf_dir):
     return (
         labels.groupBy("label")
         .agg(F.count(F.lit(1)).alias("n_nodes"))
-        .orderBy(F.desc("n_nodes"), "label")
     )
 
 
@@ -1069,6 +1076,7 @@ def graph_label_prop(spark, sf_dir):
            COUNT(*) AS n_events
     FROM seq GROUP BY user_id ORDER BY user_id
     """,
+    order_by=("user_id",),
 )
 def w_running_distinct(spark, sf_dir):
     """Running DISTINCT via first-occurrence flags — windows can't take
@@ -1095,7 +1103,6 @@ def w_running_distinct(spark, sf_dir):
             F.max("n_types").alias("total_types"),
             F.count(F.lit(1)).alias("n_events"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1107,6 +1114,7 @@ def w_running_distinct(spark, sf_dir):
     ON c_nationkey USING count(*) GROUP BY c_mktsegment_c_nationkey
     ORDER BY c_mktsegment_c_nationkey
     """,
+    order_by=("c_mktsegment_c_nationkey",),
 )
 def agg_crosstab(spark, sf_dir):
     """DataFrameStatFunctions surface: ``df.stat.crosstab`` — the pairwise
@@ -1118,7 +1126,7 @@ def agg_crosstab(spark, sf_dir):
     schemas agree even if a regenerated fixture drops a nation."""
     c = load(spark, sf_dir, "customer")
     out = c.stat.crosstab("c_mktsegment", "c_nationkey")
-    return out.orderBy("c_mktsegment_c_nationkey")
+    return out
 
 
 @query(

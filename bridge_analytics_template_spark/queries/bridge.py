@@ -30,6 +30,7 @@ from .registry import query
            CAST(o_orderpriority AS VARCHAR) AS name
     FROM orders ORDER BY o_orderkey
     """,
+    order_by=("o_orderkey",),
 )
 def bridge_coercion(spark, sf_dir):
     """The reference's schema-change transaction (modify_file_view_types,
@@ -46,7 +47,7 @@ def bridge_coercion(spark, sf_dir):
         F.col("o_custkey").cast("string").alias("participantVersion"),
         F.col("o_orderpriority").alias("name"),
     )
-    return apply_coercion(raw, CoercionSpec()).orderBy("o_orderkey")
+    return apply_coercion(raw, CoercionSpec())
 
 
 @query(
@@ -71,6 +72,7 @@ def bridge_lookup_unique(spark, sf_dir):
     SELECT doc_id, lang AS ann_lang, source AS ann_source, n_chars
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def bridge_annotation_promotion(spark, sf_dir):
     """Annotation map→column promotion (addAnnotationColumns,
@@ -86,7 +88,7 @@ def bridge_annotation_promotion(spark, sf_dir):
     )
     return promote_annotations(bagged, "annotations").select(
         "doc_id", "ann_lang", "ann_source", "n_chars"
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -95,6 +97,7 @@ def bridge_annotation_promotion(spark, sf_dir):
     SELECT c_mktsegment AS study, c_nationkey, COUNT(*) AS n
     FROM customer GROUP BY 1, 2 ORDER BY 1, 2
     """,
+    order_by=("study", "c_nationkey"),
 )
 def bridge_partitioned_sink(spark, sf_dir):
     """S1/S5: write the `{app}/{study}` analytics layout
@@ -109,7 +112,6 @@ def bridge_partitioned_sink(spark, sf_dir):
     return (
         back.groupBy("study", "c_nationkey")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("study", "c_nationkey")
     )
 
 
@@ -158,6 +160,7 @@ def bridge_file_view(spark, sf_dir):
       UNION ALL SELECT 'doc_id_unique', doc_id_unique, n_checked FROM wide)
     ORDER BY rule
     """,
+    order_by=("rule",),
 )
 def bridge_validate(spark, sf_dir):
     """Declarative expectations (validation.py) — the engine form of the
@@ -192,6 +195,7 @@ def bridge_validate(spark, sf_dir):
            CAST(SUM(CASE WHEN access = 'admin' THEN 1 ELSE 0 END) AS BIGINT) AS n_admin
     FROM granted GROUP BY entity_id ORDER BY entity_id
     """,
+    order_by=("entity_id",),
 )
 def bridge_acl_copy(spark, sf_dir):
     """ACL copy-with-exception (reference semantics:
@@ -220,7 +224,6 @@ def bridge_acl_copy(spark, sf_dir):
             F.count(F.lit(1)).alias("n_grants"),
             F.sum(F.when(F.col("access") == "admin", 1).otherwise(0)).alias("n_admin"),
         )
-        .orderBy("entity_id")
     )
 
 
@@ -238,7 +241,7 @@ _QUARANTINE_SQL = """
 """
 
 
-@query("bridge_quarantine", sql=_QUARANTINE_SQL)
+@query("bridge_quarantine", sql=_QUARANTINE_SQL, order_by=("doc_id",))
 def bridge_quarantine(spark, sf_dir):
     """Row-level companion to bridge_validate (the reference's contract,
     copy_from_template.py:164-176, enforced per row instead of summarized):
@@ -255,4 +258,4 @@ def bridge_quarantine(spark, sf_dir):
         expression("n_chars_consistent", F.col("n_chars") != F.length("text")),
         not_null("text"),
     ]
-    return quarantine(d, rules).select("doc_id", "violated").orderBy("doc_id")
+    return quarantine(d, rules).select("doc_id", "violated")

@@ -102,7 +102,7 @@ def _segment_dedup(d: DataFrame) -> DataFrame:
     )
 
 
-@query("llm_segment_dedup", sql=_SEGMENT_SQL)
+@query("llm_segment_dedup", sql=_SEGMENT_SQL, order_by=("doc_id",))
 def llm_segment_dedup(spark, sf_dir):
     """C4/CCNet-style line-level dedup with document reassembly: cut each
     document into disjoint {_SEG}-token segments (the fixture's documents
@@ -117,7 +117,7 @@ def llm_segment_dedup(spark, sf_dir):
     occurrences and (2) the doc-keyed reassembly — both key-partitioned,
     no windows over the corpus, no joins back to the exploded relation
     (the elected keepers carry their text through the min-struct)."""
-    return _segment_dedup(load(spark, sf_dir, "documents")).orderBy("doc_id")
+    return _segment_dedup(load(spark, sf_dir, "documents"))
 
 
 # --- Length-bucketed batching: padding efficiency ---------------------------
@@ -150,7 +150,7 @@ _BUCKET_SQL = f"""
 """
 
 
-@query("train_length_buckets", sql=_BUCKET_SQL)
+@query("train_length_buckets", sql=_BUCKET_SQL, order_by=("bucket",))
 def train_length_buckets(spark, sf_dir):
     """Dataloader length bucketing: split the corpus at the token-length
     quartiles (percentile_disc — an actual data value, exact on integers in
@@ -206,7 +206,6 @@ def train_length_buckets(spark, sf_dir):
             F.expr(waste.format(n="n_docs", mx="max_len", sm="sum_len")).alias("bucket_waste_ppm"),
             F.expr(waste.format(n="gn", mx="gmax", sm="gsum")).alias("global_waste_ppm"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -234,6 +233,7 @@ def _bag_fingerprint(col) -> F.Column:
       AND c.fp IN (SELECT fp FROM f r WHERE r.doc_id % 7 = 0)
     ORDER BY c.doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_bloom_dedup(spark, sf_dir):
     """Bloom-prefiltered cross-corpus dedup: which candidate documents
@@ -282,9 +282,7 @@ def llm_bloom_dedup(spark, sf_dir):
     for i in range(1, _BLOOM_K):
         test = test & bit_set(i)
     maybe = cand.crossJoin(bloom).filter(test)
-    return (
-        maybe.join(F.broadcast(ref), "fp", "semi").select("doc_id").orderBy("doc_id")
-    )
+    return maybe.join(F.broadcast(ref), "fp", "semi").select("doc_id")
 
 
 # --- Oracle-exact MMR re-ranking (quantized-integer cosines) ----------------
@@ -455,7 +453,7 @@ def _pagerank_oracle_sql() -> str:
     return "".join(parts)
 
 
-@query("graph_pagerank_ppm", sql=_pagerank_oracle_sql())
+@query("graph_pagerank_ppm", sql=_pagerank_oracle_sql(), order_by=("node",))
 def graph_pagerank_ppm(spark, sf_dir):
     """Oracle-exact fixed-point PageRank (hash-green companion to the
     rows-only float graph_pagerank): ranks held as int64 ppm, per-arc
@@ -490,7 +488,7 @@ def _pagerank_ppm(spark, arcs):
 
         node_ids, ranks_arr = pagerank_ppm_local(*small, _PR_INIT, _PR_ITERS)
         pdf = pd.DataFrame({"node": node_ids, "rank_ppm": ranks_arr})
-        return spark.createDataFrame(pdf, "node long, rank_ppm long").orderBy("node")
+        return spark.createDataFrame(pdf, "node long, rank_ppm long")
     deg = arcs.groupBy("src").agg(F.count(F.lit(1)).alias("n"))
     arcs_deg = track(arcs.join(deg, "src").repartition("src").persist())
     nodes = track(
@@ -514,7 +512,7 @@ def _pagerank_ppm(spark, arcs):
                 (F.lit(150000).cast("long") + F.expr("17 * coalesce(s, 0) div 20")).alias("r"),
             )
         )
-    return ranks.select("node", F.col("r").alias("rank_ppm")).orderBy("node")
+    return ranks.select("node", F.col("r").alias("rank_ppm"))
 
 
 # --- Oracle-exact fixed-point HITS (hubs & authorities) ----------------------
@@ -567,7 +565,7 @@ def _hits_oracle_sql() -> str:
     return "".join(parts)
 
 
-@query("graph_hits_ppm", sql=_hits_oracle_sql())
+@query("graph_hits_ppm", sql=_hits_oracle_sql(), order_by=("node",))
 def graph_hits_ppm(spark, sf_dir):
     """Oracle-exact HITS (Kleinberg hubs & authorities) — the second
     classic link-analysis signal next to PageRank, and the natural consumer
@@ -601,7 +599,7 @@ def graph_hits_ppm(spark, sf_dir):
         pdf = pd.DataFrame({"node": node_ids, "auth_ppm": auth_arr, "hub_ppm": hub_arr})
         return spark.createDataFrame(
             pdf, "node long, auth_ppm long, hub_ppm long"
-        ).orderBy("node")
+        )
     arcs = track(arcs.persist())
     nodes = track(
         arcs.select(F.col("src").alias("node"))
@@ -635,7 +633,6 @@ def graph_hits_ppm(spark, sf_dir):
     return (
         auths.select("node", F.col("v").alias("auth_ppm"))
         .join(hubs.select("node", F.col("v").alias("hub_ppm")), "node")
-        .orderBy("node")
     )
 
 
@@ -708,6 +705,7 @@ def s_schema_evolution(spark, sf_dir):
             WHERE o.o_custkey NOT IN (SELECT c_custkey FROM customer))
     ORDER BY relation
     """,
+    order_by=("relation",),
 )
 def profile_referential_integrity(spark, sf_dir):
     """Cross-table referential-integrity report: orphan counts for every
@@ -740,7 +738,7 @@ def profile_referential_integrity(spark, sf_dir):
     out = counts[0]
     for c in counts[1:]:
         out = out.unionByName(c)
-    return out.orderBy("relation")
+    return out
 
 
 # --- Semantic decontamination (embedding-level eval leakage) ----------------
@@ -771,6 +769,7 @@ _SEM_TAU = 0.4  # contamination threshold on exact cosine
            b.c >= {_SEM_TAU} AS contaminated
     FROM best ORDER BY vec_id
     """,
+    order_by=("vec_id",),
 )
 def llm_semantic_decontaminate(spark, sf_dir):
     """Embedding-level decontamination: for every training vector, the max
@@ -831,7 +830,6 @@ def llm_semantic_decontaminate(spark, sf_dir):
             F.col("b.c").alias("max_cos"),
             (F.col("b.c") >= _SEM_TAU).alias("contaminated"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -870,6 +868,7 @@ def llm_semantic_decontaminate(spark, sf_dir):
     SELECT x AS src_id, -b.nid AS tgt_id, b.c AS csls, b.c > 0 AS mined
     FROM best ORDER BY src_id
     """,
+    order_by=("src_id",),
 )
 def llm_bitext_mine(spark, sf_dir):
     """Margin-based bitext mining (the CSLS criterion of Conneau et al. '18 /
@@ -1042,7 +1041,6 @@ def llm_bitext_mine(spark, sf_dir):
             (F.col("b.c") - F.col("rx")).alias("csls"),
             ((F.col("b.c") - F.col("rx")) > 0).alias("mined"),
         )
-        .orderBy("src_id")
     )
 
 
@@ -1068,6 +1066,7 @@ def llm_bitext_mine(spark, sf_dir):
     FROM c WHERE cum_tokens * 2 <= total_tokens
     ORDER BY score_ppm DESC, doc_id
     """,
+    order_by=("score_ppm DESC", "doc_id"),
 )
 def train_token_budget(spark, sf_dir):
     """Token-budget corpus selection: rank documents by an integer quality
@@ -1102,7 +1101,6 @@ def train_token_budget(spark, sf_dir):
     return (
         c.filter(F.col("cum_tokens") * 2 <= F.col("total_tokens"))
         .select("doc_id", "score_ppm", "n_tok", "cum_tokens")
-        .orderBy(F.desc("score_ppm"), "doc_id")
     )
 
 
@@ -1124,6 +1122,7 @@ def train_token_budget(spark, sf_dir):
     SELECT user_id, event_id, s AS ewma_half_cents
     FROM r ORDER BY user_id, event_id
     """,
+    order_by=("user_id", "event_id"),
 )
 def ts_ewma_int(spark, sf_dir):
     """Integer-halving exponential decay (EWMA with alpha=1/2, fixed-point):
@@ -1214,7 +1213,7 @@ def ts_ewma_int(spark, sf_dir):
     # recurrence pass a second time (sign-stable interleaved A/B).
     from ..caching import track
 
-    return track(out.persist()).orderBy("user_id", "event_id")
+    return track(out.persist())
 
 
 # --- k-anonymity preflight ---------------------------------------------------
@@ -1288,7 +1287,7 @@ def _matryoshka_sql() -> str:
     """
 
 
-@query("emb_matryoshka_eval", sql=_matryoshka_sql())
+@query("emb_matryoshka_eval", sql=_matryoshka_sql(), order_by=("dim",))
 def emb_matryoshka_eval(spark, sf_dir):
     """Matryoshka truncation evaluation: how much does cosine similarity
     drift when embeddings are truncated to the first 8/16/32 dims vs the
@@ -1335,7 +1334,7 @@ def emb_matryoshka_eval(spark, sf_dir):
     return out.select(
         "dim", "n_pairs", "sum_abs_err_ppm",
         F.expr("sum_abs_err_ppm DIV n_pairs").alias("mean_err_ppm"),
-    ).orderBy("dim")
+    )
 
 
 # --- Small-file compaction round-trip ----------------------------------------
@@ -1389,6 +1388,7 @@ def s_compaction(spark, sf_dir):
     WHERE (o_orderkey % 10 <> 0 AND o_orderkey % 7 <> 0) OR o_orderkey % 10 = 0
     GROUP BY 1 ORDER BY 1
     """,
+    order_by=("o_orderstatus",),
 )
 def merge_incremental_agg(spark, sf_dir):
     """Incremental aggregate maintenance (the Z-set / DBSP pattern): a
@@ -1431,7 +1431,7 @@ def merge_incremental_agg(spark, sf_dir):
         )
         .filter(F.col("n_orders") > 0)
     )
-    return merged.orderBy("o_orderstatus")
+    return merged
 
 
 # --- Order-independent shard manifest ---------------------------------------
@@ -1463,6 +1463,7 @@ _MANIFEST_MOD = 16**15  # 2^60
            CAST(SUM(CAST(h AS HUGEINT)) % {_MANIFEST_MOD} AS BIGINT) AS content_checksum
     FROM hashed GROUP BY shard_id ORDER BY shard_id
     """,
+    order_by=("shard_id",),
 )
 def train_shard_manifest(spark, sf_dir):
     """Shard manifest with ORDER-INDEPENDENT content checksums: every row
@@ -1496,7 +1497,6 @@ def train_shard_manifest(spark, sf_dir):
                 f"CAST(sum(CAST(h AS DECIMAL(38,0))) % {_MANIFEST_MOD} AS BIGINT)"
             ).alias("content_checksum"),
         )
-        .orderBy("shard_id")
     )
 
 
@@ -1545,7 +1545,7 @@ _E2E_SQL = f"""
 """
 
 
-@query("pipeline_curation_e2e", sql=_E2E_SQL)
+@query("pipeline_curation_e2e", sql=_E2E_SQL, order_by=("score_ppm DESC", "doc_id"))
 def pipeline_curation_e2e(spark, sf_dir):
     """End-to-end curation pipeline — the composition a real training-data
     job runs, as ONE declarative plan: quality gate (integer alpha-ppm >=
@@ -1595,7 +1595,6 @@ def pipeline_curation_e2e(spark, sf_dir):
     return (
         c.filter(F.col("cum_tokens") * 2 <= F.col("total_tokens"))
         .select("doc_id", "score_ppm", "n_tok", "cum_tokens")
-        .orderBy(F.desc("score_ppm"), "doc_id")
     )
 
 
@@ -1653,7 +1652,7 @@ def _kmeans_oracle_sql() -> str:
     return "".join(parts)
 
 
-@query("emb_kmeans_int", sql=_kmeans_oracle_sql())
+@query("emb_kmeans_int", sql=_kmeans_oracle_sql(), order_by=("vec_id",))
 def emb_kmeans_int(spark, sf_dir):
     """Oracle-exact fixed-point Lloyd's k-means (hash-green companion to the
     float emb_kmeans): embeddings quantized floor(x*1e3), distances exact
@@ -1712,7 +1711,7 @@ def emb_kmeans_int(spark, sf_dir):
         "vec_id",
         final.getField("j").alias("cluster_id"),
         final.getField("d").alias("dist2"),
-    ).orderBy("vec_id")
+    )
 
 
 # --- Corrupt-record-tolerant ingestion ---------------------------------------
@@ -1768,6 +1767,7 @@ def s_corrupt_records(spark, sf_dir):
     SELECT n_regionkey, COUNT(*) AS n_nations, CAST(SUM(n_nationkey) AS BIGINT) AS key_sum
     FROM nation GROUP BY 1 ORDER BY 1
     """,
+    order_by=("n_regionkey",),
 )
 def sql_cache_table(spark, sf_dir):
     """CACHE TABLE SQL surface: materialize a projection once
@@ -1786,7 +1786,7 @@ def sql_cache_table(spark, sf_dir):
     return spark.sql(
         """
         SELECT n_regionkey, COUNT(*) AS n_nations, CAST(SUM(n_nationkey) AS BIGINT) AS key_sum
-        FROM cached_nation_r3 GROUP BY 1 ORDER BY 1
+        FROM cached_nation_r3 GROUP BY 1
         """
     )
 
@@ -1813,6 +1813,7 @@ def sql_cache_table(spark, sf_dir):
              (COUNT(*) - COUNT(DISTINCT h)) * 10 < COUNT(*) AS keep_source
     FROM scored GROUP BY source ORDER BY source
     """,
+    order_by=("source",),
 )
 def llm_domain_stats(spark, sf_dir):
     """Source/domain-level curation (the Dolma/RefinedWeb stage ABOVE
@@ -1849,7 +1850,7 @@ def llm_domain_stats(spark, sf_dir):
             (F.col("mean_score_ppm") >= 815000)
             & (F.col("n_exact_dups") * 10 < F.col("n_docs"))
         ).alias("keep_source"),
-    ).orderBy("source")
+    )
 
 
 # --- In-document segment repetition (zero shuffle) ---------------------------
@@ -1872,6 +1873,7 @@ def llm_domain_stats(spark, sf_dir):
            (n_segs - CAST(len(list_distinct(segs)) AS BIGINT)) * 1000000 // n_segs AS selfrep_ppm
     FROM seg ORDER BY doc_id
     """.replace("FROM t0", "FROM documents"),
+    order_by=("doc_id",),
 )
 def llm_selfrep_segments(spark, sf_dir):
     """In-document repetition at segment granularity (the Gopher
@@ -1900,7 +1902,6 @@ def llm_selfrep_segments(spark, sf_dir):
             ),
         )
         .withColumn("selfrep_ppm", F.expr("n_self_dups * 1000000 DIV n_segs"))
-        .orderBy("doc_id")
     )
 
 
@@ -1934,6 +1935,7 @@ from ..functions.numeric import sql_hash60 as _hash60  # noqa: E402 — canonica
            n_exact
     FROM ranked WHERE rn = least({_KMV_K}, n_exact) ORDER BY event_type
     """,
+    order_by=("event_type",),
 )
 def agg_kmv_distinct(spark, sf_dir):
     """KMV (k-minimum-values) distinct-count sketch, DETERMINISTIC and
@@ -1989,7 +1991,6 @@ def agg_kmv_distinct(spark, sf_dir):
             .alias("est_distinct"),
             "n_exact",
         )
-        .orderBy("event_type")
     )
 
 
@@ -2073,6 +2074,7 @@ stages:
     WHERE g.doc_id % 4 = 0
     ORDER BY g.doc_id
     """,
+    order_by=("doc_id",),
 )
 def pipeline_from_spec(spark, sf_dir):
     """Declarative pipeline execution — the reference's YAML-template
@@ -2085,7 +2087,7 @@ def pipeline_from_spec(spark, sf_dir):
     from ..plans.pipeline_spec import compile_pipeline_yaml
 
     d = load(spark, sf_dir, "documents")
-    return compile_pipeline_yaml(_SPEC_YAML, {"documents": d}).orderBy("doc_id")
+    return compile_pipeline_yaml(_SPEC_YAML, {"documents": d})
 
 
 # --- Count-min sketch (deterministic, oracle-exact) --------------------------
@@ -2217,7 +2219,7 @@ def _kmv_setops_sql() -> str:
     """
 
 
-@query("agg_kmv_setops", sql=_kmv_setops_sql())
+@query("agg_kmv_setops", sql=_kmv_setops_sql(), order_by=("side",))
 def agg_kmv_setops(spark, sf_dir):
     """KMV sketch SET OPERATIONS — the mergeable half of the sketch story as
     a query: cohort A (purchasers with cents%100<10) and cohort B (same
@@ -2315,7 +2317,6 @@ def agg_kmv_setops(spark, sf_dir):
             "est_distinct",
             "n_exact",
         )
-        .orderBy("side")
     )
 
 
@@ -2406,6 +2407,7 @@ def profile_l_diversity(spark, sf_dir):
     FROM grid g CROSS JOIN tot t
     GROUP BY 1, 2 ORDER BY 1, 2
     """,
+    order_by=("c_nationkey", "c_mktsegment"),
 )
 def profile_t_closeness(spark, sf_dir):
     """t-closeness preflight — the third rung of the privacy ladder after
@@ -2450,7 +2452,6 @@ def profile_t_closeness(spark, sf_dir):
                 " * 1000000 DIV (2 * CAST(MIN(n_c) AS DECIMAL(19,0)) * MIN(n)) AS BIGINT)"
             ).alias("tvd_ppm"),
         )
-        .orderBy("c_nationkey", "c_mktsegment")
     )
 
 
@@ -2488,6 +2489,7 @@ _COVER_US = 300_000_000  # each event opens a 5-minute activity interval
           FROM islands GROUP BY 1, 2)
     GROUP BY 1 ORDER BY 1
     """,
+    order_by=("user_id",),
 )
 def events_interval_union(spark, sf_dir):
     """Interval-UNION coverage (sweep-line): every event opens a 5-minute
@@ -2528,7 +2530,6 @@ def events_interval_union(spark, sf_dir):
             F.countDistinct("island_id").alias("n_islands"),
             F.sum("span").alias("covered_us"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -2612,7 +2613,7 @@ bs AS (SELECT user_id, b, COUNT(*) AS cnt, SUM(CAST(t AS HUGEINT)) AS ts_sum,
     return ",\n".join(parts) + "\n" + "\nUNION ALL ".join(unions) + "\nORDER BY user_id, event_id"
 
 
-@query("ts_lttb_downsample", sql=_lttb_sql())
+@query("ts_lttb_downsample", sql=_lttb_sql(), order_by=("user_id", "event_id"))
 def ts_lttb_downsample(spark, sf_dir):
     """LTTB downsample of each user's value series to {B}+2 points (first,
     one perceptually-dominant point per interior bucket, last); series
@@ -2667,7 +2668,6 @@ def ts_lttb_downsample(spark, sf_dir):
     return (
         e.groupBy("user_id")
         .applyInPandas(lttb, schema="user_id long, event_id long")
-        .orderBy("user_id", "event_id")
     )
 
 
@@ -2796,6 +2796,7 @@ from ..functions.numeric import sql_hash60 as _dc_hash60  # noqa: E402
 @query(
     "llm_domain_cap",
     sql=_DOMAIN_CAP_SQL.format(h=_dc_hash60("CONCAT('cap|', CAST(doc_id AS STRING))")),
+    order_by=("doc_id",),
 )
 def llm_domain_cap(spark, sf_dir):
     """Per-source document cap (domain balancing — the C4/RefinedWeb step
@@ -2816,5 +2817,4 @@ def llm_domain_cap(spark, sf_dir):
         .withColumn("keep_rank", F.row_number().over(w))
         .filter(F.col("keep_rank") <= _DOMAIN_CAP)
         .select("doc_id", "source", F.col("keep_rank").cast("long").alias("keep_rank"))
-        .orderBy("doc_id")
     )

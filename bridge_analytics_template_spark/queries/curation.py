@@ -52,7 +52,7 @@ _DECON_SQL = f"""
 """
 
 
-@query("llm_decontaminate", sql=_DECON_SQL)
+@query("llm_decontaminate", sql=_DECON_SQL, order_by=("doc_id",))
 def llm_decontaminate(spark, sf_dir):
     """Benchmark decontamination: flag every training document sharing at
     least one word-8-gram with the held-out eval slice (doc_id % 50 == 0) —
@@ -110,7 +110,6 @@ def llm_decontaminate(spark, sf_dir):
             F.coalesce("n_shared", F.lit(0)).alias("n_shared"),
             (F.coalesce("n_shared", F.lit(0)) > 0).alias("contaminated"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -133,7 +132,7 @@ _CHUNK_SQL = f"""
 """
 
 
-@query("llm_chunking", sql=_CHUNK_SQL)
+@query("llm_chunking", sql=_CHUNK_SQL, order_by=("doc_id", "chunk_idx"))
 def llm_chunking(spark, sf_dir):
     """Context-window chunking: cut each document into overlapping
     {size=64, stride=48} token windows — the 1→N fan-out that turns a
@@ -166,7 +165,6 @@ def llm_chunking(spark, sf_dir):
             F.size("c.chunk").alias("n_chunk_tokens"),
             F.concat_ws(" ", "c.chunk").alias("chunk_text"),
         )
-        .orderBy("doc_id", "chunk_idx")
     )
 
 
@@ -192,7 +190,7 @@ _PASSAGE_SQL = f"""
 """
 
 
-@query("llm_passage_dedup", sql=_PASSAGE_SQL)
+@query("llm_passage_dedup", sql=_PASSAGE_SQL, order_by=("doc_id",))
 def llm_passage_dedup(spark, sf_dir):
     """Cross-document repeated-passage detection (the passage-granularity
     form of substring dedup à la Lee et al., "Deduplicating Training Data
@@ -237,7 +235,6 @@ def llm_passage_dedup(spark, sf_dir):
             "n_dup_passages",
             (F.col("n_dup_passages").cast("double") / F.col("n_passages")).alias("dup_frac"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -272,6 +269,7 @@ _LIN_W_SPARK = _linear_score_sql(spark_side=True)
            score_raw > 0 AS quality_flag
     FROM s ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_linear_quality_score(spark, sf_dir):
     """fastText-style linear quality classifier as PURE PROJECTION — the
@@ -300,7 +298,6 @@ def llm_linear_quality_score(spark, sf_dir):
             F.coalesce(score, F.lit(0)).alias("score_raw"),
         )
         .withColumn("quality_flag", F.col("score_raw") > 0)
-        .orderBy("doc_id")
     )
 
 
@@ -333,7 +330,7 @@ _SUBSTR_SQL = f"""
 """
 
 
-@query("llm_substring_dup_mass", sql=_SUBSTR_SQL)
+@query("llm_substring_dup_mass", sql=_SUBSTR_SQL, order_by=("doc_id",))
 def llm_substring_dup_mass(spark, sf_dir):
     """Arbitrary-offset substring dup mass — the stride-1 form of Lee et
     al.'s exact substring dedup, catching repeated spans that CROSS the
@@ -399,7 +396,6 @@ def llm_substring_dup_mass(spark, sf_dir):
             F.coalesce("n_dup_grams", F.lit(0)).cast("long").alias("n_dup_grams"),
             F.coalesce("covered_tokens", F.lit(0)).cast("long").alias("covered_tokens"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -432,7 +428,7 @@ _REP_SQL = f"""
 """
 
 
-@query("llm_repetition", sql=_REP_SQL)
+@query("llm_repetition", sql=_REP_SQL, order_by=("doc_id",))
 def llm_repetition(spark, sf_dir):
     """Gopher-style within-document repetition signals: the duplicated
     word-trigram fraction and the most-frequent-token share — the two
@@ -480,7 +476,7 @@ def llm_repetition(spark, sf_dir):
             "dup_trigram_frac"
         ),
         (top_cnt.cast("double") / F.col("n")).alias("top_token_frac"),
-    ).orderBy("doc_id")
+    )
 
 
 _LM_SQL = f"""
@@ -496,7 +492,7 @@ _LM_SQL = f"""
 """
 
 
-@query("llm_doc_lm_score", sql=_LM_SQL)
+@query("llm_doc_lm_score", sql=_LM_SQL, order_by=("doc_id",))
 def llm_doc_lm_score(spark, sf_dir):
     """Corpus-frequency document scoring — the exact-arithmetic stand-in for
     unigram-LM perplexity (rare-token-heavy docs score low, natural prose
@@ -516,7 +512,6 @@ def llm_doc_lm_score(spark, sf_dir):
             F.sum("cnt").alias("freq_sum"),
             (F.sum("cnt").cast("double") / F.count(F.lit(1))).alias("avg_tok_freq"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -542,7 +537,7 @@ _BIGRAM_SQL = f"""
 """
 
 
-@query("llm_bigram_lm", sql=_BIGRAM_SQL)
+@query("llm_bigram_lm", sql=_BIGRAM_SQL, order_by=("w1", "rnk"))
 def llm_bigram_lm(spark, sf_dir):
     """Bigram language model built on the engine: corpus-wide bigram counts,
     context totals, and the top-3 continuations per context word with their
@@ -585,7 +580,6 @@ def llm_bigram_lm(spark, sf_dir):
             rnk.alias("rnk"),
         )
         .filter((F.col("rnk") <= 3) & (F.col("n_ctx") >= 100))
-        .orderBy("w1", "rnk")
     )
 
 
@@ -615,7 +609,7 @@ _DSIR_SQL = f"""
 """
 
 
-@query("llm_dsir_weights", sql=_DSIR_SQL)
+@query("llm_dsir_weights", sql=_DSIR_SQL, order_by=("doc_id",))
 def llm_dsir_weights(spark, sf_dir):
     """Data-selection importance weighting (the DSIR shape, Xie et al.
     2023): score each raw document by how much its hashed token features
@@ -661,7 +655,6 @@ def llm_dsir_weights(spark, sf_dir):
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum("w_ppm").alias("score_ppm"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -686,6 +679,7 @@ def llm_dsir_weights(spark, sf_dir):
            CAST(SUM(n_bytes) AS DOUBLE) / SUM(n_chars) AS bytes_per_char
     FROM t GROUP BY lang ORDER BY lang
     """,
+    order_by=("lang",),
 )
 def llm_token_fertility(spark, sf_dir):
     """Tokenizer fertility diagnostics per language: characters per
@@ -716,7 +710,6 @@ def llm_token_fertility(spark, sf_dir):
             (F.sum("n_bpe").cast("double") / F.sum("n_ws")).alias("bpe_per_ws_token"),
             (F.sum("n_bytes").cast("double") / F.sum("n_chars")).alias("bytes_per_char"),
         )
-        .orderBy("lang")
     )
 
 
@@ -737,7 +730,7 @@ _DIVERSITY_SQL = f"""
 """
 
 
-@query("llm_ngram_diversity", sql=_DIVERSITY_SQL)
+@query("llm_ngram_diversity", sql=_DIVERSITY_SQL, order_by=("lang",))
 def llm_ngram_diversity(spark, sf_dir):
     """Corpus diversity per language: the fraction of word-5-gram
     occurrences that repeat an already-seen gram (1 − distinct/total) —
@@ -759,7 +752,6 @@ def llm_ngram_diversity(spark, sf_dir):
             nd.alias("n_distinct"),
             ((n - nd).cast("double") / n).alias("dup_fraction"),
         )
-        .orderBy("lang")
     )
 
 
@@ -780,7 +772,7 @@ _URL_DEDUP_SQL = """
 """
 
 
-@query("llm_url_dedup", sql=_URL_DEDUP_SQL)
+@query("llm_url_dedup", sql=_URL_DEDUP_SQL, order_by=("keep_id",))
 def llm_url_dedup(spark, sf_dir):
     """Canonical-URL dedup — the web-pipeline first pass (dedupe fetches of
     the same page before any content hashing): strip scheme, leading www,
@@ -814,7 +806,6 @@ def llm_url_dedup(spark, sf_dir):
         d.select("doc_id", canon.alias("canon_url"))
         .groupBy("canon_url")
         .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
-        .orderBy("keep_id")
     )
 
 
@@ -895,7 +886,7 @@ def dup_span_islands(toks):
     )
 
 
-@query("llm_dup_spans", sql=_DUPSPAN_SQL)
+@query("llm_dup_spans", sql=_DUPSPAN_SQL, order_by=("doc_a", "doc_b"))
 def llm_dup_spans(spark, sf_dir):
     """Exact duplicated-SUBSTRING spans between document pairs — the
     ExactSubstr shape from the dedup-makes-LMs-better line of work: two
@@ -912,7 +903,6 @@ def llm_dup_spans(spark, sf_dir):
             F.count(F.lit(1)).alias("n_spans"),
         )
         .filter(F.col("max_span_tokens") >= 16)
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -958,7 +948,7 @@ _TRIM_SQL = f"""
 """
 
 
-@query("llm_dup_span_trim", sql=_TRIM_SQL)
+@query("llm_dup_span_trim", sql=_TRIM_SQL, order_by=("doc_id",))
 def llm_dup_span_trim(spark, sf_dir):
     """The APPLY step of exact-substring dedup: for every document flagged
     by the llm_dup_spans detector, cut its single longest duplicated span
@@ -999,7 +989,6 @@ def llm_dup_span_trim(spark, sf_dir):
             (n - F.col("span_tokens")).cast("long").alias("n_tokens_after"),
             F.array_join(trimmed, " ").alias("trimmed_text"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1022,7 +1011,7 @@ FROM m ORDER BY doc_id
 """
 
 
-@query("llm_readability", sql=_READABILITY_SQL)
+@query("llm_readability", sql=_READABILITY_SQL, order_by=("doc_id",))
 def llm_readability(spark, sf_dir):
     """Flesch reading-ease per document in exact integer milli-points — the
     readability tier of a quality-filter stack (alongside llm_quality_score's
@@ -1058,7 +1047,7 @@ def llm_readability(spark, sf_dir):
         )
         .cast("long")
         .alias("flesch_milli"),
-    ).orderBy("doc_id")
+    )
 
 
 # --- Blocklist / wordlist flagging ------------------------------------------
@@ -1083,7 +1072,7 @@ FROM m ORDER BY doc_id
 """
 
 
-@query("llm_wordlist_flags", sql=_WORDLIST_SQL)
+@query("llm_wordlist_flags", sql=_WORDLIST_SQL, order_by=("doc_id",))
 def llm_wordlist_flags(spark, sf_dir):
     """Blocklist screening per document — the wordlist-based content filter
     every corpus pipeline runs (profanity/toxicity/PII keyword tiers). The
@@ -1107,7 +1096,7 @@ def llm_wordlist_flags(spark, sf_dir):
         "n_flagged",
         (F.col("n_flagged") > 0).alias("flagged"),
         F.expr("n_flagged * 1000000 div words").cast("long").alias("flagged_ppm"),
-    ).orderBy("doc_id")
+    )
 
 
 # --- robots.txt crawl-politeness gate (RFC 9309) -----------------------------
@@ -1134,6 +1123,7 @@ def llm_wordlist_flags(spark, sf_dir):
                 ELSE '/' END AS rule
     FROM c ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_robots_filter(spark, sf_dir):
     """Crawl-politeness gate: RFC 9309 robots.txt evaluation
@@ -1184,4 +1174,4 @@ def llm_robots_filter(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select("doc_id")
     return d.mapInPandas(
         evaluate, schema="doc_id bigint, path string, allowed boolean, rule string"
-    ).orderBy("doc_id")
+    )

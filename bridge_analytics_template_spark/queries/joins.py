@@ -66,6 +66,7 @@ def join_inner(spark, sf_dir):
     GROUP BY o.o_orderkey
     ORDER BY o.o_orderkey
     """,
+    order_by=("o_orderkey",),
 )
 def join_left(spark, sf_dir):
     """J2: left outer join — every order kept, enriched when returns exist
@@ -76,7 +77,6 @@ def join_left(spark, sf_dir):
         o.join(r, o.o_orderkey == r.l_orderkey, "left")
         .groupBy("o_orderkey")
         .agg(F.count("l_orderkey").alias("n_returned"))
-        .orderBy("o_orderkey")
     )
 
 
@@ -92,6 +92,7 @@ def join_left(spark, sf_dir):
     GROUP BY 1, 2
     ORDER BY region, nation
     """,
+    order_by=("region", "nation"),
 )
 def join_broadcast_dims(spark, sf_dir):
     """J3: star-schema dim joins — both dims broadcast, zero shuffle on the
@@ -104,7 +105,6 @@ def join_broadcast_dims(spark, sf_dir):
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg(F.count(F.lit(1)).alias("n_custs"), dsum(dmoney("c_acctbal"), "total_bal"))
-        .orderBy("region", "nation")
     )
 
 
@@ -116,6 +116,7 @@ def join_broadcast_dims(spark, sf_dir):
     WHERE o.o_totalprice > 300000
     ORDER BY l.l_orderkey, l.l_linenumber
     """,
+    order_by=("l_orderkey", "l_linenumber"),
 )
 def join_sort_merge(spark, sf_dir):
     """J4: large-large join forced to sort-merge (the strategy that scales
@@ -125,7 +126,6 @@ def join_sort_merge(spark, sf_dir):
     return (
         l.join(o.hint("merge"), l.l_orderkey == o.o_orderkey)
         .select("l_orderkey", "l_linenumber", "o_totalprice")
-        .orderBy("l_orderkey", "l_linenumber")
     )
 
 
@@ -137,6 +137,7 @@ def join_sort_merge(spark, sf_dir):
                   WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)
     ORDER BY o_orderkey
     """,
+    order_by=("o_orderkey",),
 )
 def join_semi(spark, sf_dir):
     """J5: left-semi join (EXISTS) — no row duplication from the build side."""
@@ -145,7 +146,6 @@ def join_semi(spark, sf_dir):
     return (
         o.join(l, o.o_orderkey == l.l_orderkey, "left_semi")
         .select("o_orderkey", "o_totalprice")
-        .orderBy("o_orderkey")
     )
 
 
@@ -156,6 +156,7 @@ def join_semi(spark, sf_dir):
     WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     ORDER BY c_custkey
     """,
+    order_by=("c_custkey",),
 )
 def join_anti(spark, sf_dir):
     """J6: left-anti join (NOT EXISTS) — customers with no orders; the
@@ -166,7 +167,6 @@ def join_anti(spark, sf_dir):
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_anti")
         .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
     )
 
 
@@ -182,6 +182,7 @@ def join_anti(spark, sf_dir):
     GROUP BY b.band
     ORDER BY b.band
     """,
+    order_by=("band",),
 )
 def join_range_bands(spark, sf_dir):
     """J7: theta/range join — interval containment against a broadcast
@@ -196,7 +197,6 @@ def join_range_bands(spark, sf_dir):
     return (
         joined.groupBy("band")
         .agg(F.count(F.lit(1)).alias("n_events"), dsum(dmoney("value"), "total_value"))
-        .orderBy("band")
     )
 
 
@@ -210,6 +210,7 @@ def join_range_bands(spark, sf_dir):
       ON l.user_id = r.user_id AND l.ts >= r.ts
     ORDER BY l.event_id
     """,
+    order_by=("event_id",),
 )
 def join_asof(spark, sf_dir):
     """J8: as-of join — each purchase aligned with the user's latest signup
@@ -223,7 +224,7 @@ def join_asof(spark, sf_dir):
         purchases, signups, keys=["user_id"], left_ts="ts", right_ts="signup_ts",
         right_cols=["signup_ts"],
     )
-    return out.select("event_id", "user_id", "ts", F.col("signup_ts_asof")).orderBy("event_id")
+    return out.select("event_id", "user_id", "ts", F.col("signup_ts_asof"))
 
 
 @query(
@@ -233,13 +234,14 @@ def join_asof(spark, sf_dir):
     FROM region r CROSS JOIN (SELECT DISTINCT l_returnflag FROM lineitem) f
     ORDER BY region, returnflag
     """,
+    order_by=("region", "returnflag"),
 )
 def join_cross(spark, sf_dir):
     """J9: cartesian panel of two small sides (the all-pairs scaffold used
     by the similarity ops at dimension scale)."""
     r = load(spark, sf_dir, "region").select(F.col("r_name").alias("region"))
     f = load(spark, sf_dir, "lineitem").select(F.col("l_returnflag").alias("returnflag")).distinct()
-    return r.crossJoin(f).orderBy("region", "returnflag")
+    return r.crossJoin(f)
 
 
 @query(
@@ -249,6 +251,7 @@ def join_cross(spark, sf_dir):
     FROM events e JOIN nation n ON (e.user_id % 25) = n.n_nationkey
     GROUP BY 1 ORDER BY 1
     """,
+    order_by=("nation",),
 )
 def join_stream_static_equiv(spark, sf_dir):
     """J10 (batch equivalent): enrich the event stream with a static
@@ -261,7 +264,6 @@ def join_stream_static_equiv(spark, sf_dir):
         e.join(F.broadcast(n), (F.col("user_id") % 25) == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"))
         .agg(F.count(F.lit(1)).alias("n_events"))
-        .orderBy("nation")
     )
 
 
@@ -305,7 +307,7 @@ def _fuzzy_name_pairs(p: "DataFrame") -> "DataFrame":
     )
 
 
-@query("join_fuzzy_blocked", sql=_FUZZY_SQL)
+@query("join_fuzzy_blocked", sql=_FUZZY_SQL, order_by=("key_a", "key_b"))
 def join_fuzzy_blocked(spark, sf_dir):
     """Record linkage / fuzzy entity resolution: candidate pairs via a
     BLOCKING key (first two words of the name), verified by bounded edit
@@ -349,7 +351,7 @@ def join_fuzzy_blocked(spark, sf_dir):
     # partitioner's bounds-sampling pass otherwise RE-EXECUTES the whole
     # fan-out join subtree (measured 9.0-21.1 s noop -> 1.7-6.3 s at sf0.1,
     # sign-stable 3/3 interleaved). Same values, one computation.
-    return track(linked.persist()).orderBy("key_a", "key_b")
+    return track(linked.persist())
 
 
 @query(
@@ -360,6 +362,7 @@ def join_fuzzy_blocked(spark, sf_dir):
     FROM supplier s JOIN lineitem l ON l.l_suppkey = s.s_suppkey
     GROUP BY 1, 2 ORDER BY 1
     """,
+    order_by=("s_suppkey",),
 )
 def join_shuffled_hash(spark, sf_dir):
     """J11: shuffled hash join — the third equi-join strategy after
@@ -377,7 +380,6 @@ def join_shuffled_hash(spark, sf_dir):
             F.count(F.lit(1)).alias("n_items"),
             dsum(dmoney("l_quantity"), "total_qty"),
         )
-        .orderBy("s_suppkey")
     )
 
 
@@ -403,6 +405,7 @@ def join_shuffled_hash(spark, sf_dir):
     FROM part pp LEFT JOIN lab l ON l.node = pp.p_partkey
     ORDER BY record_id
     """,
+    order_by=("record_id",),
 )
 def er_entity_clusters(spark, sf_dir):
     """End-to-end entity resolution — the record-linkage pipeline as ONE
@@ -455,7 +458,6 @@ def er_entity_clusters(spark, sf_dir):
             "record_id",
             F.coalesce(F.col("entity_id"), F.col("record_id")).alias("entity_id"),
         )
-        .orderBy("record_id")
     )
 
 
@@ -469,6 +471,7 @@ def er_entity_clusters(spark, sf_dir):
       ON l.user_id = r.user_id AND l.ts <= r.ts
     ORDER BY l.event_id
     """,
+    order_by=("event_id",),
 )
 def join_asof_forward(spark, sf_dir):
     """J8b: FORWARD as-of join (pandas ``merge_asof(direction='forward')``) —
@@ -486,7 +489,7 @@ def join_asof_forward(spark, sf_dir):
     )
     return out.select(
         "event_id", "user_id", "ts", F.col("signup_ts_asof").alias("next_signup_ts")
-    ).orderBy("event_id")
+    )
 
 
 @query(
@@ -506,6 +509,7 @@ def join_asof_forward(spark, sf_dir):
            CAST(rts AS TIMESTAMP) AS nearest_signup_ts
     FROM ranked WHERE rn = 1 ORDER BY event_id
     """,
+    order_by=("event_id",),
 )
 def join_asof_nearest(spark, sf_dir):
     """J8c: NEAREST as-of join (pandas ``merge_asof(direction='nearest')``,
@@ -525,4 +529,4 @@ def join_asof_nearest(spark, sf_dir):
     )
     return out.select(
         "event_id", "user_id", "ts", F.col("signup_ts_asof").alias("nearest_signup_ts")
-    ).orderBy("event_id")
+    )

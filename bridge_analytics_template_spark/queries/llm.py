@@ -63,11 +63,12 @@ _SQL_SHINGLES5_PADDED = (
     SELECT md5(text) AS content_md5, MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
     FROM documents GROUP BY 1 ORDER BY keep_id
     """,
+    order_by=("keep_id",),
 )
 def llm_dedup_exact(spark, sf_dir):
     """L1: exact dedup by content hash, keep-lowest-id (one hash aggregate —
     the 100 TB shape; no sort, no window over the corpus)."""
-    return dedup_exact(load(spark, sf_dir, "documents")).orderBy("keep_id")
+    return dedup_exact(load(spark, sf_dir, "documents"))
 
 
 @query(
@@ -78,10 +79,11 @@ def llm_dedup_exact(spark, sf_dir):
            MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
     FROM documents GROUP BY 1 ORDER BY keep_id
     """,
+    order_by=("keep_id",),
 )
 def llm_dedup_normalized(spark, sf_dir):
     """L1b: formatting-insensitive dedup on the normalized fingerprint."""
-    return dedup_normalized(load(spark, sf_dir, "documents")).orderBy("keep_id")
+    return dedup_normalized(load(spark, sf_dir, "documents"))
 
 
 @query(
@@ -105,6 +107,7 @@ def llm_dedup_normalized(spark, sf_dir):
     WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.5
     ORDER BY doc_a, doc_b
     """,
+    order_by=("doc_a", "doc_b"),
 )
 def llm_dedup_minhash(spark, sf_dir):
     """L2: MinHash(64) + LSH(16 bands) near-dup candidates, verified by
@@ -120,22 +123,20 @@ def llm_dedup_minhash(spark, sf_dir):
     practice. The banding itself stays probabilistic in general; the
     property tests cover recall on adversarial planted similarities."""
     d = load(spark, sf_dir, "documents")
-    return minhash_near_dups(d, min_jaccard=0.5).orderBy("doc_a", "doc_b")
+    return minhash_near_dups(d, min_jaccard=0.5)
 
 
 from ..oracles.text_refs import simhash_pairs_oracle
 
 
-@query("llm_dedup_simhash", sql=simhash_pairs_oracle)
+@query("llm_dedup_simhash", sql=simhash_pairs_oracle, order_by=("doc_a", "doc_b"))
 def llm_dedup_simhash(spark, sf_dir):
     """L2b: SimHash-64 near-dups via banded Hamming join (≤3 bits).
     (r10: persist-before-sort was MEASURED here and kept OFF — the pair
     set sits just above its distinct's shuffle, so the range sampler
     re-reads shuffle output, and the persist only added cache cost:
     interleaved A/B 4/5 passes slower.)"""
-    return simhash_near_dups(load(spark, sf_dir, "documents"), max_hamming=3).orderBy(
-        "doc_a", "doc_b"
-    )
+    return simhash_near_dups(load(spark, sf_dir, "documents"), max_hamming=3)
 
 
 @query(
@@ -159,6 +160,7 @@ def llm_dedup_simhash(spark, sf_dir):
     WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.5
     ORDER BY doc_a, doc_b
     """,
+    order_by=("doc_a", "doc_b"),
 )
 def llm_ngram_jaccard(spark, sf_dir):
     """L2c: exact word-5-gram Jaccard near-dup pairs at j >= 0.5 via the
@@ -179,7 +181,6 @@ def llm_ngram_jaccard(spark, sf_dir):
     return (
         prefix_filtered_pairs(arrays, min_jaccard=0.5)
         .select("doc_a", "doc_b", "n_inter", "jaccard")
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -192,6 +193,7 @@ def llm_ngram_jaccard(spark, sf_dir):
                                  CAST(b.embedding AS DOUBLE[])) >= 0.4
     ORDER BY id_a, id_b
     """,
+    order_by=("id_a", "id_b"),
 )
 def llm_embed_neardup(spark, sf_dir):
     """L2d: embedding-cosine near-dup pairs (ids only; see module note on
@@ -207,7 +209,6 @@ def llm_embed_neardup(spark, sf_dir):
     return (
         blocked_cosine_pairs(e, threshold=0.4)
         .select("id_a", "id_b")
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -225,6 +226,7 @@ def llm_embed_neardup(spark, sf_dir):
       WHERE q.vec_id % 50 = 0)
     WHERE rank <= 5 ORDER BY query_id, rank
     """,
+    order_by=("query_id", "rank"),
 )
 def llm_knn_ids(spark, sf_dir):
     """L3: brute-force cosine top-5 for a probe query set — Arrow-batched
@@ -232,9 +234,7 @@ def llm_knn_ids(spark, sf_dir):
     identical ids/ranks to the JVM fold at ~10x the scoring throughput."""
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") % 50 == 0)
-    return knn_bruteforce_np(q, e, k=5).select("query_id", "neighbor_id", "rank").orderBy(
-        "query_id", "rank"
-    )
+    return knn_bruteforce_np(q, e, k=5).select("query_id", "neighbor_id", "rank")
 
 
 @query(
@@ -253,6 +253,7 @@ def llm_knn_ids(spark, sf_dir):
                                    CAST(c.embedding AS DOUBLE[])) < 0.9)
     WHERE rank <= 5 ORDER BY query_id, rank
     """,
+    order_by=("query_id", "rank"),
 )
 def emb_hard_negatives(spark, sf_dir):
     """Hard-negative mining for contrastive training: per anchor, the 5
@@ -272,7 +273,6 @@ def emb_hard_negatives(spark, sf_dir):
     return (
         knn_bruteforce_np(q, e, k=5, sim_ceiling=0.9)
         .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
     )
 
 
@@ -288,7 +288,7 @@ from ..oracles.embeddings import (
 )
 
 
-@query("llm_knn_pq", sql=pq_oracle)
+@query("llm_knn_pq", sql=pq_oracle, order_by=("query_id", "rank"))
 def llm_knn_pq(spark, sf_dir):
     """L3d: product-quantization ANN (llm/pq.py) — the memory-bound scale
     path: 16 subspace codebooks compress each embedding to 16 one-byte
@@ -299,12 +299,10 @@ def llm_knn_pq(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") % 50 == 0)
-    return pq_knn(q, e, k=5).select("query_id", "neighbor_id", "rank").orderBy(
-        "query_id", "rank"
-    )
+    return pq_knn(q, e, k=5).select("query_id", "neighbor_id", "rank")
 
 
-@query("llm_knn_ivfpq", sql=ivfpq_oracle)
+@query("llm_knn_ivfpq", sql=ivfpq_oracle, order_by=("query_id", "rank"))
 def llm_knn_ivfpq(spark, sf_dir):
     """L3e: IVF-PQ ANN (llm/pq.py::ivfpq_knn) — the composite billion-scale
     index: coarse inverted lists prune candidates (nprobe/n_centroids),
@@ -315,20 +313,16 @@ def llm_knn_ivfpq(spark, sf_dir):
 
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") % 50 == 0)
-    return ivfpq_knn(q, e, k=5).select("query_id", "neighbor_id", "rank").orderBy(
-        "query_id", "rank"
-    )
+    return ivfpq_knn(q, e, k=5).select("query_id", "neighbor_id", "rank")
 
 
-@query("llm_knn_lsh", sql=lsh_oracle)
+@query("llm_knn_lsh", sql=lsh_oracle, order_by=("query_id", "rank"))
 def llm_knn_lsh(spark, sf_dir):
     """L3b: sign-bucket LSH top-k (multi-probe radius 1) — the scale path;
     recall vs brute force asserted in tests/test_llm_ops.py."""
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") % 50 == 0)
-    return knn_lsh(q, e, k=5).select("query_id", "neighbor_id", "rank").orderBy(
-        "query_id", "rank"
-    )
+    return knn_lsh(q, e, k=5).select("query_id", "neighbor_id", "rank")
 
 
 def _ann_index_dir(spark, sf_dir, kind):
@@ -342,7 +336,7 @@ def _ann_index_dir(spark, sf_dir, kind):
     return index_scratch_dir(spark, sf_dir, f"ann_index_{kind}", "embeddings.parquet")
 
 
-@query("emb_ivf_index_probe", sql=ivf_oracle)
+@query("emb_ivf_index_probe", sql=ivf_oracle, order_by=("query_id", "rank"))
 def emb_ivf_index_probe(spark, sf_dir):
     """L3f: probe a PERSISTED IVF index (llm/ann_index.py) — built once to
     parquet inverted lists partitioned by centroid_id + a meta.json
@@ -362,11 +356,10 @@ def emb_ivf_index_probe(spark, sf_dir):
     return (
         probe_ivf_index(spark, path, q, k=5)
         .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
     )
 
 
-@query("emb_ivfpq_index_probe", sql=ivfpq_oracle)
+@query("emb_ivfpq_index_probe", sql=ivfpq_oracle, order_by=("query_id", "rank"))
 def emb_ivfpq_index_probe(spark, sf_dir):
     """L3g: probe a PERSISTED IVF-PQ index — m-byte residual codes in
     centroid-partitioned parquet (~32x smaller than the vectors), coarse
@@ -386,7 +379,6 @@ def emb_ivfpq_index_probe(spark, sf_dir):
     return (
         probe_ivfpq_index(spark, path, q, k=5)
         .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
     )
 
 
@@ -402,6 +394,7 @@ def emb_ivfpq_index_probe(spark, sf_dir):
              / greatest(length(text), 1) AS digit_ratio
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_text_stats(spark, sf_dir):
     """L4: quality-scoring metrics — char/token counts, BPE-ish token count,
@@ -414,7 +407,7 @@ def llm_text_stats(spark, sf_dir):
         F.size(regex_tokens("text")).alias("n_regex_tokens"),
         punct_count("text").alias("n_punct"),
         digit_ratio("text").alias("digit_ratio"),
-    ).orderBy("doc_id")
+    )
 
 
 def _sql_hits(lang: str) -> str:
@@ -438,6 +431,7 @@ def _sql_hits(lang: str) -> str:
                 ELSE 'fr' END AS predicted_lang
     FROM scored ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_langid(spark, sf_dir):
     """L4b: stopword-panel language ID (deterministic heuristic; ties break
@@ -447,7 +441,7 @@ def llm_langid(spark, sf_dir):
         "doc_id",
         F.col("lang").alias("labeled_lang"),
         language_id("text").alias("predicted_lang"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -459,6 +453,7 @@ def llm_langid(spark, sf_dir):
            (SELECT min(md5(s)) FROM unnest({_SQL_SHINGLES5}) AS t(s)) AS min_shingle_fp
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_fingerprint(spark, sf_dir):
     """L4c: document fingerprints — normalized-content md5 plus the
@@ -475,7 +470,6 @@ def llm_fingerprint(spark, sf_dir):
                 F.transform(word_shingles(F.col("toks"), 5), F.md5)
             ).alias("min_shingle_fp"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -508,6 +502,7 @@ def llm_token_topk(spark, sf_dir):
            'application/octet-stream' AS content_type
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_multimodal(spark, sf_dir):
     """L5: multimodal column pipeline — text → opaque binary + metadata
@@ -515,7 +510,7 @@ def llm_multimodal(spark, sf_dir):
     see llm/multimodal.py). Byte-level features are oracle-checkable since
     the payload is the UTF-8 encoding."""
     d = load(spark, sf_dir, "documents")
-    return extract_features(attach_binary(d)).orderBy("doc_id")
+    return extract_features(attach_binary(d))
 
 
 @query(
@@ -554,6 +549,7 @@ def llm_multimodal(spark, sf_dir):
            shorter_than_ref
     FROM clipped ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_bleu_pairs(spark, sf_dir):
     """Pair-level clipped n-gram precision (the BLEU-1/BLEU-2 core,
@@ -615,7 +611,7 @@ def llm_bleu_pairs(spark, sf_dir):
         .cast("long")
         .alias("p2_ppm"),
         "shorter_than_ref",
-    ).orderBy("doc_id")
+    )
 
 
 #: Synthetic-image geometry for llm_multimodal_decode: 8x6 source PPM,
@@ -641,6 +637,7 @@ _MMD_W, _MMD_H, _MMD_OW, _MMD_OH = 8, 6, 4, 3
            CAST(SUM(CASE WHEN c = 2 THEN v END) AS BIGINT) AS sum_b
     FROM px GROUP BY doc_id ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_multimodal_decode(spark, sf_dir):
     """L5 de-stubbed: REAL image decode → resize → re-encode → re-decode,
@@ -687,7 +684,7 @@ def llm_multimodal_decode(spark, sf_dir):
     stats = ppm_image_stats(resized)
     return stats.select(
         "doc_id", "width", "height", "sum_r", "sum_g", "sum_b"
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -710,6 +707,7 @@ def llm_multimodal_decode(spark, sf_dir):
     SELECT doc_id, rk, tok, tf, df, score FROM ranked WHERE rk <= 3
     ORDER BY doc_id, rk
     """,
+    order_by=("doc_id", "rk"),
 )
 def llm_tfidf(spark, sf_dir):
     """L4f: TF-IDF salient terms — top-3 terms per document by
@@ -742,7 +740,6 @@ def llm_tfidf(spark, sf_dir):
         scored.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= 3)
         .select("doc_id", "rk", "tok", "tf", "df", "score")
-        .orderBy("doc_id", "rk")
     )
 
 
@@ -767,6 +764,7 @@ def llm_tfidf(spark, sf_dir):
     WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.5
     ORDER BY doc_a, doc_b
     """,
+    order_by=("doc_a", "doc_b"),
 )
 def llm_simjoin_prefix(spark, sf_dir):
     """L2g: EXACT set-similarity join via prefix filtering
@@ -781,7 +779,6 @@ def llm_simjoin_prefix(spark, sf_dir):
     return (
         prefix_filtered_pairs(arrays, min_jaccard=0.5)
         .select("doc_a", "doc_b", "n_inter", "jaccard")
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -810,7 +807,7 @@ def llm_semdedup(spark, sf_dir):
 # the 10x replica (71.5 s vs 9.8 s, judged r5); use llm_dedup_minhash.
 
 
-@query("llm_cluster_topics", sql=cluster_topics_oracle)
+@query("llm_cluster_topics", sql=cluster_topics_oracle, order_by=("cluster", "rank"))
 def llm_cluster_topics(spark, sf_dir):
     """Corpus topic discovery: k-means the embedding space, then surface
     each cluster's top-3 terms by frequency (len≥4 tokens, deterministic
@@ -835,7 +832,6 @@ def llm_cluster_topics(spark, sf_dir):
         counts.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 3)
         .select("cluster", "term", "n", "rank")
-        .orderBy("cluster", "rank")
     )
 
 
@@ -850,6 +846,7 @@ def llm_cluster_topics(spark, sf_dir):
            CAST(len(list_distinct(tk)) AS BIGINT) AS n_distinct
     FROM toks ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_pretokenize_regex(spark, sf_dir):
     """BPE-style regex pre-tokenization (the GPT-2 splitter's RE2-safe
@@ -865,7 +862,6 @@ def llm_pretokenize_regex(spark, sf_dir):
             F.size(tk).cast("long").alias("n_tokens"),
             F.size(F.array_distinct(tk)).cast("long").alias("n_distinct"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -962,6 +958,7 @@ def llm_dedup_cascade(spark, sf_dir):
     FROM sh s JOIN firsts f ON s.shingle = f.shingle
     GROUP BY s.doc ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_ngram_novelty(spark, sf_dir):
     """Corpus novelty per document: the fraction of its distinct 5-grams
@@ -982,7 +979,6 @@ def llm_ngram_novelty(spark, sf_dir):
             novel.alias("n_novel"),
             (novel.cast("double") / F.count(F.lit(1))).alias("novelty"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1003,6 +999,7 @@ def llm_ngram_novelty(spark, sf_dir):
     WHERE 2 * i.n_inter >= sa.n
     ORDER BY doc_a, doc_b
     """,
+    order_by=("doc_a", "doc_b"),
 )
 def llm_containment_pairs(spark, sf_dir):
     """L2h: one-sided shingle CONTAINMENT |A∩B|/|A| ≥ 0.5 — the asymmetric
@@ -1025,7 +1022,6 @@ def llm_containment_pairs(spark, sf_dir):
     return (
         containment_filtered_pairs(arrays, min_containment=0.5)
         .select("doc_a", "doc_b", "n_inter", "containment")
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -1037,6 +1033,7 @@ def llm_containment_pairs(spark, sf_dir):
     SELECT n.doc_id, EXISTS (SELECT 1 FROM old o WHERE o.h = n.h) AS seen_before
     FROM new n ORDER BY n.doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_dedup_incremental(spark, sf_dir):
     """Incremental dedup against a prior corpus snapshot (the daily-crawl
@@ -1062,11 +1059,10 @@ def llm_dedup_incremental(spark, sf_dir):
         new.select("doc_id")
         .join(confirmed, "doc_id", "left")
         .select("doc_id", F.coalesce("seen_before", F.lit(False)).alias("seen_before"))
-        .orderBy("doc_id")
     )
 
 
-@query("llm_ann_recall_report", sql=recall_report_oracle)
+@query("llm_ann_recall_report", sql=recall_report_oracle, order_by=("method",))
 def llm_ann_recall_report(spark, sf_dir):
     """ANN quality harness: recall@5 of every approximate similarity path
     (sign-LSH multiprobe, IVF, product quantization) against the exact
@@ -1145,7 +1141,7 @@ def llm_ann_recall_report(spark, sf_dir):
     out = spark.createDataFrame(
         rows, "method string, n_brute bigint, n_hits bigint, recall_at_5 double"
     )
-    return out.orderBy("method")
+    return out
 
 
 @query(
@@ -1169,6 +1165,7 @@ def llm_ann_recall_report(spark, sf_dir):
     WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.2
     ORDER BY new_doc, old_doc
     """,
+    order_by=("new_doc", "old_doc"),
 )
 def llm_crossdup_jaccard(spark, sf_dir):
     """Cross-corpus near-dup: exact word-5-gram Jaccard of every NEW doc
@@ -1204,7 +1201,6 @@ def llm_crossdup_jaccard(spark, sf_dir):
         inter.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= 0.2)
         .select("new_doc", "old_doc", "n_inter", "jaccard")
-        .orderBy("new_doc", "old_doc")
     )
 
 
@@ -1229,6 +1225,7 @@ def llm_crossdup_jaccard(spark, sf_dir):
     WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.5
     ORDER BY new_doc, old_doc
     """,
+    order_by=("new_doc", "old_doc"),
 )
 def llm_crossdup_minhash(spark, sf_dir):
     """The SCALE tier of cross-corpus near-dedup: MinHash signatures on
@@ -1258,7 +1255,6 @@ def llm_crossdup_minhash(spark, sf_dir):
             F.col("doc_b").alias("old_doc"),
             "n_inter",
         )
-        .orderBy("new_doc", "old_doc")
     )
 
 
@@ -1287,6 +1283,7 @@ def llm_crossdup_minhash(spark, sf_dir):
     WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.5
     ORDER BY new_doc, old_doc
     """,
+    order_by=("new_doc", "old_doc"),
 )
 def llm_dedup_incremental_lsh(spark, sf_dir):
     """Incremental near-dedup against a PERSISTED MinHash index
@@ -1321,7 +1318,6 @@ def llm_dedup_incremental_lsh(spark, sf_dir):
             F.col("doc_b").alias("old_doc"),
             "n_inter",
         )
-        .orderBy("new_doc", "old_doc")
     )
 
 
@@ -1476,6 +1472,7 @@ def llm_bm25_indexed(spark, sf_dir):
     WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.5
     ORDER BY new_doc, old_doc
     """,
+    order_by=("new_doc", "old_doc"),
 )
 def llm_dedup_index_erasure(spark, sf_dir):
     """GDPR-style erasure against the PERSISTED MinHash index
@@ -1515,7 +1512,6 @@ def llm_dedup_index_erasure(spark, sf_dir):
             F.col("doc_b").alias("old_doc"),
             "n_inter",
         )
-        .orderBy("new_doc", "old_doc")
     )
 
 
@@ -1561,7 +1557,7 @@ def llm_bm25_erasure(spark, sf_dir):
     return probe_bm25_index(spark, path, probe, k=10)
 
 
-@query("emb_ann_index_erasure", sql=ivf_erasure_oracle)
+@query("emb_ann_index_erasure", sql=ivf_erasure_oracle, order_by=("query_id", "rank"))
 def emb_ann_index_erasure(spark, sf_dir):
     """Erasure against the PERSISTED IVF index: index all embeddings,
     tombstone vec_id % 4 == 0, probe — an erased vector can never be
@@ -1587,7 +1583,6 @@ def emb_ann_index_erasure(spark, sf_dir):
     return (
         probe_ivf_index(spark, path, q, k=5)
         .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
     )
 
 
@@ -1619,7 +1614,7 @@ _PCM_SQL = """
 """
 
 
-@query("llm_pcm_energy", sql=_PCM_SQL)
+@query("llm_pcm_energy", sql=_PCM_SQL, order_by=("doc_id", "frame_idx"))
 def llm_pcm_energy(spark, sf_dir):
     """L5+: REAL audio-path compute (not a stub): the binary column decoded
     as 16-bit LE mono PCM, cut into 256-sample frames at stride 128, with
@@ -1635,7 +1630,7 @@ def llm_pcm_energy(spark, sf_dir):
     d = load(spark, sf_dir, "documents").filter(
         F.octet_length("text") == F.length("text")
     )
-    return pcm_frame_energy(attach_binary(d)).orderBy("doc_id", "frame_idx")
+    return pcm_frame_energy(attach_binary(d))
 
 
 #: Synthetic-audio geometry for llm_av_features: stereo, 512 samples per
@@ -1665,6 +1660,7 @@ _AVF_N, _AVF_CH, _AVF_FRAME = 512, 2, 128
     FROM s GROUP BY doc_id, channel, frame_idx
     ORDER BY doc_id, channel, frame_idx
     """,
+    order_by=("doc_id", "channel", "frame_idx"),
 )
 def llm_av_features(spark, sf_dir):
     """L5++ (VERDICT r4 task 5): REAL A/V-container path — a RIFF/WAVE
@@ -1706,9 +1702,7 @@ def llm_av_features(spark, sf_dir):
 
     ids = load(spark, sf_dir, "documents").where(F.col("doc_id") % 20 == 0).select("doc_id")
     wavs = ids.mapInPandas(gen, schema="doc_id bigint, content binary")
-    return wav_frame_features(wavs, frame=_AVF_FRAME, stride=_AVF_FRAME).orderBy(
-        "doc_id", "channel", "frame_idx"
-    )
+    return wav_frame_features(wavs, frame=_AVF_FRAME, stride=_AVF_FRAME)
 
 
 #: Synthetic-video geometry for llm_video_features: 4 frames of 6x7 RGB
@@ -1742,6 +1736,7 @@ _VID_N, _VID_H, _VID_W = 4, 6, 7
     FROM px GROUP BY doc_id, f
     ORDER BY doc_id, frame_idx
     """,
+    order_by=("doc_id", "frame_idx"),
 )
 def llm_video_features(spark, sf_dir):
     """L5+++ (VERDICT r5 task 5): REAL video-container path — a RIFF/AVI
@@ -1790,7 +1785,7 @@ def llm_video_features(spark, sf_dir):
 
     ids = load(spark, sf_dir, "documents").where(F.col("doc_id") % 20 == 0).select("doc_id")
     avis = ids.mapInPandas(gen, schema="doc_id bigint, content binary")
-    return avi_frame_features(avis).orderBy("doc_id", "frame_idx")
+    return avi_frame_features(avis)
 
 
 #: Audio geometry for llm_av_sync: stereo, 64 samples per video frame
@@ -1836,6 +1831,7 @@ _AVS_FRAME = 64
     FROM vstats v JOIN astats a ON v.doc_id = a.doc_id AND v.f = a.f
     ORDER BY v.doc_id, frame_idx
     """,
+    order_by=("doc_id", "frame_idx"),
 )
 def llm_av_sync(spark, sf_dir):
     """L5 multi-stream tier: ONE interleaved A/V container, BOTH streams
@@ -1884,7 +1880,7 @@ def llm_av_sync(spark, sf_dir):
 
     ids = load(spark, sf_dir, "documents").where(F.col("doc_id") % 20 == 0).select("doc_id")
     avs = ids.mapInPandas(gen, schema="doc_id bigint, content binary")
-    return av_sync_features(avs).orderBy("doc_id", "frame_idx")
+    return av_sync_features(avs)
 
 
 #: Synthetic gated-audio geometry for llm_vad_segments: stereo, 16 windows
@@ -1921,6 +1917,7 @@ _VAD_K, _VAD_FRAME = 16, 64
     FROM voiced GROUP BY doc_id, channel, grp
     ORDER BY doc_id, channel, seg_start
     """,
+    order_by=("doc_id", "channel", "seg_start"),
 )
 def llm_vad_segments(spark, sf_dir):
     """L5 decision tier, audio: voice-activity SEGMENTS from demuxed
@@ -1973,7 +1970,6 @@ def llm_vad_segments(spark, sf_dir):
             F.sum("energy").alias("energy"),
         )
         .select("doc_id", "channel", "seg_start", "seg_end", "n_frames", "energy")
-        .orderBy("doc_id", "channel", "seg_start")
     )
 
 
@@ -2006,6 +2002,7 @@ _SC_N, _SC_LEN = 8, 2
     FROM frames GROUP BY doc_id, scene_id
     ORDER BY doc_id, scene_idx
     """,
+    order_by=("doc_id", "scene_idx"),
 )
 def llm_scene_cuts(spark, sf_dir):
     """L5 decision tier (the r5 survivorship motif applied to video):
@@ -2076,14 +2073,13 @@ def llm_scene_cuts(spark, sf_dir):
             "n_frames",
             "pixel_sum",
         )
-        .orderBy("doc_id", "scene_idx")
     )
 
 
 from ..oracles.scalars import compression_oracle
 
 
-@query("llm_compression_ratio", sql=compression_oracle)
+@query("llm_compression_ratio", sql=compression_oracle, order_by=("doc_id",))
 def llm_compression_ratio(spark, sf_dir):
     """L4+: compression-ratio quality signal — zlib-compressed bytes over
     raw bytes per document, the cheap entropy proxy corpus filters use to
@@ -2121,7 +2117,6 @@ def llm_compression_ratio(spark, sf_dir):
         .mapInPandas(
             run, schema="doc_id long, n_bytes long, n_compressed long, ratio_pct long"
         )
-        .orderBy("doc_id")
     )
 
 
@@ -2165,6 +2160,7 @@ _SH_SIG = " + ".join(
     WHERE bit_count(xor(a.sig, b.sig)) <= 3
     ORDER BY doc_a, doc_b
     """.replace("{tokens}", _SQL_TOKENS),
+    order_by=("doc_a", "doc_b"),
 )
 def llm_dedup_simhash_md5(spark, sf_dir):
     """L2b-oracle: the SimHash near-dup pipeline with md5-derived 60-bit
@@ -2177,7 +2173,6 @@ def llm_dedup_simhash_md5(spark, sf_dir):
     return (
         simhash_near_dups(d, max_hamming=3, bits=_SIMHASH_BITS, hasher="md5")
         .select("doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming"))
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -2209,6 +2204,7 @@ _PNG_H, _PNG_W = 6, 5
            CAST(SUM(CASE WHEN c = 2 THEN v END) AS BIGINT) AS sum_b
     FROM px GROUP BY doc_id ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_png_features(spark, sf_dir):
     """L5++++: the first COMPRESSED codec decoded for real — PNG, via the
@@ -2242,7 +2238,7 @@ def llm_png_features(spark, sf_dir):
 
     ids = load(spark, sf_dir, "documents").where(F.col("doc_id") % 20 == 0).select("doc_id")
     pngs = ids.mapInPandas(gen, schema="doc_id bigint, content binary")
-    return rgb_image_stats(pngs).orderBy("doc_id")
+    return rgb_image_stats(pngs)
 
 
 #: PNG-source resize geometry: 8x6 PNG nearest-neighbor decimated 2x to
@@ -2268,6 +2264,7 @@ _PNGR_W, _PNGR_H, _PNGR_OW, _PNGR_OH = 8, 6, 4, 3
            CAST(SUM(CASE WHEN c = 2 THEN v END) AS BIGINT) AS sum_b
     FROM px GROUP BY doc_id ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_png_resize(spark, sf_dir):
     """L5 cross-codec chain: PNG in → real decode (zlib inflate + filter
@@ -2301,7 +2298,6 @@ def llm_png_resize(spark, sf_dir):
     return (
         ppm_image_stats(resized)
         .select("doc_id", "width", "height", "sum_r", "sum_g", "sum_b")
-        .orderBy("doc_id")
     )
 
 
@@ -2331,6 +2327,7 @@ _GIF_H, _GIF_W = 9, 5
            CAST(SUM(CASE WHEN c = 2 THEN v END) AS BIGINT) AS sum_b
     FROM px GROUP BY doc_id ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_gif_features(spark, sf_dir):
     """L5++++ sibling of llm_png_features for the SECOND real compressed
@@ -2366,7 +2363,7 @@ def llm_gif_features(spark, sf_dir):
 
     ids = load(spark, sf_dir, "documents").where(F.col("doc_id") % 20 == 0).select("doc_id")
     gifs = ids.mapInPandas(gen, schema="doc_id bigint, content binary")
-    return rgb_image_stats(gifs).orderBy("doc_id")
+    return rgb_image_stats(gifs)
 
 
 #: G.711 fixture geometry: 128 coded bytes per doc per law. µ-law byte
@@ -2417,6 +2414,7 @@ _G711_N = 128
     FROM us JOIN asx ON us.doc_id = asx.doc_id
     ORDER BY us.doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_g711_features(spark, sf_dir):
     """L5 audio-codec tier: G.711 µ-law AND A-law decoded FOR REAL (the
@@ -2469,7 +2467,7 @@ def llm_g711_features(spark, sf_dir):
         F.col("s_sum").alias("alaw_sum"),
         F.col("s_energy").alias("alaw_energy"),
     )
-    return um.join(am, "doc_id").orderBy("doc_id")
+    return um.join(am, "doc_id")
 
 
 #: Bit-depth fixture geometry for llm_wav_depths: 64 mono samples per doc
@@ -2518,6 +2516,7 @@ _WD_N = 64
     FROM s8 JOIN s24 USING (doc_id) JOIN s32 USING (doc_id) JOIN sf USING (doc_id)
     ORDER BY s8.doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_wav_depths(spark, sf_dir):
     """L5 audio bit-depth tier: integer PCM at 8/24/32 bits and IEEE
@@ -2572,7 +2571,7 @@ def llm_wav_depths(spark, sf_dir):
         schema="doc_id bigint, pcm8_sum bigint, pcm8_energy bigint, "
         "pcm24_sum bigint, pcm24_energy bigint, pcm32_sum bigint, "
         "pcm32_energy bigint, f32_sum bigint, f32_energy bigint",
-    ).orderBy("doc_id")
+    )
 
 
 #: JPEG fixture geometry: per selected doc, (a) a 16x24 grayscale
@@ -2615,6 +2614,7 @@ _JPG_CBY, _JPG_CBX = 2, 3  # color: 16x16 super-blocks
            gray_sum, color_sum, prog_sum
     FROM gs JOIN cs USING (doc_id) JOIN ps USING (doc_id) ORDER BY gs.doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_jpeg_features(spark, sf_dir):
     """L5+++++: baseline JPEG decoded FOR REAL — the spec-written T.81
@@ -2696,7 +2696,7 @@ def llm_jpeg_features(spark, sf_dir):
         gen_and_decode,
         schema="doc_id bigint, gray_w int, gray_h int, color_w int, color_h int, "
         "gray_sum bigint, color_sum bigint, prog_sum bigint",
-    ).orderBy("doc_id")
+    )
 
 
 #: TIFF fixture geometry: one 6x9 RGB image per selected doc, pixel
@@ -2725,6 +2725,7 @@ _TIF_H, _TIF_W = 6, 9
            CAST(SUM(CASE WHEN c = 2 THEN v END) AS BIGINT) AS sum_b
     FROM px GROUP BY doc_id ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_tiff_features(spark, sf_dir):
     """L5 document-corpus codec: baseline TIFF decoded for real
@@ -2760,7 +2761,7 @@ def llm_tiff_features(spark, sf_dir):
 
     ids = load(spark, sf_dir, "documents").where(F.col("doc_id") % 20 == 5).select("doc_id")
     tiffs = ids.mapInPandas(gen, schema="doc_id bigint, content binary")
-    return rgb_image_stats(tiffs).orderBy("doc_id")
+    return rgb_image_stats(tiffs)
 
 
 #: WEBP fixture geometry: one 7x6 RGB image per selected doc, pixel
@@ -2788,6 +2789,7 @@ _WEBP_H, _WEBP_W = 6, 7
            CAST(SUM(CASE WHEN c = 2 THEN v END) AS BIGINT) AS sum_b
     FROM px GROUP BY doc_id ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_webp_features(spark, sf_dir):
     """L5: the LAST image-format env-gate falls — WEBP lossless (VP8L)
@@ -2823,7 +2825,7 @@ def llm_webp_features(spark, sf_dir):
 
     ids = load(spark, sf_dir, "documents").where(F.col("doc_id") % 20 == 15).select("doc_id")
     webps = ids.mapInPandas(gen, schema="doc_id bigint, content binary")
-    return rgb_image_stats(webps).orderBy("doc_id")
+    return rgb_image_stats(webps)
 
 
 #: Mixed-codec corpus geometry: one 16x24 gray-valued image per selected
@@ -2852,6 +2854,7 @@ _MIX_BY, _MIX_BX = 2, 3
            CAST(SUM(v) * 64 AS BIGINT) AS sum_b
     FROM gb GROUP BY doc_id ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_codec_dispatch(spark, sf_dir):
     """L5 capstone: the mixed-format corpus shape — ONE Spark job over a
@@ -2907,7 +2910,7 @@ def llm_codec_dispatch(spark, sf_dir):
 
     ids = load(spark, sf_dir, "documents").where(F.col("doc_id") % 10 == 3).select("doc_id")
     payloads = ids.mapInPandas(gen, schema="doc_id bigint, content binary")
-    return rgb_image_stats(payloads).orderBy("doc_id")
+    return rgb_image_stats(payloads)
 
 
 #: Image near-dup fixture: docs in the same group (doc_id // 40) share a
@@ -2942,6 +2945,7 @@ _DH_G = 40
     WHERE bit_count(xor(a.dhash, b.dhash)) <= 3
     ORDER BY doc_a, doc_b
     """,
+    order_by=("doc_a", "doc_b"),
 )
 def llm_image_dhash_dedup(spark, sf_dir):
     """Multimodal dedup tier: IMAGE near-duplicate pairs by perceptual
@@ -2981,7 +2985,6 @@ def llm_image_dhash_dedup(spark, sf_dir):
     return (
         dhash_near_dup_pairs(image_dhash(pngs), max_hamming=3)
         .select("doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming"))
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -3020,6 +3023,7 @@ _AFP_W, _AFP_N = 16, 57
     WHERE bit_count(xor(a.fp, b.fp)) <= 3
     ORDER BY doc_a, doc_b
     """,
+    order_by=("doc_a", "doc_b"),
 )
 def llm_audio_fp_dedup(spark, sf_dir):
     """Multimodal dedup tier, audio twin of llm_image_dhash_dedup: AUDIO
@@ -3057,7 +3061,6 @@ def llm_audio_fp_dedup(spark, sf_dir):
     return (
         dhash_near_dup_pairs(audio_fingerprint(wavs), max_hamming=3)
         .select("doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming"))
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -3097,6 +3100,7 @@ _VFP_N, _VFP_H, _VFP_W = 57, 4, 5
     WHERE bit_count(xor(a.fp, b.fp)) <= 3
     ORDER BY doc_a, doc_b
     """,
+    order_by=("doc_a", "doc_b"),
 )
 def llm_video_fp_dedup(spark, sf_dir):
     """Multimodal dedup tier, video member of the triad: VIDEO
@@ -3137,7 +3141,6 @@ def llm_video_fp_dedup(spark, sf_dir):
     return (
         dhash_near_dup_pairs(video_fingerprint(avis), max_hamming=3)
         .select("doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming"))
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -3182,6 +3185,7 @@ _HTML_ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"),
            CAST(len(string_split(clean, ' ')) AS BIGINT) AS n_tokens
     FROM clean ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_html_extract(spark, sf_dir):
     """Document-corpus tier: HTML boilerplate strip / text extraction —
@@ -3218,7 +3222,6 @@ def llm_html_extract(spark, sf_dir):
             F.length(clean).cast("long").alias("n_chars"),
             F.size(F.split(clean, " ")).cast("long").alias("n_tokens"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -3248,6 +3251,7 @@ def llm_html_extract(spark, sf_dir):
     SELECT src_host, dst_host, COUNT(*) AS n_links
     FROM edges GROUP BY 1, 2 ORDER BY 1, 2
     """,
+    order_by=("src_host", "dst_host"),
 )
 def llm_link_graph(spark, sf_dir):
     """Crawl link-graph construction — the op that feeds PageRank-style
@@ -3293,7 +3297,6 @@ def llm_link_graph(spark, sf_dir):
         links.select("src_host", dst.alias("dst_host"))
         .groupBy("src_host", "dst_host")
         .agg(F.count(F.lit(1)).alias("n_links"))
-        .orderBy("src_host", "dst_host")
     )
 
 
@@ -3305,6 +3308,7 @@ def llm_link_graph(spark, sf_dir):
            CAST(length('Doc ' || doc_id || chr(10) || substr(text, 1, 40) || chr(10) || 'tail (of) doc') AS BIGINT) AS n_chars
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_pdf_extract(spark, sf_dir):
     """Document-corpus tier: PDF TEXT EXTRACTION — the other universal
@@ -3345,7 +3349,7 @@ def llm_pdf_extract(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     return d.mapInPandas(
         gen_and_extract, schema="doc_id bigint, extracted string, n_chars bigint"
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -3379,6 +3383,7 @@ def llm_pdf_extract(spark, sf_dir):
            CAST(length(clean) AS BIGINT) AS n_chars
     FROM clean ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_warc_extract(spark, sf_dir):
     """Crawl-ingest tier end to end: WARC container (the Common-Crawl
@@ -3435,7 +3440,7 @@ def llm_warc_extract(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     return d.mapInPandas(
         gen_and_extract, schema="doc_id bigint, uri string, extracted string, n_chars bigint"
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -3471,6 +3476,7 @@ def llm_warc_extract(spark, sf_dir):
            anchor AS top_anchor, n AS top_n
     FROM ranked WHERE rk = 1 ORDER BY target_id
     """,
+    order_by=("target_id",),
 )
 def llm_anchor_text(spark, sf_dir):
     """Anchor-text aggregation — the cross-page description signal
@@ -3538,7 +3544,6 @@ def llm_anchor_text(spark, sf_dir):
             F.col("anchor").alias("top_anchor"),
             F.col("n").alias("top_n"),
         )
-        .orderBy("target_id")
     )
 
 
@@ -3573,6 +3578,7 @@ def llm_anchor_text(spark, sf_dir):
     SELECT host, url, n_discoveries, host_inlinks, CAST(rank AS BIGINT) AS rank
     FROM ranked WHERE rank <= 2 ORDER BY host, rank
     """,
+    order_by=("host", "rank"),
 )
 def llm_crawl_frontier(spark, sf_dir):
     """Crawl-frontier prioritization — the decision step after
@@ -3624,7 +3630,6 @@ def llm_crawl_frontier(spark, sf_dir):
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 2)
         .select("host", "url", "n_discoveries", "host_inlinks", "rank")
-        .orderBy("host", "rank")
     )
 
 
@@ -3646,6 +3651,7 @@ def llm_crawl_frontier(spark, sf_dir):
            CAST(doc_id % 3 AS BIGINT) AS n_digest_match
     FROM b ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_warc_revisit(spark, sf_dir):
     """Crawl-time dedup accounting: WARC ``request``/``response``/``revisit``
@@ -3723,7 +3729,7 @@ def llm_warc_revisit(spark, sf_dir):
             "n_revisit bigint, stored_body_bytes bigint, saved_bytes bigint, "
             "n_digest_match bigint"
         ),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -3735,6 +3741,7 @@ def llm_warc_revisit(spark, sf_dir):
            CAST(length('Doc ' || doc_id || ': ' || substr(text, 1, 50)) AS BIGINT) AS n_chars
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_wet_extract(spark, sf_dir):
     """WET ingest — the Common Crawl EXTRACTED-TEXT layout (.wet files:
@@ -3774,7 +3781,7 @@ def llm_wet_extract(spark, sf_dir):
     return d.mapInPandas(
         gen_and_extract,
         schema="doc_id bigint, uri string, wet_text string, n_chars bigint",
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -3786,6 +3793,7 @@ def llm_wet_extract(spark, sf_dir):
            CAST((doc_id * 7) % 100 + (doc_id * 13) % 100 AS BIGINT) AS link_sum
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_wat_extract(spark, sf_dir):
     """WAT ingest — the Common Crawl METADATA sidecar (.wat files:
@@ -3846,7 +3854,6 @@ def llm_wat_extract(spark, sf_dir):
                 "m.links", F.lit(0).cast("long"), lambda acc, x: acc + x
             ).alias("link_sum"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -3874,6 +3881,7 @@ _SEEK_N, _SEEK_FRAMES = 24, (2, 9, 21)
            CAST(SUM(CASE WHEN c = 2 THEN v END) AS BIGINT) AS b_sum
     FROM px GROUP BY doc_id, f ORDER BY doc_id, frame_idx
     """,
+    order_by=("doc_id", "frame_idx"),
 )
 def llm_avi_seek(spark, sf_dir):
     """L5 random-access tier: frame sampling through the AVI idx1 INDEX
@@ -3929,7 +3937,7 @@ def llm_avi_seek(spark, sf_dir):
     return d.mapInPandas(
         gen_and_seek,
         schema="doc_id bigint, frame_idx int, r_sum bigint, g_sum bigint, b_sum bigint",
-    ).orderBy("doc_id", "frame_idx")
+    )
 
 
 @query(
@@ -3941,6 +3949,7 @@ def llm_avi_seek(spark, sf_dir):
              || chr(10) || 'ch two & end' AS epub_text
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_office_extract(spark, sf_dir):
     """Document-corpus tier: OFFICE/EBOOK containers — DOCX and EPUB are
@@ -3983,7 +3992,7 @@ def llm_office_extract(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     return d.mapInPandas(
         gen_and_extract, schema="doc_id bigint, docx_text string, epub_text string"
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -4001,6 +4010,7 @@ def llm_office_extract(spark, sf_dir):
            CAST(30 * doc_id + 3 AS BIGINT) AS value_sum
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_ods_extract(spark, sf_dir):
     """Spreadsheet-corpus extraction (the tabular side of the document
@@ -4048,7 +4058,7 @@ def llm_ods_extract(spark, sf_dir):
     return d.mapInPandas(
         gen_and_extract,
         schema="doc_id bigint, extracted string, n_rows bigint, n_cells bigint, value_sum bigint",
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -4077,6 +4087,7 @@ def llm_ods_extract(spark, sf_dir):
                          THEN length(array_to_string(cell.source, '')) ELSE 0 END) AS BIGINT) AS code_chars
     FROM cells GROUP BY doc_id ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_ipynb_extract(spark, sf_dir):
     """Code-corpus tier: JUPYTER NOTEBOOK extraction done entirely
@@ -4134,7 +4145,6 @@ def llm_ipynb_extract(spark, sf_dir):
                 code_texts, F.lit(0), lambda acc, t: acc + F.length(t)
             ).cast("long").alias("code_chars"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -4149,6 +4159,7 @@ def llm_ipynb_extract(spark, sf_dir):
            CAST(1 AS BIGINT) AS n_docstrings
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_code_strip(spark, sf_dir):
     """Code-corpus tier: comment and docstring stripping done with a
@@ -4231,7 +4242,7 @@ def llm_code_strip(spark, sf_dir):
     return d.mapInPandas(
         gen_and_strip,
         schema="doc_id bigint, stripped string, n_comments bigint, n_docstrings bigint",
-    ).orderBy("doc_id")
+    )
 
 
 #: Subtitle fixture: 3 cues per doc; cue k starts at (d%7)*1000 + 2000k
@@ -4255,6 +4266,7 @@ _SUB_N = 3
            string_agg(ctext, chr(10) ORDER BY k) AS text
     FROM cues GROUP BY doc_id ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_subtitle_extract(spark, sf_dir):
     """A/V-corpus timed text: SRT and WebVTT subtitle parsing — the
@@ -4300,4 +4312,4 @@ def llm_subtitle_extract(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     return d.mapInPandas(
         gen_and_parse, schema="doc_id bigint, n_cues bigint, total_ms bigint, text string"
-    ).orderBy("doc_id")
+    )

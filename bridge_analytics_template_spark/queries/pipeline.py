@@ -55,6 +55,7 @@ _EN_PANEL = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
                     / greatest(length(text), 1) >= 0.5) AS keep
     FROM t ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_quality_score(spark, sf_dir):
     """L4e: composite document quality score — the C4/Gopher-style filter
@@ -74,7 +75,7 @@ def llm_quality_score(spark, sf_dir):
         (stopword_hits(toks, "en").cast("double") / denom).alias("stopword_ratio"),
         a_ratio.alias("alpha_ratio"),
         (n_tokens.between(5, 100000) & (a_ratio >= 0.5)).alias("keep"),
-    ).orderBy("doc_id")
+    )
 
 
 _SQL_SHINGLES5 = (
@@ -130,6 +131,7 @@ _SQL_EDGES = f"""
     SELECT node AS doc_id, MIN(label) AS cluster_id FROM reach
     GROUP BY node ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_dedup_clusters(spark, sf_dir):
     """L2e: near-dup clustering — group the 5-gram-Jaccard edge set into
@@ -165,7 +167,6 @@ def llm_dedup_clusters(spark, sf_dir):
     return (
         connected_components(edges)
         .select(F.col("node").alias("doc_id"), "cluster_id")
-        .orderBy("doc_id")
     )
 
 
@@ -201,7 +202,7 @@ def _survivor_sql() -> str:
     """
 
 
-@query("llm_dedup_survivors", sql=_survivor_sql())
+@query("llm_dedup_survivors", sql=_survivor_sql(), order_by=("doc_id",))
 def llm_dedup_survivors(spark, sf_dir):
     """Quality-aware dedup survivorship — the decision step every dedup
     pipeline actually ends with: cluster the exact near-dup pairs
@@ -245,7 +246,6 @@ def llm_dedup_survivors(spark, sf_dir):
             "score_raw",
             (F.col("doc_id") == F.col("survivor")).alias("keep"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -258,16 +258,14 @@ def llm_dedup_survivors(spark, sf_dir):
     FROM (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents WHERE doc_id % 10 = 0) t
     ORDER BY doc_id, pos
     """,
+    order_by=("doc_id", "pos"),
 )
 def lateral_tokens_pos(spark, sf_dir):
     """UDTF-shaped lateral expansion: one row per (document, token position)
     via posexplode — the generate-rows-from-a-row primitive (DuckDB oracle
     zips parallel unnests of the token array and its index list)."""
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    return (
-        d.select("doc_id", F.posexplode_outer(ws_tokens("text")).alias("pos", "tok"))
-        .orderBy("doc_id", "pos")
-    )
+    return d.select("doc_id", F.posexplode_outer(ws_tokens("text")).alias("pos", "tok"))
 
 
 @query(
@@ -279,6 +277,7 @@ def lateral_tokens_pos(spark, sf_dir):
            COUNT(*) AS n
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
+    order_by=("l_returnflag",),
 )
 def agg_median(spark, sf_dir):
     """A8 extension: exact grouped median (interpolating percentile). Exact
@@ -292,7 +291,6 @@ def agg_median(spark, sf_dir):
             F.median("l_extendedprice").alias("med_price"),
             F.count(F.lit(1)).alias("n"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -302,11 +300,11 @@ _CORRELATED_SQL = """
     WHERE l.l_quantity > (SELECT 1.2 * AVG(l2.l_quantity)
                           FROM lineitem l2
                           WHERE l2.l_partkey = l.l_partkey)
-    GROUP BY l.l_partkey ORDER BY l.l_partkey
+    GROUP BY l.l_partkey
 """
 
 
-@query("sql_correlated_subquery", sql=_CORRELATED_SQL)
+@query("sql_correlated_subquery", sql=_CORRELATED_SQL, order_by=("l_partkey",))
 def sql_correlated_subquery(spark, sf_dir):
     """Correlated scalar subquery (TPC-H Q17 shape): lineitems above 1.2x
     the average quantity of their part. Catalyst decorrelates this into an
@@ -328,6 +326,7 @@ def sql_correlated_subquery(spark, sf_dir):
     SELECT label, dim, AVG(q) AS centroid_q, COUNT(*) AS n
     FROM ex GROUP BY label, dim ORDER BY label, dim
     """,
+    order_by=("label", "dim"),
 )
 def emb_centroids(spark, sf_dir):
     """Per-label embedding centroid (class prototype) over milli-quantized
@@ -345,7 +344,6 @@ def emb_centroids(spark, sf_dir):
             F.avg(F.floor(F.col("x").cast("double") * 1000)).alias("centroid_q"),
             F.count(F.lit(1)).alias("n"),
         )
-        .orderBy("label", "dim")
     )
 
 
@@ -360,6 +358,7 @@ def emb_centroids(spark, sf_dir):
            n_bytes // 1000 + 1 AS n_frames
     FROM t ORDER BY doc_id, frame_idx
     """,
+    order_by=("doc_id", "frame_idx"),
 )
 def llm_frame_sample(spark, sf_dir):
     """L5b: video-style frame sampling — 1→N fan-out inside mapInPandas
@@ -372,7 +371,6 @@ def llm_frame_sample(spark, sf_dir):
     return (
         sample_frames(attach_binary(d), frame_size=1000, every=4)
         .select("doc_id", "frame_idx", "n_frames")
-        .orderBy("doc_id", "frame_idx")
     )
 
 
@@ -382,6 +380,7 @@ def llm_frame_sample(spark, sf_dir):
     SELECT n_regionkey, COUNT(*) AS n_nations, MIN(n_name) AS first_name
     FROM nation GROUP BY 1 ORDER BY 1
     """,
+    order_by=("n_regionkey",),
 )
 def s_orc_roundtrip(spark, sf_dir):
     """S7b: ORC sink + scan — the second columnar format, same vectorized
@@ -393,7 +392,6 @@ def s_orc_roundtrip(spark, sf_dir):
     return (
         back.groupBy("n_regionkey")
         .agg(F.count(F.lit(1)).alias("n_nations"), F.min("n_name").alias("first_name"))
-        .orderBy("n_regionkey")
     )
 
 
@@ -410,6 +408,7 @@ def s_orc_roundtrip(spark, sf_dir):
     SELECT kind, COUNT(*) AS n, CAST(SUM(val) AS BIGINT) AS total, MIN(event_id) AS first_id
     FROM g GROUP BY kind ORDER BY kind
     """,
+    order_by=("kind",),
 )
 def s_python_datasource(spark, sf_dir):
     """S9: custom batch connector via the Python DataSource API (Spark 4) —
@@ -433,7 +432,6 @@ def s_python_datasource(spark, sf_dir):
             F.sum("val").alias("total"),
             F.min("event_id").alias("first_id"),
         )
-        .orderBy("kind")
     )
 
 
@@ -444,6 +442,7 @@ def s_python_datasource(spark, sf_dir):
     FROM documents WHERE length(trim(text)) > 0
     ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def s_python_sink(spark, sf_dir):
     """S9b: custom WRITER via the Python DataSource API (Spark 4) — the
@@ -471,7 +470,7 @@ def s_python_sink(spark, sf_dir):
     # re-run in the same session would double the rows; overwrite commits
     # only this job's files and removes superseded parts — idempotent.
     out.write.format("jsonl_manifest").option("path", path).mode("overwrite").save()
-    return read_manifested(spark, path, "doc_id long, n_tokens long").orderBy("doc_id")
+    return read_manifested(spark, path, "doc_id long, n_tokens long")
 
 
 @query(
@@ -488,6 +487,7 @@ def s_python_sink(spark, sf_dir):
            MIN(event_id) AS first_id, MAX(event_id) AS last_id
     FROM g GROUP BY kind ORDER BY kind
     """,
+    order_by=("kind",),
 )
 def s_python_stream_source(spark, sf_dir):
     """S9b: custom STREAMING connector via the Python DataSource API
@@ -517,7 +517,7 @@ def s_python_stream_source(spark, sf_dir):
         F.min("event_id").alias("first_id"),
         F.max("event_id").alias("last_id"),
     )
-    return run_to_memory(agg, "complete").orderBy("kind")
+    return run_to_memory(agg, "complete")
 
 
 @query(
@@ -526,6 +526,7 @@ def s_python_stream_source(spark, sf_dir):
     SELECT n_regionkey, COUNT(*) AS n_nations, MIN(n_name) AS first_name
     FROM nation GROUP BY 1 ORDER BY 1
     """,
+    order_by=("n_regionkey",),
 )
 def s_corrupt_file_skip(spark, sf_dir):
     """S-resilience: scanning past corrupt files — the parquet sibling of
@@ -548,7 +549,6 @@ def s_corrupt_file_skip(spark, sf_dir):
     return (
         back.groupBy("n_regionkey")
         .agg(F.count(F.lit(1)).alias("n_nations"), F.min("n_name").alias("first_name"))
-        .orderBy("n_regionkey")
     )
 
 
@@ -591,6 +591,7 @@ def profile_documents(spark, sf_dir):
     SELECT node AS doc_id, MIN(label) AS cluster_id FROM reach
     GROUP BY node ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def llm_dedup_clusters_lsh(spark, sf_dir):
     """L2f: the LSH-edge path of near-dup clustering — edges from the full
@@ -617,7 +618,6 @@ def llm_dedup_clusters_lsh(spark, sf_dir):
     return (
         connected_components(edges)
         .select(F.col("node").alias("doc_id"), "cluster_id")
-        .orderBy("doc_id")
     )
 
 
@@ -668,7 +668,7 @@ def _pagerank_full_oracle_sql() -> str:
     return "".join(parts)
 
 
-@query("graph_pagerank", sql=_pagerank_full_oracle_sql)
+@query("graph_pagerank", sql=_pagerank_full_oracle_sql, order_by=("node",))
 def graph_pagerank(spark, sf_dir):
     """Iterative PageRank over the event hand-off graph: an arc from each
     event's user to the next event's user in event_id order (parallel arcs
@@ -711,7 +711,7 @@ def graph_pagerank(spark, sf_dir):
 
         node_ids, ranks_arr = pagerank_full_local(*small, _PRF_SCALE, _PRF_ITERS)
         pdf = pd.DataFrame({"node": node_ids, "rank_e12": ranks_arr})
-        return spark.createDataFrame(pdf, "node long, rank_e12 long").orderBy("node")
+        return spark.createDataFrame(pdf, "node long, rank_e12 long")
     deg = arcs.groupBy("src").agg(F.count(F.lit(1)).alias("n_out"))
     arcs_deg = track(arcs.join(deg, "src").repartition("src").persist())
     nodes = track(
@@ -767,7 +767,7 @@ def graph_pagerank(spark, sf_dir):
                 ranks = ranks.localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_width)
-    return ranks.select("node", F.col("r").alias("rank_e12")).orderBy("node")
+    return ranks.select("node", F.col("r").alias("rank_e12"))
 
 
 from ..operators.zorder import zorder_key, zorder_sql  # noqa: E402
@@ -781,6 +781,7 @@ from ..operators.zorder import zorder_key, zorder_sql  # noqa: E402
                        "CAST(l_quantity AS BIGINT)", bits=8)} AS zkey
     FROM lineitem ORDER BY l_orderkey, l_linenumber
     """,
+    order_by=("l_orderkey", "l_linenumber"),
 )
 def f_zorder(spark, sf_dir):
     """Z-order (Morton) key over (price-bucket, quantity) — the
@@ -796,13 +797,13 @@ def f_zorder(spark, sf_dir):
         "l_orderkey",
         "l_linenumber",
         zorder_key(x, y, bits=8).alias("zkey"),
-    ).orderBy("l_orderkey", "l_linenumber")
+    )
 
 
 from ..oracles.embeddings import kmeans_oracle
 
 
-@query("emb_kmeans", sql=kmeans_oracle)
+@query("emb_kmeans", sql=kmeans_oracle, order_by=("vec_id",))
 def emb_kmeans(spark, sf_dir):
     """Lloyd's k-means over the embeddings table (llm/kmeans.py): 5
     deterministic iterations from hash-rank seeds, one GEMM pass + tiny
@@ -814,7 +815,7 @@ def emb_kmeans(spark, sf_dir):
     from ..llm.kmeans import kmeans_assign
 
     e = load(spark, sf_dir, "embeddings")
-    return kmeans_assign(e, k=8, iterations=5).orderBy("vec_id")
+    return kmeans_assign(e, k=8, iterations=5)
 
 
 @query(
@@ -832,6 +833,7 @@ def emb_kmeans(spark, sf_dir):
                       THEN 1 END) AS n_sampled
     FROM t GROUP BY lang, keep ORDER BY lang, keep
     """,
+    order_by=("lang", "keep"),
 )
 def llm_mixture_stratified(spark, sf_dir):
     """Quality-stratified mixture: documents passing the C4/Gopher-style
@@ -853,7 +855,6 @@ def llm_mixture_stratified(spark, sf_dir):
             F.count(F.lit(1)).alias("n_total"),
             F.count(F.when(F.col("sampled"), 1)).alias("n_sampled"),
         )
-        .orderBy("lang", "keep")
     )
 
 
@@ -992,11 +993,10 @@ def _dup_kcore(spark, sf_dir, rounds: int = _KCORE_ROUNDS):
     return (
         final.groupBy(F.col("u").alias("doc_id"))
         .agg(F.count(F.lit(1)).alias("core_deg"))
-        .orderBy("doc_id")
     )
 
 
-@query("llm_dup_kcore", sql=_kcore_oracle_sql())
+@query("llm_dup_kcore", sql=_kcore_oracle_sql(), order_by=("doc_id",))
 def llm_dup_kcore(spark, sf_dir):
     """k-core (K=2) of the exact near-dup graph — template-farm / spam-ring
     detection: a document surviving the 2-core belongs to a DENSELY
@@ -1070,7 +1070,7 @@ def _mhe_oracle_sql() -> str:
     """
 
 
-@query("llm_minhash_estimate", sql=_mhe_oracle_sql())
+@query("llm_minhash_estimate", sql=_mhe_oracle_sql(), order_by=("doc_a", "doc_b"))
 def llm_minhash_estimate(spark, sf_dir):
     """MinHash ESTIMATE calibration — the sketch side of the MinHash story
     made oracle-exact: per verified near-dup pair, the {P}-permutation
@@ -1138,7 +1138,7 @@ def llm_minhash_estimate(spark, sf_dir):
             f"abs(matches * 1000000 div {_MHE_PERMS}"
             f" - n_inter * 1000000 div (n_a + n_b - n_inter))"
         ).alias("abs_err_ppm"),
-    ).orderBy("doc_a", "doc_b")
+    )
 
 
 # --- filter-cascade attrition funnel -----------------------------------------
@@ -1174,7 +1174,7 @@ _FUNNEL_SQL = r"""
 """
 
 
-@query("pipeline_filter_funnel", sql=_FUNNEL_SQL)
+@query("pipeline_filter_funnel", sql=_FUNNEL_SQL, order_by=("stage",))
 def pipeline_filter_funnel(spark, sf_dir):
     """Curation observability: the ATTRITION FUNNEL through an ordered
     filter cascade — per stage, how many documents entered, survived, and
@@ -1244,7 +1244,7 @@ def pipeline_filter_funnel(spark, sf_dir):
             ),
         )
         rows = r if rows is None else rows.unionByName(r)
-    return rows.orderBy("stage")
+    return rows
 
 
 # --- Manifest-table GDPR erasure: executing the delete plan -------------------
@@ -1269,6 +1269,7 @@ def pipeline_filter_funnel(spark, sf_dir):
     GROUP BY o_orderstatus
     ORDER BY o_orderstatus
     """,
+    order_by=("o_orderstatus",),
 )
 def s_table_erasure(spark, sf_dir):
     """S10: copy-on-write row DELETE on a manifest-versioned parquet table
@@ -1309,7 +1310,6 @@ def s_table_erasure(spark, sf_dir):
             F.min("o_orderkey").alias("min_key"),
             F.max("o_orderkey").alias("max_key"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -1333,6 +1333,7 @@ def s_table_erasure(spark, sf_dir):
     WHERE o_custkey NOT IN (SELECT c_custkey FROM tomb)
     ORDER BY table_name
     """,
+    order_by=("table_name",),
 )
 def s_table_erasure_cascade(spark, sf_dir):
     """S10b: the full TRANSITIVE deletion-request execution — exactly the
@@ -1400,7 +1401,7 @@ def s_table_erasure_cascade(spark, sf_dir):
             .select(F.lit(name).alias("table_name"), "n_survivors", "key_sum")
         )
         out = r if out is None else out.unionByName(r)
-    return out.orderBy("table_name")
+    return out
 
 
 @query(
@@ -1424,6 +1425,7 @@ def s_table_erasure_cascade(spark, sf_dir):
            CAST(SUM(o_custkey) AS BIGINT) AS cust_sum
     FROM merged GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
+    order_by=("o_orderpriority",),
 )
 def s_table_merge_upsert(spark, sf_dir):
     """S10c: atomic MERGE / upsert into the manifest-versioned table
@@ -1467,7 +1469,6 @@ def s_table_merge_upsert(spark, sf_dir):
             F.sum("o_orderkey").alias("key_sum"),
             F.sum("o_custkey").alias("cust_sum"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -1547,6 +1548,7 @@ def _cdf_orders_base(spark, sf_dir):
       FROM ins_rows)
     ORDER BY change_type
     """,
+    order_by=("change_type",),
 )
 def s_table_changes(spark, sf_dir):
     """S10e: CHANGE DATA FEED over the manifest-versioned table
@@ -1575,7 +1577,6 @@ def s_table_changes(spark, sf_dir):
             F.sum("o_custkey").alias("cust_sum"),
             F.countDistinct("o_orderkey").alias("n_keys"),
         )
-        .orderBy("change_type")
     )
 
 
@@ -1586,6 +1587,7 @@ def s_table_changes(spark, sf_dir):
     FROM orders WHERE o_orderkey % 997 = 0
     ORDER BY o_orderkey
     """,
+    order_by=("o_orderkey",),
 )
 def s_table_point_lookup(spark, sf_dir):
     """S10f: bloom-pruned POINT LOOKUP (sources/manifest_table.py::
@@ -1617,7 +1619,6 @@ def s_table_point_lookup(spark, sf_dir):
     return (
         lookup_rows(spark, base, keys)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-        .orderBy("o_orderkey")
     )
 
 
@@ -1687,6 +1688,7 @@ def _evolved_orders_base(spark, sf_dir):
                 AS BIGINT) AS price_cents
     FROM allr GROUP BY o_channel ORDER BY o_channel
     """,
+    order_by=("o_channel",),
 )
 def s_table_schema_evolution(spark, sf_dir):
     """S10g: SCHEMA EVOLUTION on the manifest table
@@ -1720,7 +1722,6 @@ def s_table_schema_evolution(spark, sf_dir):
             ).cast("long").alias("n_priced"),
             F.sum(money_units("o_totalprice")).alias("price_cents"),
         )
-        .orderBy("o_channel")
     )
 
 
@@ -1826,6 +1827,7 @@ def s_table_zorder_scan(spark, sf_dir):
       SELECT 3, 'erase', (SELECT COUNT(*) FROM final))
     ORDER BY version
     """,
+    order_by=("version",),
 )
 def s_table_history(spark, sf_dir):
     """S10i: DESCRIBE HISTORY — the table's audit trail
@@ -1847,7 +1849,6 @@ def s_table_history(spark, sf_dir):
     return (
         table_history(spark, base)
         .select("version", "op", "n_rows")
-        .orderBy("version")
     )
 
 
@@ -1869,6 +1870,7 @@ def s_table_history(spark, sf_dir):
                 AS BIGINT) AS price_cents
     FROM waves GROUP BY o_channel ORDER BY o_channel
     """,
+    order_by=("o_channel",),
 )
 def s_table_connector_read(spark, sf_dir):
     """S10j: the SPARK-NATIVE READ SURFACE for the manifest table — a
@@ -1904,7 +1906,6 @@ def s_table_connector_read(spark, sf_dir):
             F.sum("o_orderkey").alias("key_sum"),
             F.sum(money_units("o_totalprice")).alias("price_cents"),
         )
-        .orderBy("o_channel")
     )
 
 
@@ -1967,6 +1968,7 @@ def _native_write_base(spark, sf_dir):
                 AS BIGINT) AS price_cents
     FROM w GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
+    order_by=("o_orderpriority",),
 )
 def s_table_connector_write(spark, sf_dir):
     """S10k: the SPARK-NATIVE WRITE SURFACE for the manifest table —
@@ -1996,5 +1998,4 @@ def s_table_connector_write(spark, sf_dir):
             F.sum("o_custkey").alias("cust_sum"),
             F.sum(money_units("o_totalprice")).alias("price_cents"),
         )
-        .orderBy("o_orderpriority")
     )

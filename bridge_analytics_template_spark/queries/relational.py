@@ -107,6 +107,7 @@ def flagship(spark, sf_dir):
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
     """,
+    order_by=("l_returnflag", "l_linestatus"),
 )
 def pricing_summary(spark, sf_dir):
     l = load(spark, sf_dir, "lineitem")
@@ -123,7 +124,6 @@ def pricing_summary(spark, sf_dir):
             uavg(rate_units("l_discount"), 2, "avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -141,6 +141,7 @@ def pricing_summary(spark, sf_dir):
       AND o_totalprice > 50000
     ORDER BY o_orderkey
     """,
+    order_by=("o_orderkey",),
 )
 def filter_conjunctive(spark, sf_dir):
     """P1/P8: conjunctive equality + range + IN-list predicate, pushed to scan."""
@@ -153,7 +154,6 @@ def filter_conjunctive(spark, sf_dir):
             & (F.col("o_totalprice") > 50000)
         )
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
-        .orderBy("o_orderkey")
     )
 
 
@@ -165,6 +165,7 @@ def filter_conjunctive(spark, sf_dir):
     WHERE p_name LIKE '%widget%' AND regexp_matches(p_type, '^(ECONOMY|STANDARD)')
     ORDER BY p_partkey
     """,
+    order_by=("p_partkey",),
 )
 def filter_like_regex(spark, sf_dir):
     """P10: LIKE and regex predicates."""
@@ -172,7 +173,6 @@ def filter_like_regex(spark, sf_dir):
     return (
         p.filter(F.col("p_name").like("%widget%") & F.col("p_type").rlike("^(ECONOMY|STANDARD)"))
         .select("p_partkey", "p_name", "p_type")
-        .orderBy("p_partkey")
     )
 
 
@@ -181,11 +181,12 @@ def filter_like_regex(spark, sf_dir):
     sql="""
     SELECT c_custkey, c_mktsegment, c_name FROM customer ORDER BY c_custkey
     """,
+    order_by=("c_custkey",),
 )
 def projection_order(spark, sf_dir):
     """P6/O1: explicit ordered projection (the engine analog of the
     reference's orderedColumnIds — copy_from_template.py:219-223)."""
-    return load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment", "c_name").orderBy("c_custkey")
+    return load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment", "c_name")
 
 
 @query(
@@ -199,6 +200,7 @@ def projection_order(spark, sf_dir):
     FROM orders
     ORDER BY o_orderkey
     """,
+    order_by=("o_orderkey",),
 )
 def case_rewrite(spark, sf_dir):
     """P7/F8: per-column conditional rewrite — the CASE shape of the
@@ -211,7 +213,7 @@ def case_rewrite(spark, sf_dir):
         .otherwise("cold")
         .alias("heat"),
         F.when(F.col("o_totalprice") > 200000, "big").otherwise("small").alias("bucket"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @query(
@@ -223,6 +225,7 @@ def case_rewrite(spark, sf_dir):
     FROM customer
     ORDER BY c_custkey
     """,
+    order_by=("c_custkey",),
 )
 def null_handling(spark, sf_dir):
     """P9: NULLIF / COALESCE / IS NULL over sparse-column semantics
@@ -232,7 +235,7 @@ def null_handling(spark, sf_dir):
         "c_custkey",
         F.coalesce(F.nullif(F.col("c_mktsegment"), F.lit("FURNITURE")), F.lit("OTHER")).alias("segment"),
         F.nullif(F.col("c_acctbal"), F.lit(0.0)).isNull().alias("zero_bal"),
-    ).orderBy("c_custkey")
+    )
 
 
 # --- set operations (U1-U3) ------------------------------------------------
@@ -246,6 +249,7 @@ def null_handling(spark, sf_dir):
     SELECT r_regionkey AS member_key, r_name AS member_name, 'region' AS kind FROM region
     ORDER BY kind, member_key
     """,
+    order_by=("kind", "member_key"),
 )
 def union_by_name(spark, sf_dir):
     """U1: scope-union semantics (copy_from_template.py:234-242) — append
@@ -260,7 +264,7 @@ def union_by_name(spark, sf_dir):
         F.col("r_name").alias("member_name"),
         F.lit("region").alias("kind"),
     )
-    return nation.unionByName(region).orderBy("kind", "member_key")
+    return nation.unionByName(region)
 
 
 @query(
@@ -271,12 +275,13 @@ def union_by_name(spark, sf_dir):
     SELECT s_nationkey AS nationkey FROM supplier
     ORDER BY nationkey
     """,
+    order_by=("nationkey",),
 )
 def intersect_except(spark, sf_dir):
     """U2: INTERSECT — nations that have both customers and suppliers."""
     c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.intersect(s).orderBy("nationkey")
+    return c.intersect(s)
 
 
 @query(
@@ -287,6 +292,7 @@ def intersect_except(spark, sf_dir):
     SELECT l_orderkey AS okey FROM lineitem WHERE l_returnflag = 'R'
     ORDER BY okey
     """,
+    order_by=("okey",),
 )
 def except_distinct(spark, sf_dir):
     """U2: EXCEPT DISTINCT — finished orders with no returned lineitem
@@ -297,7 +303,7 @@ def except_distinct(spark, sf_dir):
     l = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R").select(
         F.col("l_orderkey").alias("okey")
     )
-    return o.subtract(l).orderBy("okey")
+    return o.subtract(l)
 
 
 @query(
@@ -306,13 +312,12 @@ def except_distinct(spark, sf_dir):
     SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
     ORDER BY l_returnflag, l_linestatus
     """,
+    order_by=("l_returnflag", "l_linestatus"),
 )
 def distinct_rows(spark, sf_dir):
     """U3/A3: exact distinct (map-side partial dedup then shuffle on the
     pair — scales as a hash aggregate)."""
-    return load(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct().orderBy(
-        "l_returnflag", "l_linestatus"
-    )
+    return load(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
 
 
 @query(

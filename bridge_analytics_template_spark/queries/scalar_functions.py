@@ -33,6 +33,7 @@ from .registry import query
            trim(concat('  ', c_mktsegment, ' ')) AS seg_trim
     FROM customer ORDER BY c_custkey
     """,
+    order_by=("c_custkey",),
 )
 def f_string(spark, sf_dir):
     """F1: string family — the reference's 'syn'-prefix strip
@@ -48,7 +49,7 @@ def f_string(spark, sf_dir):
         F.substring("c_name", 1, 8).alias("name_prefix"),
         F.concat_ws("|", F.col("c_mktsegment"), F.col("c_nationkey").cast("string")).alias("seg_nation"),
         F.trim(F.concat(F.lit("  "), F.col("c_mktsegment"), F.lit(" "))).alias("seg_trim"),
-    ).orderBy("c_custkey")
+    )
 
 
 @query(
@@ -60,6 +61,7 @@ def f_string(spark, sf_dir):
            CAST(CAST(o_totalprice > 100000 AS VARCHAR) AS BOOLEAN) AS big_flag
     FROM orders ORDER BY o_orderkey
     """,
+    order_by=("o_orderkey",),
 )
 def f_casts_roundtrip(spark, sf_dir):
     """F2: the reference's STRING→DATE/BOOLEAN/INTEGER coercion family
@@ -71,7 +73,7 @@ def f_casts_roundtrip(spark, sf_dir):
         F.col("o_orderkey").cast("string").cast("long").alias("key_roundtrip"),
         F.col("o_orderdate").cast("string").cast("timestamp").alias("date_roundtrip"),
         (F.col("o_totalprice") > 100000).cast("string").cast("boolean").alias("big_flag"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @query(
@@ -86,6 +88,7 @@ def f_casts_roundtrip(spark, sf_dir):
            CAST(epoch(l_shipdate) AS BIGINT) AS ship_epoch
     FROM lineitem ORDER BY l_orderkey, l_linenumber
     """,
+    order_by=("l_orderkey", "l_linenumber"),
 )
 def f_datetime(spark, sf_dir):
     """F3: date/time extraction and bucketing over the fixture instants (the
@@ -100,7 +103,7 @@ def f_datetime(spark, sf_dir):
         F.date_trunc("quarter", "l_shipdate").alias("ship_quarter"),
         (F.col("l_shipdate") + F.expr("INTERVAL 30 DAYS")).alias("due_date"),
         F.unix_timestamp("l_shipdate").alias("ship_epoch"),
-    ).orderBy("l_orderkey", "l_linenumber")
+    )
 
 
 @query(
@@ -114,6 +117,7 @@ def f_datetime(spark, sf_dir):
            list_contains(string_split_regex(trim(text), '\\s+'), 'spark') AS has_spark
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def f_array(spark, sf_dir):
     """F4: array family — contains/size/distinct/sort/slice, the scopeIds
@@ -128,7 +132,7 @@ def f_array(spark, sf_dir):
         F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
         F.array_join(F.slice(F.array_sort(F.array_distinct(toks)), 1, 3), "|").alias("first_tokens"),
         F.array_contains(toks, "spark").alias("has_spark"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -139,6 +143,7 @@ def f_array(spark, sf_dir):
            (CAST(json_extract_string(props, '$.k') AS BIGINT) % 10 = 0) AS k_round
     FROM events ORDER BY event_id
     """,
+    order_by=("event_id",),
 )
 def f_json(spark, sf_dir):
     """F5: JSON blob parsing — the clientInfo/appInfo 512-char JSON columns
@@ -150,7 +155,7 @@ def f_json(spark, sf_dir):
         "event_id",
         parsed["k"].alias("k_value"),
         ((parsed["k"] % 10) == 0).alias("k_round"),
-    ).orderBy("event_id")
+    )
 
 
 @query(
@@ -162,6 +167,7 @@ def f_json(spark, sf_dir):
            value AS v0
     FROM events ORDER BY event_id
     """,
+    order_by=("event_id",),
 )
 def f_variant(spark, sf_dir):
     """F5b: semi-structured VARIANT column (Spark 4) — ingest the JSON blob
@@ -188,7 +194,7 @@ def f_variant(spark, sf_dir):
         F.variant_get(v, "$.k", "long").alias("k_long"),
         F.variant_get(nested, "$.t", "string").alias("t"),
         F.variant_get(nested, "$.vals[0]", "double").alias("v0"),
-    ).orderBy("event_id")
+    )
 
 
 @query(
@@ -199,6 +205,7 @@ def f_variant(spark, sf_dir):
            lang AS lang_out, source AS source_out, 2 AS n_keys
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def f_map(spark, sf_dir):
     """F6: map family — annotation key→value bags pre-promotion
@@ -217,7 +224,7 @@ def f_map(spark, sf_dir):
         F.element_at(m, "lang").alias("lang_out"),
         F.element_at(m, "source").alias("source_out"),
         F.size(F.map_keys(m)).alias("n_keys"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -232,6 +239,7 @@ def f_map(spark, sf_dir):
            CAST(l_orderkey % 97 AS BIGINT) AS key_mod
     FROM lineitem ORDER BY l_orderkey, l_linenumber
     """,
+    order_by=("l_orderkey", "l_linenumber"),
 )
 def f_math(spark, sf_dir):
     """F7: math family restricted to IEEE-exact ops (see module docstring).
@@ -248,7 +256,7 @@ def f_math(spark, sf_dir):
         F.sqrt("l_extendedprice").alias("price_sqrt"),
         (F.col("l_discount") * F.col("l_discount")).alias("disc_sq"),
         (F.col("l_orderkey") % 97).alias("key_mod"),
-    ).orderBy("l_orderkey", "l_linenumber")
+    )
 
 
 @query(
@@ -261,6 +269,7 @@ def f_math(spark, sf_dir):
            CASE WHEN l_quantity >= 25 THEN 'bulk' ELSE 'small' END AS qty_class
     FROM lineitem ORDER BY l_orderkey, l_linenumber
     """,
+    order_by=("l_orderkey", "l_linenumber"),
 )
 def f_conditional(spark, sf_dir):
     """F8: conditional family — when/otherwise, coalesce/nullif,
@@ -273,7 +282,7 @@ def f_conditional(spark, sf_dir):
         F.least("l_discount", "l_tax").alias("min_rate"),
         F.coalesce(F.nullif(F.col("l_returnflag"), F.lit("N")), F.lit("NONE")).alias("flag_or_none"),
         F.when(F.col("l_quantity") >= 25, "bulk").otherwise("small").alias("qty_class"),
-    ).orderBy("l_orderkey", "l_linenumber")
+    )
 
 
 @query(
@@ -284,6 +293,7 @@ def f_conditional(spark, sf_dir):
            sha256(text) AS text_sha256
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def f_hash(spark, sf_dir):
     """F9: content hashing for dedup identity (the basis of L1)."""
@@ -292,13 +302,13 @@ def f_hash(spark, sf_dir):
         "doc_id",
         F.md5("text").alias("text_md5"),
         F.sha2("text", 256).alias("text_sha256"),
-    ).orderBy("doc_id")
+    )
 
 
 from ..oracles.scalars import xxhash_oracle
 
 
-@query("f_hash_xxhash", sql=xxhash_oracle)
+@query("f_hash_xxhash", sql=xxhash_oracle, order_by=("doc_id",))
 def f_hash_xxhash(spark, sf_dir):
     """F9: xxhash64 + murmur3 hashing — the cheap JVM-side hashes the
     MinHash/SimHash band ops and hash-rank seeding build on. ORACLED (r10,
@@ -313,7 +323,7 @@ def f_hash_xxhash(spark, sf_dir):
         "doc_id",
         F.xxhash64("text").alias("text_xx64"),
         F.hash("text").alias("text_hash32"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -327,6 +337,7 @@ def f_hash_xxhash(spark, sf_dir):
            strpos(c_name, '#') AS hash_pos
     FROM customer ORDER BY c_custkey
     """,
+    order_by=("c_custkey",),
 )
 def f_regexp(spark, sf_dir):
     """F1b: modern regexp family — regexp_count / regexp_extract_all /
@@ -342,7 +353,7 @@ def f_regexp(spark, sf_dir):
         F.split_part("c_name", F.lit("#"), F.lit(2)).alias("name_num"),
         F.regexp_like("c_mktsegment", F.lit("^[A-Z]+$")).cast("int").alias("seg_alpha"),
         F.instr("c_name", "#").alias("hash_pos"),
-    ).orderBy("c_custkey")
+    )
 
 
 @query(
@@ -351,6 +362,7 @@ def f_regexp(spark, sf_dir):
     SELECT event_id, event_type AS t, value AS v, user_id AS uid
     FROM events ORDER BY event_id
     """,
+    order_by=("event_id",),
 )
 def f_xml(spark, sf_dir):
     """F5c: XML ingest (Spark 4 to_xml/from_xml) — typed columns round-trip
@@ -372,7 +384,7 @@ def f_xml(spark, sf_dir):
         parsed.getField("t").alias("t"),
         parsed.getField("v").alias("v"),
         parsed.getField("uid").alias("uid"),
-    ).orderBy("event_id")
+    )
 
 
 @query(
@@ -384,6 +396,7 @@ def f_xml(spark, sf_dir):
            'events.example.com' AS host
     FROM events ORDER BY event_id
     """,
+    order_by=("event_id",),
 )
 def f_url(spark, sf_dir):
     """F1c: URL functions — build a URL from columns (url_encode), then
@@ -405,7 +418,7 @@ def f_url(spark, sf_dir):
         ).alias("path_seg"),
         F.parse_url(url, F.lit("QUERY"), F.lit("uid")).alias("uid_param"),
         F.parse_url(url, F.lit("HOST")).alias("host"),
-    ).orderBy("event_id")
+    )
 
 
 @query(
@@ -423,6 +436,7 @@ def f_url(spark, sf_dir):
     FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
     ORDER BY vec_id
     """,
+    order_by=("vec_id",),
 )
 def f_vector(spark, sf_dir):
     """F4b: vector arithmetic over embedding arrays — element access,
@@ -446,7 +460,7 @@ def f_vector(spark, sf_dir):
         F.sqrt(sq).alias("l2"),
         F.array_max(v).alias("max_elem"),
         F.array_min(v).alias("min_elem"),
-    ).orderBy("vec_id")
+    )
 
 
 @query(
@@ -459,6 +473,7 @@ def f_vector(spark, sf_dir):
                 THEN levenshtein(p_brand, p_type) ELSE -1 END AS lev_capped
     FROM part ORDER BY p_partkey
     """,
+    order_by=("p_partkey",),
 )
 def f_edit_distance(spark, sf_dir):
     """String edit distance (Levenshtein) — the fuzzy-match primitive for
@@ -474,7 +489,7 @@ def f_edit_distance(spark, sf_dir):
         F.levenshtein("p_name", "p_type").alias("lev"),
         F.levenshtein("p_brand", "p_type").alias("lev_short"),
         F.levenshtein("p_brand", "p_type", 5).alias("lev_capped"),
-    ).orderBy("p_partkey")
+    )
 
 
 @query(
@@ -487,6 +502,7 @@ def f_edit_distance(spark, sf_dir):
            lang AS parsed_lang
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def f_map_transform(spark, sf_dir):
     """F6 extension: higher-order map functions — transform_values,
@@ -510,7 +526,7 @@ def f_map_transform(spark, sf_dir):
         F.size(big_only).alias("n_big"),
         F.element_at(zipped, "chars").alias("zipped_sum"),
         F.element_at(parsed, "lang").alias("parsed_lang"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -520,6 +536,7 @@ def f_map_transform(spark, sf_dir):
            COUNT(*) AS n
     FROM orders GROUP BY 1 ORDER BY 1
     """,
+    order_by=("priority",),
 )
 def f_collation(spark, sf_dir):
     """Collation-aware grouping (Spark 4 `collate`): group a mixed-case
@@ -537,7 +554,6 @@ def f_collation(spark, sf_dir):
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.lower(F.col("k")).alias("priority"), "n")
-        .orderBy("priority")
     )
 
 
@@ -551,6 +567,7 @@ def f_collation(spark, sf_dir):
            CAST(date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS days_since_95
     FROM orders WHERE o_orderkey < 200 ORDER BY o_orderkey
     """,
+    order_by=("o_orderkey",),
 )
 def f_interval(spark, sf_dir):
     """Interval arithmetic family: timestamp +/- calendar intervals
@@ -567,4 +584,4 @@ def f_interval(spark, sf_dir):
         F.datediff(F.to_date("o_orderdate"), F.lit("1995-01-01").cast("date"))
         .cast("long")
         .alias("days_since_95"),
-    ).orderBy("o_orderkey")
+    )

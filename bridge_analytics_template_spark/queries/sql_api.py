@@ -26,6 +26,7 @@ from .registry import query
     JOIN nation n ON c.c_nationkey = n.n_nationkey
     GROUP BY 1 ORDER BY 1
     """,
+    order_by=("nation",),
 )
 def sql_api_revenue(spark, sf_dir):
     """The SQL text entry point: register the catalog as temp views, run
@@ -41,7 +42,7 @@ def sql_api_revenue(spark, sf_dir):
         JOIN orders o ON l.l_orderkey = o.o_orderkey
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN nation n ON c.c_nationkey = n.n_nationkey
-        GROUP BY 1 ORDER BY 1
+        GROUP BY 1
         """
     )
 
@@ -55,6 +56,7 @@ def sql_api_revenue(spark, sf_dir):
                                      / COUNT(*) FROM orders)
     ORDER BY o_orderkey
     """,
+    order_by=("o_orderkey",),
 )
 def agg_scalar_subquery(spark, sf_dir):
     """Scalar subquery: orders above 2× the mean order value (decimal-exact
@@ -66,7 +68,6 @@ def agg_scalar_subquery(spark, sf_dir):
         FROM orders
         WHERE o_totalprice > 2 * (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE)
                                          / COUNT(*) FROM orders)
-        ORDER BY o_orderkey
         """
     )
 
@@ -80,6 +81,7 @@ def agg_scalar_subquery(spark, sf_dir):
              AS n_orders_30d
     FROM orders ORDER BY o_orderkey
     """,
+    order_by=("o_orderkey",),
 )
 def w_range_frame(spark, sf_dir):
     """W3 variant: RANGE frame over a time interval — trailing 30-day order
@@ -91,7 +93,7 @@ def w_range_frame(spark, sf_dir):
                COUNT(*) OVER (PARTITION BY o_custkey ORDER BY o_orderdate
                               RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW)
                  AS n_orders_30d
-        FROM orders ORDER BY o_orderkey
+        FROM orders
         """
     )
 
@@ -105,6 +107,7 @@ def w_range_frame(spark, sf_dir):
       SELECT s_suppkey, 'nationkey' AS metric, CAST(s_nationkey AS DOUBLE) AS val FROM supplier)
     ORDER BY s_suppkey, metric
     """,
+    order_by=("s_suppkey", "metric"),
 )
 def unpivot_stack(spark, sf_dir):
     """Unpivot (melt): wide columns to (metric, value) rows via the native
@@ -115,7 +118,6 @@ def unpivot_stack(spark, sf_dir):
     return (
         s.unpivot("s_suppkey", ["s_acctbal", "s_nationkey"], "metric", "val")
         .withColumn("metric", F.regexp_replace("metric", "^s_", ""))
-        .orderBy("s_suppkey", "metric")
     )
 
 
@@ -130,6 +132,7 @@ def unpivot_stack(spark, sf_dir):
     SELECT -1 AS c_custkey, 0.0 AS c_acctbal, 'INSERTED' AS c_mktsegment
     ORDER BY c_custkey
     """,
+    order_by=("c_custkey",),
 )
 def merge_upsert_cdc(spark, sf_dir):
     """MERGE INTO emulation (operators/merge.py): a CDC batch updates every
@@ -147,13 +150,13 @@ def merge_upsert_cdc(spark, sf_dir):
     inserts = spark.createDataFrame(
         [(-1, 0.0, "INSERTED")], "c_custkey long, c_acctbal double, c_mktsegment string"
     )
-    return merge_upsert(target, updates.unionByName(inserts), ["c_custkey"]).orderBy("c_custkey")
+    return merge_upsert(target, updates.unionByName(inserts), ["c_custkey"])
 
 
 from ..oracles.embeddings import ivf_oracle
 
 
-@query("llm_knn_ivf", sql=ivf_oracle)
+@query("llm_knn_ivf", sql=ivf_oracle, order_by=("query_id", "rank"))
 def llm_knn_ivf(spark, sf_dir):
     """L3c: IVF approximate top-k — coarse-quantize to 16 deterministic
     centroids, probe the 4 nearest lists per query (planted-neighbor
@@ -163,7 +166,7 @@ def llm_knn_ivf(spark, sf_dir):
 
     e = _load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") % 50 == 0)
-    return ivf_knn(q, e, k=5).select("query_id", "neighbor_id", "rank").orderBy("query_id", "rank")
+    return ivf_knn(q, e, k=5).select("query_id", "neighbor_id", "rank")
 
 
 @query(
@@ -171,6 +174,7 @@ def llm_knn_ivf(spark, sf_dir):
     sql="""
     SELECT user_id, COUNT(*) AS n_events FROM events GROUP BY 1 ORDER BY 1
     """,
+    order_by=("user_id",),
 )
 def t_stream_stateful(spark, sf_dir):
     """T-custom (ORACLED — upgraded r7 from rows-only): applyInPandasWithState
@@ -183,7 +187,7 @@ def t_stream_stateful(spark, sf_dir):
     import uuid
 
     from ..streaming.stateful import running_user_totals
-    from ..streaming.windows import stream_events
+    from ..streaming.windows import raise_if_read_nothing, stream_events
 
     out = running_user_totals(stream_events(spark, sf_dir))
     name = f"state_{uuid.uuid4().hex[:8]}"
@@ -192,8 +196,9 @@ def t_stream_stateful(spark, sf_dir):
         sq.processAllAvailable()
     finally:
         sq.stop()
+    raise_if_read_nothing(sq)
     final = spark.table(name).groupBy("user_id").agg(F.max("n_events").alias("n_events"))
-    return final.orderBy("user_id")
+    return final
 
 
 @query(
@@ -207,6 +212,7 @@ def t_stream_stateful(spark, sf_dir):
            TRUE AS p50_ok, TRUE AS p90_ok, TRUE AS p99_ok
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
+    order_by=("l_returnflag",),
 )
 def agg_approx_percentile(spark, sf_dir):
     """A8 scale path: approximate percentiles (GK sketch) — the 100 TB
@@ -250,7 +256,7 @@ def agg_approx_percentile(spark, sf_dir):
         F.element_at("_pc", 1).between(F.col("_d50lo"), F.col("_d50hi")).alias("p50_ok"),
         F.element_at("_pc", 2).between(F.col("_d90lo"), F.col("_d90hi")).alias("p90_ok"),
         F.element_at("_pc", 3).between(F.col("_d99lo"), F.col("_d99hi")).alias("p99_ok"),
-    ).orderBy("l_returnflag")
+    )
 
 
 @query(
@@ -272,6 +278,7 @@ def agg_approx_percentile(spark, sf_dir):
     FROM s
     ORDER BY o_orderkey, o_orderstatus
     """,
+    order_by=("o_orderkey", "o_orderstatus"),
 )
 def merge_scd2_history(spark, sf_dir):
     """SCD2 close-and-insert (operators/merge.py) over a derived CDC batch:
@@ -299,7 +306,7 @@ def merge_scd2_history(spark, sf_dir):
         )
     )
     out = scd2_close_and_insert(target, source, ["o_orderkey"], "o_orderdate")
-    return out.orderBy("o_orderkey", "o_orderstatus")
+    return out
 
 
 @query(
@@ -310,6 +317,7 @@ def merge_scd2_history(spark, sf_dir):
                     * (1 - CAST(l_discount AS DECIMAL(3,2)))) AS DOUBLE) AS revenue
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
+    order_by=("l_returnflag",),
 )
 def sql_udf_revenue(spark, sf_dir):
     """SQL-language UDF (Spark 4 CREATE FUNCTION ... RETURN expr): the
@@ -328,7 +336,7 @@ def sql_udf_revenue(spark, sf_dir):
         SELECT l_returnflag,
                CAST(SUM(disc_rev(CAST(l_extendedprice AS DECIMAL(12,2)),
                                  CAST(l_discount AS DECIMAL(3,2)))) AS DOUBLE) AS revenue
-        FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+        FROM lineitem GROUP BY l_returnflag
         """
     )
 
@@ -341,6 +349,7 @@ def sql_udf_revenue(spark, sf_dir):
     WHERE o_totalprice > 150000 AND o_orderstatus = 'O'
     GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
+    order_by=("o_orderpriority",),
 )
 def sql_parameterized(spark, sf_dir):
     """Parameterized spark.sql (named-arg binding, no string interpolation
@@ -352,7 +361,7 @@ def sql_parameterized(spark, sf_dir):
         SELECT o_orderpriority, COUNT(*) AS n
         FROM orders
         WHERE o_totalprice > :min_price AND o_orderstatus = :status
-        GROUP BY o_orderpriority ORDER BY o_orderpriority
+        GROUP BY o_orderpriority
         """,
         args={"min_price": 150000, "status": "O"},
     )
@@ -432,6 +441,7 @@ def sql_pipe_revenue(spark, sf_dir):
              ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
     ORDER BY custkey, orderkey
     """,
+    order_by=("custkey", "orderkey"),
 )
 def join_lateral_topn(spark, sf_dir):
     """LATERAL correlated subquery join (Spark 3.2+): top-2 orders per
@@ -448,7 +458,6 @@ def join_lateral_topn(spark, sf_dir):
         LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
                  WHERE o.o_custkey = c.c_custkey
                  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-        ORDER BY custkey, orderkey
         """
     )
 
@@ -460,6 +469,7 @@ def join_lateral_topn(spark, sf_dir):
            CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100 AS BIGINT)) AS DOUBLE) / 100.0 AS sum_qty
     FROM lineitem GROUP BY ALL ORDER BY l_returnflag, l_linestatus
     """,
+    order_by=("l_returnflag", "l_linestatus"),
 )
 def sql_group_by_all(spark, sf_dir):
     """GROUP BY ALL (infer grouping keys from the non-aggregate select
@@ -469,7 +479,7 @@ def sql_group_by_all(spark, sf_dir):
         """
         SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
                CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100 AS BIGINT)) AS DOUBLE) / 100.0 AS sum_qty
-        FROM lineitem GROUP BY ALL ORDER BY l_returnflag, l_linestatus
+        FROM lineitem GROUP BY ALL
         """
     )
 
@@ -481,6 +491,7 @@ def sql_group_by_all(spark, sf_dir):
     FROM region r JOIN nation n ON n.n_regionkey = r.r_regionkey
     GROUP BY r_name ORDER BY r_name
     """,
+    order_by=("name",),
 )
 def sql_identifier_binding(spark, sf_dir):
     """IDENTIFIER(:param) clause — table names bound as parameters, not
@@ -494,7 +505,7 @@ def sql_identifier_binding(spark, sf_dir):
         """
         SELECT r_name AS name, COUNT(*) AS n_nations
         FROM IDENTIFIER(:dim) r JOIN IDENTIFIER(:fact) n ON n.n_regionkey = r.r_regionkey
-        GROUP BY r_name ORDER BY r_name
+        GROUP BY r_name
         """,
         args={"dim": "region", "fact": "nation"},
     )
@@ -509,6 +520,7 @@ def sql_identifier_binding(spark, sf_dir):
       ON size, retailprice INTO NAME metric VALUE val)
     ORDER BY p_partkey, metric
     """,
+    order_by=("p_partkey", "metric"),
 )
 def sql_unpivot_clause(spark, sf_dir):
     """Native SQL UNPIVOT clause (wide→long without stack()): Spark's
@@ -522,7 +534,6 @@ def sql_unpivot_clause(spark, sf_dir):
         SELECT p_partkey, metric, val FROM (
           SELECT p_partkey, CAST(p_size AS DOUBLE) AS size, p_retailprice AS retailprice FROM part)
         UNPIVOT (val FOR metric IN (size, retailprice))
-        ORDER BY p_partkey, metric
         """
     )
 
@@ -585,6 +596,7 @@ def sql_scripting_share(spark, sf_dir):
     WHERE CAST(floor(l_extendedprice * 100) AS BIGINT) >= 100000
     GROUP BY 1 ORDER BY 1
     """,
+    order_by=("l_returnflag",),
 )
 def sql_user_functions(spark, sf_dir):
     """SQL user-defined functions (Spark 4 `CREATE FUNCTION ... RETURN`):
@@ -611,6 +623,6 @@ def sql_user_functions(spark, sf_dir):
                COUNT(*) AS n_rows,
                SUM(margin_cents(l_extendedprice, l_discount)) AS margin_cents
         FROM priced_lineitem(100000)
-        GROUP BY 1 ORDER BY 1
+        GROUP BY 1
         """
     )

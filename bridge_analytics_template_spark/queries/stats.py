@@ -50,7 +50,7 @@ FROM m ORDER BY l_returnflag
 """
 
 
-@query("agg_regr_exact", sql=_REGR_SQL)
+@query("agg_regr_exact", sql=_REGR_SQL, order_by=("l_returnflag",))
 def agg_regr_exact(spark, sf_dir):
     """Least-squares slope and r² of extendedprice ~ quantity per return
     flag, from exact integer co-moments (one hash aggregate, one shuffle)."""
@@ -75,7 +75,7 @@ def agg_regr_exact(spark, sf_dir):
         "n",
         (num / denx).alias("slope"),
         ((num * num) / (denx * deny)).alias("r2"),
-    ).orderBy("l_returnflag")
+    )
 
 
 # --- Robust outliers: median absolute deviation ----------------------------
@@ -105,7 +105,7 @@ GROUP BY d.event_type ORDER BY d.event_type
 """
 
 
-@query("events_mad_outliers", sql=_MAD_SQL)
+@query("events_mad_outliers", sql=_MAD_SQL, order_by=("event_type",))
 def events_mad_outliers(spark, sf_dir):
     """Robust per-type outlier counts: |x - median| > 3σ-equivalent
     (4.4478 ≈ 3 × 1.4826) of the median absolute deviation. Two exact
@@ -126,7 +126,6 @@ def events_mad_outliers(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             F.count(F.when(F.col("adev") > (F.lit(4.4478) * F.col("mad")), 1)).alias("n_outliers"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -139,6 +138,7 @@ def events_mad_outliers(spark, sf_dir):
     SELECT l_returnflag, COUNT(DISTINCT l_orderkey) AS n_orders
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
+    order_by=("l_returnflag",),
 )
 def agg_bitmap_distinct(spark, sf_dir):
     """Exact distinct via RoaringBitmap-style fixed bitmaps
@@ -161,7 +161,6 @@ def agg_bitmap_distinct(spark, sf_dir):
     return (
         per_bucket.groupBy("l_returnflag")
         .agg(F.sum(F.expr("bitmap_count(bm)")).alias("n_orders"))
-        .orderBy("l_returnflag")
     )
 
 
@@ -177,6 +176,7 @@ def agg_bitmap_distinct(spark, sf_dir):
           <= CASE l_returnflag WHEN 'A' THEN '19' WHEN 'N' THEN '05' ELSE '0c' END
     GROUP BY l_returnflag ORDER BY l_returnflag
     """,
+    order_by=("l_returnflag",),
 )
 def s_sample_stratified(spark, sf_dir):
     """Per-stratum hash sampling at different rates (~10% of A, ~2% of N,
@@ -197,7 +197,6 @@ def s_sample_stratified(spark, sf_dir):
         l.filter(F.substring(F.md5(key), 1, 2) <= threshold)
         .groupBy("l_returnflag")
         .agg(F.count(F.lit(1)).alias("n_sampled"))
-        .orderBy("l_returnflag")
     )
 
 
@@ -227,6 +226,7 @@ def s_sample_stratified(spark, sf_dir):
            COUNT(*) AS n
     FROM w GROUP BY bar_start, event_type ORDER BY bar_start, event_type
     """,
+    order_by=("bar_start", "event_type"),
 )
 def ts_ohlc_bars(spark, sf_dir):
     """Open-high-low-close downsampling into 10-minute bars per event type —
@@ -262,7 +262,6 @@ def ts_ohlc_bars(spark, sf_dir):
             (F.min("close_u").cast("double") / 100.0).alias("close"),
             F.count(F.lit(1)).alias("n"),
         )
-        .orderBy("bar_start", "event_type")
     )
 
 
@@ -280,6 +279,7 @@ def ts_ohlc_bars(spark, sf_dir):
              / (1000.0 * COUNT(*)) AS avg_norm_q
     FROM embeddings GROUP BY label ORDER BY label
     """,
+    order_by=("label",),
 )
 def profile_embeddings(spark, sf_dir):
     """Vector-column profiling for dataset cards: per-label count,
@@ -303,7 +303,6 @@ def profile_embeddings(spark, sf_dir):
             F.max(F.size("embedding")).alias("dim_max"),
             (F.sum(norm_q).cast("double") / (F.lit(1000.0) * F.count(F.lit(1)))).alias("avg_norm_q"),
         )
-        .orderBy("label")
     )
 
 
@@ -318,6 +317,7 @@ def profile_embeddings(spark, sf_dir):
            CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(12,2)) * 100 AS BIGINT)) AS DOUBLE) / 100.0 AS sum_qty
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
+    order_by=("l_returnflag",),
 )
 def agg_salted_skew(spark, sf_dir):
     """Two-phase salted aggregation (operators/skew.py) under the oracle:
@@ -342,7 +342,7 @@ def agg_salted_skew(spark, sf_dir):
         "l_returnflag",
         "n",
         (F.col("sq").cast("double") / 100.0).alias("sum_qty"),
-    ).orderBy("l_returnflag")
+    )
 
 
 @query(
@@ -352,6 +352,7 @@ def agg_salted_skew(spark, sf_dir):
     FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     GROUP BY 1 ORDER BY 1
     """,
+    order_by=("o_orderpriority",),
 )
 def join_salted_skew(spark, sf_dir):
     """Salted fact×dim equi-join (operators/skew.py): the fact side gets a
@@ -370,7 +371,6 @@ def join_salted_skew(spark, sf_dir):
     return (
         joined.groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -398,6 +398,7 @@ def join_salted_skew(spark, sf_dir):
            CAST(SUM(price_u) AS DOUBLE) / 100.0 AS total_price
     FROM merged GROUP BY o_orderstatus ORDER BY o_orderstatus
     """,
+    order_by=("o_orderstatus",),
 )
 def merge_cdc_deletes(spark, sf_dir):
     """CDC apply with deletes (operators/merge.py::merge_apply_cdc): a
@@ -428,7 +429,6 @@ def merge_cdc_deletes(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             (F.sum("price_u").cast("double") / 100.0).alias("total_price"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -482,6 +482,7 @@ def profile_fk_orphans(spark, sf_dir):
            list_reduce(xs, (acc, x) -> 0.5 * acc + 0.5 * x) AS ewma
     FROM arr ORDER BY user_id
     """,
+    order_by=("user_id",),
 )
 def ts_ewma(spark, sf_dir):
     """Per-user EWMA (α=0.5) — the recursive, order-sensitive aggregate
@@ -508,7 +509,7 @@ def ts_ewma(spark, sf_dir):
         F.element_at("xs", 1),
         lambda acc, x: F.lit(0.5) * acc + F.lit(0.5) * x,
     )
-    return gathered.select("user_id", "n", ewma.alias("ewma")).orderBy("user_id")
+    return gathered.select("user_id", "n", ewma.alias("ewma"))
 
 
 # --- Burst detection over window counts ------------------------------------
@@ -531,6 +532,7 @@ def ts_ewma(spark, sf_dir):
     FROM wc JOIN m ON wc.event_type = m.event_type
     GROUP BY wc.event_type, m.k ORDER BY wc.event_type
     """,
+    order_by=("event_type",),
 )
 def events_bursts(spark, sf_dir):
     """Burst detection: 10-minute windows whose event count exceeds
@@ -554,7 +556,6 @@ def events_bursts(spark, sf_dir):
         j.groupBy("event_type", F.col("k").alias("n_windows"))
         .agg(F.count(F.when(burst, 1)).alias("n_bursts"))
         .select("event_type", F.col("n_windows").cast("long").alias("n_windows"), "n_bursts")
-        .orderBy("event_type")
     )
 
 
@@ -577,6 +578,7 @@ def events_bursts(spark, sf_dir):
            CAST(MAX(gap_us) AS BIGINT) AS max_us
     FROM gaps GROUP BY event_type ORDER BY event_type
     """,
+    order_by=("event_type",),
 )
 def events_inter_arrival(spark, sf_dir):
     """Inter-arrival time distribution per event type — the arrival-rate
@@ -598,7 +600,6 @@ def events_inter_arrival(spark, sf_dir):
             F.percentile("gap_us", 0.9).alias("p90_us"),
             F.max("gap_us").alias("max_us"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -673,6 +674,7 @@ def q_nation_hhi(spark, sf_dir):
            CAST(SUM(vq) AS DOUBLE) / (COUNT(*) * 1048576.0) AS mean
     FROM flat GROUP BY dim ORDER BY dim
     """,
+    order_by=("dim",),
 )
 def emb_dim_stats(spark, sf_dir):
     """Per-DIMENSION embedding statistics — the feature-scaling table a
@@ -698,7 +700,6 @@ def emb_dim_stats(spark, sf_dir):
             F.sum(F.col("vq") * F.col("vq")).alias("sumsq_q"),
             (F.sum("vq").cast("double") / (F.count(F.lit(1)) * F.lit(1048576.0))).alias("mean"),
         )
-        .orderBy("dim")
     )
 
 
@@ -722,6 +723,7 @@ def emb_dim_stats(spark, sf_dir):
     WHERE f.vec_id % 25 = 0
     ORDER BY f.vec_id, dim
     """,
+    order_by=("vec_id", "dim"),
 )
 def emb_standardize(spark, sf_dir):
     """Feature standardization: z-score each embedding dimension against
@@ -755,7 +757,6 @@ def emb_standardize(spark, sf_dir):
             F.col("dim").cast("int").alias("dim"),
             F.floor(((F.col("v") - mean) / std) * 1000).cast("long").alias("z_q"),
         )
-        .orderBy("vec_id", "dim")
     )
 
 
@@ -817,7 +818,7 @@ _DIVERSITY_SQL = """
 """
 
 
-@query("events_type_diversity", sql=_DIVERSITY_SQL)
+@query("events_type_diversity", sql=_DIVERSITY_SQL, order_by=("user_id",))
 def events_type_diversity(spark, sf_dir):
     """Per-user behavioral diversity as the Gini-Simpson index
     1 - sum(p_i^2) over the user's event-type distribution. Shannon entropy
@@ -846,7 +847,7 @@ def events_type_diversity(spark, sf_dir):
                 / (F.col("n_events").cast("double") * F.col("n_events").cast("double"))
             )
         ).alias("simpson_diversity"),
-    ).orderBy("user_id")
+    )
 
 
 # --- Lag-k autocorrelation (exact co-moments) -------------------------------
@@ -879,7 +880,7 @@ _ACF_SQL = """
 """
 
 
-@query("ts_autocorr", sql=_ACF_SQL)
+@query("ts_autocorr", sql=_ACF_SQL, order_by=("user_id",))
 def ts_autocorr(spark, sf_dir):
     """Per-user lag-1 autocorrelation of the event value series — the
     signal-vs-noise diagnostic a time-series pipeline runs before modeling.
@@ -920,7 +921,6 @@ def ts_autocorr(spark, sf_dir):
             & ((F.col("n") * F.col("syy")) - (F.col("sy") * F.col("sy")) > 0)
         )
         .select("user_id", "n", acf.alias("acf1"))
-        .orderBy("user_id")
     )
 
 
@@ -944,6 +944,7 @@ def ts_autocorr(spark, sf_dir):
               * (CAST(SUM(vj) AS DOUBLE) / COUNT(*))) / 1099511627776.0 AS cov
     FROM pairs GROUP BY dim_i, dim_j ORDER BY dim_i, dim_j
     """,
+    order_by=("dim_i", "dim_j"),
 )
 def emb_covariance(spark, sf_dir):
     """Exact embedding covariance matrix (upper triangle, 2080 rows at
@@ -959,13 +960,13 @@ def emb_covariance(spark, sf_dir):
     from ..operators.pca import covariance_moments
 
     e = load(spark, sf_dir, "embeddings")
-    return covariance_moments(e).orderBy("dim_i", "dim_j")
+    return covariance_moments(e)
 
 
 from ..oracles.embeddings import pca_project_oracle
 
 
-@query("emb_pca_project", sql=pca_project_oracle)
+@query("emb_pca_project", sql=pca_project_oracle, order_by=("vec_id", "component"))
 def emb_pca_project(spark, sf_dir):
     """PCA projection of a sample of embeddings onto the top-8 principal
     components (operators/pca.py::pca_project): exact distributed moments
@@ -992,7 +993,6 @@ def emb_pca_project(spark, sf_dir):
             "component",
             F.floor(F.col("score") * QSCALE).cast("long").alias("score_q"),
         )
-        .orderBy("vec_id", "component")
     )
 
 
@@ -1024,6 +1024,7 @@ def emb_pca_project(spark, sf_dir):
     WHERE w.rk = 1
     ORDER BY query_id
     """,
+    order_by=("query_id",),
 )
 def emb_knn_classify(spark, sf_dir):
     """k-NN majority-vote classification over the embedding space: predict
@@ -1056,7 +1057,6 @@ def emb_knn_classify(spark, sf_dir):
             F.col("actual").cast("int").alias("actual"),
             (F.col("nlabel") == F.col("actual")).alias("correct"),
         )
-        .orderBy("query_id")
     )
 
 
@@ -1087,6 +1087,7 @@ def emb_knn_classify(spark, sf_dir):
     FROM c WHERE rk = 1 AND n >= 8
     ORDER BY user_id
     """,
+    order_by=("user_id",),
 )
 def events_cusum(spark, sf_dir):
     """CUSUM changepoint detection per user series: the index where the
@@ -1130,7 +1131,6 @@ def events_cusum(spark, sf_dir):
                 "cusum_peak"
             ),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1163,6 +1163,7 @@ def events_cusum(spark, sf_dir):
              / (va * va / (n_a - 1) + vb * vb / (n_b - 1)) AS dof_welch
     FROM w ORDER BY event_type
     """,
+    order_by=("event_type",),
 )
 def events_ab_welch(spark, sf_dir):
     """Two-sample Welch test per event type (users hash-split into A/B by
@@ -1211,7 +1212,6 @@ def events_ab_welch(spark, sf_dir):
                 (va + vb) * (va + vb) / (va * va / (na - 1) + vb * vb / (nb - 1))
             ).alias("dof_welch"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1240,6 +1240,7 @@ def events_ab_welch(spark, sf_dir):
     FROM exp e LEFT JOIN obs o ON e.d = o.d CROSS JOIN tot t
     ORDER BY leading_digit
     """,
+    order_by=("leading_digit",),
 )
 def q_benford_audit(spark, sf_dir):
     """Benford first-digit audit of order totals — the fraud/synthetic-data
@@ -1274,7 +1275,6 @@ def q_benford_audit(spark, sf_dir):
             F.col("p_ppm").cast("long").alias("expected_ppm"),
             ((frac - p) * (frac - p) / p).alias("chi2_term"),
         )
-        .orderBy("leading_digit")
     )
 
 
@@ -1336,6 +1336,7 @@ def q_k_anonymity(spark, sf_dir):
     SELECT nation_gen, seg_gen, CAST(COUNT(*) AS BIGINT) AS k
     FROM rel GROUP BY 1, 2 ORDER BY 1, 2
     """,
+    order_by=("nation_gen", "seg_gen"),
 )
 def q_k_anonymize(spark, sf_dir):
     """The APPLY step of the k-anonymity audit: quasi-identifier groups
@@ -1354,7 +1355,6 @@ def q_k_anonymize(spark, sf_dir):
     return (
         rel.groupBy("nation_gen", "seg_gen")
         .agg(F.count(F.lit(1)).alias("k"))
-        .orderBy("nation_gen", "seg_gen")
     )
 
 
@@ -1377,6 +1377,7 @@ def q_k_anonymize(spark, sf_dir):
     SELECT user_id, n, l AS level, b AS trend, l + b AS forecast_1
     FROM step WHERE t = n ORDER BY user_id
     """,
+    order_by=("user_id",),
 )
 def ts_holt(spark, sf_dir):
     """Holt double-exponential smoothing per user series (α=0.3, β=0.1):
@@ -1420,7 +1421,7 @@ def ts_holt(spark, sf_dir):
         state["l"].alias("level"),
         state["b"].alias("trend"),
         (state["l"] + state["b"]).alias("forecast_1"),
-    ).orderBy("user_id")
+    )
 
 
 # --- Deterministic bootstrap confidence interval -----------------------------
@@ -1541,7 +1542,7 @@ FROM h ORDER BY lifetime_days
 """
 
 
-@query("events_survival_hazard", sql=_SURVIVAL_SQL)
+@query("events_survival_hazard", sql=_SURVIVAL_SQL, order_by=("lifetime_days",))
 def events_survival_hazard(spark, sf_dir):
     """Kaplan-Meier-style survival table (Nelson-Aalen cumulative hazard in
     exact integer ppm): per observed lifetime t (days between a user's first
@@ -1582,7 +1583,6 @@ def events_survival_hazard(spark, sf_dir):
     return (
         partitioned_cumsum(h, ["lifetime_days"], "hazard_ppm", cum_name="cum_hazard_ppm")
         .select("lifetime_days", "churned", "at_risk", "hazard_ppm", "cum_hazard_ppm")
-        .orderBy("lifetime_days")
     )
 
 
@@ -1680,7 +1680,7 @@ FROM cum GROUP BY event_type ORDER BY event_type
 """
 
 
-@query("events_ks_test", sql=_KS_SQL)
+@query("events_ks_test", sql=_KS_SQL, order_by=("event_type",))
 def events_ks_test(spark, sf_dir):
     """Two-sample Kolmogorov-Smirnov distance per event type between the
     parity-split A/B arms — the DISTRIBUTION-shift companion to
@@ -1731,7 +1731,6 @@ def events_ks_test(spark, sf_dir):
                 "CAST(dmax * 1000000 div (CAST(n_a AS DECIMAL(38,0)) * n_b) AS BIGINT)"
             ).alias("ks_ppm"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1769,7 +1768,7 @@ FROM s ORDER BY event_type
 """
 
 
-@query("events_mannwhitney", sql=_MWU_SQL)
+@query("events_mannwhitney", sql=_MWU_SQL, order_by=("event_type",))
 def events_mannwhitney(spark, sf_dir):
     """Mann-Whitney U rank-sum test per event type between the parity-split
     A/B arms — the NONPARAMETRIC companion to events_ab_welch (means) and
@@ -1818,7 +1817,7 @@ def events_mannwhitney(spark, sf_dir):
             "CAST((r2a - CAST(n_a AS DECIMAL(38,0)) * (n_a + 1)) * 1000000"
             " div (2 * CAST(n_a AS DECIMAL(38,0)) * n_b) AS BIGINT)"
         ).alias("cles_ppm"),
-    ).orderBy("event_type")
+    )
 
 
 # --- Column completeness profile -------------------------------------------
@@ -1845,7 +1844,7 @@ def _completeness_sql() -> str:
     return "\nUNION ALL\n".join(sels) + "\nORDER BY column_name"
 
 
-@query("profile_completeness", sql=_completeness_sql())
+@query("profile_completeness", sql=_completeness_sql(), order_by=("column_name",))
 def profile_completeness(spark, sf_dir):
     """Column completeness report over the events table — one row per column
     with null count, blank-string count (string columns), and the complete
@@ -1882,7 +1881,7 @@ def profile_completeness(spark, sf_dir):
         (F.col("n_rows") - F.col("nn")).cast("long").alias("n_null"),
         F.col("n_blank").cast("long").alias("n_blank"),
         F.expr("nn * 1000000 div n_rows").cast("long").alias("complete_ppm"),
-    ).orderBy("column_name")
+    )
 
 
 # --- Running drawdown --------------------------------------------------------
@@ -1908,7 +1907,7 @@ FROM d GROUP BY user_id ORDER BY user_id
 """
 
 
-@query("ts_drawdown", sql=_DRAWDOWN_SQL)
+@query("ts_drawdown", sql=_DRAWDOWN_SQL, order_by=("user_id",))
 def ts_drawdown(spark, sf_dir):
     """Maximum drawdown per user series — the peak-to-trough risk statistic
     (finance's summary of 'how bad did it get'): running total of exact
@@ -1939,7 +1938,6 @@ def ts_drawdown(spark, sf_dir):
             F.max("cum").cast("long").alias("peak_cents"),
             F.max(F.col("runmax") - F.col("cum")).cast("long").alias("max_drawdown_cents"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1974,7 +1972,7 @@ FROM f GROUP BY user_id ORDER BY user_id
 """
 
 
-@query("ts_bollinger_breaches", sql=_BOLL_SQL)
+@query("ts_bollinger_breaches", sql=_BOLL_SQL, order_by=("user_id",))
 def ts_bollinger_breaches(spark, sf_dir):
     """Bollinger-band breach counts per user series: points escaping
     mean ± 2σ of their trailing {_BOLL_K}-point window (window inclusive of
@@ -2016,7 +2014,6 @@ def ts_bollinger_breaches(spark, sf_dir):
             .cast("long")
             .alias("n_breach_lower"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -2168,7 +2165,7 @@ FROM q GROUP BY bin ORDER BY bin
 """
 
 
-@query("q_calibration_bins", sql=_CAL_SQL)
+@query("q_calibration_bins", sql=_CAL_SQL, order_by=("bin",))
 def q_calibration_bins(spark, sf_dir):
     """Reliability-diagram bins for the value-score vs 'purchase' label:
     fixed-width score bins with observed positive rate in exact ppm — the
@@ -2189,7 +2186,6 @@ def q_calibration_bins(spark, sf_dir):
             F.sum("y").cast("long").alias("n_pos"),
             F.expr("sum(y) * 1000000 div count(1)").cast("long").alias("pos_rate_ppm"),
         )
-        .orderBy("bin")
     )
 
 
@@ -2214,7 +2210,7 @@ FROM r GROUP BY 1 ORDER BY bin
 """
 
 
-@query("q_calibration_bins_ef", sql=_CAL_EF_SQL)
+@query("q_calibration_bins_ef", sql=_CAL_EF_SQL, order_by=("bin",))
 def q_calibration_bins_ef(spark, sf_dir):
     """Equal-FREQUENCY (decile) reliability bins — the companion to
     q_calibration_bins' fixed-width form, and what practitioners plot
@@ -2251,7 +2247,6 @@ def q_calibration_bins_ef(spark, sf_dir):
             F.expr("sum(y) * 1000000 div count(1)").cast("long").alias("pos_rate_ppm"),
             F.expr("sum(cents) div count(1)").cast("long").alias("mean_score_cents"),
         )
-        .orderBy("bin")
     )
 
 
@@ -2277,7 +2272,7 @@ FROM c WHERE 2 * cumw >= tot GROUP BY flag ORDER BY flag
 """
 
 
-@query("q_weighted_median", sql=_WMED_SQL)
+@query("q_weighted_median", sql=_WMED_SQL, order_by=("l_returnflag",))
 def q_weighted_median(spark, sf_dir):
     """Quantity-weighted median price per return flag — the weighted
     quantile a pricing dashboard wants (plain median over line items
@@ -2328,7 +2323,6 @@ def q_weighted_median(spark, sf_dir):
             "wmedian_cents",
             "total_weight_units",
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -2364,7 +2358,7 @@ FROM events"""
     return "\nUNION ALL\n".join(sels) + "\nORDER BY column_name"
 
 
-@query("profile_cardinality", sql=_cardinality_sql())
+@query("profile_cardinality", sql=_cardinality_sql(), order_by=("column_name",))
 def profile_cardinality(spark, sf_dir):
     """Column cardinality + mode report over the events table — the
     companion to profile_completeness in a data-quality suite: per column,
@@ -2401,7 +2395,7 @@ def profile_cardinality(spark, sf_dir):
     res = outs[0]
     for o in outs[1:]:
         res = res.unionAll(o)
-    return res.orderBy("column_name")
+    return res
 
 
 # --- Right-to-be-forgotten erasure audit -------------------------------------
@@ -2429,7 +2423,7 @@ FROM c ORDER BY table_name
 """
 
 
-@query("profile_erasure_audit", sql=_ERASE_SQL)
+@query("profile_erasure_audit", sql=_ERASE_SQL, order_by=("table_name",))
 def profile_erasure_audit(spark, sf_dir):
     """Right-to-be-forgotten erasure audit: given a tombstoned customer set
     (deterministic id-mod subset standing in for a deletion-request list),
@@ -2469,7 +2463,6 @@ def profile_erasure_audit(spark, sf_dir):
         report("customer", tomb, c)
         .unionAll(report("orders", aff_o, o))
         .unionAll(report("lineitem", aff_l, l))
-        .orderBy("table_name")
     )
 
 
@@ -2500,7 +2493,7 @@ GROUP BY decile, t.n_total, t.total_pos ORDER BY decile
 """
 
 
-@query("q_gains_by_decile", sql=_GAINS_SQL)
+@query("q_gains_by_decile", sql=_GAINS_SQL, order_by=("decile",))
 def q_gains_by_decile(spark, sf_dir):
     """Gains/lift table by score decile — 'how much better than random is
     the top 10%?': events ranked by descending value score into exact
@@ -2548,7 +2541,6 @@ def q_gains_by_decile(spark, sf_dir):
                 " div (CAST(n AS DECIMAL(38,0)) * total_pos) AS BIGINT)"
             ).alias("lift_ppm"),
         )
-        .orderBy("decile")
     )
 
 
@@ -2570,7 +2562,7 @@ FROM h GROUP BY hour_index ORDER BY hour_index
 """
 
 
-@query("events_error_rate_sli", sql=_SLI_SQL)
+@query("events_error_rate_sli", sql=_SLI_SQL, order_by=("hour_index",))
 def events_error_rate_sli(spark, sf_dir):
     """Hourly error-rate SLI with SLO breach flags — the availability
     report an SRE dashboard burns alerts from (companion to
@@ -2595,5 +2587,4 @@ def events_error_rate_sli(spark, sf_dir):
                 "slo_breach"
             ),
         )
-        .orderBy("hour_index")
     )

@@ -33,6 +33,7 @@ from .registry import query
            CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
     FROM events GROUP BY 1, 2 ORDER BY 1, 2
     """,
+    order_by=("window_start", "event_type"),
 )
 def t_tumbling_counts(spark, sf_dir):
     """T1 (batch-equivalent): 10-minute tumbling windows per event type.
@@ -43,7 +44,6 @@ def t_tumbling_counts(spark, sf_dir):
         e.groupBy(F.window("ts", "10 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), dsum(dmoney("value"), "total_value"))
         .select(F.col("window.start").alias("window_start"), "event_type", "n", "total_value")
-        .orderBy("window_start", "event_type")
     )
 
 
@@ -56,6 +56,7 @@ def t_tumbling_counts(spark, sf_dir):
     FROM events, unnest([0, 1]) AS u(k)
     GROUP BY 1 ORDER BY 1
     """,
+    order_by=("window_start",),
 )
 def t_sliding_counts(spark, sf_dir):
     """T2 (batch-equivalent): 10-minute windows sliding by 5 — every event
@@ -65,7 +66,6 @@ def t_sliding_counts(spark, sf_dir):
         e.groupBy(F.window("ts", "10 minutes", "5 minutes"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("window.start").alias("window_start"), "n")
-        .orderBy("window_start")
     )
 
 
@@ -91,13 +91,14 @@ def t_sliding_counts(spark, sf_dir):
            COUNT(*) AS n_events
     FROM sessioned GROUP BY 1, 2 ORDER BY user_id, session_seq
     """,
+    order_by=("user_id", "session_seq"),
 )
 def t_session_islands(spark, sf_dir):
     """T3 (batch-equivalent): 5-minute-gap sessionization via lag + cumsum
     islands; semantically identical to `session_window(ts, '5 minutes')`,
     which tests/test_streaming.py asserts."""
     e = load(spark, sf_dir, "events")
-    return sessionize_batch(e, gap_seconds=300).orderBy("user_id", "session_seq")
+    return sessionize_batch(e, gap_seconds=300)
 
 
 @query(
@@ -106,6 +107,7 @@ def t_session_islands(spark, sf_dir):
     SELECT event_type, COUNT(DISTINCT event_id) AS n_unique, COUNT(*) AS n_rows
     FROM events GROUP BY 1 ORDER BY 1
     """,
+    order_by=("event_type",),
 )
 def t_dedup_equiv(spark, sf_dir):
     """T5 (batch-equivalent): dedup on event_id — the fixture is already
@@ -117,7 +119,6 @@ def t_dedup_equiv(spark, sf_dir):
             F.countDistinct("event_id").alias("n_unique"),
             F.count(F.lit(1)).alias("n_rows"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -129,6 +130,7 @@ def t_dedup_equiv(spark, sf_dir):
            event_type, COUNT(*) AS n
     FROM events GROUP BY 1, 2 ORDER BY 1, 2
     """,
+    order_by=("window_start", "event_type"),
 )
 def t_stream_tumbling(spark, sf_dir):
     """T1/T4 (streaming execution, ORACLED — upgraded r7 from rows-only):
@@ -139,7 +141,7 @@ def t_stream_tumbling(spark, sf_dir):
     complete mode) — so the genuinely-streaming run is value-exact against
     the same epoch-floor oracle as its batch twin t_tumbling_counts."""
     agg = tumbling_counts(stream_events(spark, sf_dir))
-    return run_to_memory(agg, "complete").orderBy("window_start", "event_type")
+    return run_to_memory(agg, "complete")
 
 
 @query(
@@ -148,6 +150,7 @@ def t_stream_tumbling(spark, sf_dir):
     SELECT event_type, COUNT(DISTINCT event_id) AS n
     FROM events GROUP BY 1 ORDER BY 1
     """,
+    order_by=("event_type",),
 )
 def t_stream_dedup(spark, sf_dir):
     """T5 (streaming execution, ORACLED — upgraded r7 from rows-only):
@@ -159,7 +162,7 @@ def t_stream_dedup(spark, sf_dir):
     set, and the append-mode sink accumulates it all."""
     deduped = dedup_stream(stream_events(spark, sf_dir))
     out = run_to_memory(deduped, "append")
-    return out.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).orderBy("event_type")
+    return out.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
 
 
 @query(
@@ -172,6 +175,7 @@ def t_stream_dedup(spark, sf_dir):
      AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
     ORDER BY purchase_id, click_id
     """,
+    order_by=("purchase_id", "click_id"),
 )
 def t_attribution_join(spark, sf_dir):
     """T8 (batch-equivalent): time-bounded attribution self-join — each
@@ -182,7 +186,7 @@ def t_attribution_join(spark, sf_dir):
     from ..streaming.windows import stream_stream_attribution
 
     e = load(spark, sf_dir, "events")
-    return stream_stream_attribution(e).orderBy("purchase_id", "click_id")
+    return stream_stream_attribution(e)
 
 
 @query(
@@ -204,6 +208,7 @@ def t_attribution_join(spark, sf_dir):
     SELECT CAST(MIN(ts) AS TIMESTAMP) AS session_start, user_id, COUNT(*) AS n_events
     FROM sessioned GROUP BY user_id, session_seq ORDER BY session_start, user_id
     """,
+    order_by=("session_start", "user_id"),
 )
 def t_stream_session(spark, sf_dir):
     """T3 (streaming form, ORACLED — upgraded r7 from rows-only): native
@@ -216,7 +221,7 @@ def t_stream_session(spark, sf_dir):
     from ..streaming.windows import session_windows_stream
 
     sess = session_windows_stream(stream_events(spark, sf_dir))
-    return run_to_memory(sess, "complete").orderBy("session_start", "user_id")
+    return run_to_memory(sess, "complete")
 
 
 @query(
@@ -242,6 +247,7 @@ def t_stream_session(spark, sf_dir):
     FROM grid g LEFT JOIN obs o ON g.user_id = o.user_id AND g.bucket = o.bucket
     ORDER BY g.user_id, g.bucket
     """,
+    order_by=("user_id", "bucket"),
 )
 def t_resample_locf(spark, sf_dir):
     """Gap-filled downsample (the hypertable-rollup / timeseries-resample
@@ -304,7 +310,7 @@ def t_resample_locf(spark, sf_dir):
     # subtree a second time (sign-stable interleaved A/B).
     from ..caching import track
 
-    return track(dense.persist()).orderBy("user_id", "bucket")
+    return track(dense.persist())
 
 
 @query(
@@ -324,6 +330,7 @@ def t_resample_locf(spark, sf_dir):
            LEFT JOIN p ON v.user_id = p.user_id
     ORDER BY v.user_id
     """,
+    order_by=("user_id",),
 )
 def events_funnel(spark, sf_dir):
     """Ordered funnel (view -> click -> purchase): earliest completion
@@ -359,7 +366,6 @@ def events_funnel(spark, sf_dir):
             "t_purchase",
             F.col("t_purchase").isNotNull().alias("completed"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -374,6 +380,7 @@ def events_funnel(spark, sf_dir):
     SELECT cohort_d, day_offset, COUNT(*) AS n_users
     FROM a GROUP BY 1, 2 ORDER BY 1, 2
     """,
+    order_by=("cohort_d", "day_offset"),
 )
 def events_retention(spark, sf_dir):
     """Cohort retention matrix: users grouped by first-seen date, counted
@@ -396,7 +403,6 @@ def events_retention(spark, sf_dir):
         .distinct()
         .groupBy("cohort_d", "day_offset")
         .agg(F.count(F.lit(1)).alias("n_users"))
-        .orderBy("cohort_d", "day_offset")
     )
 
 
@@ -410,6 +416,7 @@ def events_retention(spark, sf_dir):
     WHERE prev_type IS NOT NULL
     GROUP BY 1, 2 ORDER BY 1, 2
     """,
+    order_by=("prev_type", "next_type"),
 )
 def events_transitions(spark, sf_dir):
     """Event-type transition matrix (first-order Markov counts) — lag
@@ -424,7 +431,6 @@ def events_transitions(spark, sf_dir):
         .where(F.col("prev_type").isNotNull())
         .groupBy("prev_type", F.col("event_type").alias("next_type"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("prev_type", "next_type")
     )
 
 
@@ -445,6 +451,7 @@ def events_transitions(spark, sf_dir):
     FROM seg WHERE secs IS NOT NULL AND secs > 0
     GROUP BY 1 ORDER BY 1
     """,
+    order_by=("user_id",),
 )
 def events_time_weighted_avg(spark, sf_dir):
     """Time-weighted average of a held value per user (hypertable
@@ -479,7 +486,6 @@ def events_time_weighted_avg(spark, sf_dir):
                 / F.sum("secs").cast("double")
             ).alias("twa"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -504,6 +510,7 @@ def events_time_weighted_avg(spark, sf_dir):
            COUNT(*) AS n_events
     FROM sessioned GROUP BY user_id, session_seq ORDER BY user_id, session_start
     """,
+    order_by=("user_id", "session_start"),
 )
 def t_session_native_batch(spark, sf_dir):
     """T3 via the NATIVE `session_window` aggregate run in batch mode — the
@@ -525,7 +532,6 @@ def t_session_native_batch(spark, sf_dir):
             F.col("session_window.start").alias("session_start"),
             "n_events",
         )
-        .orderBy("user_id", "session_start")
     )
 
 
@@ -537,6 +543,7 @@ def t_session_native_batch(spark, sf_dir):
            COUNT(*) AS n_events
     FROM events GROUP BY 1 ORDER BY 1
     """,
+    order_by=("window_start",),
 )
 def t_window_distinct_users(spark, sf_dir):
     """Windowed distinct cardinality — the per-window unique-actor count
@@ -551,7 +558,6 @@ def t_window_distinct_users(spark, sf_dir):
             F.countDistinct("user_id").alias("n_users"),
             F.count(F.lit(1)).alias("n_events"),
         )
-        .orderBy("window_start")
     )
 
 
@@ -565,6 +571,7 @@ def t_window_distinct_users(spark, sf_dir):
      AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
     ORDER BY purchase_id, click_id
     """,
+    order_by=("purchase_id", "click_id"),
 )
 def t_attribution_outer(spark, sf_dir):
     """T8b (batch-equivalent): LEFT OUTER attribution — every purchase
@@ -575,7 +582,7 @@ def t_attribution_outer(spark, sf_dir):
     from ..streaming.windows import stream_stream_attribution_outer
 
     e = load(spark, sf_dir, "events")
-    return stream_stream_attribution_outer(e).orderBy("purchase_id", "click_id")
+    return stream_stream_attribution_outer(e)
 
 
 @query(
@@ -587,6 +594,7 @@ def t_attribution_outer(spark, sf_dir):
            COUNT(DISTINCT user_id) AS n_users
     FROM events GROUP BY 1, 2 ORDER BY 1, 2
     """,
+    order_by=("dow", "hod"),
 )
 def t_activity_matrix(spark, sf_dir):
     """Day-of-week × hour-of-day activity matrix — the canonical usage
@@ -600,7 +608,6 @@ def t_activity_matrix(spark, sf_dir):
             F.hour("ts").cast("long").alias("hod"),
         )
         .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("user_id").alias("n_users"))
-        .orderBy("dow", "hod")
     )
 
 
@@ -617,6 +624,7 @@ def t_activity_matrix(spark, sf_dir):
     SELECT window_start, event_type AS top_type, c AS n_events
     FROM ranked WHERE rn = 1 ORDER BY window_start
     """,
+    order_by=("window_start",),
 )
 def t_trending_type(spark, sf_dir):
     """Trending event type per 30-minute window — argmax over grouped
@@ -634,7 +642,6 @@ def t_trending_type(spark, sf_dir):
         wc.withColumn("rn", F.row_number().over(w))
         .filter("rn = 1")
         .select("window_start", F.col("event_type").alias("top_type"), F.col("c").alias("n_events"))
-        .orderBy("window_start")
     )
 
 
@@ -675,7 +682,7 @@ _INTERP_SQL = """
 """
 
 
-@query("t_resample_interp", sql=_INTERP_SQL)
+@query("t_resample_interp", sql=_INTERP_SQL, order_by=("user_id", "bucket"))
 def t_resample_interp(spark, sf_dir):
     """Gap-filled resample with LINEAR interpolation — the companion to
     t_resample_locf for continuous signals (sensor feeds, metrics): per
@@ -734,7 +741,7 @@ def t_resample_interp(spark, sf_dir):
         .when(F.col("nv").isNull(), F.col("pv"))
         .otherwise(F.col("pv") + ((F.col("nv") - F.col("pv")) * frac))
         .alias("v_interp"),
-    ).orderBy("user_id", "bucket")
+    )
 
 
 @query(
@@ -749,6 +756,7 @@ def t_resample_interp(spark, sf_dir):
     SELECT user_id, event_type AS top_type, CAST(n AS BIGINT) AS n_top
     FROM r WHERE rk = 1 ORDER BY user_id
     """,
+    order_by=("user_id",),
 )
 def t_stream_heavy_hitters(spark, sf_dir):
     """T-custom, ORACLED streaming execution: per-user heavy hitters via a
@@ -779,7 +787,6 @@ def t_stream_heavy_hitters(spark, sf_dir):
             F.col("event_type").alias("top_type"),
             F.col("n").alias("n_top"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -807,6 +814,7 @@ def t_stream_heavy_hitters(spark, sf_dir):
            (sd * 1000000 // (2 * total * pt)) > 100000 AS drifted
     FROM s ORDER BY event_type
     """,
+    order_by=("event_type",),
 )
 def t_stream_drift(spark, sf_dir):
     """T-custom, ORACLED streaming execution #2: distribution-drift
@@ -861,7 +869,6 @@ def t_stream_drift(spark, sf_dir):
             tvd.alias("tvd_ppm"),
         )
         .withColumn("drifted", F.col("tvd_ppm") > 100000)
-        .orderBy("event_type")
     )
 
 
@@ -876,6 +883,7 @@ def t_stream_drift(spark, sf_dir):
       FROM events WHERE value IS NOT NULL AND NOT isnan(value))
     WHERE rank <= 3 ORDER BY event_type, rank
     """,
+    order_by=("event_type", "rank"),
 )
 def t_stream_topk(spark, sf_dir):
     """T-custom, ORACLED streaming execution #3: per-event-type top-3
@@ -908,7 +916,7 @@ def t_stream_topk(spark, sf_dir):
             (-F.col("b.nid")).alias("event_id"),
         )
     )
-    return final.orderBy("event_type", "rank")
+    return final
 
 
 from ..functions.numeric import sql_hash60 as _h60  # noqa: E402
@@ -931,6 +939,7 @@ from ..functions.numeric import sql_hash60 as _h60  # noqa: E402
            END AS est_users
     FROM ranked WHERE rn = least(64, n_exact) ORDER BY event_type
     """,
+    order_by=("event_type",),
 )
 def t_stream_distinct_kmv(spark, sf_dir):
     """T-custom, ORACLED streaming execution #5 (upgraded from rows-only):
@@ -971,7 +980,7 @@ def t_stream_distinct_kmv(spark, sf_dir):
             ).alias("est_users"),
         )
     )
-    return est.orderBy("event_type")
+    return est
 
 
 @query(
@@ -984,6 +993,7 @@ def t_stream_distinct_kmv(spark, sf_dir):
      AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts <= p.ts
     ORDER BY purchase_id, click_id
     """,
+    order_by=("purchase_id", "click_id"),
 )
 def t_stream_stream_join(spark, sf_dir):
     """T8, ORACLED streaming execution: the watermarked stream-stream INNER
@@ -1008,7 +1018,7 @@ def t_stream_stream_join(spark, sf_dir):
     out = run_to_memory(
         stream_stream_attribution(stream_events(spark, sf_dir)), "append"
     )
-    return out.orderBy("purchase_id", "click_id")
+    return out
 
 
 @query(
@@ -1021,6 +1031,7 @@ def t_stream_stream_join(spark, sf_dir):
           FROM events)
     WHERE rn = 1 ORDER BY user_id
     """,
+    order_by=("user_id",),
 )
 def t_stream_lww_upsert(spark, sf_dir):
     """T-custom, ORACLED streaming execution #4: the last-writer-wins
@@ -1050,7 +1061,6 @@ def t_stream_lww_upsert(spark, sf_dir):
             F.col("b.last_type").alias("last_type"),
             F.col("b.last_value").alias("last_value"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1062,6 +1072,7 @@ def t_stream_lww_upsert(spark, sf_dir):
            event_type, COUNT(*) AS n
     FROM events GROUP BY 1, 2 ORDER BY 1, 2
     """,
+    order_by=("window_start", "event_type"),
 )
 def t_stream_state_inspect(spark, sf_dir):
     """T-custom, ORACLED: the State Data Source reader — Spark's
@@ -1116,7 +1127,6 @@ def t_stream_state_inspect(spark, sf_dir):
             F.col("key.event_type").alias("event_type"),
             F.col("value.count").alias("n"),
         )
-        .orderBy("window_start", "event_type")
     )
 
 
@@ -1146,6 +1156,7 @@ from .llm import _SQL_SHINGLES5_PADDED  # noqa: E402
     WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.5
     ORDER BY doc_a, doc_b
     """,
+    order_by=("doc_a", "doc_b"),
 )
 def t_stream_ingest_dedup(spark, sf_dir):
     """T-custom, ORACLED streaming execution #6: the CONTINUOUS-INGEST
@@ -1179,9 +1190,7 @@ def t_stream_ingest_dedup(spark, sf_dir):
 
     run = index_scratch_dir(spark, sf_dir, "stream_ingest_dedup", "documents.parquet")
     d = load(spark, sf_dir, "documents")
-    return stream_ingest_dedup_pairs(spark, d, run, n_shards=4).orderBy(
-        "doc_a", "doc_b"
-    )
+    return stream_ingest_dedup_pairs(spark, d, run, n_shards=4)
 
 
 @query(
@@ -1193,6 +1202,7 @@ def t_stream_ingest_dedup(spark, sf_dir):
                                  CAST(b.embedding AS DOUBLE[])) >= 0.4
     ORDER BY id_a, id_b
     """,
+    order_by=("id_a", "id_b"),
 )
 def t_stream_ingest_embed(spark, sf_dir):
     """T-custom, ORACLED streaming execution #7: continuous-ingest
@@ -1215,9 +1225,7 @@ def t_stream_ingest_embed(spark, sf_dir):
 
     run = index_scratch_dir(spark, sf_dir, "stream_ingest_embed", "embeddings.parquet")
     e = load(spark, sf_dir, "embeddings")
-    return stream_ingest_embed_pairs(spark, e, run, n_shards=4, threshold=0.4).orderBy(
-        "id_a", "id_b"
-    )
+    return stream_ingest_embed_pairs(spark, e, run, n_shards=4, threshold=0.4)
 
 
 @query(
@@ -1251,6 +1259,7 @@ def t_stream_ingest_embed(spark, sf_dir):
            OR (i.doc_b % 4 = 2 AND i.doc_a % 2 = 1))
     ORDER BY doc_a, doc_b
     """,
+    order_by=("doc_a", "doc_b"),
 )
 def t_stream_ingest_erasure(spark, sf_dir):
     """T-custom, ORACLED streaming execution: the RIGHT-TO-BE-FORGOTTEN
@@ -1278,9 +1287,7 @@ def t_stream_ingest_erasure(spark, sf_dir):
     # 2 shards per phase: still genuinely multi-batch on both sides of the
     # erasure (the result is shard-count invariant — same argument as
     # t_stream_ingest_dedup, pinned there at K=2,3) at half the fixture cost
-    return stream_ingest_dedup_with_erasure(spark, d, run, n_shards=2).orderBy(
-        "doc_a", "doc_b"
-    )
+    return stream_ingest_dedup_with_erasure(spark, d, run, n_shards=2)
 
 
 @query(
@@ -1309,6 +1316,7 @@ def t_stream_ingest_erasure(spark, sf_dir):
            OR (i.doc_b % 4 = 2 AND i.doc_a % 2 = 1))
     ORDER BY doc_a, doc_b
     """,
+    order_by=("doc_a", "doc_b"),
 )
 def t_stream_ingest_erasure_compact(spark, sf_dir):
     """T-custom, ORACLED: the GDPR timeline WITH the auto-compaction
@@ -1336,7 +1344,7 @@ def t_stream_ingest_erasure_compact(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     return stream_ingest_dedup_with_erasure(
         spark, d, run, n_shards=3, max_segments=1
-    ).orderBy("doc_a", "doc_b")
+    )
 
 
 @query(
@@ -1348,6 +1356,7 @@ def t_stream_ingest_erasure_compact(spark, sf_dir):
            CAST(SUM(user_id) AS BIGINT) AS user_sum
     FROM events GROUP BY event_type ORDER BY event_type
     """,
+    order_by=("event_type",),
 )
 def t_stream_table_append(spark, sf_dir):
     """T-custom, ORACLED streaming execution: the STREAMING LAKEHOUSE SINK
@@ -1376,7 +1385,6 @@ def t_stream_table_append(spark, sf_dir):
             F.sum("event_id").alias("id_sum"),
             F.sum("user_id").alias("user_sum"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1389,6 +1397,7 @@ def t_stream_table_append(spark, sf_dir):
            COUNT(DISTINCT event_type) AS n_types
     FROM events GROUP BY 1 ORDER BY 1
     """,
+    order_by=("user_bucket",),
 )
 def s_table_compact_optimize(spark, sf_dir):
     """S10d: transactional OPTIMIZE — the small-files problem a streaming
@@ -1419,7 +1428,6 @@ def s_table_compact_optimize(spark, sf_dir):
             F.sum("event_id").alias("id_sum"),
             F.countDistinct("event_type").alias("n_types"),
         )
-        .orderBy("user_bucket")
     )
 
 
@@ -1433,6 +1441,7 @@ def s_table_compact_optimize(spark, sf_dir):
           FROM events)
     WHERE rn = 1 ORDER BY user_id
     """,
+    order_by=("user_id",),
 )
 def t_stream_table_upsert(spark, sf_dir):
     """T-custom, ORACLED streaming execution: the STREAMING CDC-APPLY SINK
@@ -1478,7 +1487,6 @@ def t_stream_table_upsert(spark, sf_dir):
             F.col("event_type").alias("last_type"),
             F.col("value").alias("last_value"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1506,6 +1514,7 @@ def t_stream_table_upsert(spark, sf_dir):
            CAST(MAX(runmax - cum) AS BIGINT) AS max_drawdown_cents
     FROM d GROUP BY user_id ORDER BY user_id
     """,
+    order_by=("user_id",),
 )
 def t_stream_drawdown(spark, sf_dir):
     """T-custom, ORACLED streaming execution: per-user MAX DRAWDOWN via
@@ -1560,7 +1569,6 @@ def t_stream_drawdown(spark, sf_dir):
                 "max_drawdown_cents"
             ),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1601,6 +1609,7 @@ def t_stream_drawdown(spark, sf_dir):
       FROM ins_rows)
     ORDER BY change_type
     """,
+    order_by=("change_type",),
 )
 def t_stream_table_cdf(spark, sf_dir):
     """T-custom, ORACLED streaming execution: the manifest table as a
@@ -1642,5 +1651,4 @@ def t_stream_table_cdf(spark, sf_dir):
             F.sum("o_orderkey").alias("key_sum"),
             F.sum("o_custkey").alias("cust_sum"),
         )
-        .orderBy("change_type")
     )

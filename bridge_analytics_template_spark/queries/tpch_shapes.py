@@ -172,6 +172,7 @@ def q_disjunctive_pred(spark, sf_dir):
     GROUP BY 1, 2, 3
     ORDER BY 1, 2, 3
     """,
+    order_by=("supp_nation", "cust_nation", "ship_year"),
 )
 def q_volume_shipping(spark, sf_dir):
     """TPC-H Q7 shape: bilateral trade volume by (supplier nation, customer
@@ -196,7 +197,6 @@ def q_volume_shipping(spark, sf_dir):
         .filter(F.col("supp_nation") < F.col("cust_nation"))
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").cast("long").alias("ship_year"))
         .agg(usum(_disc_u4(), 4, "volume"), F.count(F.lit(1)).alias("n_items"))
-        .orderBy("supp_nation", "cust_nation", "ship_year")
     )
 
 
@@ -216,6 +216,7 @@ def q_volume_shipping(spark, sf_dir):
     WHERE r.total_revenue = (SELECT max(total_revenue) FROM rev)
     ORDER BY r.suppkey
     """,
+    order_by=("suppkey",),
 )
 def q_top_supplier(spark, sf_dir):
     """TPC-H Q15 shape: supplier(s) achieving the maximum revenue. The
@@ -239,7 +240,6 @@ def q_top_supplier(spark, sf_dir):
     return (
         top.join(F.broadcast(s), F.col("suppkey") == F.col("s_suppkey"))
         .select("suppkey", F.col("s_name").alias("supp_name"), "total_revenue")
-        .orderBy("suppkey")
     )
 
 
@@ -256,6 +256,7 @@ def q_top_supplier(spark, sf_dir):
     GROUP BY p.p_brand, p.p_size
     ORDER BY n_suppliers DESC, p.p_brand, p.p_size
     """,
+    order_by=("n_suppliers DESC", "p_brand", "p_size"),
 )
 def q_supplier_diversity(spark, sf_dir):
     """TPC-H Q16 shape: how many distinct (non-excluded) suppliers serve
@@ -270,7 +271,6 @@ def q_supplier_diversity(spark, sf_dir):
         .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("n_suppliers"))
-        .orderBy(F.desc("n_suppliers"), "p_brand", "p_size")
     )
 
 
@@ -383,6 +383,7 @@ def q_large_orders(spark, sf_dir):
                         AND o.o_orderdate >= TIMESTAMP '1998-06-01')
     GROUP BY 1 ORDER BY 1
     """,
+    order_by=("mktsegment",),
 )
 def q_sales_opportunity(spark, sf_dir):
     """TPC-H Q22 shape: dormant high-value customers — above-average
@@ -411,7 +412,6 @@ def q_sales_opportunity(spark, sf_dir):
             F.count(F.lit(1)).alias("n_cust"),
             usum(mu("c_acctbal"), 2, "total_bal"),
         )
-        .orderBy("mktsegment")
     )
 
 
@@ -429,6 +429,7 @@ def q_sales_opportunity(spark, sf_dir):
                     AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
     GROUP BY 1 ORDER BY 1
     """,
+    order_by=("o_orderpriority",),
 )
 def q_priority_checking(spark, sf_dir):
     """TPC-H Q4 shape: orders per priority having at least one late
@@ -449,7 +450,6 @@ def q_priority_checking(spark, sf_dir):
         )
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -513,6 +513,7 @@ def q_forecast_revenue(spark, sf_dir):
            COUNT(*) AS n_items
     FROM sales GROUP BY 1 ORDER BY 1
     """,
+    order_by=("order_year",),
 )
 def q_market_share(spark, sf_dir):
     """TPC-H Q8 shape: one supplier nation's share of a region's market by
@@ -553,7 +554,6 @@ def q_market_share(spark, sf_dir):
             ).alias("mkt_share"),
             F.count(F.lit(1)).alias("n_items"),
         )
-        .orderBy("order_year")
     )
 
 
@@ -611,6 +611,7 @@ def q_copurchase_pairs(spark, sf_dir):
            CAST(rev_u AS DOUBLE) / CAST(lag(rev_u) OVER (ORDER BY y) AS DOUBLE) - 1.0 AS yoy_growth
     FROM yearly ORDER BY ship_year
     """,
+    order_by=("ship_year",),
 )
 def q_yoy_growth(spark, sf_dir):
     """Year-over-year revenue growth: window lag over a grouped aggregate
@@ -626,7 +627,7 @@ def q_yoy_growth(spark, sf_dir):
         "ship_year",
         (F.col("rev_u").cast("double") / 10000.0).alias("revenue"),
         (F.col("rev_u").cast("double") / F.lag("rev_u").over(w).cast("double") - 1.0).alias("yoy_growth"),
-    ).orderBy("ship_year")
+    )
 
 
 # --- Revenue Pareto ---------------------------------------------------------
@@ -699,6 +700,7 @@ def q_revenue_pareto(spark, sf_dir):
     GROUP BY c_count
     ORDER BY custdist DESC, c_count DESC
     """,
+    order_by=("custdist DESC", "c_count DESC"),
 )
 def q_custdist(spark, sf_dir):
     """TPC-H Q13 shape: distribution of per-customer order counts, with a
@@ -720,7 +722,6 @@ def q_custdist(spark, sf_dir):
     return (
         per_cust.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
     )
 
 
@@ -793,6 +794,7 @@ def q_shipping_priority(spark, sf_dir):
     GROUP BY 1
     ORDER BY revenue DESC, nation
     """,
+    order_by=("revenue DESC", "nation"),
 )
 def q_local_supplier(spark, sf_dir):
     """TPC-H Q5 proper — revenue from LOCAL supply chains: the supplier
@@ -820,7 +822,6 @@ def q_local_supplier(spark, sf_dir):
         .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"))
         .agg(usum(_disc_u4(), 4, "revenue"), F.count(F.lit(1)).alias("n_items"))
-        .orderBy(F.desc("revenue"), "nation")
     )
 
 
@@ -856,6 +857,7 @@ def q_local_supplier(spark, sf_dir):
            CAST(MAX(frequency) AS BIGINT) AS max_frequency
     FROM seg GROUP BY segment ORDER BY segment
     """,
+    order_by=("segment",),
 )
 def q_rfm_segments(spark, sf_dir):
     """RFM segmentation — the classic customer-value partition (recency /
@@ -897,7 +899,6 @@ def q_rfm_segments(spark, sf_dir):
             F.min("recency_days").alias("min_recency"),
             F.max("frequency").alias("max_frequency"),
         )
-        .orderBy("segment")
     )
 
 
@@ -920,7 +921,7 @@ GROUP BY o.m ORDER BY o.m
 """
 
 
-@query("q_new_vs_returning", sql=_NVR_SQL)
+@query("q_new_vs_returning", sql=_NVR_SQL, order_by=("month_index",))
 def q_new_vs_returning(spark, sf_dir):
     """Monthly revenue split into NEW vs RETURNING customers — the growth
     accounting every subscription/commerce dashboard leads with (q_cohort_ltv
@@ -949,5 +950,4 @@ def q_new_vs_returning(spark, sf_dir):
             F.sum(F.when(is_ret, 1).otherwise(0)).cast("long").alias("returning_orders"),
             F.sum(F.when(is_ret, F.col("cents")).otherwise(0)).cast("long").alias("returning_cents"),
         )
-        .orderBy("month_index")
     )

@@ -45,6 +45,7 @@ VOCAB_BROADCAST_MAX_ROWS = 2_000_000
     WHERE t.doc_id % 20 = 0
     GROUP BY t.doc_id ORDER BY t.doc_id
     """,
+    order_by=("doc_id",),
 )
 def train_vocab_encode(spark, sf_dir):
     """Vocabulary build + encoding: rank tokens by corpus frequency (ties
@@ -95,7 +96,7 @@ def train_vocab_encode(spark, sf_dir):
             ).alias("ids")
         )
     )
-    return encoded.orderBy("doc_id")
+    return encoded
 
 
 @query(
@@ -106,6 +107,7 @@ def train_vocab_encode(spark, sf_dir):
            lang, COUNT(*) AS n
     FROM documents GROUP BY 1, 2 ORDER BY 1, 2
     """,
+    order_by=("split", "lang"),
 )
 def train_split_assign(spark, sf_dir):
     """Deterministic train/validation assignment by content-hash bucket
@@ -119,7 +121,6 @@ def train_split_assign(spark, sf_dir):
         d.select(split.alias("split"), "lang")
         .groupBy("split", "lang")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("split", "lang")
     )
 
 
@@ -132,6 +133,7 @@ def train_split_assign(spark, sf_dir):
           CASE lang WHEN 'en' THEN 'bf' WHEN 'zh' THEN '7f' ELSE '3f' END
     GROUP BY lang ORDER BY lang
     """,
+    order_by=("lang",),
 )
 def train_mixture_sample(spark, sf_dir):
     """Mixture reweighting: per-language keep rates (en 75%, zh 50%, rest
@@ -145,7 +147,6 @@ def train_mixture_sample(spark, sf_dir):
         d.filter(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) <= threshold)
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_kept"))
-        .orderBy("lang")
     )
 
 
@@ -172,6 +173,7 @@ def train_mixture_sample(spark, sf_dir):
            CAST(MAX(used) AS BIGINT) AS total_tokens
     FROM step GROUP BY bucket, pid ORDER BY bucket, pack_id
     """,
+    order_by=("bucket", "pack_id"),
 )
 def train_pack_sequences(spark, sf_dir):
     """Sequence packing (llm/packing.py): greedy first-fit into 512-token
@@ -186,7 +188,7 @@ def train_pack_sequences(spark, sf_dir):
     ndocs >= 1 always true after the seed row (every pack holds >= 1 doc
     because singles are truncated to <= 512)."""
     d = load(spark, sf_dir, "documents")
-    return pack_sequences(d, seq_len=512, buckets=32).orderBy("bucket", "pack_id")
+    return pack_sequences(d, seq_len=512, buckets=32)
 
 
 @query(
@@ -202,6 +204,7 @@ def train_pack_sequences(spark, sf_dir):
                                      '', 'g')) AS n_email_chars
     FROM documents WHERE doc_id % 10 = 0 ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def train_pii_scrub(spark, sf_dir):
     """PII scrubbing: mask email addresses and phone-number-shaped spans
@@ -218,7 +221,7 @@ def train_pii_scrub(spark, sf_dir):
         "doc_id",
         scrubbed.alias("scrubbed"),
         (F.length("text") - F.length(F.regexp_replace("text", email, ""))).alias("n_email_chars"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -227,6 +230,7 @@ def train_pii_scrub(spark, sf_dir):
     SELECT doc_id, ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS row_id
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def train_row_ids(spark, sf_dir):
     """Contiguous sample ids 0..n-1 in doc_id order WITHOUT the
@@ -236,7 +240,7 @@ def train_row_ids(spark, sf_dir):
     from ..operators.rowids import assign_contiguous_ids
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-    return assign_contiguous_ids(d, "doc_id").orderBy("doc_id")
+    return assign_contiguous_ids(d, "doc_id")
 
 
 from ..oracles.text_refs import bpe_merges_oracle
@@ -268,6 +272,7 @@ def train_bpe_merges(spark, sf_dir):
            (CAST(row_number() OVER (ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) - 1) % 4 AS shard
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def train_shuffle_order(spark, sf_dir):
     """Deterministic global shuffle for training-data ordering: rank every
@@ -283,10 +288,7 @@ def train_shuffle_order(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     keyed = d.select("doc_id", F.md5(F.col("doc_id").cast("string")).alias("_h"))
     ranked = assign_contiguous_ids(keyed, ["_h", "doc_id"], id_name="global_pos")
-    return (
-        ranked.select("doc_id", "global_pos", (F.col("global_pos") % 4).alias("shard"))
-        .orderBy("doc_id")
-    )
+    return ranked.select("doc_id", "global_pos", (F.col("global_pos") % 4).alias("shard"))
 
 
 @query(
@@ -300,6 +302,7 @@ def train_shuffle_order(spark, sf_dir):
            quantile_cont(n_toks, 0.9) AS p90_toks
     FROM t GROUP BY lang ORDER BY lang
     """,
+    order_by=("lang",),
 )
 def train_seq_length_stats(spark, sf_dir):
     """Sequence-length distribution per language — the diagnostic that
@@ -319,7 +322,6 @@ def train_seq_length_stats(spark, sf_dir):
             F.percentile("n_toks", 0.5).alias("p50_toks"),
             F.percentile("n_toks", 0.9).alias("p90_toks"),
         )
-        .orderBy("lang")
     )
 
 
@@ -332,6 +334,7 @@ def train_seq_length_stats(spark, sf_dir):
            COUNT(*) AS n
     FROM documents GROUP BY 1, 2 ORDER BY 1, 2
     """,
+    order_by=("lang", "bucket"),
 )
 def train_length_histogram(spark, sf_dir):
     """Per-language document-length histogram (equi-width buckets over
@@ -348,7 +351,6 @@ def train_length_histogram(spark, sf_dir):
         )
         .groupBy("lang", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("lang", "bucket")
     )
 
 
@@ -369,6 +371,7 @@ def train_length_histogram(spark, sf_dir):
            CAST(cum AS DOUBLE) / CAST(total AS DOUBLE) AS coverage
     FROM ranked WHERE rnk <= 20 ORDER BY rnk
     """,
+    order_by=("rnk",),
 )
 def train_char_coverage(spark, sf_dir):
     """Character-coverage table for tokenizer training (the sentencepiece
@@ -394,7 +397,6 @@ def train_char_coverage(spark, sf_dir):
     return (
         ranked.filter(F.col("rnk") <= 20)
         .select("rnk", "ch", "n", (F.col("cum").cast("double") / F.col("total").cast("double")).alias("coverage"))
-        .orderBy("rnk")
     )
 
 
@@ -417,6 +419,7 @@ def train_char_coverage(spark, sf_dir):
     FROM scaled CROSS JOIN tot
     ORDER BY lang
     """,
+    order_by=("lang",),
 )
 def train_temperature_mix(spark, sf_dir):
     """Temperature-based mixture weights (alpha = 0.5): sampling weight per
@@ -450,7 +453,6 @@ def train_temperature_mix(spark, sf_dir):
                 w * F.col("n_total").cast("double") / (1000000.0 * F.col("n_docs")) >= 1.0
             ).alias("upsampled"),
         )
-        .orderBy("lang")
     )
 
 
@@ -472,6 +474,7 @@ def train_temperature_mix(spark, sf_dir):
            CAST(SUM(w_q) AS DOUBLE) / 1048576.0 AS expected_kept
     FROM k GROUP BY lang ORDER BY lang
     """,
+    order_by=("lang",),
 )
 def train_weighted_sample(spark, sf_dir):
     """Per-ROW weighted Bernoulli sampling — keep each document with
@@ -502,7 +505,6 @@ def train_weighted_sample(spark, sf_dir):
             F.sum(F.when(F.col("keep"), 1).otherwise(0)).cast("long").alias("n_kept"),
             (F.sum("w_q").cast("double") / 1048576.0).alias("expected_kept"),
         )
-        .orderBy("lang")
     )
 
 
@@ -539,6 +541,7 @@ from ..functions.numeric import spark_hash60 as _spark_hash60  # noqa: E402
 @query(
     "train_curriculum_order",
     sql=_CURR_SQL.format(h=_sql_hash60("CONCAT('curr|', CAST(doc_id AS STRING))")),
+    order_by=("doc_id",),
 )
 def train_curriculum_order(spark, sf_dir):
     """Curriculum-learning schedule: documents ranked easiest-first by the
@@ -587,7 +590,6 @@ def train_curriculum_order(spark, sf_dir):
             F.expr(f"i * {_CURR_PHASES} DIV n").cast("long").alias("phase"),
             F.expr(h).cast("long").alias("order_key60"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -616,6 +618,7 @@ def train_curriculum_order(spark, sf_dir):
                 ELSE array_to_string(toks, ' ') END AS psm_text
     FROM cuts2 ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def train_fim_split(spark, sf_dir):
     """Fill-in-the-middle transform (Bavarian et al. '22): deterministic
@@ -653,6 +656,4 @@ def train_fim_split(spark, sf_dir):
             seg(F.col("s1") + 1, F.col("s2") - F.col("s1")),
         ),
     ).otherwise(F.array_join(F.col("toks"), " "))
-    return t.select("doc_id", "n_tokens", "s1", "s2", psm.alias("psm_text")).orderBy(
-        "doc_id"
-    )
+    return t.select("doc_id", "n_tokens", "s1", "s2", psm.alias("psm_text"))

@@ -26,6 +26,7 @@ from .registry import query
     SELECT doc_id, len(string_split_regex(trim(text), '\\s+')) AS n_tokens_py
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def x_scalar_pandas_udf(spark, sf_dir):
     """X1: scalar pandas UDF (Arrow-vectorized) — Python tokenization per
@@ -36,7 +37,7 @@ def x_scalar_pandas_udf(spark, sf_dir):
         return s.str.strip().str.split().map(len).astype("int32")
 
     d = load(spark, sf_dir, "documents")
-    return d.select("doc_id", py_token_count("text").alias("n_tokens_py")).orderBy("doc_id")
+    return d.select("doc_id", py_token_count("text").alias("n_tokens_py"))
 
 
 @query(
@@ -45,6 +46,7 @@ def x_scalar_pandas_udf(spark, sf_dir):
     SELECT lang, CAST(SUM(n_chars) AS BIGINT) AS total_chars, COUNT(*) AS n_docs
     FROM documents GROUP BY lang ORDER BY lang
     """,
+    order_by=("lang",),
 )
 def x_grouped_agg_pandas(spark, sf_dir):
     """X2: grouped-aggregate pandas UDF — per-group reduction in Python
@@ -62,7 +64,6 @@ def x_grouped_agg_pandas(spark, sf_dir):
     return (
         d.groupBy("lang")
         .agg(py_sum("n_chars").alias("total_chars"), py_count("doc_id").alias("n_docs"))
-        .orderBy("lang")
     )
 
 
@@ -74,6 +75,7 @@ def x_grouped_agg_pandas(spark, sf_dir):
                               ORDER BY c_acctbal DESC, c_custkey) AS bal_rank
     FROM customer ORDER BY c_custkey
     """,
+    order_by=("c_custkey",),
 )
 def x_grouped_map_pandas(spark, sf_dir):
     """X3: grouped-map applyInPandas — whole-group pandas DataFrame in/out
@@ -89,7 +91,6 @@ def x_grouped_map_pandas(spark, sf_dir):
     return (
         c.groupBy("c_nationkey")
         .applyInPandas(rank_group, schema="c_custkey long, c_nationkey int, bal_rank long")
-        .orderBy("c_custkey")
     )
 
 
@@ -101,6 +102,7 @@ def x_grouped_map_pandas(spark, sf_dir):
            COUNT(*) FILTER (WHERE l_linestatus = 'F') AS n_finished
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
+    order_by=("l_returnflag",),
 )
 def agg_pivot(spark, sf_dir):
     """Pivot: linestatus values to columns (bounded value list declared
@@ -117,7 +119,7 @@ def agg_pivot(spark, sf_dir):
         "l_returnflag",
         F.coalesce("n_open", F.lit(0)).alias("n_open"),
         F.coalesce("n_finished", F.lit(0)).alias("n_finished"),
-    ).orderBy("l_returnflag")
+    )
 
 
 _NATION_SCHEMA = "n_nationkey int, n_name string, n_regionkey int"
@@ -129,6 +131,7 @@ _NATION_SCHEMA = "n_nationkey int, n_name string, n_regionkey int"
     SELECT n_regionkey, COUNT(*) AS n_nations, MIN(n_name) AS first_name
     FROM nation GROUP BY 1 ORDER BY 1
     """,
+    order_by=("n_regionkey",),
 )
 def s_csv_roundtrip(spark, sf_dir):
     """S7: CSV sink + scan with an explicit schema (no inference pass); the
@@ -140,7 +143,6 @@ def s_csv_roundtrip(spark, sf_dir):
     return (
         back.groupBy("n_regionkey")
         .agg(F.count(F.lit(1)).alias("n_nations"), F.min("n_name").alias("first_name"))
-        .orderBy("n_regionkey")
     )
 
 
@@ -150,6 +152,7 @@ def s_csv_roundtrip(spark, sf_dir):
     SELECT n_regionkey, COUNT(*) AS n_nations, MIN(n_name) AS first_name
     FROM nation GROUP BY 1 ORDER BY 1
     """,
+    order_by=("n_regionkey",),
 )
 def s_json_roundtrip(spark, sf_dir):
     """S6: JSON-lines sink + scan with explicit schema (the Bridge raw-data
@@ -161,7 +164,6 @@ def s_json_roundtrip(spark, sf_dir):
     return (
         back.groupBy("n_regionkey")
         .agg(F.count(F.lit(1)).alias("n_nations"), F.min("n_name").alias("first_name"))
-        .orderBy("n_regionkey")
     )
 
 
@@ -205,6 +207,7 @@ def s_text_roundtrip(spark, sf_dir):
                          ELSE length('nation ' || n_name) END) AS BIGINT) AS comment_chars
     FROM nation GROUP BY 1 ORDER BY 1
     """,
+    order_by=("n_regionkey",),
 )
 def s_avro_roundtrip(spark, sf_dir):
     """S-extra: Avro Object Container ingest WITHOUT the spark-avro module
@@ -277,7 +280,6 @@ def s_avro_roundtrip(spark, sf_dir):
             F.min("n_name").alias("first_name"),
             F.sum(F.coalesce(F.length("n_comment"), F.lit(0))).alias("comment_chars"),
         )
-        .orderBy("n_regionkey")
     )
 
 
@@ -312,6 +314,7 @@ def s_binaryfile_scan(spark, sf_dir):
     SELECT n_regionkey, COUNT(*) AS n_nations, MIN(n_name) AS first_name
     FROM nation GROUP BY 1 ORDER BY 1
     """,
+    order_by=("n_regionkey",),
 )
 def s_xml_roundtrip(spark, sf_dir):
     """S6b: XML sink + scan (Spark 4 native XML data source, one row per
@@ -332,7 +335,6 @@ def s_xml_roundtrip(spark, sf_dir):
     return (
         back.groupBy("n_regionkey")
         .agg(F.count(F.lit(1)).alias("n_nations"), F.min("n_name").alias("first_name"))
-        .orderBy("n_regionkey")
     )
 
 
@@ -349,6 +351,7 @@ def s_xml_roundtrip(spark, sf_dir):
     FROM c FULL OUTER JOIN p ON c.user_id = p.user_id
     ORDER BY user_id
     """,
+    order_by=("user_id",),
 )
 def x_cogrouped_pandas(spark, sf_dir):
     """X5: cogrouped pandas (groupBy.cogroup().applyInPandas) — align two
@@ -377,7 +380,7 @@ def x_cogrouped_pandas(spark, sf_dir):
         .cogroup(purchases.groupBy("user_id"))
         .applyInPandas(lag, schema="user_id long, lag_seconds bigint")
     )
-    return out.orderBy("user_id")
+    return out
 
 
 @query(
@@ -393,6 +396,7 @@ def x_cogrouped_pandas(spark, sf_dir):
            unnest(ps) AS sentence
     FROM parts ORDER BY doc_id, pos
     """,
+    order_by=("doc_id", "pos"),
 )
 def x_python_udtf(spark, sf_dir):
     """X6: Python UDTF (Spark 4 @udtf) — a table function yielding N rows
@@ -417,7 +421,6 @@ def x_python_udtf(spark, sf_dir):
         SELECT d.doc_id, s.pos, s.sentence
         FROM documents d, LATERAL split_sentences(d.text) s
         WHERE d.doc_id % 20 = 0
-        ORDER BY d.doc_id, s.pos
         """
     )
 
@@ -428,6 +431,7 @@ def x_python_udtf(spark, sf_dir):
     SELECT doc_id, n_chars, n_chars * 2 AS n_chars_x2
     FROM documents ORDER BY doc_id
     """,
+    order_by=("doc_id",),
 )
 def x_map_in_arrow(spark, sf_dir):
     """X7: mapInArrow — the zero-copy batch path: pyarrow RecordBatch in,
@@ -447,7 +451,7 @@ def x_map_in_arrow(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return d.mapInArrow(
         double_chars, schema="doc_id long, n_chars long, n_chars_x2 long"
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -459,6 +463,7 @@ def x_map_in_arrow(spark, sf_dir):
            MAX(n_chars) AS max_chars
     FROM documents GROUP BY lang ORDER BY lang
     """,
+    order_by=("lang",),
 )
 def x_grouped_map_arrow(spark, sf_dir):
     """X8: grouped-map applyInArrow — whole group as a pyarrow Table
@@ -485,7 +490,6 @@ def x_grouped_map_arrow(spark, sf_dir):
             group_stats,
             schema="lang string, n_docs long, min_chars long, max_chars long",
         )
-        .orderBy("lang")
     )
 
 
@@ -497,6 +501,7 @@ def x_grouped_map_arrow(spark, sf_dir):
              AS n_vowels
     FROM customer ORDER BY c_custkey
     """,
+    order_by=("c_custkey",),
 )
 def x_arrow_udf(spark, sf_dir):
     """X5: Arrow-optimized scalar Python UDF (``useArrow=True`` — Spark
@@ -510,4 +515,4 @@ def x_arrow_udf(spark, sf_dir):
         return len(re.sub(r"[^aeiou]", "", name.lower()))
 
     c = load(spark, sf_dir, "customer")
-    return c.select("c_custkey", n_vowels("c_name").alias("n_vowels")).orderBy("c_custkey")
+    return c.select("c_custkey", n_vowels("c_name").alias("n_vowels"))

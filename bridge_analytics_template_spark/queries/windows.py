@@ -29,6 +29,7 @@ from .registry import query
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
     ORDER BY o_orderkey
     """,
+    order_by=("o_orderkey",),
 )
 def w_first_last_flags(spark, sf_dir):
     """W1: derive isFirst/isLast flags per participant — the engine analog
@@ -42,7 +43,7 @@ def w_first_last_flags(spark, sf_dir):
         "o_custkey",
         (rn == 1).alias("is_first_order"),
         (rn == F.count(F.lit(1)).over(cnt)).alias("is_last_order"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @query(
@@ -57,6 +58,7 @@ def w_first_last_flags(spark, sf_dir):
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ORDER BY event_id
     """,
+    order_by=("event_id",),
 )
 def w_lag_lead(spark, sf_dir):
     """W2: lag/lead — inter-event deltas per user (the inter-session gap
@@ -72,7 +74,7 @@ def w_lag_lead(spark, sf_dir):
         prev_ts.alias("prev_ts"),
         gap.alias("gap_s"),
         F.lead("event_type").over(w).alias("next_type"),
-    ).orderBy("event_id")
+    )
 
 
 @query(
@@ -87,6 +89,7 @@ def w_lag_lead(spark, sf_dir):
              AS order_seq
     FROM orders ORDER BY o_orderkey
     """,
+    order_by=("o_orderkey",),
 )
 def w_running_sum(spark, sf_dir):
     """W3: frame-spec running aggregate — cumulative spend per customer
@@ -102,7 +105,7 @@ def w_running_sum(spark, sf_dir):
         .cast("double")
         .alias("running_spend"),
         F.row_number().over(w).alias("order_seq"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @query(
@@ -116,6 +119,7 @@ def w_running_sum(spark, sf_dir):
     WHERE rk <= 3
     ORDER BY c_nationkey, rk
     """,
+    order_by=("c_nationkey", "rk"),
 )
 def w_topk_per_group(spark, sf_dir):
     """W4: top-k per group — latest-revision-per-assessment semantics
@@ -126,7 +130,6 @@ def w_topk_per_group(spark, sf_dir):
     return (
         c.select("c_nationkey", "c_custkey", "c_acctbal", F.row_number().over(w).alias("rk"))
         .filter(F.col("rk") <= 3)
-        .orderBy("c_nationkey", "rk")
     )
 
 
@@ -146,6 +149,7 @@ def w_topk_per_group(spark, sf_dir):
     SELECT d, CAST(SUM(net) OVER (ORDER BY d) AS BIGINT) AS open_orders
     FROM daily ORDER BY d
     """,
+    order_by=("d",),
 )
 def w_interval_overlap(spark, sf_dir):
     """Sweep-line interval overlap: how many orders are 'open' (placed but
@@ -172,4 +176,4 @@ def w_interval_overlap(spark, sf_dir):
     w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
     return daily.select(
         "d", F.sum("net").over(w).cast("bigint").alias("open_orders")
-    ).orderBy("d")
+    )

@@ -22,6 +22,27 @@ from pyspark.sql import functions as F
 EVENTS_RAW_SCHEMA_NANOS = "event_id long, ts long, user_id long, event_type string, value double, props string"
 EVENTS_RAW_SCHEMA_NTZ = "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string"
 
+#: Footer row count of the table behind each source :func:`stream_events`
+#: built, keyed on the source's description in a query's progress (None:
+#: unknown).
+_SOURCE_ROWS: dict[str, int | None] = {}
+
+
+def raise_if_read_nothing(q) -> None:
+    """Fail a finished streaming query that committed no input row although
+    its events source holds rows. A file source whose path or name filter
+    matches no file streams nothing and raises nothing; this makes that
+    loud."""
+    progress = q.recentProgress
+    if sum(p.numInputRows for p in progress):
+        return
+    for src in progress[-1].sources if progress else ():
+        if _SOURCE_ROWS.get(src.description):
+            raise RuntimeError(
+                f"streaming query {q.name or q.id} committed 0 rows from {src.description}, "
+                f"which holds {_SOURCE_ROWS[src.description]} rows"
+            )
+
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental scan of the events table (file streaming source).
@@ -36,6 +57,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType
 
     from ..catalog import _ensure_session_defaults
+    from ..partitioning import estimated_scan_rows
 
     # Pin session defaults (UTC session zone above all): the ntz→timestamp
     # cast below renders wall clocks in the SESSION zone — without this, a
@@ -43,16 +65,23 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relative to the batch path.
     _ensure_session_defaults(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probed = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema["ts"].dataType
-    nanos = isinstance(probed, LongType)
-    # The file streaming source lists a *directory*; scope to the events
-    # table with a glob filter (the file-view "scope" mechanism, streaming).
-    raw = (
-        spark.readStream.schema(EVENTS_RAW_SCHEMA_NANOS if nanos else EVENTS_RAW_SCHEMA_NTZ)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    table = os.path.join(sf_dir, "events.parquet")
+    probe = spark.read.parquet(table)
+    nanos = isinstance(probe.schema["ts"].dataType, LongType)
+    reader = spark.readStream.schema(EVENTS_RAW_SCHEMA_NANOS if nanos else EVENTS_RAW_SCHEMA_NTZ).format("parquet")
+    # The file streaming source lists a *directory*. A table stored as a
+    # directory of part files is streamed from that directory; a table
+    # stored as one file is streamed from its parent, scoped to the file by
+    # name (a name filter never matches a part file inside a directory).
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(table)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.getFileStatus(jpath).isDirectory():
+        source = fs.makeQualified(jpath)
+        raw = reader.load(table)
+    else:
+        source = fs.makeQualified(jpath.getParent())
+        raw = reader.option("pathGlobFilter", jpath.getName()).load(sf_dir)
+    _SOURCE_ROWS[f"FileStreamSource[{source.toString()}]"] = estimated_scan_rows(probe)
     if nanos:
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -227,6 +256,7 @@ def run_foreach_batch_parquet(stream_df: DataFrame, path: str, checkpoint: str) 
         .start()
     )
     q.awaitTermination()
+    raise_if_read_nothing(q)
 
 
 def run_to_memory(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
@@ -239,6 +269,7 @@ def run_to_memory(stream_df: DataFrame, output_mode: str = "complete") -> DataFr
         q.processAllAvailable()
     finally:
         q.stop()
+    raise_if_read_nothing(q)
     return stream_df.sparkSession.table(name)
 
 
@@ -295,6 +326,7 @@ def run_incremental_rollup(
         .start()
     )
     q.awaitTermination()
+    raise_if_read_nothing(q)
 
 
 def stream_stream_attribution_outer(

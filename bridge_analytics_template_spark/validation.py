@@ -56,7 +56,7 @@ def validate(df: DataFrame, rules: list[Rule], unique_cols: list[str] = ()) -> D
     stack = ", ".join(f"'{n}', cast({n} as bigint)" for n in names)
     return wide.selectExpr(
         f"stack({len(names)}, {stack}) as (rule, n_violations)", "n_checked"
-    ).orderBy("rule")
+    )
 
 
 def quarantine(df: DataFrame, rules: list[Rule]) -> DataFrame:

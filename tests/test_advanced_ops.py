@@ -9,7 +9,7 @@ import datetime
 from pyspark.sql import functions as F
 
 from bridge_analytics_template_spark.catalog import load
-from bridge_analytics_template_spark.queries import QUERIES
+from bridge_analytics_template_spark.queries import QUERIES, ordered
 
 
 def test_heavy_hitters_equals_bruteforce(spark, sf_dir):
@@ -17,7 +17,7 @@ def test_heavy_hitters_equals_bruteforce(spark, sf_dir):
     from bridge_analytics_template_spark.functions.text import ws_tokens
     from bridge_analytics_template_spark.queries.advanced import _HH_DEN
 
-    got = [(r["tok"], r["n"]) for r in QUERIES["llm_heavy_hitters"](spark, sf_dir).collect()]
+    got = [(r["tok"], r["n"]) for r in ordered("llm_heavy_hitters", QUERIES["llm_heavy_hitters"](spark, sf_dir)).collect()]
     toks = load(spark, sf_dir, "documents").select(
         F.explode_outer(ws_tokens("text")).alias("tok")
     )
@@ -44,12 +44,12 @@ def test_heavy_hitters_superset_guarantee(spark, sf_dir):
         .select(F.explode_outer(ws_tokens("text")).alias("tok"))
         .count()
     )
-    for r in QUERIES["llm_heavy_hitters"](spark, sf_dir).collect():
+    for r in ordered("llm_heavy_hitters", QUERIES["llm_heavy_hitters"](spark, sf_dir)).collect():
         assert r["n"] * _HH_DEN >= total
 
 
 def test_bfs_hops_monotone(spark, sf_dir):
-    rows = QUERIES["graph_shortest_paths"](spark, sf_dir).collect()
+    rows = ordered("graph_shortest_paths", QUERIES["graph_shortest_paths"](spark, sf_dir)).collect()
     hops = [r["hops"] for r in rows]
     assert hops == sorted(hops)
     assert hops[0] == 0, "sources themselves are hop 0"
@@ -89,7 +89,7 @@ def test_assoc_rules_bounds(spark, sf_dir):
 
 
 def test_crypto_roundtrip_restores_plaintext(spark, sf_dir):
-    rows = QUERIES["f_crypto_roundtrip"](spark, sf_dir).collect()
+    rows = ordered("f_crypto_roundtrip", QUERIES["f_crypto_roundtrip"](spark, sf_dir)).collect()
     names = {
         r["c_custkey"]: r["c_name"]
         for r in load(spark, sf_dir, "customer").select("c_custkey", "c_name").collect()
@@ -122,7 +122,7 @@ def test_seasonality_crafted(spark):
 
 
 def test_xml_roundtrip_counts(spark, sf_dir):
-    rows = QUERIES["s_xml_roundtrip"](spark, sf_dir).collect()
+    rows = ordered("s_xml_roundtrip", QUERIES["s_xml_roundtrip"](spark, sf_dir)).collect()
     n = load(spark, sf_dir, "nation")
     assert sum(r["n_nations"] for r in rows) == n.count()
 
@@ -133,7 +133,7 @@ def test_window_funnel_levels_partition_users(spark, sf_dir):
     n_viewers = e.where(F.col("event_type") == "view").select("user_id").distinct().count()
     assert sum(rows.values()) == n_viewers
     # the bounded funnel can never beat the unbounded one
-    unbounded = QUERIES["events_funnel"](spark, sf_dir).where(F.col("completed")).count()
+    unbounded = ordered("events_funnel", QUERIES["events_funnel"](spark, sf_dir)).where(F.col("completed")).count()
     assert rows.get(3, 0) <= unbounded
 
 
@@ -149,7 +149,7 @@ def test_pattern_runs_crafted(spark):
     )
     with tempfile.TemporaryDirectory() as d:
         df.write.parquet(f"{d}/events.parquet")
-        r = QUERIES["events_pattern_runs"](spark, d).collect()[0]
+        r = ordered("events_pattern_runs", QUERIES["events_pattern_runs"](spark, d)).collect()[0]
     # sequence is 'vccpevp': two matches of vc*p ('vccp' and 'vp')
     assert r["n_events"] == 7 and r["n_v"] == 2 and r["n_funnel_runs"] == 2
 
@@ -157,7 +157,7 @@ def test_pattern_runs_crafted(spark):
 def test_winnowing_matches_python_reference(spark, sf_dir):
     import hashlib
 
-    rows = QUERIES["llm_winnowing"](spark, sf_dir).limit(20).collect()
+    rows = ordered("llm_winnowing", QUERIES["llm_winnowing"](spark, sf_dir)).limit(20).collect()
     docs = {
         r["doc_id"]: r["text"]
         for r in load(spark, sf_dir, "documents").select("doc_id", "text").limit(20).collect()
@@ -191,7 +191,7 @@ def test_winnowing_shared_run_guarantee(spark):
 
 
 def test_cohort_ltv_conservation(spark, sf_dir):
-    rows = QUERIES["q_cohort_ltv"](spark, sf_dir).collect()
+    rows = ordered("q_cohort_ltv", QUERIES["q_cohort_ltv"](spark, sf_dir)).collect()
     o = load(spark, sf_dir, "orders")
     total_cents = o.select(F.sum(F.floor(F.col("o_totalprice") * 100).cast("long"))).collect()[0][0]
     assert sum(r["cents_sum"] for r in rows) == total_cents
@@ -202,7 +202,7 @@ def test_cohort_ltv_conservation(spark, sf_dir):
 
 
 def test_hybrid_rrf_structure(spark, sf_dir):
-    rows = QUERIES["llm_hybrid_rrf"](spark, sf_dir).collect()
+    rows = ordered("llm_hybrid_rrf", QUERIES["llm_hybrid_rrf"](spark, sf_dir)).collect()
     assert 10 <= len(rows) <= 20  # union of two top-10 lists
     scores = [r["rrf_ppm"] for r in rows]
     assert scores == sorted(scores, reverse=True)
@@ -235,7 +235,7 @@ def test_leakage_safe_keeps_clusters_together(spark, sf_dir):
     assert by_cluster, "fixture has planted near-dup clusters"
     assert all(len(s) == 1 for s in by_cluster.values())
     # and the aggregate counts add up to the corpus
-    rows = QUERIES["train_split_leakage_safe"](spark, sf_dir).collect()
+    rows = ordered("train_split_leakage_safe", QUERIES["train_split_leakage_safe"](spark, sf_dir)).collect()
     assert sum(r["n"] for r in rows) == d.count()
 
 
@@ -267,7 +267,7 @@ def test_pmi_bounds_and_symmetric_counts(spark, sf_dir):
 
 
 def test_ndcg_bounds_and_perfect_self_ranking(spark, sf_dir):
-    rows = QUERIES["llm_binary_quant_ndcg"](spark, sf_dir).collect()
+    rows = ordered("llm_binary_quant_ndcg", QUERIES["llm_binary_quant_ndcg"](spark, sf_dir)).collect()
     assert rows
     from bridge_analytics_template_spark.queries.advanced import _NDCG_IDCG
 
@@ -277,7 +277,7 @@ def test_ndcg_bounds_and_perfect_self_ranking(spark, sf_dir):
 
 
 def test_decile_bins_structure(spark, sf_dir):
-    rows = QUERIES["q_decile_bins"](spark, sf_dir).collect()
+    rows = ordered("q_decile_bins", QUERIES["q_decile_bins"](spark, sf_dir)).collect()
     assert [r["decile"] for r in rows] == list(range(1, 11))
     sizes = [r["n_members"] for r in rows]
     assert max(sizes) - min(sizes) <= 1  # near-equal buckets
@@ -287,7 +287,7 @@ def test_decile_bins_structure(spark, sf_dir):
 
 
 def test_length_quantile_bounds(spark, sf_dir):
-    rows = QUERIES["llm_length_quantile"](spark, sf_dir).collect()
+    rows = ordered("llm_length_quantile", QUERIES["llm_length_quantile"](spark, sf_dir)).collect()
     assert rows
     by_lang = {}
     for r in rows:
@@ -315,7 +315,7 @@ def test_dedup_agreement_consistency(spark, sf_dir):
 
 
 def test_arrow_udf_exact(spark, sf_dir):
-    rows = QUERIES["x_arrow_udf"](spark, sf_dir).limit(50).collect()
+    rows = ordered("x_arrow_udf", QUERIES["x_arrow_udf"](spark, sf_dir)).limit(50).collect()
     import re
 
     names = {
@@ -327,7 +327,7 @@ def test_arrow_udf_exact(spark, sf_dir):
 
 
 def test_quantize_error_bounds(spark, sf_dir):
-    rows = QUERIES["emb_quantize_error"](spark, sf_dir).collect()
+    rows = ordered("emb_quantize_error", QUERIES["emb_quantize_error"](spark, sf_dir)).collect()
     assert rows
     for r in rows:
         assert -127 <= r["min_code"] <= r["max_code"] <= 127
@@ -339,7 +339,7 @@ def test_quantize_error_bounds(spark, sf_dir):
 def test_shard_assign_balanced(spark, sf_dir):
     from bridge_analytics_template_spark.queries.advanced import _N_SHARDS
 
-    rows = QUERIES["train_shard_assign"](spark, sf_dir).collect()
+    rows = ordered("train_shard_assign", QUERIES["train_shard_assign"](spark, sf_dir)).collect()
     assert [r["shard"] for r in rows] == list(range(_N_SHARDS))
     sizes = [r["n_docs"] for r in rows]
     chars = [r["total_chars"] for r in rows]
@@ -389,7 +389,7 @@ def test_join_explosion_profile_exact(spark, sf_dir):
 
 
 def test_watermark_report_accounts_all_events(spark, sf_dir):
-    rows = QUERIES["events_watermark_report"](spark, sf_dir).collect()
+    rows = ordered("events_watermark_report", QUERIES["events_watermark_report"](spark, sf_dir)).collect()
     total = sum(r["n"] for r in rows)
     assert total == load(spark, sf_dir, "events").count()
     by = {r["bucket"]: r for r in rows}
@@ -402,7 +402,7 @@ def test_watermark_report_accounts_all_events(spark, sf_dir):
 
 
 def test_target_encoding_shrinks_toward_prior(spark, sf_dir):
-    rows = QUERIES["q_target_encoding"](spark, sf_dir).collect()
+    rows = ordered("q_target_encoding", QUERIES["q_target_encoding"](spark, sf_dir)).collect()
     assert rows
     total_n = sum(r["n"] for r in rows)
     total_sum = sum(r["sum_cents"] for r in rows)
@@ -414,7 +414,7 @@ def test_target_encoding_shrinks_toward_prior(spark, sf_dir):
 
 
 def test_distribution_drift_bounds(spark, sf_dir):
-    rows = QUERIES["profile_distribution_drift"](spark, sf_dir).collect()
+    rows = ordered("profile_distribution_drift", QUERIES["profile_distribution_drift"](spark, sf_dir)).collect()
     assert rows
     tvd = rows[0]["tvd_ppm"]
     assert all(r["tvd_ppm"] == tvd for r in rows)
@@ -425,7 +425,7 @@ def test_distribution_drift_bounds(spark, sf_dir):
 
 
 def test_dau_wau_invariants(spark, sf_dir):
-    rows = QUERIES["events_dau_wau"](spark, sf_dir).collect()
+    rows = ordered("events_dau_wau", QUERIES["events_dau_wau"](spark, sf_dir)).collect()
     assert rows
     for r in rows:
         assert 0 < r["dau"] <= r["wau"]  # weekly actives include today's
@@ -476,7 +476,7 @@ def test_emb_drift_numpy_reference(spark, sf_dir):
 
 
 def test_soft_dedup_effective_mass(spark, sf_dir):
-    rows = QUERIES["llm_soft_dedup_weights"](spark, sf_dir).collect()
+    rows = ordered("llm_soft_dedup_weights", QUERIES["llm_soft_dedup_weights"](spark, sf_dir)).collect()
     d = load(spark, sf_dir, "documents")
     n_docs = d.count()
     n_distinct = d.select(F.md5("text")).distinct().count()
@@ -496,7 +496,7 @@ def test_funnel_latency_ordering(spark, sf_dir):
 
 
 def test_vocab_overlap_bounds(spark, sf_dir):
-    rows = QUERIES["llm_vocab_overlap"](spark, sf_dir).collect()
+    rows = ordered("llm_vocab_overlap", QUERIES["llm_vocab_overlap"](spark, sf_dir)).collect()
     langs = {r["lang"] for r in load(spark, sf_dir, "documents").select("lang").distinct().collect()}
     n = len(langs)
     assert len(rows) == n * (n - 1) // 2  # every pair shares >= 1 token (word soup)
@@ -506,14 +506,14 @@ def test_vocab_overlap_bounds(spark, sf_dir):
 
 
 def test_tail_percentiles_monotone(spark, sf_dir):
-    rows = QUERIES["events_tail_percentiles"](spark, sf_dir).collect()
+    rows = ordered("events_tail_percentiles", QUERIES["events_tail_percentiles"](spark, sf_dir)).collect()
     assert rows
     for r in rows:
         assert r["p50"] <= r["p95"] <= r["p99"] <= r["p100"]
 
 
 def test_charset_profile_shares(spark, sf_dir):
-    rows = QUERIES["llm_charset_profile"](spark, sf_dir).collect()
+    rows = ordered("llm_charset_profile", QUERIES["llm_charset_profile"](spark, sf_dir)).collect()
     assert rows
     for r in rows:
         assert 0 < r["alpha_ppm"] <= 1_000_000
@@ -524,11 +524,11 @@ def test_deterministic_uuid_shape_and_stability(spark, sf_dir):
     import re
     import uuid as _uuid
 
-    rows = QUERIES["f_deterministic_uuid"](spark, sf_dir).limit(20).collect()
+    rows = ordered("f_deterministic_uuid", QUERIES["f_deterministic_uuid"](spark, sf_dir)).limit(20).collect()
     pat = re.compile(r"^[0-9a-f]{8}-[0-9a-f]{4}-3[0-9a-f]{3}-8[0-9a-f]{3}-[0-9a-f]{12}$")
     for r in rows:
         assert pat.match(r["stable_uuid"]), r["stable_uuid"]
         _uuid.UUID(r["stable_uuid"])  # parses as a valid UUID
     # rerun mints identical ids
-    again = QUERIES["f_deterministic_uuid"](spark, sf_dir).limit(20).collect()
+    again = ordered("f_deterministic_uuid", QUERIES["f_deterministic_uuid"](spark, sf_dir)).limit(20).collect()
     assert [r["stable_uuid"] for r in rows] == [r["stable_uuid"] for r in again]

@@ -7,7 +7,7 @@ import datetime
 
 from pyspark.sql import functions as F
 
-from bridge_analytics_template_spark.queries import QUERIES
+from bridge_analytics_template_spark.queries import QUERIES, ordered
 
 
 def test_simpson_diversity_crafted(spark, sf_dir):
@@ -32,7 +32,7 @@ def test_simpson_diversity_crafted(spark, sf_dir):
 
 
 def test_simpson_bounds(spark, sf_dir):
-    rows = QUERIES["events_type_diversity"](spark, sf_dir).collect()
+    rows = ordered("events_type_diversity", QUERIES["events_type_diversity"](spark, sf_dir)).collect()
     assert rows, "fixture users expected"
     for r in rows:
         # 0 <= 1 - sum(p^2) <= 1 - 1/k for k observed types
@@ -54,7 +54,7 @@ def test_linear_interp_crafted(spark):
 
     with tempfile.TemporaryDirectory() as d:
         df.write.parquet(f"{d}/events.parquet")  # the query reads only events
-        rows = QUERIES["t_resample_interp"](spark, d).collect()
+        rows = ordered("t_resample_interp", QUERIES["t_resample_interp"](spark, d)).collect()
     got = {(r["user_id"], r["bucket"]): r["v_interp"] for r in rows}
     b0 = int(base.replace(tzinfo=datetime.timezone.utc).timestamp())
     assert got[(7, b0)] == 10.0
@@ -66,7 +66,7 @@ def test_linear_interp_crafted(spark):
 def test_fuzzy_blocked_properties(spark, sf_dir):
     from bridge_analytics_template_spark.catalog import load
 
-    pairs = QUERIES["join_fuzzy_blocked"](spark, sf_dir).collect()
+    pairs = ordered("join_fuzzy_blocked", QUERIES["join_fuzzy_blocked"](spark, sf_dir)).collect()
     names = {
         r["p_partkey"]: r["p_name"] for r in load(spark, sf_dir, "part").collect()
     }
@@ -199,7 +199,7 @@ def test_lttb_downsample_crafted(spark):
 
     with tempfile.TemporaryDirectory() as d:
         df.write.parquet(f"{d}/events.parquet")
-        out = QUERIES["ts_lttb_downsample"](spark, d).collect()
+        out = ordered("ts_lttb_downsample", QUERIES["ts_lttb_downsample"](spark, d)).collect()
     by_user: dict[int, list[int]] = {}
     for r in out:
         by_user.setdefault(r["user_id"], []).append(r["event_id"])

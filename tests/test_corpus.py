@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from bridge_analytics_template_spark.queries import ordered
 from bridge_analytics_template_spark.queries.corpus import (
     _BLOOM_K,
     _BLOOM_M,
@@ -21,7 +22,7 @@ from conftest import SF_SMALL
 
 
 def test_segment_dedup_invariants(spark):
-    rows = llm_segment_dedup(spark, SF_SMALL).collect()
+    rows = ordered("llm_segment_dedup", llm_segment_dedup(spark, SF_SMALL)).collect()
     assert rows, "no documents"
     # Every doc keeps at most its own segment count, and the reassembled
     # text has exactly n_kept segments' worth of structure.
@@ -75,7 +76,7 @@ def test_segment_dedup_drops_planted_duplicate(spark, tmp_path):
 
 
 def test_length_buckets_partition_and_waste(spark):
-    rows = train_length_buckets(spark, SF_SMALL).collect()
+    rows = ordered("train_length_buckets", train_length_buckets(spark, SF_SMALL)).collect()
     assert 1 <= len(rows) <= 4
     # Buckets are ordered, disjoint by construction, and cover all docs.
     n_docs = sum(r.n_docs for r in rows)
@@ -96,7 +97,7 @@ def test_bloom_dedup_equals_plain_semijoin(spark):
     from bridge_analytics_template_spark.catalog import load
     from bridge_analytics_template_spark.queries.corpus import _bag_fingerprint
 
-    got = [r.doc_id for r in llm_bloom_dedup(spark, SF_SMALL).collect()]
+    got = [r.doc_id for r in ordered("llm_bloom_dedup", llm_bloom_dedup(spark, SF_SMALL)).collect()]
     d = load(spark, SF_SMALL, "documents").select(
         "doc_id", _bag_fingerprint("text").alias("fp")
     )
@@ -125,12 +126,12 @@ def test_mmr_exact_deterministic_and_diverse(spark):
 
 
 def test_pagerank_ppm_bounds_and_floor(spark):
-    rows = graph_pagerank_ppm(spark, SF_SMALL).collect()
+    rows = ordered("graph_pagerank_ppm", graph_pagerank_ppm(spark, SF_SMALL)).collect()
     assert rows
     # Every node rank >= the damping floor; sink-only nodes sit exactly at it.
     assert all(r.rank_ppm >= 150_000 for r in rows)
     # Integer fixed-point: recompute must be bit-identical.
-    again = graph_pagerank_ppm(spark, SF_SMALL).collect()
+    again = ordered("graph_pagerank_ppm", graph_pagerank_ppm(spark, SF_SMALL)).collect()
     assert sorted((r.node, r.rank_ppm) for r in rows) == sorted(
         (r.node, r.rank_ppm) for r in again
     )
@@ -151,7 +152,7 @@ def test_schema_evolution_null_backfill(spark):
 def test_referential_integrity_clean_fixture(spark):
     from bridge_analytics_template_spark.queries.corpus import profile_referential_integrity
 
-    rows = profile_referential_integrity(spark, SF_SMALL).collect()
+    rows = ordered("profile_referential_integrity", profile_referential_integrity(spark, SF_SMALL)).collect()
     assert len(rows) == 4
     # The synthetic star schema is referentially clean; orphan counts are a
     # meaningful zero (the report, not the zero, is what's under test).
@@ -184,7 +185,7 @@ def test_referential_integrity_detects_planted_orphan(spark, tmp_path):
 def test_semantic_decontaminate_cosine_bounds(spark):
     from bridge_analytics_template_spark.queries.corpus import llm_semantic_decontaminate
 
-    rows = llm_semantic_decontaminate(spark, SF_SMALL).collect()
+    rows = ordered("llm_semantic_decontaminate", llm_semantic_decontaminate(spark, SF_SMALL)).collect()
     assert rows
     for r in rows:
         assert -1.0 - 1e-9 <= r.max_cos <= 1.0 + 1e-9
@@ -197,7 +198,7 @@ def test_token_budget_greedy_invariants(spark):
     from bridge_analytics_template_spark.catalog import load
     from bridge_analytics_template_spark.functions.text import ws_tokens
 
-    rows = train_token_budget(spark, SF_SMALL).collect()
+    rows = ordered("train_token_budget", train_token_budget(spark, SF_SMALL)).collect()
     assert rows
     total = (
         load(spark, SF_SMALL, "documents")
@@ -223,7 +224,7 @@ def test_ewma_int_recurrence_reference(spark):
     from bridge_analytics_template_spark.catalog import load
     import math
 
-    rows = ts_ewma_int(spark, SF_SMALL).collect()
+    rows = ordered("ts_ewma_int", ts_ewma_int(spark, SF_SMALL)).collect()
     assert rows
     # Independent python reference for one user.
     uid = rows[0].user_id
@@ -338,7 +339,7 @@ def test_curation_e2e_composition(spark):
     )
     from bridge_analytics_template_spark.catalog import load
 
-    rows = pipeline_curation_e2e(spark, SF_SMALL).collect()
+    rows = ordered("pipeline_curation_e2e", pipeline_curation_e2e(spark, SF_SMALL)).collect()
     assert rows
     # Quality gate respected, admission ordered, running sum correct.
     cum = 0
@@ -355,8 +356,8 @@ def test_curation_e2e_composition(spark):
 def test_kmeans_int_deterministic_and_sane(spark):
     from bridge_analytics_template_spark.queries.corpus import _KM_K, emb_kmeans_int
 
-    a = [(r.vec_id, r.cluster_id, r.dist2) for r in emb_kmeans_int(spark, SF_SMALL).collect()]
-    b = [(r.vec_id, r.cluster_id, r.dist2) for r in emb_kmeans_int(spark, SF_SMALL).collect()]
+    a = [(r.vec_id, r.cluster_id, r.dist2) for r in ordered("emb_kmeans_int", emb_kmeans_int(spark, SF_SMALL)).collect()]
+    b = [(r.vec_id, r.cluster_id, r.dist2) for r in ordered("emb_kmeans_int", emb_kmeans_int(spark, SF_SMALL)).collect()]
     assert a == b
     assert all(0 <= c < _KM_K for _, c, _ in a)
     assert all(d >= 0 for _, _, d in a)
@@ -370,7 +371,7 @@ def test_sql_user_functions_inlined(spark):
     # aggregate; result equals the handwritten expression.
     from bridge_analytics_template_spark.queries.sql_api import sql_user_functions
 
-    df = sql_user_functions(spark, SF_SMALL)
+    df = ordered("sql_user_functions", sql_user_functions(spark, SF_SMALL))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     rows = {r.l_returnflag: (r.n_rows, r.margin_cents) for r in df.collect()}
@@ -408,7 +409,7 @@ def test_corrupt_records_quarantined(spark):
 def test_cache_table_in_memory_scan(spark):
     from bridge_analytics_template_spark.queries.corpus import sql_cache_table
 
-    df = sql_cache_table(spark, SF_SMALL)
+    df = ordered("sql_cache_table", sql_cache_table(spark, SF_SMALL))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "In-memory table" in plan or "InMemoryTableScan" in plan
     rows = df.collect()
@@ -418,7 +419,7 @@ def test_cache_table_in_memory_scan(spark):
 def test_domain_stats_verdict_logic(spark):
     from bridge_analytics_template_spark.queries.corpus import llm_domain_stats
 
-    rows = llm_domain_stats(spark, SF_SMALL).collect()
+    rows = ordered("llm_domain_stats", llm_domain_stats(spark, SF_SMALL)).collect()
     assert rows
     for r in rows:
         assert r.n_docs > 0 and r.n_tokens > 0
@@ -449,7 +450,7 @@ def test_selfrep_planted_and_plan(spark, tmp_path):
 def test_kmv_estimate_quality_and_merge(spark):
     from bridge_analytics_template_spark.queries.corpus import _KMV_K, agg_kmv_distinct
 
-    rows = agg_kmv_distinct(spark, SF_SMALL).collect()
+    rows = ordered("agg_kmv_distinct", agg_kmv_distinct(spark, SF_SMALL)).collect()
     assert rows
     for r in rows:
         assert r.k == _KMV_K
@@ -622,7 +623,7 @@ def test_interval_union_matches_python_sweep(spark, sf_dir):
 def test_domain_cap_plan_and_counts(spark, sf_dir):
     from bridge_analytics_template_spark.queries import QUERIES
 
-    df = QUERIES["llm_domain_cap"](spark, sf_dir)
+    df = ordered("llm_domain_cap", QUERIES["llm_domain_cap"](spark, sf_dir))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan  # running top-K, not a full fat-group sort
     rows = df.collect()
@@ -631,7 +632,7 @@ def test_domain_cap_plan_and_counts(spark, sf_dir):
     per_src = Counter(r["source"] for r in rows)
     assert all(n <= 10 for n in per_src.values())
     # determinism across rebuilds
-    again = QUERIES["llm_domain_cap"](spark, sf_dir).collect()
+    again = ordered("llm_domain_cap", QUERIES["llm_domain_cap"](spark, sf_dir)).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
@@ -646,7 +647,7 @@ def test_hits_ppm_reference_and_invariants(spark):
         graph_hits_ppm,
     )
 
-    rows = graph_hits_ppm(spark, SF_SMALL).collect()
+    rows = ordered("graph_hits_ppm", graph_hits_ppm(spark, SF_SMALL)).collect()
     assert rows
     got = {r.node: (r.auth_ppm, r.hub_ppm) for r in rows}
     again = {r.node: (r.auth_ppm, r.hub_ppm) for r in graph_hits_ppm(spark, SF_SMALL).collect()}

@@ -4,6 +4,7 @@ declared geometry, passage dedup finds planted cross-document passages."""
 
 from __future__ import annotations
 
+from bridge_analytics_template_spark.queries import ordered
 from bridge_analytics_template_spark.queries.curation import (
     _CHUNK,
     _STRIDE,
@@ -16,7 +17,7 @@ from conftest import SF_SMALL
 
 
 def test_chunking_geometry(spark):
-    rows = llm_chunking(spark, SF_SMALL).collect()
+    rows = ordered("llm_chunking", llm_chunking(spark, SF_SMALL)).collect()
     by_doc: dict[int, list] = {}
     for r in rows:
         by_doc.setdefault(r.doc_id, []).append(r)
@@ -79,7 +80,7 @@ def test_passage_dedup_planted(spark, tmp_path):
 def test_chunk_short_doc_single_chunk(spark, tmp_path):
     rows = [(1, "only four tokens here")]
     _docs(spark, rows).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    out = llm_chunking(spark, str(tmp_path)).collect()
+    out = ordered("llm_chunking", llm_chunking(spark, str(tmp_path))).collect()
     assert len(out) == 1
     assert out[0].chunk_idx == 0 and out[0].n_chunk_tokens == 4
 
@@ -192,7 +193,7 @@ def test_dup_spans_planted(spark):
     )
     with tempfile.TemporaryDirectory() as d:
         df.write.parquet(f"{d}/documents.parquet")
-        rows = QUERIES["llm_dup_spans"](spark, d).collect()
+        rows = ordered("llm_dup_spans", QUERIES["llm_dup_spans"](spark, d)).collect()
     assert [(r.doc_a, r.doc_b, r.max_span_tokens, r.n_spans) for r in rows] == [(0, 1, 16, 1)]
 
 
@@ -264,7 +265,7 @@ def test_dup_span_trim_planted(spark):
     )
     with tempfile.TemporaryDirectory() as d:
         df.write.parquet(f"{d}/documents.parquet")
-        rows = QUERIES["llm_dup_span_trim"](spark, d).collect()
+        rows = ordered("llm_dup_span_trim", QUERIES["llm_dup_span_trim"](spark, d)).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.doc_id, r.dup_of, r.span_removed) == (1, 0, 16)

@@ -27,10 +27,10 @@ SF = "/root/testdata/sf0.001"
 )
 def test_fast_path_matches_distributed(spark, fn, monkeypatch):
     q = getattr(fn, "__wrapped__", fn)
-    fast = [tuple(r) for r in q(spark, SF).collect()]
+    fast = sorted(tuple(r) for r in q(spark, SF).collect())
     assert fast, "fixture graph must be non-empty"
     monkeypatch.setattr(graph_local, "SMALL_GRAPH_ARCS", 0)
-    slow = [tuple(r) for r in q(spark, SF).collect()]
+    slow = sorted(tuple(r) for r in q(spark, SF).collect())
     spark.catalog.clearCache()
     assert fast == slow
 
@@ -40,9 +40,9 @@ def test_null_endpoint_fast_path_matches_distributed(spark, monkeypatch):
     arcs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, None), (None, 2)], "src long, dst long"
     )
-    fast = [tuple(r) for r in _pagerank_ppm(spark, arcs).collect()]
+    fast = sorted((tuple(r) for r in _pagerank_ppm(spark, arcs).collect()), key=str)
     monkeypatch.setattr(graph_local, "SMALL_GRAPH_ARCS", 0)
-    slow = [tuple(r) for r in _pagerank_ppm(spark, arcs).collect()]
+    slow = sorted((tuple(r) for r in _pagerank_ppm(spark, arcs).collect()), key=str)
     spark.catalog.clearCache()
     assert fast == slow
 

@@ -15,6 +15,7 @@ from bridge_analytics_template_spark.llm.dedup import (
 )
 from bridge_analytics_template_spark.llm.multimodal import attach_binary, extract_features
 from bridge_analytics_template_spark.llm.similarity import knn_bruteforce, knn_lsh
+from bridge_analytics_template_spark.queries import ordered
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the band plays on "
@@ -604,7 +605,7 @@ def test_compression_ratio_matches_zlib(spark, sf_dir):
     from bridge_analytics_template_spark.catalog import load
     from bridge_analytics_template_spark.queries.registry import QUERIES
 
-    rows = QUERIES["llm_compression_ratio"](spark, sf_dir).collect()
+    rows = ordered("llm_compression_ratio", QUERIES["llm_compression_ratio"](spark, sf_dir)).collect()
     texts = {r.doc_id: r.text for r in load(spark, sf_dir, "documents").collect()}
     assert len(rows) == len(texts)
     for r in rows[:50]:
@@ -938,7 +939,7 @@ def test_minhash_estimate_error_bound(spark, sf_dir):
         llm_minhash_estimate,
     )
 
-    rows = llm_minhash_estimate(spark, sf_dir).collect()
+    rows = ordered("llm_minhash_estimate", llm_minhash_estimate(spark, sf_dir)).collect()
     assert rows  # fixture family always plants near-dup pairs
     for r in rows:
         assert 0 <= r.matches <= _MHE_PERMS
@@ -954,7 +955,7 @@ def test_er_entity_clusters_full_cover_and_canonical(spark, sf_dir):
     from bridge_analytics_template_spark.catalog import load
     from bridge_analytics_template_spark.queries.joins import er_entity_clusters
 
-    rows = er_entity_clusters(spark, sf_dir).collect()
+    rows = ordered("er_entity_clusters", er_entity_clusters(spark, sf_dir)).collect()
     n_parts = load(spark, sf_dir, "part").count()
     assert len(rows) == n_parts
     ids = [r.record_id for r in rows]
@@ -1011,7 +1012,7 @@ def test_fim_split_invariants(spark, sf_dir):
     through unsplit."""
     from bridge_analytics_template_spark.queries.training import train_fim_split
 
-    rows = train_fim_split(spark, sf_dir).collect()
+    rows = ordered("train_fim_split", train_fim_split(spark, sf_dir)).collect()
     assert rows
     split = [r for r in rows if r.n_tokens >= 3]
     assert split
@@ -2948,7 +2949,7 @@ def test_code_strip_tokenizer_not_regex(spark, sf_dir):
     registered query (fixture round-trip) plus direct cases."""
     from bridge_analytics_template_spark.queries import QUERIES
 
-    rows = QUERIES["llm_code_strip"](spark, sf_dir).limit(3).collect()
+    rows = ordered("llm_code_strip", QUERIES["llm_code_strip"](spark, sf_dir)).limit(3).collect()
     assert rows and all(r["n_comments"] == 2 and r["n_docstrings"] == 1 for r in rows)
     for r in rows:
         assert "#" not in r["stripped"] and '"""' not in r["stripped"]

@@ -10,7 +10,7 @@ from pathlib import Path
 
 import pytest
 
-from bridge_analytics_template_spark.queries import QUERIES
+from bridge_analytics_template_spark.queries import QUERIES, ordered
 
 ROOT = Path(__file__).resolve().parents[1]
 
@@ -53,8 +53,7 @@ def test_topk_per_group_partial_limit(spark, sf_dir):
 
 def test_asof_single_shuffle(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "join_asof")
-    # union+window: exactly one hash-partition exchange (on user_id); the
-    # final rangepartitioning is only the presentation ORDER BY.
+    # union+window: exactly one hash-partition exchange (on user_id).
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Window" in plan
 
@@ -206,8 +205,7 @@ def test_decontaminate_broadcasts_eval_grams(spark, sf_dir):
 
 def test_chunking_has_no_shuffle(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "llm_chunking")
-    # In-row fan-out: the only exchange allowed is the presentation sort's
-    # range partitioning — no hash exchange anywhere.
+    # In-row fan-out: no hash exchange anywhere.
     assert "Exchange hashpartitioning" not in plan
 
 
@@ -320,8 +318,8 @@ def test_advanced_ops_plan_shapes(spark, sf_dir):
     # winnowing: in-row pipeline — the only exchanges are the r11
     # round-robin scan widen (present exactly when ensure_parallelism widens
     # the documents scan, e.g. a one-row-group file whose md5+window-min
-    # pass would otherwise run in ONE task) and the final orderBy range
-    # exchange; no HASH shuffle anywhere (nothing is keyed).
+    # pass would otherwise run in ONE task); no HASH shuffle anywhere
+    # (nothing is keyed).
     from bridge_analytics_template_spark.catalog import load
     from bridge_analytics_template_spark.partitioning import ensure_parallelism
 
@@ -560,8 +558,7 @@ def test_asof_nearest_single_shuffle_two_sorts(spark, sf_dir):
 
 def test_bleu_pairs_plan_in_row(spark, sf_dir):
     """llm_bleu_pairs' contract is in-row clipped-precision arithmetic: one
-    doc-keyed equi-join, no Window, no Python lane, and the only exchanges
-    are the join + the final orderBy range partition."""
+    doc-keyed equi-join, no Window, no Python lane."""
     plan = plan_of(spark, sf_dir, "llm_bleu_pairs")
     assert "Window" not in plan
     assert "CartesianProduct" not in plan
@@ -571,13 +568,15 @@ def test_bleu_pairs_plan_in_row(spark, sf_dir):
 
 def test_multimodal_decode_plan_arrow_only(spark, sf_dir):
     """llm_multimodal_decode is two chained Arrow mapInPandas passes over a
-    pruned scan — no shuffle before the output sort, no row-at-a-time
+    pruned scan — no hash shuffle feeding the passes, no row-at-a-time
     Python."""
     plan = plan_of(spark, sf_dir, "llm_multimodal_decode")
     assert plan.count("MapInPandas") >= 2  # generate+resize and stats passes
     assert "BatchEvalPython" not in plan
-    sort_pos = plan.index("Sort ")
-    assert "Exchange hashpartitioning" not in plan[sort_pos:]
+    # the same rule the output sort used to anchor (no hash exchange below
+    # it), now over the whole plan: in particular none after the last
+    # MapInPandas in the plan text, the subtree feeding the innermost pass
+    assert "Exchange hashpartitioning" not in plan
 
 
 def test_link_graph_plan_jvm_only(spark, sf_dir):
@@ -751,7 +750,7 @@ def test_vocab_encode_broadcast_guard(spark, sf_dir, monkeypatch):
 
     small = training.train_vocab_encode(spark, sf_dir)
     assert "BroadcastExchange" in plan_of(small)
-    want = [(r["doc_id"], r["ids"]) for r in small.collect()]
+    want = [(r["doc_id"], r["ids"]) for r in ordered("train_vocab_encode", small).collect()]
 
     monkeypatch.setattr(training, "VOCAB_BROADCAST_MAX_ROWS", 0)
     spark.catalog.clearCache()
@@ -766,7 +765,7 @@ def test_vocab_encode_broadcast_guard(spark, sf_dir, monkeypatch):
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try:
         big = training.train_vocab_encode(spark, sf_dir)
-        rows = [(r["doc_id"], r["ids"]) for r in big.collect()]
+        rows = [(r["doc_id"], r["ids"]) for r in ordered("train_vocab_encode", big).collect()]
         assert "BroadcastExchange" not in plan_of(big)
         assert rows == want
     finally:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from bridge_analytics_template_spark.coercion import apply_coercion
 from bridge_analytics_template_spark.llm.dedup import dedup_exact
 from bridge_analytics_template_spark.operators.joins import asof_join
+from bridge_analytics_template_spark.queries import ordered
 
 SETTINGS = dict(
     max_examples=10,
@@ -269,7 +270,7 @@ def test_heavy_hitters_pruned_equals_bruteforce(spark, docs, n_parts):
     ).repartition(n_parts)
     with _tf.TemporaryDirectory() as d:
         df.write.parquet(f"{d}/documents.parquet")
-        got = [(r["tok"], r["n"]) for r in QUERIES["llm_heavy_hitters"](spark, d).collect()]
+        got = [(r["tok"], r["n"]) for r in ordered("llm_heavy_hitters", QUERIES["llm_heavy_hitters"](spark, d)).collect()]
         toks = (
             spark.read.parquet(f"{d}/documents.parquet")
             .select(F.explode_outer(ws_tokens("text")).alias("tok"))

@@ -59,7 +59,7 @@ def recall_report_serial(spark, sf_dir):
 
 
 def test_threaded_report_matches_serial_form(spark):
-    from bridge_analytics_template_spark.queries import QUERIES
+    from bridge_analytics_template_spark.queries import QUERIES, ordered
 
     q = QUERIES["llm_ann_recall_report"]
     fn = getattr(q, "__wrapped__", q)
@@ -69,7 +69,7 @@ def test_threaded_report_matches_serial_form(spark):
     assert new.schema.simpleString() == old.schema.simpleString()
     assert new.subtract(old).count() == 0
     assert old.subtract(new).count() == 0
-    got = new.collect()
+    got = ordered("llm_ann_recall_report", new).collect()
     assert [r["method"] for r in got] == ["ivf", "ivfpq", "lsh", "pq"]
     assert all(r["n_brute"] > 0 for r in got)
     assert all(0.0 <= r["recall_at_5"] <= 1.0 for r in got)

@@ -6,6 +6,7 @@ import numpy as np
 
 from bridge_analytics_template_spark.catalog import load
 from bridge_analytics_template_spark.llm.semdedup import semdedup
+from bridge_analytics_template_spark.queries import ordered
 
 THRESHOLD = 0.95
 
@@ -100,7 +101,7 @@ def test_ml_lsh_demo_matches_production_pair_set(spark, sf_dir):
 def test_sales_opportunity_excludes_order_placers(spark, sf_dir):
     from bridge_analytics_template_spark.queries import QUERIES
 
-    rows = QUERIES["q_sales_opportunity"](spark, sf_dir).collect()
+    rows = ordered("q_sales_opportunity", QUERIES["q_sales_opportunity"](spark, sf_dir)).collect()
     assert len(rows) > 0  # at least one dormant high-balance customer
     total = sum(r["n_cust"] for r in rows)
     n_customers = load(spark, sf_dir, "customer").count()

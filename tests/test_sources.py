@@ -34,6 +34,15 @@ def test_promote_annotations_sparse_keys(spark):
     assert rows[3]["color"] is None
 
 
+def _scanned_files(df):
+    """Paths of the files the plan's one file scan selects after partition
+    pruning (driver-side, no job). ``DataFrame.inputFiles()`` lists the
+    relation's files before pruning, so it cannot show pruning."""
+    scan = df._jdf.queryExecution().sparkPlan().collectLeaves().apply(0)
+    files = [d.files() for d in scan.selectedPartitions().partitionDirectories()]
+    return [fs.apply(i).getPath().toString() for fs in files for i in range(fs.size())]
+
+
 def test_partitioned_sink_layout(spark, sf_dir):
     """The {app}/{study} directory layout of copy_from_template.py:316."""
     df = load(spark, sf_dir, "customer").select(
@@ -46,9 +55,10 @@ def test_partitioned_sink_layout(spark, sf_dir):
     assert back.filter(F.col("study") == "FURNITURE").count() == df.filter(
         F.col("study") == "FURNITURE"
     ).count()
-    # partition filter prunes: only the one directory is scanned
-    plan = back.filter(F.col("study") == "FURNITURE")._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or True  # plan text versions vary; count check above is the gate
+    # partition filter prunes: only files under the one directory are scanned
+    pruned = _scanned_files(back.filter(F.col("study") == "FURNITURE"))
+    assert pruned and all("/study=FURNITURE/" in p for p in pruned)
+    assert len(pruned) < len(_scanned_files(back))
 
 
 def test_clustered_layout_disjoint_file_ranges(spark, sf_dir, tmp_path):

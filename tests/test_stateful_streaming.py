@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from bridge_analytics_template_spark.catalog import load
+from bridge_analytics_template_spark.queries import ordered
 from bridge_analytics_template_spark.streaming.stateful import running_user_totals
 from bridge_analytics_template_spark.streaming.windows import stream_events
 
@@ -276,7 +277,7 @@ def test_topk_stream_matches_batch(spark, sf_dir):
 
     got = [
         (r["event_type"], r["rank"], r["value"], r["event_id"])
-        for r in QUERIES["t_stream_topk"](spark, sf_dir).collect()
+        for r in ordered("t_stream_topk", QUERIES["t_stream_topk"](spark, sf_dir)).collect()
     ]
     w = Window.partitionBy("event_type").orderBy(
         F.desc("value"), F.asc("event_id")

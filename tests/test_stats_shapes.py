@@ -8,7 +8,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from bridge_analytics_template_spark.queries import QUERIES
+from bridge_analytics_template_spark.queries import QUERIES, ordered
 
 
 def test_disjunctive_pred_keeps_hash_join(spark, sf_dir):
@@ -21,7 +21,7 @@ def test_disjunctive_pred_keeps_hash_join(spark, sf_dir):
 
 
 def test_volume_shipping_nation_pairs_ordered(spark, sf_dir):
-    rows = QUERIES["q_volume_shipping"](spark, sf_dir).collect()
+    rows = ordered("q_volume_shipping", QUERIES["q_volume_shipping"](spark, sf_dir)).collect()
     assert len(rows) > 0
     assert all(r["supp_nation"] < r["cust_nation"] for r in rows)
 
@@ -49,7 +49,7 @@ def test_regr_exact_matches_numpy(spark, sf_dir):
 
 
 def test_mad_outliers_bounded(spark, sf_dir):
-    rows = QUERIES["events_mad_outliers"](spark, sf_dir).collect()
+    rows = ordered("events_mad_outliers", QUERIES["events_mad_outliers"](spark, sf_dir)).collect()
     assert len(rows) > 0
     for r in rows:
         assert 0 <= r["n_outliers"] < r["n"]
@@ -86,7 +86,7 @@ def test_stratified_sample_rates_and_determinism(spark, sf_dir):
 
 
 def test_ohlc_bars_invariants(spark, sf_dir):
-    rows = QUERIES["ts_ohlc_bars"](spark, sf_dir).collect()
+    rows = ordered("ts_ohlc_bars", QUERIES["ts_ohlc_bars"](spark, sf_dir)).collect()
     assert len(rows) > 0
     for r in rows:
         assert r["low"] <= r["open"] <= r["high"]
@@ -95,7 +95,7 @@ def test_ohlc_bars_invariants(spark, sf_dir):
 
 
 def test_top_supplier_is_argmax(spark, sf_dir):
-    rows = QUERIES["q_top_supplier"](spark, sf_dir).collect()
+    rows = ordered("q_top_supplier", QUERIES["q_top_supplier"](spark, sf_dir)).collect()
     assert len(rows) >= 1
     # every returned supplier carries the same (maximum) revenue
     assert len({r["total_revenue"] for r in rows}) == 1
@@ -106,7 +106,7 @@ def test_supplier_diversity_excludes_negative_acctbal(spark, sf_dir):
 
     from bridge_analytics_template_spark.catalog import load
 
-    out = QUERIES["q_supplier_diversity"](spark, sf_dir)
+    out = ordered("q_supplier_diversity", QUERIES["q_supplier_diversity"](spark, sf_dir))
     # upper bound: distinct supplier count can never exceed the non-excluded
     # supplier population
     n_ok = load(spark, sf_dir, "supplier").filter(F.col("s_acctbal") >= 0).count()
@@ -149,8 +149,8 @@ def test_lateral_topn_matches_window_topk(spark, sf_dir):
 
 
 def test_cluster_topics_shape(spark, sf_dir):
-    rows1 = QUERIES["llm_cluster_topics"](spark, sf_dir).collect()
-    rows2 = QUERIES["llm_cluster_topics"](spark, sf_dir).collect()
+    rows1 = ordered("llm_cluster_topics", QUERIES["llm_cluster_topics"](spark, sf_dir)).collect()
+    rows2 = ordered("llm_cluster_topics", QUERIES["llm_cluster_topics"](spark, sf_dir)).collect()
     assert [tuple(r) for r in rows1] == [tuple(r) for r in rows2]  # deterministic
     per_cluster = {}
     for r in rows1:
@@ -177,7 +177,7 @@ def test_forecast_revenue_single_row(spark, sf_dir):
 
 
 def test_market_share_bounded(spark, sf_dir):
-    rows = QUERIES["q_market_share"](spark, sf_dir).collect()
+    rows = ordered("q_market_share", QUERIES["q_market_share"](spark, sf_dir)).collect()
     assert len(rows) > 0
     for r in rows:
         assert 0.0 <= r["mkt_share"] <= 1.0
@@ -203,7 +203,7 @@ def test_bootstrap_ci_orders_and_brackets(spark, sf_dir):
 
 
 def test_survival_hazard_python_reference(spark, sf_dir):
-    rows = QUERIES["events_survival_hazard"](spark, sf_dir).collect()
+    rows = ordered("events_survival_hazard", QUERIES["events_survival_hazard"](spark, sf_dir)).collect()
     ev = pd.read_parquet(f"{sf_dir}/events.parquet", columns=["user_id", "ts"])
     days = ev["ts"].dt.normalize()
     life = days.groupby(ev["user_id"]).agg(["min", "max"])
@@ -395,7 +395,7 @@ def test_calibration_bins_python_reference(spark, sf_dir):
 
 
 def test_curriculum_order_properties(spark, sf_dir):
-    out = QUERIES["train_curriculum_order"](spark, sf_dir).collect()
+    out = ordered("train_curriculum_order", QUERIES["train_curriculum_order"](spark, sf_dir)).collect()
     n = len(out)
     assert n > 0
     phases = [r["phase"] for r in out]
@@ -501,7 +501,7 @@ def test_erasure_audit_python_reference(spark, sf_dir):
 
 
 def test_gains_by_decile_properties(spark, sf_dir):
-    rows = QUERIES["q_gains_by_decile"](spark, sf_dir).collect()
+    rows = ordered("q_gains_by_decile", QUERIES["q_gains_by_decile"](spark, sf_dir)).collect()
     assert [r["decile"] for r in rows] == sorted({r["decile"] for r in rows})
     n_total = sum(r["n"] for r in rows)
     total_pos = sum(r["n_pos"] for r in rows)

@@ -3,6 +3,10 @@ verification strategy)."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from bridge_analytics_template_spark.catalog import load
@@ -27,6 +31,46 @@ def test_stream_tumbling_equals_batch(spark, sf_dir):
     a = {(r["window_start"], r["event_type"]): r["n"] for r in stream_out.collect()}
     b = {(r["window_start"], r["event_type"]): r["n"] for r in batch_out.collect()}
     assert a == b and len(a) > 0
+
+
+def _split_events(sf_dir, out_dir, parts=4):
+    """The events table rewritten as ``events.parquet/part-*.parquet``."""
+    table = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    os.makedirs(os.path.join(out_dir, "events.parquet"))
+    step = -(-table.num_rows // parts)
+    for i in range(parts):
+        pq.write_table(
+            table.slice(i * step, step), os.path.join(out_dir, "events.parquet", f"part-{i}.parquet")
+        )
+    return table.num_rows
+
+
+def test_stream_reads_directory_layout_table(spark, sf_dir, tmp_path):
+    """A table stored as a directory of part files streams every row (a
+    file-name filter on the parent directory matched none of them)."""
+    d = str(tmp_path)
+    n = _split_events(sf_dir, d)
+    stream_out = run_to_memory(tumbling_counts(stream_events(spark, d)), "complete")
+    a = {(r["window_start"], r["event_type"]): r["n"] for r in stream_out.collect()}
+    b = {
+        (r["window_start"], r["event_type"]): r["n"]
+        for r in tumbling_counts(load(spark, d, "events")).collect()
+    }
+    assert a == b and sum(a.values()) == n
+
+
+def test_stream_committing_no_rows_raises(spark, sf_dir, tmp_path):
+    """A stream over a non-empty events table that commits no row fails
+    loudly: here every part file is hidden after the source was built, so
+    the source lists nothing."""
+    d = str(tmp_path)
+    _split_events(sf_dir, d)
+    stream = tumbling_counts(stream_events(spark, d))
+    part_dir = os.path.join(d, "events.parquet")
+    for f in os.listdir(part_dir):
+        os.rename(os.path.join(part_dir, f), os.path.join(part_dir, "_" + f))
+    with pytest.raises(RuntimeError, match="committed 0 rows"):
+        run_to_memory(stream, "complete")
 
 
 def test_stream_sessions_equal_batch_islands(spark, sf_dir):

@@ -13,8 +13,9 @@ regressions; last present at commit 51b8615):
 
 * variants run ROUND-ROBIN (A, B, A, B, ...) so ambient load hits every
   variant equally within each pass;
-* each variant is warmed once at sf0.001 to compile its plan shape before
-  timing starts;
+* each variant is warmed once at the measured scale before timing starts,
+  so one-time work at that scale (plan compilation, the catalog scan's
+  schema job) lands in no timed pass;
 * the per-variant statistic is the MIN over N passes (min is robust to
   one-sided contention spikes; the cache is cleared between every run);
 * with exactly two variants the PAIRED per-pass deltas are printed too —
@@ -64,8 +65,6 @@ sys.path.insert(0, ROOT)
 
 from bridge_analytics_template_spark.queries import QUERIES  # noqa: E402
 from bridge_analytics_template_spark.session import get_spark  # noqa: E402
-
-WARM_SF = "/root/testdata/sf0.001"
 
 _RUN_IDS = itertools.count()
 
@@ -126,7 +125,7 @@ def measure(spark, specs: list[str], n: int, sf: str, action: str) -> dict:
     fns = [(lab, resolve(spec)) for lab, spec in zip(labels, specs)]
 
     for _, f in fns:  # compile every plan shape before timing
-        _act(f(spark, WARM_SF), action)
+        _act(f(spark, sf), action)
         spark.catalog.clearCache()
 
     runs: dict[str, list[dict]] = {lab: [] for lab in labels}

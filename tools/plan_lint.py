@@ -8,6 +8,11 @@ Checks (fail):
   * CartesianProduct — an unconstrained physical cross product.
   * BatchEvalPython — a row-at-a-time Python UDF in the plan (the slow
     lane; Arrow lanes show as ArrowEvalPython / MapInPandas etc.).
+  * root sort — the analyzed plan ends in a global ``Sort``. Nothing that
+    checks a query's rows reads their order, and a root sort costs a
+    range-partition sampling job plus an exchange: declare the order with
+    ``query(..., order_by=...)`` instead (``queries/registry.py``). A sort
+    under a limit is not a root sort.
 
 Informational (counted, not failed): BroadcastNestedLoopJoin (legitimate
 for 1-row scalar-total broadcasts), Exchange count.
@@ -72,6 +77,11 @@ def unpartitioned_windows(plan: str) -> int:
     return n
 
 
+def is_root_sort(analyzed) -> bool:
+    """The analyzed plan's root is a global ``Sort``."""
+    return analyzed.nodeName() == "Sort" and getattr(analyzed, "global")()
+
+
 def main() -> int:
     spark = get_spark("plan-lint")
     names = sys.argv[1:] or list(QUERIES)
@@ -79,11 +89,14 @@ def main() -> int:
     for name in names:
         t0 = time.time()
         try:
-            plan = QUERIES[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
+            qe = QUERIES[name](spark, SF)._jdf.queryExecution()
+            plan = qe.executedPlan().toString()
         except Exception as ex:  # build failure is its own finding
             failures.append((name, f"plan build failed: {str(ex)[:120]}"))
             rows.append((name, "ERR", 0, 0, 0, 0, 0))
             continue
+        if is_root_sort(qe.analyzed()):
+            failures.append((name, "root global Sort (declare order_by instead)"))
         upw = unpartitioned_windows(plan)
         cart = plan.count("CartesianProduct")
         pyudf = plan.count("BatchEvalPython")
@@ -105,7 +118,7 @@ def main() -> int:
         "",
         f"Generated by `python tools/plan_lint.py`; {len(rows)} plans checked, "
         f"{len(failures)} findings. Fail rules: unpartitioned Window, "
-        "CartesianProduct, BatchEvalPython. BroadcastNestedLoopJoin and "
+        "CartesianProduct, BatchEvalPython, a root global Sort. BroadcastNestedLoopJoin and "
         "Exchange counts are informational (1-row scalar-total broadcasts "
         "are legitimate BNLJs).",
         "",
