@@ -1,4 +1,5 @@
-"""Partitioning utilities and the package's one plan-leaf sizing path.
+"""Partitioning utilities, the package's one plan-leaf sizing path and its
+one footer read.
 
 At cluster scale, inputs arrive in many partitions and these helpers are
 no-ops; on small/local inputs (one parquet file → one partition) they unlock
@@ -23,6 +24,14 @@ value-bearing use — the blocked-GEMM block grid — fails loudly
 Callers pass ``n_rows`` (``assign_contiguous_ids``) when they already hold
 an exact count, or when their plan expands rows far past its scan so the
 cost is not planned off an under-count.
+
+Schema contract. :func:`scope_footers` plans a read of local Parquet
+folders from the same memoized footers: the Spark schema each file yields
+(:func:`_footer`) is exactly the one Spark's own inference would return for
+it, or None. A caller passes a schema to ``spark.read.schema`` only when
+every file yields one and they agree; anything else is left to Spark's
+inference job. Like an estimate, the footer path may change cost, never
+rows or columns.
 """
 
 from __future__ import annotations
@@ -31,13 +40,29 @@ import functools
 import os
 import sys
 from typing import NamedTuple
+from urllib.parse import urlparse
 
+import pyarrow.types as pa_types
 from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+    _parse_datatype_json_string,
+)
 
 #: Leaf files above which footer probing costs more than the answer is
 #: worth (many files ⇒ the scan is parallel anyway).
 _MAX_LEAF_FILES = 10_000
+
+#: Uncompressed bytes of a map column's key leaf, summed over a scope's
+#: footers, above which the driver does not read the keys itself and a
+#: Spark pass finds them instead.
+_MAX_KEY_LEAF_BYTES = 32 << 20
 
 
 class LeafStats(NamedTuple):
@@ -50,18 +75,168 @@ class LeafStats(NamedTuple):
 #: schema as JSON; Spark's own schema inference returns that value.
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
+#: Arrow leaf types whose Spark mapping (``from_arrow_schema``) equals what
+#: Spark infers from the Parquet file pyarrow writes for them
+#: (``tests/test_sources.py`` checks each). Left out, because Spark infers
+#: another type or cannot read the file: naive timestamps (Spark infers
+#: ``timestamp_ntz``), nanosecond timestamps, unsigned ints, null, time and
+#: float16; fixed-size binary is left out untested.
+_PROVEN_LEAVES = (
+    pa_types.is_string,
+    pa_types.is_binary,
+    pa_types.is_boolean,
+    pa_types.is_int8,
+    pa_types.is_int16,
+    pa_types.is_int32,
+    pa_types.is_int64,
+    pa_types.is_float32,
+    pa_types.is_float64,
+    pa_types.is_date32,
+    pa_types.is_decimal128,
+)
+
+
+def _proven(t) -> bool:
+    """Every type in ``t`` is one whose Arrow→Spark mapping is proven."""
+    if pa_types.is_timestamp(t):
+        return t.tz is not None and t.unit != "ns"
+    if pa_types.is_list(t):
+        return _proven(t.value_type)
+    if pa_types.is_map(t):
+        return _proven(t.key_type) and _proven(t.item_type)
+    if pa_types.is_struct(t):
+        return all(_proven(f.type) for f in t)
+    return any(is_type(t) for is_type in _PROVEN_LEAVES)
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and map value nullable, as Spark
+    makes the schema it infers for a file source."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType)) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType))
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType))
+    return dt
+
+
+class Footer(NamedTuple):
+    rows: int
+    row_groups: int
+    schema: str | None  # Spark schema JSON; None when only Spark's inference knows it
+    spark_written: bool  # ``schema`` is the one Spark's writer stored
+    key_bytes: tuple[tuple[str, int], ...]  # (top-level map column, uncompressed bytes of its key leaf)
+
 
 @functools.lru_cache(maxsize=65_536)
-def _footer(path: str, size: int, mtime_ns: int) -> tuple[int, int, str | None]:
-    """(rows, row groups, Spark schema JSON or None) of one parquet footer —
-    the package's only footer read. ``size``/``mtime_ns`` are part of the
-    cache key so a rewritten file is read again. The schema is interned:
-    the files of one table share one copy in the cache."""
+def _footer(path: str, size: int, mtime_ns: int) -> Footer:
+    """One parquet footer — the package's only footer read. ``size`` and
+    ``mtime_ns`` are part of the cache key so a rewritten file is read
+    again.
+
+    The Spark schema is the one Spark's writer stored under its footer key
+    when there is one, since Spark's inference returns exactly that value.
+    Otherwise (a pyarrow-written file) it is ``from_arrow_schema`` of the
+    footer's Arrow schema with every field nullable, when every type in it
+    is proven to map as Spark infers it (:func:`_proven`), and None when
+    one is not. The schema is interned: the files of one table share one
+    copy in the cache. ``key_bytes`` sizes the key leaf
+    (``<col>.key_value.key``) of each top-level map column, summed over the
+    row groups, for a driver read of only the keys."""
     import pyarrow.parquet as pq
 
-    md = pq.ParquetFile(path).metadata
-    schema = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
-    return md.num_rows, md.num_row_groups, None if schema is None else sys.intern(schema.decode())
+    with pq.ParquetFile(path) as pf:
+        md = pf.metadata
+    stored = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is not None:
+        schema = stored.decode()
+    else:
+        arrow = md.schema.to_arrow_schema()
+        schema = _nullable(from_arrow_schema(arrow)).json() if all(_proven(f.type) for f in arrow) else None
+    key_bytes = []
+    for i in range(md.num_columns):
+        leaf = md.schema.column(i)
+        col = leaf.path.removesuffix(".key_value.key")
+        if col != leaf.path and "." not in col and leaf.max_repetition_level == 1:
+            size = sum(md.row_group(g).column(i).total_uncompressed_size for g in range(md.num_row_groups))
+            key_bytes.append((col, size))
+    return Footer(
+        md.num_rows,
+        md.num_row_groups,
+        None if schema is None else sys.intern(schema),
+        stored is not None,
+        tuple(key_bytes),
+    )
+
+
+def _hidden(name: str) -> bool:
+    """Spark's rule for the file and directory names a file listing skips
+    (``HadoopFSUtils.shouldFilterOutPathName``, without its exception for
+    the parquet summary files, which :func:`scope_footers` refuses)."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+class ScopeFooters(NamedTuple):
+    schemas: list[StructType]  # the distinct footer schemas
+    spark_written: bool  # every schema is the one Spark's writer stored
+    files: dict[str, Footer]  # data file -> its footer
+
+
+def scope_footers(spark: SparkSession, paths: list[str]) -> ScopeFooters | None:
+    """The footers of the data files Spark would list under ``paths`` — no
+    Spark job. None when only Spark's own inference is safe: a path that is
+    not a local directory, a subdirectory that is not a ``key=value``
+    partition directory, a parquet summary file, no file, more than
+    ``_MAX_LEAF_FILES`` files, a footer that is unreadable or has no schema,
+    a schema field named like a partition directory's key (Spark would move
+    it), or an Arrow-mapped binary column while
+    ``spark.sql.parquet.binaryAsString`` is on."""
+    files: dict[str, Footer] = {}
+    partition_keys: set[str] = set()
+    try:
+        for base in paths:
+            url = urlparse(base)
+            root = url.path if url.scheme == "file" else base
+            if url.scheme not in ("", "file") or not os.path.isdir(root):
+                return None
+            for dirpath, dirnames, filenames in os.walk(root, followlinks=True):
+                if any(n.startswith(("_metadata", "_common_metadata")) for n in dirnames + filenames):
+                    return None
+                dirnames[:] = [d for d in dirnames if not _hidden(d)]
+                if any("=" not in d for d in dirnames):
+                    return None
+                partition_keys.update(d.split("=", 1)[0].lower() for d in dirnames)
+                for name in filenames:
+                    if _hidden(name):
+                        continue
+                    if len(files) >= _MAX_LEAF_FILES:
+                        return None
+                    path = os.path.join(dirpath, name)
+                    st = os.stat(path)
+                    files[path] = _footer(path, st.st_size, st.st_mtime_ns)
+        found = {f.schema for f in files.values()}
+        if not files or None in found:
+            return None
+        schemas = [_parse_datatype_json_string(s) for s in found]
+    except (OSError, ValueError, TypeError, KeyError):  # unreadable file, footer or schema
+        return None
+    if not all(isinstance(s, StructType) for s in schemas):
+        return None
+    if any(f.name.lower() in partition_keys for s in schemas for f in s.fields):
+        return None
+    spark_written = all(f.spark_written for f in files.values())
+    if (
+        not spark_written
+        and any('"binary"' in s for s in found)
+        and spark.conf.get("spark.sql.parquet.binaryAsString", "false").lower() == "true"
+    ):
+        return None
+    return ScopeFooters(schemas, spark_written, files)
 
 
 def _leaf_files(df: DataFrame) -> list[str] | None:
@@ -114,9 +289,9 @@ def leaf_stats(df: DataFrame) -> LeafStats | None:
                 return None
             path = f[7:] if f.startswith("file://") else f
             st = os.stat(path)
-            r, g, _ = _footer(path, st.st_size, st.st_mtime_ns)
-            rows += r
-            row_groups += g
+            footer = _footer(path, st.st_size, st.st_mtime_ns)
+            rows += footer.rows
+            row_groups += footer.row_groups
             padded += st.st_size + open_cost
     except (OSError, ValueError, Py4JError):  # unreadable leaf: unknown is always safe
         return None

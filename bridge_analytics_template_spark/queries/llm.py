@@ -782,7 +782,7 @@ def llm_simjoin_prefix(spark, sf_dir):
     )
 
 
-@query("llm_semdedup", sql=semdedup_oracle)
+@query("llm_semdedup", sql=semdedup_oracle, order_by=("vec_id",))
 def llm_semdedup(spark, sf_dir):
     """Semantic dedup (SemDeDup, Abbas et al. 2023): k-means shards the
     embedding space, one applyInPandas GEMM block per cluster marks
@@ -792,11 +792,7 @@ def llm_semdedup(spark, sf_dir):
     from ..llm.semdedup import semdedup
 
     e = load(spark, sf_dir, "embeddings")
-    return (
-        semdedup(e, threshold=0.95, k=8, iterations=3)
-        .orderBy("vec_id")
-        .select("vec_id", "cluster", "keep")
-    )
+    return semdedup(e, threshold=0.95, k=8, iterations=3).select("vec_id", "cluster", "keep")
 
 
 # llm_dedup_minhash_ml was DEMOTED out of the registry (r8, per the r7

@@ -409,11 +409,11 @@ ORDER BY l_returnflag
 """
 
 
-@query("sql_pipe_revenue", sql=_PIPE_ORACLE)
+@query("sql_pipe_revenue", sql=_PIPE_ORACLE, order_by=("l_returnflag",))
 def sql_pipe_revenue(spark, sf_dir):
     """SQL pipe syntax (Spark 4 `|>`): the same logical plan as the ANSI
     form, written as a linear pipeline — scan |> filter |> aggregate |>
-    sort. Compiles through the identical Catalyst path (one partial+final
+    select. Compiles through the identical Catalyst path (one partial+final
     hash aggregate over the pushed-down scan filter)."""
     register_views(spark, sf_dir, tables=("lineitem",))
     return spark.sql(
@@ -424,7 +424,6 @@ def sql_pipe_revenue(spark, sf_dir):
                      CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)
                               * (100 - CAST(CAST(l_discount AS DECIMAL(3,2)) * 100 AS BIGINT))) AS DOUBLE) / 10000.0 AS revenue
            GROUP BY l_returnflag
-        |> ORDER BY l_returnflag
         |> SELECT l_returnflag, n_items, revenue
         """
     )

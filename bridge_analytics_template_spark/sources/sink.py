@@ -10,14 +10,10 @@ mechanism that keeps per-study queries from scanning 100 TB.
 
 from __future__ import annotations
 
-import os
-from urllib.parse import urlparse
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType, _parse_datatype_json_string
 
-from ..partitioning import _MAX_LEAF_FILES, _footer
+from ..partitioning import scope_footers
 
 
 def write_partitioned(
@@ -60,72 +56,28 @@ def write_partitioned_observed(
     return dict(obs.get)
 
 
-def _hidden(name: str) -> bool:
-    """Spark's rule for the file and directory names a file listing skips
-    (``HadoopFSUtils.shouldFilterOutPathName``, without its exception for
-    the parquet summary files, which :func:`_footer_schemas` refuses)."""
-    return (
-        (name.startswith("_") and "=" not in name)
-        or name.startswith(".")
-        or name.endswith("._COPYING_")
-    )
-
-
-def _footer_schemas(base_path: str) -> list[StructType] | None:
-    """The distinct Spark schemas in the footers of the data files Spark
-    would list under ``base_path``, or None when only Spark's own inference
-    is safe: a path that is not a local directory, a parquet summary file, no
-    file, more than ``_MAX_LEAF_FILES`` files, or a footer that is unreadable
-    or holds no Spark schema."""
-    url = urlparse(base_path)
-    root = url.path if url.scheme == "file" else base_path
-    if url.scheme not in ("", "file") or not os.path.isdir(root):
-        return None
-    found: set[str] = set()
-    n_files = 0
-    try:
-        for dirpath, dirnames, filenames in os.walk(root, followlinks=True):
-            if any(n.startswith(("_metadata", "_common_metadata")) for n in dirnames + filenames):
-                return None
-            dirnames[:] = [d for d in dirnames if not _hidden(d)]
-            for name in filenames:
-                if _hidden(name):
-                    continue
-                n_files += 1
-                if n_files > _MAX_LEAF_FILES:
-                    return None
-                path = os.path.join(dirpath, name)
-                st = os.stat(path)
-                schema = _footer(path, st.st_size, st.st_mtime_ns)[2]
-                if schema is None:
-                    return None
-                found.add(schema)
-        schemas = [_parse_datatype_json_string(s) for s in found]
-    except (OSError, ValueError, TypeError, KeyError):  # unreadable file, footer or schema
-        return None
-    if not schemas or not all(isinstance(s, StructType) for s in schemas):
-        return None
-    return schemas
-
-
 def read_partitioned(spark: SparkSession, base_path: str) -> DataFrame:
     """Read the layout back; Spark discovers the partition columns from the
     directory structure, so filters on them prune before any file IO.
 
-    The data schema comes from the files' footers when it can: Spark's
-    writer stores the schema it wrote under one footer key, and Spark's own
-    inference returns that value, so when every footer carries the same one
-    it is passed as the read schema and the inference job is skipped. When
-    the footers carry several (studies promoted with different annotation
-    keys), the read merges them, so every column appears and reads null
-    where a file lacks it; incompatible types raise, as Spark's merge does.
-    Any other layout is left to Spark's inference (:func:`_footer_schemas`)."""
-    schemas = _footer_schemas(base_path)
-    if schemas is None:
+    The data schema comes from the files' footers when it can
+    (``partitioning.scope_footers``): when every footer yields the same
+    Spark schema — the one Spark's writer stored, or the proven Arrow
+    mapping of a pyarrow-written file — it is passed as the read schema and
+    the inference job is skipped. When Spark-written footers carry several
+    (studies promoted with different annotation keys), the read merges
+    them, so every column appears and reads null where a file lacks it;
+    incompatible types raise, as Spark's merge does. Any other layout,
+    pyarrow-written files with more than one schema included, is left to
+    Spark's inference, which reads one file's schema."""
+    scope = scope_footers(spark, [base_path])
+    if scope is None:
         return spark.read.parquet(base_path)
-    if len(schemas) > 1:
+    if len(scope.schemas) == 1:
+        return spark.read.schema(scope.schemas[0]).parquet(base_path)
+    if scope.spark_written:
         return spark.read.option("mergeSchema", "true").parquet(base_path)
-    return spark.read.schema(schemas[0]).parquet(base_path)
+    return spark.read.parquet(base_path)
 
 
 def write_clustered(

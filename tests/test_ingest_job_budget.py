@@ -7,8 +7,9 @@ single-record lookup. A job here is a fixed cost per ingest (scheduling,
 planning, task launch) that the ~hundreds of rows it moves never amortize,
 so the count per step is pinned:
 
-* ``file_view``: 2 — the raw files' schema inference, and one observed
-  pass for the annotation keys;
+* ``file_view``: 0 — the schema comes from the raw files' footers and the
+  annotation keys from a driver read of the map's key leaf (1, the
+  observed key pass, when that leaf is over the read bound);
 * ``apply_coercion`` and ``quarantine``: 0 — pure projections;
 * ``write_partitioned``: 1;
 * ``read_partitioned``: 0 — the schema comes from the sink's footers;
@@ -21,6 +22,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from bridge_analytics_template_spark import partitioning
 from bridge_analytics_template_spark.coercion import apply_coercion
 from bridge_analytics_template_spark.lookups import filter_unique
 from bridge_analytics_template_spark.sources.fileview import file_view
@@ -28,7 +30,7 @@ from bridge_analytics_template_spark.sources.sink import read_partitioned, write
 from bridge_analytics_template_spark.validation import max_length, not_null, quarantine
 
 BUDGET = {
-    "file_view": 2,
+    "file_view": 0,
     "apply_coercion": 0,
     "quarantine": 0,
     "write_partitioned": 1,
@@ -63,7 +65,7 @@ def _raw_study(root, app, study, rows_per_file=(40, 120, 80)):
     return str(folder)
 
 
-def test_ingest_runs_four_jobs(spark, tmp_path, jobs_of):
+def test_ingest_runs_two_jobs(spark, tmp_path, jobs_of):
     app, study, key = "app0", "study000", "study000-001-00077"
     raw = _raw_study(tmp_path, app, study)
     sink = str(tmp_path / "sink")
@@ -83,3 +85,19 @@ def test_ingest_runs_four_jobs(spark, tmp_path, jobs_of):
     types = {f.name: f.dataType.simpleString() for f in back.schema.fields}
     assert (types["exportedOn"], types["isFirstAssessment"]) == ("timestamp", "boolean")
     assert back.filter(F.col("violated") != "").count() == 2
+
+
+def test_file_view_over_the_key_bound_runs_one_job(spark, tmp_path, jobs_of, monkeypatch):
+    """With the key leaf over the driver-read bound, the keys come from the
+    one observed Spark pass; the view is the same."""
+    from collections import Counter
+
+    raw = _raw_study(tmp_path, "app0", "study000")
+    read, jobs = jobs_of(lambda: file_view(spark, raw, annotation_col="annotations"))
+    assert jobs == 0
+    monkeypatch.setattr(partitioning, "_MAX_KEY_LEAF_BYTES", 0)
+    observed, jobs = jobs_of(lambda: file_view(spark, raw, annotation_col="annotations"))
+    assert jobs == 1
+    assert observed.columns == read.columns and "osName" in read.columns
+    assert observed.schema == read.schema
+    assert Counter(map(tuple, observed.collect())) == Counter(map(tuple, read.collect()))

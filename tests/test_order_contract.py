@@ -5,7 +5,8 @@ order the query declares (``query(..., order_by=...)``).
 Covered: the nine ``perfbench`` ``analytics`` ops, and the queries whose
 bodies share code that used to end in a sort — ``llm_hybrid_rrf`` composes
 ``llm_bm25_topk``; ``llm_dup_kcore``, ``graph_pagerank_ppm`` and
-``bridge_validate`` return a helper's frame that other callers use too.
+``bridge_validate`` return a helper's frame that other callers use too;
+``sql_pipe_revenue`` and ``llm_semdedup`` sorted under a final ``select``.
 """
 
 from __future__ import annotations
@@ -31,6 +32,8 @@ NAMES = [
     "llm_dup_kcore",
     "graph_pagerank_ppm",
     "bridge_validate",
+    "sql_pipe_revenue",
+    "llm_semdedup",
 ]
 
 
@@ -82,6 +85,7 @@ def test_ordered_parses_declared_specs(spark):
 def test_root_sort_detection(spark):
     df = spark.range(5)
     assert is_root_sort(df.orderBy("id")._jdf.queryExecution().analyzed())
+    assert is_root_sort(df.orderBy("id").select("id").alias("t")._jdf.queryExecution().analyzed())
     assert not is_root_sort(df.orderBy("id").limit(2)._jdf.queryExecution().analyzed())
     assert not is_root_sort(df.sortWithinPartitions("id")._jdf.queryExecution().analyzed())
     assert not is_root_sort(df._jdf.queryExecution().analyzed())

@@ -9,8 +9,10 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from bridge_analytics_template_spark import partitioning
 from bridge_analytics_template_spark.catalog import load
-from bridge_analytics_template_spark.sources.fileview import file_view, promote_annotations
+from bridge_analytics_template_spark.partitioning import scope_footers
+from bridge_analytics_template_spark.sources.fileview import METADATA_COLS, file_view, promote_annotations
 from bridge_analytics_template_spark.sources.sink import read_partitioned, write_partitioned
 
 
@@ -670,17 +672,40 @@ def _assert_fallback(spark, base, jobs_of):
     return back
 
 
-def test_read_partitioned_falls_back_without_spark_footers(spark, tmp_path, jobs_of):
-    import pyarrow as pa
+def _arrow_layout(base, tables):
+    """A pyarrow-written ``app=appA/study=s<i>`` layout, one file per table."""
     import pyarrow.parquet as pq
 
-    base = tmp_path / "arrow"
-    for study in ("s0", "s1"):
-        part = base / "app=appA" / f"study={study}"
+    for i, table in enumerate(tables):
+        part = base / "app=appA" / f"study=s{i}"
         part.mkdir(parents=True)
-        pq.write_table(pa.table({"id": [1, 2], "v": ["a", None]}), part / "part-0.parquet")
-    back = _assert_fallback(spark, str(base), jobs_of)
-    assert back.count() == 4
+        pq.write_table(table, part / "part-0.parquet")
+    return str(base)
+
+
+def test_read_partitioned_plans_pyarrow_footers(spark, tmp_path, jobs_of):
+    import pyarrow as pa
+
+    table = pa.table({"id": [1, 2], "v": ["a", None]})
+    base = _arrow_layout(tmp_path / "arrow", [table, table])
+    back, jobs = jobs_of(lambda: read_partitioned(spark, base))
+    assert jobs == 0  # the proven Arrow mapping of the one footer schema
+    assert back.schema.json() == spark.read.parquet(base).schema.json()
+    assert sorted(back.collect()) == sorted(spark.read.parquet(base).collect())
+
+
+def test_read_partitioned_falls_back_without_spark_footers(spark, tmp_path, jobs_of):
+    """pyarrow-written footers are not merged: with two schemas, or with a
+    data column named like a partition directory, Spark's inference
+    decides."""
+    import pyarrow as pa
+
+    mixed = [pa.table({"id": [1, 2], "v": ["a", None]}), pa.table({"id": [3], "w": [1.5]})]
+    back = _assert_fallback(spark, _arrow_layout(tmp_path / "mixed", mixed), jobs_of)
+    assert back.count() == 3
+    holds_app = [pa.table({"app": ["x", "y"], "id": [1, 2]})] * 2
+    back = _assert_fallback(spark, _arrow_layout(tmp_path / "holds_app", holds_app), jobs_of)
+    assert back.columns == ["app", "id", "study"]
 
 
 def test_read_partitioned_falls_back_on_summary_files(spark, tmp_path, jobs_of):
@@ -741,8 +766,6 @@ def file_view_two_pass(spark, scope, annotation_col):
     """``file_view`` before one-pass key discovery, kept as the reference:
     one ``withColumn`` per metadata column, then the key universe from a
     ``distinct().collect()`` of the exploded map keys."""
-    from bridge_analytics_template_spark.sources.fileview import METADATA_COLS
-
     df = spark.read.parquet(scope)
     for alias, src in METADATA_COLS.items():
         df = df.withColumn(alias, F.col(src))
@@ -763,7 +786,9 @@ _ANNOTATIONS = {
 
 
 @pytest.mark.parametrize("case", sorted(_ANNOTATIONS))
-def test_file_view_matches_two_pass_form(spark, tmp_path, case):
+def test_file_view_matches_two_pass_form(spark, tmp_path, case, monkeypatch):
+    """Both key paths: the driver read of the key leaf, and the observed
+    Spark pass when the key bound is forced to 0."""
     from collections import Counter
 
     import pyarrow as pa
@@ -780,8 +805,175 @@ def test_file_view_matches_two_pass_form(spark, tmp_path, case):
     scope.mkdir()
     pq.write_table(table, scope / "export-000.parquet")
     pq.write_table(table.slice(0, len(maps) // 2), scope / "export-001.parquet")
-    got = file_view(spark, str(scope), annotation_col="annotations")
     want = file_view_two_pass(spark, str(scope), "annotations")
-    assert got.columns == want.columns
-    assert got.schema == want.schema
-    assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
+    for bound in (partitioning._MAX_KEY_LEAF_BYTES, 0):
+        monkeypatch.setattr(partitioning, "_MAX_KEY_LEAF_BYTES", bound)
+        got = file_view(spark, str(scope), annotation_col="annotations")
+        assert got.columns == want.columns
+        assert got.schema == want.schema
+        assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
+
+
+# --- Footer-planned file view: schema parity and fallbacks -------------------
+
+
+def _arrow_column(name):
+    """One column of each type whose Arrow→Spark mapping the footer path
+    takes, nested ones included, with a null row."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+
+    values = {
+        "string": pa.array(["a", None]),
+        "binary": pa.array([b"\x00a", None]),
+        "boolean": pa.array([True, None]),
+        "int8": pa.array([1, None], pa.int8()),
+        "int16": pa.array([1, None], pa.int16()),
+        "int32": pa.array([1, None], pa.int32()),
+        "int64": pa.array([1, None], pa.int64()),
+        "float": pa.array([1.5, None], pa.float32()),
+        "double": pa.array([1.5, None], pa.float64()),
+        "date": pa.array([datetime.date(2024, 2, 29), None]),
+        "decimal_5_2": pa.array([decimal.Decimal("1.23"), None], pa.decimal128(5, 2)),
+        "decimal_15_2": pa.array([decimal.Decimal("1.23"), None], pa.decimal128(15, 2)),
+        "decimal_30_2": pa.array([decimal.Decimal("1.23"), None], pa.decimal128(30, 2)),
+        "timestamp_s_utc": pa.array([86_400, None], pa.timestamp("s", "UTC")),
+        "timestamp_ms_utc": pa.array([86_400_000, None], pa.timestamp("ms", "UTC")),
+        "timestamp_us_zoned": pa.array([86_400_000_000, None], pa.timestamp("us", "America/New_York")),
+        "list": pa.array([[1, None], None], pa.list_(pa.int64())),
+        "list_required_items": pa.array([[1], None], pa.list_(pa.field("item", pa.int64(), nullable=False))),
+        "struct": pa.array([{"x": 1, "y": "a"}, None], pa.struct([("x", pa.int64()), ("y", pa.string())])),
+        "map": pa.array([[("k", "v")], None], pa.map_(pa.string(), pa.string())),
+        "map_of_struct": pa.array(
+            [[("k", {"a": 1})], None], pa.map_(pa.string(), pa.struct([("a", pa.int64())]))
+        ),
+        "list_of_struct_of_list": pa.array(
+            [[{"a": [1]}], None], pa.list_(pa.struct([("a", pa.list_(pa.int64()))]))
+        ),
+    }
+    return values[name]
+
+
+_PROVEN_TYPES = [
+    "string", "binary", "boolean", "int8", "int16", "int32", "int64", "float", "double", "date",
+    "decimal_5_2", "decimal_15_2", "decimal_30_2", "timestamp_s_utc", "timestamp_ms_utc",
+    "timestamp_us_zoned", "list", "list_required_items", "struct", "map", "map_of_struct",
+    "list_of_struct_of_list",
+]
+
+
+def _inferred_view(spark, scope):
+    """``file_view`` as it reads without footers: Spark's own inference."""
+    df = spark.read.format("parquet").load([scope] if isinstance(scope, str) else scope)
+    return df.withColumns({alias: F.col(src) for alias, src in METADATA_COLS.items()})
+
+
+def _assert_same_view(got, want):
+    from collections import Counter
+
+    assert got.schema.json() == want.schema.json()
+    assert Counter(map(repr, got.collect())) == Counter(map(repr, want.collect()))
+
+
+@pytest.mark.parametrize("name", _PROVEN_TYPES)
+def test_footer_schema_equals_inference(spark, tmp_path, jobs_of, name):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    column = _arrow_column(name)
+    required = pa.field("required_id", pa.int64(), nullable=False)
+    table = pa.table([pa.array([1, 2]), column], schema=pa.schema([required, ("c", column.type)]))
+    for i in range(2):
+        pq.write_table(table, tmp_path / f"export-{i:03d}.parquet")
+    scope = str(tmp_path)
+    footers, jobs = jobs_of(lambda: scope_footers(spark, [scope]))
+    assert jobs == 0 and len(footers.schemas) == 1
+    assert footers.schemas[0].json() == spark.read.parquet(scope).schema.json()
+    view, jobs = jobs_of(lambda: file_view(spark, scope))
+    assert jobs == 0
+    _assert_same_view(view, _inferred_view(spark, scope))
+
+
+def _fallback_scope(spark, root, case):
+    """A raw folder for each scope the footer path must leave to Spark, or
+    must plan to exactly Spark's schema. Returns (scope, jobs file_view
+    runs)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root.mkdir()
+    ids = pa.array(["r0", "r1"])
+    annotations = pa.array([[("k", "v")], [("j", "w")]], pa.map_(pa.string(), pa.string()))
+    if case == "naive_timestamp":
+        pq.write_table(pa.table({"id": ids, "ts": pa.array([1, None], pa.timestamp("us"))}), root / "a.parquet")
+    elif case == "uint32":
+        pq.write_table(pa.table({"id": ids, "n": pa.array([1, None], pa.uint32())}), root / "a.parquet")
+    elif case == "different_schemas":
+        pq.write_table(pa.table({"id": ids, "annotations": annotations}), root / "a.parquet")
+        pq.write_table(pa.table({"id": ids, "extra": pa.array([1, 2])}), root / "b.parquet")
+    elif case == "single_file":
+        pq.write_table(pa.table({"id": ids, "annotations": annotations}), root / "a.parquet")
+        return str(root / "a.parquet"), 1
+    elif case == "success_and_crc":  # hidden names: skipped by Spark's listing and by the footer walk
+        pq.write_table(pa.table({"id": ids, "annotations": annotations}), root / "a.parquet")
+        (root / "_SUCCESS").write_bytes(b"")
+        (root / "._SUCCESS.crc").write_bytes(b"crc")
+        return str(root), 0
+    elif case == "spark_written":  # the footers' schema key is what Spark's inference returns
+        rows = [("r0", {"k": "v"}), ("r1", {"j": "w"})]
+        spark.createDataFrame(rows, "id string, annotations map<string,string>").write.mode("overwrite").parquet(str(root))
+        return str(root), 0
+    return str(root), 1
+
+
+_FALLBACKS = ["naive_timestamp", "uint32", "different_schemas", "single_file", "success_and_crc", "spark_written"]
+
+
+@pytest.mark.parametrize("case", _FALLBACKS)
+def test_file_view_keeps_spark_schema_outside_the_proven_set(spark, tmp_path, jobs_of, case):
+    scope, want_jobs = _fallback_scope(spark, tmp_path / "raw", case)
+    view, jobs = jobs_of(lambda: file_view(spark, scope))
+    assert jobs == want_jobs
+    _assert_same_view(view, _inferred_view(spark, scope))
+    if "annotations" in view.columns:
+        from collections import Counter
+
+        got = file_view(spark, scope, annotation_col="annotations")
+        want = file_view_two_pass(spark, scope, "annotations")
+        assert got.schema == want.schema
+        assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
+
+
+def test_file_view_reads_binary_as_string_when_configured(spark, tmp_path, jobs_of):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"b": pa.array([b"a", None])}), tmp_path / "export-000.parquet")
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        view, jobs = jobs_of(lambda: file_view(spark, str(tmp_path)))
+        assert jobs == 1  # Spark's inference, which reads the binary leaf as a string
+        _assert_same_view(view, _inferred_view(spark, str(tmp_path)))
+        assert view.schema["b"].dataType.simpleString() == "string"
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+
+
+@pytest.mark.parametrize("layout", ["empty", "plain_subdirectories"])
+def test_file_view_raises_spark_error_where_inference_fails(spark, tmp_path, layout):
+    """Spark lists no data file under a folder that is empty or holds its
+    files only in plain (not ``key=value``) subdirectories."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if layout == "plain_subdirectories":
+        for sub in ("a", "b"):
+            (tmp_path / sub).mkdir()
+            pq.write_table(pa.table({"id": ["r0"]}), tmp_path / sub / "export-000.parquet")
+    with pytest.raises(Exception) as want:
+        _inferred_view(spark, str(tmp_path))
+    with pytest.raises(type(want.value)) as got:
+        file_view(spark, str(tmp_path))
+    assert str(got.value) == str(want.value)

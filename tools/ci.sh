@@ -14,6 +14,9 @@ python tools/check_oracle.py
 # legitimately rotate into the window as `no_oracle` rows.
 python tools/check_oracle.py --first 50
 python -m pytest tests/ -q
+# The benchmark's own fault accounting: a planted raising op and a planted
+# wrong answer must each be counted as a failed op.
+python -m pytest perfbench/test_run.py -q
 python tools/plan_lint.py
 python tools/check_coverage.py
 python tools/check_dtypes.py

@@ -78,8 +78,13 @@ def unpartitioned_windows(plan: str) -> int:
 
 
 def is_root_sort(analyzed) -> bool:
-    """The analyzed plan's root is a global ``Sort``."""
-    return analyzed.nodeName() == "Sort" and getattr(analyzed, "global")()
+    """The analyzed plan's root, looking through ``Project`` and
+    ``SubqueryAlias`` nodes (a final ``select`` or alias), is a global
+    ``Sort``."""
+    node = analyzed
+    while node.nodeName() in ("Project", "SubqueryAlias"):
+        node = node.child()
+    return node.nodeName() == "Sort" and getattr(node, "global")()
 
 
 def main() -> int:
