@@ -11,9 +11,9 @@ from __future__ import annotations
 import os
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType
 
 TABLES = (
     "region",
@@ -129,14 +129,8 @@ def _dir_token(path: str) -> float:
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Plain ``spark.read.parquet`` so Catalyst gets
-    predicate pushdown / column pruning for free (SURVEY.md §4).
-
-    ``events.ts`` has shipped as either parquet TIMESTAMP(NANOS) (rides in
-    as long nanos under the legacy conf) or naive TIMESTAMP(MICROS)
-    (``isAdjustedToUTC=false`` → Spark ``timestamp_ntz``). Normalize both to
-    a session-zone (UTC) micro-precision ``timestamp`` — the same wall-clock
-    values DuckDB produces with ``CAST(ts AS TIMESTAMP)``.
-    """
+    predicate pushdown / column pruning for free (SURVEY.md §4); the events
+    table's ``ts`` is normalized by :func:`events_source`."""
     state = _SESSIONS.get(spark)
     if state is None:
         _ensure_session_defaults(spark)
@@ -153,16 +147,28 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        dt = df.schema["ts"].dataType
-        if isinstance(dt, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(dt, TimestampNTZType):
-            # Session TZ is pinned to UTC, so this cast keeps the wall clock.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        raw, ts = events_source(spark, table_path(sf_dir, name))
+        return raw.withColumn("ts", ts)
     return spark.read.parquet(table_path(sf_dir, name))
+
+
+def events_source(spark: SparkSession, path: str) -> tuple[DataFrame, Column]:
+    """The raw batch scan of the events table at ``path`` and the ``ts``
+    column that batch and streaming reads of it both select.
+
+    ``events.ts`` has shipped as either parquet TIMESTAMP(NANOS) (rides in
+    as long nanos under the legacy conf this sets) or naive
+    TIMESTAMP(MICROS) (``isAdjustedToUTC=false`` → Spark
+    ``timestamp_ntz``). Both become a session-zone (UTC) micro-precision
+    ``timestamp`` — the same wall-clock values DuckDB produces with
+    ``CAST(ts AS TIMESTAMP)``. The column refers to ``ts`` by name, so it
+    applies to a streaming read with the raw scan's schema."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = spark.read.parquet(path)
+    if isinstance(raw.schema["ts"].dataType, LongType):
+        return raw, F.timestamp_micros(F.expr("ts div 1000"))
+    # Session TZ is pinned to UTC, so this cast keeps the wall clock.
+    return raw, F.col("ts").cast("timestamp")
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..caching import track
 from ..functions.text import normalized_fingerprint, word_shingles, ws_tokens
+from ..operators import graph_local
 from ..partitioning import ensure_parallelism
 
 
@@ -415,7 +416,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    small_graph_edges: int = 2_000_000,
 ) -> DataFrame:
     """Cluster near-dup pairs into components: (node, cluster_id) where
     ``cluster_id`` is the minimum node id in the component — the canonical
@@ -441,10 +441,11 @@ def connected_components(
     ).select("e.u", "e.v")
     und = track(und.persist())
     # Adaptive small-graph path (the AQE philosophy applied to the graph
-    # op): when the whole edge set fits comfortably (bounded by the
-    # threshold — dedup edge sets at sf<=10 are a few hundred rows; even 1M
-    # pairs is ~32 MB) run union-find locally and skip the per-round join
-    # jobs entirely. Identical output (min-id component labels) by
+    # op): when the whole edge set fits comfortably (bounded by
+    # graph_local.SMALL_GRAPH_ARCS, read at call time so a test can force
+    # the distributed path — dedup edge sets at sf<=10 are a few hundred
+    # rows; even 1M pairs is ~32 MB) run union-find locally and skip the
+    # per-round join jobs entirely. Identical output (min-id component labels) by
     # construction; the distributed label propagation below remains the
     # path for corpus-scale edge sets.
     #
@@ -458,10 +459,11 @@ def connected_components(
     # object overhead — hundreds of MB transient near the bound — while
     # the Arrow path is two contiguous int64 buffers matching the stated
     # ~32 MB budget.
-    probe = und.limit(small_graph_edges + 1).toPandas()
+    max_arcs = graph_local.SMALL_GRAPH_ARCS
+    probe = und.limit(max_arcs + 1).toPandas()
     # both orientations: ≤1M input pairs. A null endpoint has no union-find
     # key, so its graph takes the distributed path, which keeps it.
-    if len(probe) <= small_graph_edges and not probe.isna().any(axis=None):
+    if len(probe) <= max_arcs and not probe.isna().any(axis=None):
         us = probe["u"].tolist()
         vs = probe["v"].tolist()
         parent: dict = {}

@@ -26,12 +26,16 @@ an exact count, or when their plan expands rows far past its scan so the
 cost is not planned off an under-count.
 
 Schema contract. :func:`scope_footers` plans a read of local Parquet
-folders from the same memoized footers: the Spark schema each file yields
-(:func:`_footer`) is exactly the one Spark's own inference would return for
-it, or None. A caller passes a schema to ``spark.read.schema`` only when
-every file yields one and they agree; anything else is left to Spark's
-inference job. Like an estimate, the footer path may change cost, never
-rows or columns.
+folders from the same memoized footers, with the schema Spark's inference
+would return computed by Spark's own code on the driver: a Spark-written
+file's stored schema as it is, and for any other file Spark's Parquet
+converter (:func:`_spark_schema`), run once per distinct Parquet schema on
+every call, under the session's SQL conf as it is at that call. The
+conversion is not memoized, since a conf such as ``nanosAsLong`` may change
+within a session. A caller passes a schema to ``spark.read.schema`` only
+when the converted schemas agree; anything else, a type the converter
+refuses included, is left to Spark's inference job. Like an estimate, the
+footer path may change cost, never rows or columns.
 """
 
 from __future__ import annotations
@@ -42,18 +46,10 @@ import sys
 from typing import NamedTuple
 from urllib.parse import urlparse
 
-import pyarrow.types as pa_types
 from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import from_arrow_schema
-from pyspark.sql.types import (
-    ArrayType,
-    DataType,
-    MapType,
-    StructField,
-    StructType,
-    _parse_datatype_json_string,
-)
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 #: Leaf files above which footer probing costs more than the answer is
 #: worth (many files ⇒ the scan is parallel anyway).
@@ -75,57 +71,12 @@ class LeafStats(NamedTuple):
 #: schema as JSON; Spark's own schema inference returns that value.
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
-#: Arrow leaf types whose Spark mapping (``from_arrow_schema``) equals what
-#: Spark infers from the Parquet file pyarrow writes for them
-#: (``tests/test_sources.py`` checks each). Left out, because Spark infers
-#: another type or cannot read the file: naive timestamps (Spark infers
-#: ``timestamp_ntz``), nanosecond timestamps, unsigned ints, null, time and
-#: float16; fixed-size binary is left out untested.
-_PROVEN_LEAVES = (
-    pa_types.is_string,
-    pa_types.is_binary,
-    pa_types.is_boolean,
-    pa_types.is_int8,
-    pa_types.is_int16,
-    pa_types.is_int32,
-    pa_types.is_int64,
-    pa_types.is_float32,
-    pa_types.is_float64,
-    pa_types.is_date32,
-    pa_types.is_decimal128,
-)
-
-
-def _proven(t) -> bool:
-    """Every type in ``t`` is one whose Arrow→Spark mapping is proven."""
-    if pa_types.is_timestamp(t):
-        return t.tz is not None and t.unit != "ns"
-    if pa_types.is_list(t):
-        return _proven(t.value_type)
-    if pa_types.is_map(t):
-        return _proven(t.key_type) and _proven(t.item_type)
-    if pa_types.is_struct(t):
-        return all(_proven(f.type) for f in t)
-    return any(is_type(t) for is_type in _PROVEN_LEAVES)
-
-
-def _nullable(dt: DataType) -> DataType:
-    """``dt`` with every field, element and map value nullable, as Spark
-    makes the schema it infers for a file source."""
-    if isinstance(dt, StructType):
-        return StructType([StructField(f.name, _nullable(f.dataType)) for f in dt.fields])
-    if isinstance(dt, ArrayType):
-        return ArrayType(_nullable(dt.elementType))
-    if isinstance(dt, MapType):
-        return MapType(_nullable(dt.keyType), _nullable(dt.valueType))
-    return dt
-
 
 class Footer(NamedTuple):
     rows: int
     row_groups: int
-    schema: str | None  # Spark schema JSON; None when only Spark's inference knows it
-    spark_written: bool  # ``schema`` is the one Spark's writer stored
+    spark_schema: str | None  # the schema JSON Spark's writer stored; None for another writer
+    parquet_schema: str  # the file's Parquet schema as text: files that share it convert alike
     key_bytes: tuple[tuple[str, int], ...]  # (top-level map column, uncompressed bytes of its key leaf)
 
 
@@ -133,14 +84,13 @@ class Footer(NamedTuple):
 def _footer(path: str, size: int, mtime_ns: int) -> Footer:
     """One parquet footer — the package's only footer read. ``size`` and
     ``mtime_ns`` are part of the cache key so a rewritten file is read
-    again.
+    again. Nothing in it depends on the session's conf.
 
-    The Spark schema is the one Spark's writer stored under its footer key
-    when there is one, since Spark's inference returns exactly that value.
-    Otherwise (a pyarrow-written file) it is ``from_arrow_schema`` of the
-    footer's Arrow schema with every field nullable, when every type in it
-    is proven to map as Spark infers it (:func:`_proven`), and None when
-    one is not. The schema is interned: the files of one table share one
+    ``spark_schema`` is the schema Spark's writer stored under its footer
+    key, which Spark's inference returns as it is. ``parquet_schema`` is
+    the file's Parquet schema as pyarrow prints it (names, repetitions,
+    physical and logical types); :func:`scope_footers` converts one file
+    per distinct value. Both are interned: the files of one table share one
     copy in the cache. ``key_bytes`` sizes the key leaf
     (``<col>.key_value.key``) of each top-level map column, summed over the
     row groups, for a driver read of only the keys."""
@@ -149,11 +99,6 @@ def _footer(path: str, size: int, mtime_ns: int) -> Footer:
     with pq.ParquetFile(path) as pf:
         md = pf.metadata
     stored = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
-    if stored is not None:
-        schema = stored.decode()
-    else:
-        arrow = md.schema.to_arrow_schema()
-        schema = _nullable(from_arrow_schema(arrow)).json() if all(_proven(f.type) for f in arrow) else None
     key_bytes = []
     for i in range(md.num_columns):
         leaf = md.schema.column(i)
@@ -164,10 +109,40 @@ def _footer(path: str, size: int, mtime_ns: int) -> Footer:
     return Footer(
         md.num_rows,
         md.num_row_groups,
-        None if schema is None else sys.intern(schema),
-        stored is not None,
+        None if stored is None else sys.intern(stored.decode()),
+        # str() opens with the object's address line; the schema follows it
+        sys.intern(str(md.schema).partition("\n")[2]),
         tuple(key_bytes),
     )
+
+
+@functools.lru_cache(maxsize=None)
+def _converter_classes(jvm) -> tuple:
+    """The JVM classes :func:`_spark_schema` calls, resolved once per
+    gateway: each name resolution is a py4j round trip."""
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    return (
+        jvm.org.apache.hadoop.fs.Path,
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile,
+        parquet.ParquetFooterReader,
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER,
+        jvm.org.apache.parquet.hadoop.Footer,
+        parquet.ParquetToSparkSchemaConverter,
+        parquet.ParquetFileFormat,
+    )
+
+
+def _spark_schema(spark: SparkSession, path: str) -> StructType:
+    """The Spark schema of the Parquet file at ``path``, by the call Spark's
+    inference task makes (``ParquetFileFormat.readSchemaFromFooter``), on
+    the driver and under the session's SQL conf as it is now
+    (``binaryAsString``, ``nanosAsLong`` and the like)."""
+    Path, InputFile, FooterReader, no_filter, JFooter, Converter, FileFormat = _converter_classes(spark._jvm)
+    hpath = Path(path)
+    meta = FooterReader.readFooter(InputFile.fromPath(hpath, spark._jsc.hadoopConfiguration()), no_filter)
+    converter = Converter(spark._jsparkSession.sessionState().conf())
+    schema = FileFormat.readSchemaFromFooter(JFooter(hpath, meta), converter).asNullable()
+    return _parse_datatype_json_string(schema.json())
 
 
 def _hidden(name: str) -> bool:
@@ -188,14 +163,15 @@ class ScopeFooters(NamedTuple):
 
 
 def scope_footers(spark: SparkSession, paths: list[str]) -> ScopeFooters | None:
-    """The footers of the data files Spark would list under ``paths`` — no
+    """The footers of the data files Spark would list under ``paths``, and
+    their distinct Spark schemas (see the module's schema contract) — no
     Spark job. None when only Spark's own inference is safe: a path that is
     not a local directory, a subdirectory that is not a ``key=value``
     partition directory, a parquet summary file, no file, more than
-    ``_MAX_LEAF_FILES`` files, a footer that is unreadable or has no schema,
-    a schema field named like a partition directory's key (Spark would move
-    it), or an Arrow-mapped binary column while
-    ``spark.sql.parquet.binaryAsString`` is on."""
+    ``_MAX_LEAF_FILES`` files, a footer or schema that is unreadable or
+    that Spark's converter refuses (an illegal type, or a converter API
+    this Spark lacks: its inference then raises its own error), or a schema
+    field named like a partition directory's key (Spark would move it)."""
     files: dict[str, Footer] = {}
     partition_keys: set[str] = set()
     try:
@@ -219,24 +195,21 @@ def scope_footers(spark: SparkSession, paths: list[str]) -> ScopeFooters | None:
                     path = os.path.join(dirpath, name)
                     st = os.stat(path)
                     files[path] = _footer(path, st.st_size, st.st_mtime_ns)
-        found = {f.schema for f in files.values()}
-        if not files or None in found:
+        if not files:
             return None
-        schemas = [_parse_datatype_json_string(s) for s in found]
-    except (OSError, ValueError, TypeError, KeyError):  # unreadable file, footer or schema
+        one_per_schema = {f.spark_schema or f.parquet_schema: (path, f.spark_schema) for path, f in files.items()}
+        found = [
+            _spark_schema(spark, path) if stored is None else _parse_datatype_json_string(stored)
+            for path, stored in one_per_schema.values()
+        ]
+    except (OSError, ValueError, TypeError, KeyError, Py4JError, PySparkException):
+        return None  # an unreadable file, footer or schema, or one the converter refuses
+    if not all(isinstance(s, StructType) for s in found):
         return None
-    if not all(isinstance(s, StructType) for s in schemas):
-        return None
+    schemas = list({s.json(): s for s in found}.values())
     if any(f.name.lower() in partition_keys for s in schemas for f in s.fields):
         return None
-    spark_written = all(f.spark_written for f in files.values())
-    if (
-        not spark_written
-        and any('"binary"' in s for s in found)
-        and spark.conf.get("spark.sql.parquet.binaryAsString", "false").lower() == "true"
-    ):
-        return None
-    return ScopeFooters(schemas, spark_written, files)
+    return ScopeFooters(schemas, all(f.spark_schema is not None for f in files.values()), files)
 
 
 def _leaf_files(df: DataFrame) -> list[str] | None:

@@ -6,6 +6,8 @@ verification driver.
 
 from __future__ import annotations
 
+import os
+
 from .registry import ORACLES, ORDERS, QUERIES, ordered, query  # noqa: F401
 
 # Import for side effect: each module registers its queries.
@@ -106,9 +108,13 @@ _WINDOW = [
 ]
 
 
+#: The official correctness ledgers at the root of this package's checkout.
+_LEDGER_GLOB = os.path.abspath(os.path.join(os.path.dirname(__file__), "..", "..", "CORRECTNESS_r*.json"))
+
+
 def _auto_window(
     window_size: int = 50,
-    ledger_glob: str = "/root/repo/CORRECTNESS_r*.json",
+    ledger_glob: str = _LEDGER_GLOB,
     min_ledgers: int = 3,
 ) -> list[str] | None:
     """Derive the check window from the accumulated official ledger.
@@ -124,7 +130,6 @@ def _auto_window(
     round exists."""
     import glob
     import json
-    import os
     import re
 
     ledgers = sorted(

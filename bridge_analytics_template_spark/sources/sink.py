@@ -62,9 +62,9 @@ def read_partitioned(spark: SparkSession, base_path: str) -> DataFrame:
 
     The data schema comes from the files' footers when it can
     (``partitioning.scope_footers``): when every footer yields the same
-    Spark schema — the one Spark's writer stored, or the proven Arrow
-    mapping of a pyarrow-written file — it is passed as the read schema and
-    the inference job is skipped. When Spark-written footers carry several
+    Spark schema — the one Spark's writer stored, or Spark's own conversion
+    of a pyarrow-written file's Parquet schema — it is passed as the read
+    schema and the inference job is skipped. When Spark-written footers carry several
     (studies promoted with different annotation keys), the read merges
     them, so every column appears and reads null where a file lacks it;
     incompatible types raise, as Spark's merge does. Any other layout,

@@ -19,9 +19,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-EVENTS_RAW_SCHEMA_NANOS = "event_id long, ts long, user_id long, event_type string, value double, props string"
-EVENTS_RAW_SCHEMA_NTZ = "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string"
-
 #: Footer row count of the table behind each source :func:`stream_events`
 #: built, keyed on the source's description in a query's progress (None:
 #: unknown).
@@ -45,18 +42,13 @@ def raise_if_read_nothing(q) -> None:
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental scan of the events table (file streaming source).
-
-    The fixture's ``ts`` has shipped as either TIMESTAMP(NANOS) (long nanos
-    under the legacy conf) or naive TIMESTAMP(MICROS) (``timestamp_ntz``);
-    probe the footer via a batch read (driver-side, metadata only) and
-    normalize to a session-zone timestamp, same as the batch path
-    (catalog.load)."""
+    """Incremental scan of the events table (file streaming source). Its
+    schema is the raw batch scan's (driver-side, metadata only), and its
+    ``ts`` is normalized to a session-zone timestamp by the same column as
+    the batch path (``catalog.events_source``)."""
     import os
 
-    from pyspark.sql.types import LongType
-
-    from ..catalog import _ensure_session_defaults
+    from ..catalog import _ensure_session_defaults, events_source
     from ..partitioning import estimated_scan_rows
 
     # Pin session defaults (UTC session zone above all): the ntz→timestamp
@@ -64,11 +56,9 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # caller that never touched catalog.load would get shifted clocks
     # relative to the batch path.
     _ensure_session_defaults(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     table = os.path.join(sf_dir, "events.parquet")
-    probe = spark.read.parquet(table)
-    nanos = isinstance(probe.schema["ts"].dataType, LongType)
-    reader = spark.readStream.schema(EVENTS_RAW_SCHEMA_NANOS if nanos else EVENTS_RAW_SCHEMA_NTZ).format("parquet")
+    probe, ts = events_source(spark, table)
+    reader = spark.readStream.schema(probe.schema).format("parquet")
     # The file streaming source lists a *directory*. A table stored as a
     # directory of part files is streamed from that directory; a table
     # stored as one file is streamed from its parent, scoped to the file by
@@ -82,9 +72,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         source = fs.makeQualified(jpath.getParent())
         raw = reader.option("pathGlobFilter", jpath.getName()).load(sf_dir)
     _SOURCE_ROWS[f"FileStreamSource[{source.toString()}]"] = estimated_scan_rows(probe)
-    if nanos:
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return raw.withColumn("ts", ts)
 
 
 def tumbling_counts(events: DataFrame, width: str = "10 minutes", watermark: str = "10 minutes") -> DataFrame:

@@ -47,14 +47,12 @@ def test_null_endpoint_fast_path_matches_distributed(spark, monkeypatch):
     assert fast == slow
 
 
-def test_connected_components_null_endpoint_matches_distributed(spark):
+def test_connected_components_null_endpoint_matches_distributed(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, None), (None, 6), (7, 8)], "doc_a long, doc_b long"
     )
     fast = [tuple(r) for r in connected_components(edges).orderBy("node").collect()]
-    slow = [
-        tuple(r)
-        for r in connected_components(edges, small_graph_edges=0).orderBy("node").collect()
-    ]
+    monkeypatch.setattr(graph_local, "SMALL_GRAPH_ARCS", 0)
+    slow = [tuple(r) for r in connected_components(edges).orderBy("node").collect()]
     spark.catalog.clearCache()
     assert fast == slow

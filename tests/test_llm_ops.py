@@ -619,10 +619,11 @@ def test_compression_ratio_matches_zlib(spark, sf_dir):
     )
 
 
-def test_connected_components_paths_agree(spark):
+def test_connected_components_paths_agree(spark, monkeypatch):
     """The adaptive small-graph (driver union-find) and distributed
     (min-label propagation) paths must produce identical labels."""
     from bridge_analytics_template_spark.llm.dedup import connected_components
+    from bridge_analytics_template_spark.operators import graph_local
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (9, 9), (7, 3), (10, 11), (11, 12), (12, 10)],
@@ -632,9 +633,10 @@ def test_connected_components_paths_agree(spark):
         (r["node"], r["cluster_id"])
         for r in connected_components(edges).collect()
     }
+    monkeypatch.setattr(graph_local, "SMALL_GRAPH_ARCS", 0)
     dist = {
         (r["node"], r["cluster_id"])
-        for r in connected_components(edges, small_graph_edges=0).collect()
+        for r in connected_components(edges).collect()
     }
     assert small == dist
     assert (3, 1) in small and (12, 10) in small and (6, 5) in small

@@ -190,6 +190,23 @@ def test_auto_window_rotation_rules(tmp_path):
     assert _auto_window(ledger_glob=str(tmp_path / "CORRECTNESS_r*.json"), min_ledgers=4) is None
 
 
+def test_auto_window_reads_its_own_checkout_ledgers():
+    """The default ledger glob lies at the root of the checkout the package
+    is imported from, so a second checkout ranks its window from its own
+    ledgers."""
+    import glob
+    import inspect
+    from pathlib import Path
+
+    import bridge_analytics_template_spark
+    from bridge_analytics_template_spark.queries import _LEDGER_GLOB, _auto_window
+
+    root = Path(bridge_analytics_template_spark.__file__).resolve().parents[1]
+    assert inspect.signature(_auto_window).parameters["ledger_glob"].default == _LEDGER_GLOB
+    assert Path(_LEDGER_GLOB).parent == root and Path(_LEDGER_GLOB).name == "CORRECTNESS_r*.json"
+    assert all(Path(p).parent == root for p in glob.glob(_LEDGER_GLOB))
+
+
 def test_auto_window_stale_rotation(tmp_path, monkeypatch):
     """Once every name has an official row, the window re-certifies STALE
     greens oldest-official-round first (oracled before rows-only on round

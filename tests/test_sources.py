@@ -689,7 +689,7 @@ def test_read_partitioned_plans_pyarrow_footers(spark, tmp_path, jobs_of):
     table = pa.table({"id": [1, 2], "v": ["a", None]})
     base = _arrow_layout(tmp_path / "arrow", [table, table])
     back, jobs = jobs_of(lambda: read_partitioned(spark, base))
-    assert jobs == 0  # the proven Arrow mapping of the one footer schema
+    assert jobs == 0  # Spark's converter on the one footer schema
     assert back.schema.json() == spark.read.parquet(base).schema.json()
     assert sorted(back.collect()) == sorted(spark.read.parquet(base).collect())
 
@@ -818,8 +818,8 @@ def test_file_view_matches_two_pass_form(spark, tmp_path, case, monkeypatch):
 
 
 def _arrow_column(name):
-    """One column of each type whose Arrow→Spark mapping the footer path
-    takes, nested ones included, with a null row."""
+    """One column of each type the footer path plans, nested ones
+    included, with a null row."""
     import datetime
     import decimal
 
@@ -828,11 +828,16 @@ def _arrow_column(name):
     values = {
         "string": pa.array(["a", None]),
         "binary": pa.array([b"\x00a", None]),
+        "fixed_size_binary": pa.array([b"\x00a", None], pa.binary(2)),
+        "large_string": pa.array(["a", None], pa.large_string()),
+        "null": pa.array([None, None], pa.null()),
         "boolean": pa.array([True, None]),
         "int8": pa.array([1, None], pa.int8()),
         "int16": pa.array([1, None], pa.int16()),
         "int32": pa.array([1, None], pa.int32()),
         "int64": pa.array([1, None], pa.int64()),
+        "uint32": pa.array([1, None], pa.uint32()),
+        "uint64": pa.array([2**64 - 1, None], pa.uint64()),
         "float": pa.array([1.5, None], pa.float32()),
         "double": pa.array([1.5, None], pa.float64()),
         "date": pa.array([datetime.date(2024, 2, 29), None]),
@@ -842,6 +847,7 @@ def _arrow_column(name):
         "timestamp_s_utc": pa.array([86_400, None], pa.timestamp("s", "UTC")),
         "timestamp_ms_utc": pa.array([86_400_000, None], pa.timestamp("ms", "UTC")),
         "timestamp_us_zoned": pa.array([86_400_000_000, None], pa.timestamp("us", "America/New_York")),
+        "naive_timestamp": pa.array([86_400_000_000, None], pa.timestamp("us")),
         "list": pa.array([[1, None], None], pa.list_(pa.int64())),
         "list_required_items": pa.array([[1], None], pa.list_(pa.field("item", pa.int64(), nullable=False))),
         "struct": pa.array([{"x": 1, "y": "a"}, None], pa.struct([("x", pa.int64()), ("y", pa.string())])),
@@ -857,10 +863,10 @@ def _arrow_column(name):
 
 
 _PROVEN_TYPES = [
-    "string", "binary", "boolean", "int8", "int16", "int32", "int64", "float", "double", "date",
-    "decimal_5_2", "decimal_15_2", "decimal_30_2", "timestamp_s_utc", "timestamp_ms_utc",
-    "timestamp_us_zoned", "list", "list_required_items", "struct", "map", "map_of_struct",
-    "list_of_struct_of_list",
+    "string", "binary", "fixed_size_binary", "large_string", "null", "boolean", "int8", "int16",
+    "int32", "int64", "uint32", "uint64", "float", "double", "date", "decimal_5_2", "decimal_15_2",
+    "decimal_30_2", "timestamp_s_utc", "timestamp_ms_utc", "timestamp_us_zoned", "naive_timestamp",
+    "list", "list_required_items", "struct", "map", "map_of_struct", "list_of_struct_of_list",
 ]
 
 
@@ -884,7 +890,8 @@ def test_footer_schema_equals_inference(spark, tmp_path, jobs_of, name):
 
     column = _arrow_column(name)
     required = pa.field("required_id", pa.int64(), nullable=False)
-    table = pa.table([pa.array([1, 2]), column], schema=pa.schema([required, ("c", column.type)]))
+    # a dot in a column's name is part of the name, not a struct field access
+    table = pa.table([pa.array([1, 2]), column], schema=pa.schema([required, ("c.d", column.type)]))
     for i in range(2):
         pq.write_table(table, tmp_path / f"export-{i:03d}.parquet")
     scope = str(tmp_path)
@@ -906,13 +913,13 @@ def _fallback_scope(spark, root, case):
     root.mkdir()
     ids = pa.array(["r0", "r1"])
     annotations = pa.array([[("k", "v")], [("j", "w")]], pa.map_(pa.string(), pa.string()))
-    if case == "naive_timestamp":
-        pq.write_table(pa.table({"id": ids, "ts": pa.array([1, None], pa.timestamp("us"))}), root / "a.parquet")
-    elif case == "uint32":
-        pq.write_table(pa.table({"id": ids, "n": pa.array([1, None], pa.uint32())}), root / "a.parquet")
-    elif case == "different_schemas":
+    if case == "different_schemas":
         pq.write_table(pa.table({"id": ids, "annotations": annotations}), root / "a.parquet")
         pq.write_table(pa.table({"id": ids, "extra": pa.array([1, 2])}), root / "b.parquet")
+    elif case == "converted_schemas_agree":  # two Parquet schemas, one Spark schema (n: long)
+        pq.write_table(pa.table({"id": ids, "n": pa.array([1, None], pa.uint32())}), root / "a.parquet")
+        pq.write_table(pa.table({"id": ids, "n": pa.array([2, 3], pa.int64())}), root / "b.parquet")
+        return str(root), 0
     elif case == "single_file":
         pq.write_table(pa.table({"id": ids, "annotations": annotations}), root / "a.parquet")
         return str(root / "a.parquet"), 1
@@ -928,11 +935,13 @@ def _fallback_scope(spark, root, case):
     return str(root), 1
 
 
-_FALLBACKS = ["naive_timestamp", "uint32", "different_schemas", "single_file", "success_and_crc", "spark_written"]
+_FALLBACKS = ["different_schemas", "converted_schemas_agree", "single_file", "success_and_crc", "spark_written"]
 
 
 @pytest.mark.parametrize("case", _FALLBACKS)
 def test_file_view_keeps_spark_schema_outside_the_proven_set(spark, tmp_path, jobs_of, case):
+    """Scopes whose footers do not give one Spark schema keep Spark's
+    inference; the others keep Spark's exact schema at 0 jobs."""
     scope, want_jobs = _fallback_scope(spark, tmp_path / "raw", case)
     view, jobs = jobs_of(lambda: file_view(spark, scope))
     assert jobs == want_jobs
@@ -947,18 +956,80 @@ def test_file_view_keeps_spark_schema_outside_the_proven_set(spark, tmp_path, jo
 
 
 def test_file_view_reads_binary_as_string_when_configured(spark, tmp_path, jobs_of):
+    """The conversion obeys the conf of the call; binary map keys, which
+    pyarrow reads as bytes, are found by Spark's pass instead."""
+    from collections import Counter
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pq.write_table(pa.table({"b": pa.array([b"a", None])}), tmp_path / "export-000.parquet")
+    ann = pa.array([[(b"k", b"v")], None], pa.map_(pa.binary(), pa.binary()))
+    pq.write_table(pa.table({"b": pa.array([b"a", None]), "ann": ann}), tmp_path / "export-000.parquet")
+    scope = str(tmp_path)
+    assert file_view(spark, scope).schema["b"].dataType.simpleString() == "binary"
     spark.conf.set("spark.sql.parquet.binaryAsString", "true")
     try:
-        view, jobs = jobs_of(lambda: file_view(spark, str(tmp_path)))
-        assert jobs == 1  # Spark's inference, which reads the binary leaf as a string
-        _assert_same_view(view, _inferred_view(spark, str(tmp_path)))
+        assert scope_footers(spark, [scope]).schemas[0].json() == spark.read.parquet(scope).schema.json()
+        view, jobs = jobs_of(lambda: file_view(spark, scope))
+        assert jobs == 0  # Spark's converter reads the binary leaf as a string
+        _assert_same_view(view, _inferred_view(spark, scope))
         assert view.schema["b"].dataType.simpleString() == "string"
+        got, jobs = jobs_of(lambda: file_view(spark, scope, annotation_col="ann"))
+        assert jobs == 1  # the observed key pass
+        want = file_view_two_pass(spark, scope, "ann")
+        assert got.schema == want.schema and "k" in got.columns
+        assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
     finally:
         spark.conf.unset("spark.sql.parquet.binaryAsString")
+
+
+def test_file_view_converts_under_the_current_conf(spark, tmp_path, jobs_of):
+    """One unchanged nanosecond file: Spark's inference error with
+    ``nanosAsLong`` off, a ``long`` column at 0 jobs with it on. No schema
+    converted under the other setting is reused."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = pa.array([86_400_000_000_123, None], pa.timestamp("ns", "UTC"))
+    pq.write_table(pa.table({"id": ["r0", "r1"], "ts": ts}), tmp_path / "export-000.parquet")
+    scope = str(tmp_path)
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(conf, None)
+    try:
+        for _ in range(2):
+            spark.conf.set(conf, "false")
+            with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL") as want:
+                _inferred_view(spark, scope)
+            with pytest.raises(type(want.value)) as got:
+                file_view(spark, scope)
+            assert str(got.value) == str(want.value)
+            spark.conf.set(conf, "true")
+            view, jobs = jobs_of(lambda: file_view(spark, scope))
+            assert jobs == 0
+            assert view.schema["ts"].dataType.simpleString() == "bigint"
+            _assert_same_view(view, _inferred_view(spark, scope))
+    finally:
+        if before is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, before)
+
+
+def test_file_view_infers_when_the_converter_fails(spark, tmp_path, jobs_of, monkeypatch):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from py4j.protocol import Py4JError
+
+    def refuse(spark, path):
+        raise Py4JError("converter unavailable")
+
+    pq.write_table(pa.table({"id": ["r0", "r1"], "n": [1, None]}), tmp_path / "export-000.parquet")
+    scope = str(tmp_path)
+    monkeypatch.setattr(partitioning, "_spark_schema", refuse)
+    assert scope_footers(spark, [scope]) is None
+    view, jobs = jobs_of(lambda: file_view(spark, scope))
+    assert jobs == 1  # Spark's inference job
+    _assert_same_view(view, _inferred_view(spark, scope))
 
 
 @pytest.mark.parametrize("layout", ["empty", "plain_subdirectories"])
