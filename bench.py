@@ -48,10 +48,15 @@ def main() -> None:
     spark = get_spark("bench")
 
     # Warm every headline plan on the smallest fixture first: whole-stage
-    # codegen JIT and Python worker spawn are per-plan-shape one-time costs
-    # (seconds for the 64-permutation dedup pipelines), so measuring without
-    # warm-up benchmarks the JIT, not the query. Steady state is what a
-    # long-running cluster job sees.
+    # codegen, the JIT and Python worker spawn cost seconds on a plan
+    # shape's first run (the 64-permutation dedup pipelines), so measuring
+    # without warm-up benchmarks the JIT, not the query. Steady state is
+    # what a long-running cluster job sees. Codegen is a one-time cost per
+    # plan shape only while the session's class cache holds the whole
+    # working set: this loop generates 341 classes (local[4]), and under
+    # Spark's default 100-entry cache a second pass of it recompiled 352
+    # (eviction within the pass included). get_spark sizes the cache
+    # (session.py).
     for name in HEADLINE:
         QUERIES[name](spark, "/root/testdata/sf0.001").count()
         # r11: also warm the noop-write path per plan shape — the added

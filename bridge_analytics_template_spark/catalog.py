@@ -15,6 +15,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from .partitioning import nanos_columns
+
 TABLES = (
     "region",
     "nation",
@@ -156,14 +158,22 @@ def events_source(spark: SparkSession, path: str) -> tuple[DataFrame, Column]:
     """The raw batch scan of the events table at ``path`` and the ``ts``
     column that batch and streaming reads of it both select.
 
-    ``events.ts`` has shipped as either parquet TIMESTAMP(NANOS) (rides in
-    as long nanos under the legacy conf this sets) or naive
+    ``events.ts`` has shipped as either parquet TIMESTAMP(NANOS) or naive
     TIMESTAMP(MICROS) (``isAdjustedToUTC=false`` → Spark
     ``timestamp_ntz``). Both become a session-zone (UTC) micro-precision
     ``timestamp`` — the same wall-clock values DuckDB produces with
     ``CAST(ts AS TIMESTAMP)``. The column refers to ``ts`` by name, so it
-    applies to a streaming read with the raw scan's schema."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    applies to a streaming read with the raw scan's schema.
+
+    Spark reads a nanosecond timestamp only under the session-wide
+    ``spark.sql.legacy.parquet.nanosAsLong`` conf (as long nanos), which
+    also retypes every later Parquet read of the session. So this sets the
+    conf only when the memoized footers show a nanosecond ``ts``, or
+    cannot be read on the driver; a micros ``ts`` leaves the conf as it
+    was."""
+    nanos = nanos_columns(path)
+    if nanos is None or "ts" in nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(path)
     if isinstance(raw.schema["ts"].dataType, LongType):
         return raw, F.timestamp_micros(F.expr("ts div 1000"))

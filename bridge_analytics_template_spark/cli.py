@@ -46,6 +46,7 @@ from pyspark.sql import SparkSession, functions as F
 from .coercion import apply_coercion
 from .lookups import get_named_entity
 from .plans.templates import load_resource_spec, rebind_ids
+from .session import get_spark
 from .sources.fileview import file_view
 from .sources.objectstore import claim_marker
 from .sources.sink import read_partitioned, write_partitioned
@@ -212,11 +213,7 @@ def provision(spark: SparkSession, args: argparse.Namespace) -> dict:
 
 def main(argv: list[str] | None = None) -> int:
     args = read_args(argv)
-    spark = (
-        SparkSession.builder.appName("bridge-analytics-provision")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark("bridge-analytics-provision")
     report = provision(spark, args)
     print(json.dumps(report, indent=2))
     return 0

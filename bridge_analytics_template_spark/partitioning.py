@@ -41,6 +41,7 @@ footer path may change cost, never rows or columns.
 from __future__ import annotations
 
 import functools
+import json
 import os
 import sys
 from typing import NamedTuple
@@ -78,6 +79,7 @@ class Footer(NamedTuple):
     spark_schema: str | None  # the schema JSON Spark's writer stored; None for another writer
     parquet_schema: str  # the file's Parquet schema as text: files that share it convert alike
     key_bytes: tuple[tuple[str, int], ...]  # (top-level map column, uncompressed bytes of its key leaf)
+    nanos_columns: tuple[str, ...]  # top-level columns stored as INT64 nanosecond timestamps
 
 
 @functools.lru_cache(maxsize=65_536)
@@ -93,19 +95,25 @@ def _footer(path: str, size: int, mtime_ns: int) -> Footer:
     per distinct value. Both are interned: the files of one table share one
     copy in the cache. ``key_bytes`` sizes the key leaf
     (``<col>.key_value.key``) of each top-level map column, summed over the
-    row groups, for a driver read of only the keys."""
+    row groups, for a driver read of only the keys. ``nanos_columns``
+    names the top-level columns Spark reads only under
+    ``spark.sql.legacy.parquet.nanosAsLong`` (as ``bigint``)."""
     import pyarrow.parquet as pq
 
     with pq.ParquetFile(path) as pf:
         md = pf.metadata
     stored = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
     key_bytes = []
+    nanos_columns = []
     for i in range(md.num_columns):
         leaf = md.schema.column(i)
         col = leaf.path.removesuffix(".key_value.key")
         if col != leaf.path and "." not in col and leaf.max_repetition_level == 1:
             size = sum(md.row_group(g).column(i).total_uncompressed_size for g in range(md.num_row_groups))
             key_bytes.append((col, size))
+        if leaf.path == leaf.name and leaf.logical_type.type == "TIMESTAMP":
+            if json.loads(leaf.logical_type.to_json())["timeUnit"] == "nanoseconds":
+                nanos_columns.append(leaf.name)
     return Footer(
         md.num_rows,
         md.num_row_groups,
@@ -113,6 +121,7 @@ def _footer(path: str, size: int, mtime_ns: int) -> Footer:
         # str() opens with the object's address line; the schema follows it
         sys.intern(str(md.schema).partition("\n")[2]),
         tuple(key_bytes),
+        tuple(nanos_columns),
     )
 
 
@@ -162,41 +171,52 @@ class ScopeFooters(NamedTuple):
     files: dict[str, Footer]  # data file -> its footer
 
 
+def _listed_footers(paths: list[str]) -> tuple[dict[str, Footer], set[str]] | None:
+    """The footers of the data files Spark would list under the local
+    directories ``paths``, and the keys of their partition directories.
+    None for a path that is not a local directory, a subdirectory that is
+    not a ``key=value`` partition directory, a parquet summary file, or
+    more than ``_MAX_LEAF_FILES`` files. An unreadable file or footer
+    raises (``OSError``, or pyarrow's ``ValueError``)."""
+    files: dict[str, Footer] = {}
+    partition_keys: set[str] = set()
+    for base in paths:
+        url = urlparse(base)
+        root = url.path if url.scheme == "file" else base
+        if url.scheme not in ("", "file") or not os.path.isdir(root):
+            return None
+        for dirpath, dirnames, filenames in os.walk(root, followlinks=True):
+            if any(n.startswith(("_metadata", "_common_metadata")) for n in dirnames + filenames):
+                return None
+            dirnames[:] = [d for d in dirnames if not _hidden(d)]
+            if any("=" not in d for d in dirnames):
+                return None
+            partition_keys.update(d.split("=", 1)[0].lower() for d in dirnames)
+            for name in filenames:
+                if _hidden(name):
+                    continue
+                if len(files) >= _MAX_LEAF_FILES:
+                    return None
+                path = os.path.join(dirpath, name)
+                st = os.stat(path)
+                files[path] = _footer(path, st.st_size, st.st_mtime_ns)
+    return files, partition_keys
+
+
 def scope_footers(spark: SparkSession, paths: list[str]) -> ScopeFooters | None:
     """The footers of the data files Spark would list under ``paths``, and
     their distinct Spark schemas (see the module's schema contract) — no
-    Spark job. None when only Spark's own inference is safe: a path that is
-    not a local directory, a subdirectory that is not a ``key=value``
-    partition directory, a parquet summary file, no file, more than
-    ``_MAX_LEAF_FILES`` files, a footer or schema that is unreadable or
-    that Spark's converter refuses (an illegal type, or a converter API
-    this Spark lacks: its inference then raises its own error), or a schema
-    field named like a partition directory's key (Spark would move it)."""
-    files: dict[str, Footer] = {}
-    partition_keys: set[str] = set()
+    Spark job. None when only Spark's own inference is safe: a path
+    :func:`_listed_footers` refuses, no file, a footer or schema that is
+    unreadable or that Spark's converter refuses (an illegal type, or a
+    converter API this Spark lacks: its inference then raises its own
+    error), or a schema field named like a partition directory's key
+    (Spark would move it)."""
     try:
-        for base in paths:
-            url = urlparse(base)
-            root = url.path if url.scheme == "file" else base
-            if url.scheme not in ("", "file") or not os.path.isdir(root):
-                return None
-            for dirpath, dirnames, filenames in os.walk(root, followlinks=True):
-                if any(n.startswith(("_metadata", "_common_metadata")) for n in dirnames + filenames):
-                    return None
-                dirnames[:] = [d for d in dirnames if not _hidden(d)]
-                if any("=" not in d for d in dirnames):
-                    return None
-                partition_keys.update(d.split("=", 1)[0].lower() for d in dirnames)
-                for name in filenames:
-                    if _hidden(name):
-                        continue
-                    if len(files) >= _MAX_LEAF_FILES:
-                        return None
-                    path = os.path.join(dirpath, name)
-                    st = os.stat(path)
-                    files[path] = _footer(path, st.st_size, st.st_mtime_ns)
-        if not files:
+        listed = _listed_footers(paths)
+        if listed is None or not listed[0]:
             return None
+        files, partition_keys = listed
         one_per_schema = {f.spark_schema or f.parquet_schema: (path, f.spark_schema) for path, f in files.items()}
         found = [
             _spark_schema(spark, path) if stored is None else _parse_datatype_json_string(stored)
@@ -210,6 +230,28 @@ def scope_footers(spark: SparkSession, paths: list[str]) -> ScopeFooters | None:
     if any(f.name.lower() in partition_keys for s in schemas for f in s.fields):
         return None
     return ScopeFooters(schemas, all(f.spark_schema is not None for f in files.values()), files)
+
+
+def nanos_columns(path: str) -> set[str] | None:
+    """The top-level columns that the local Parquet file ``path``, or any
+    data file Spark would list under the local directory ``path``, stores
+    as nanosecond timestamps, from the memoized footers — no Spark job.
+    None when that cannot be told on the driver: a path that is not
+    local, or one :func:`_listed_footers` refuses or cannot read."""
+    url = urlparse(path)
+    root = url.path if url.scheme == "file" else path
+    try:
+        if url.scheme in ("", "file") and os.path.isfile(root):
+            st = os.stat(root)
+            footers = [_footer(root, st.st_size, st.st_mtime_ns)]
+        else:
+            listed = _listed_footers([path])
+            if listed is None:
+                return None
+            footers = listed[0].values()
+    except (OSError, ValueError):
+        return None
+    return {c for f in footers for c in f.nanos_columns}
 
 
 def _leaf_files(df: DataFrame) -> list[str] | None:

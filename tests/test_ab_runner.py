@@ -3,6 +3,7 @@ per-phase job counts its job groups attribute."""
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
 
@@ -19,6 +20,15 @@ def one_count_build(spark, sf_dir):
     one-partition range (no exchange, so no separate map-stage job)."""
     n = spark.range(0, 100, 1, 1).count()
     return load(spark, sf_dir, "orders").limit(n)
+
+
+_SHAPES = itertools.count(1)
+
+
+def fresh_shape(spark, sf_dir):
+    """A plan whose generated code differs on every call: the literal is
+    inlined into the generated source, so no class is found in the cache."""
+    return spark.range(0, 10, 1, 1).selectExpr(f"id * {next(_SHAPES)} AS x")
 
 
 def orders_scan(spark, sf_dir):
@@ -55,3 +65,15 @@ def test_build_jobs_attributed_to_build_phase(spark, sf_dir):
     assert rec["build_jobs"] == [1]
     assert rec["exec_jobs"][0] >= 1
     assert "paired_delta_b_minus_a" not in out
+
+
+def test_compiles_counted_per_phase(spark, sf_dir):
+    """The warm-up compiles every generated class of a registered query, so
+    its timed passes find them all in the codegen cache; a plan whose code
+    differs on every call compiles in every pass."""
+    rec = measure(spark, ["pricing_summary"], 2, sf_dir, "noop")["pricing_summary"]
+    assert rec["build_compiles"] == [0, 0]
+    assert rec["exec_compiles"] == [0, 0]
+    spec = f"{__name__}:fresh_shape"
+    rec = measure(spark, [spec], 2, sf_dir, "noop")[spec]
+    assert all(n >= 1 for n in rec["exec_compiles"])

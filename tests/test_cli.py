@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 import os
 
+from bridge_analytics_template_spark import cli
 from bridge_analytics_template_spark.cli import provision, read_args
 
 
@@ -78,3 +79,26 @@ def test_provision_second_study_same_bucket(spark, sf_dir, tmp_path):
         assert report["n_rows"] == 25
     root = bucket / "bridge-downstream" / "app=demo-app"
     assert sorted(p.name for p in root.iterdir()) == ["study=s-a", "study=s-b"]
+
+
+def test_main_builds_its_session_through_get_spark(spark, sf_dir, tmp_path, monkeypatch, capsys):
+    """``main`` takes the engine's session defaults: it asks
+    ``session.get_spark`` for its session instead of a builder of its own."""
+    apps = []
+
+    def recorder(app_name="bridge-analytics-spark", cores=None):
+        apps.append(app_name)
+        return spark
+
+    monkeypatch.setattr(cli, "get_spark", recorder)
+    rc = cli.main(
+        [
+            "--parent-project", str(tmp_path / "project"),
+            "--bridge-raw-data", os.path.join(sf_dir, "nation.parquet"),
+            "--app", "demo-app",
+            "--study", "study-main",
+        ]
+    )
+    assert rc == 0
+    assert apps == ["bridge-analytics-provision"]
+    assert json.loads(capsys.readouterr().out)["n_rows"] == 25

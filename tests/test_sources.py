@@ -1015,6 +1015,55 @@ def test_file_view_converts_under_the_current_conf(spark, tmp_path, jobs_of):
             spark.conf.set(conf, before)
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+@pytest.fixture
+def nanos_as_long_unset(spark):
+    """The session's ``nanosAsLong`` conf unset for the test, restored after."""
+    before = spark.conf.get(_NANOS_AS_LONG, None)
+    spark.conf.unset(_NANOS_AS_LONG)
+    yield
+    if before is None:
+        spark.conf.unset(_NANOS_AS_LONG)
+    else:
+        spark.conf.set(_NANOS_AS_LONG, before)
+
+
+def test_events_source_leaves_the_conf_for_a_micros_ts(spark, sf_dir, nanos_as_long_unset):
+    """The fixtures' ``ts`` is ``timestamp[us]``: loading the events table
+    must not set ``nanosAsLong`` on the caller's session."""
+    from bridge_analytics_template_spark.catalog import events_source, table_path
+
+    raw, ts = events_source(spark, table_path(sf_dir, "events"))
+    assert raw.select(ts.alias("ts")).schema["ts"].dataType.simpleString() == "timestamp"
+    assert spark.conf.get(_NANOS_AS_LONG, None) is None
+
+
+@pytest.mark.parametrize("layout", ["file", "directory"])
+def test_events_source_reads_a_nanos_ts(spark, tmp_path, nanos_as_long_unset, layout):
+    """A nanosecond ``ts`` still sets the conf and normalizes to the same
+    micro-precision UTC instants, truncating the sub-microsecond digits."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bridge_analytics_template_spark.catalog import events_source
+
+    nanos = [86_400_000_000_123, 1_700_000_000_123_456_789, None]
+    table = pa.table({"event_id": [1, 2, 3], "ts": pa.array(nanos, pa.timestamp("ns", "UTC"))})
+    path = tmp_path / "events.parquet"
+    if layout == "file":
+        pq.write_table(table, path)
+    else:
+        path.mkdir()
+        pq.write_table(table.slice(0, 2), path / "part-0.parquet")
+        pq.write_table(table.slice(2), path / "part-1.parquet")
+    raw, ts = events_source(spark, str(path))
+    assert spark.conf.get(_NANOS_AS_LONG) == "true"
+    got = dict(raw.select("event_id", F.unix_micros(ts)).collect())
+    assert got == {1: 86_400_000_000, 2: 1_700_000_000_123_456, 3: None}
+
+
 def test_file_view_infers_when_the_converter_fails(spark, tmp_path, jobs_of, monkeypatch):
     import pyarrow as pa
     import pyarrow.parquet as pq

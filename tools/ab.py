@@ -29,7 +29,14 @@ regressions; last present at commit 51b8615):
   worker threads are counted only when the thread inherits the caller's
   local properties (``pyspark.util.inheritable_thread_target``, as the
   package's driver thread pools do); a plain thread's jobs carry no job
-  group and are not counted.
+  group and are not counted;
+* each phase also reports how many classes the JVM's code generator
+  compiled during it (``build_compiles``, ``exec_compiles``): the change
+  in Spark's ``CodegenMetrics.METRIC_COMPILATION_TIME`` count, which grows
+  by one per Janino compile and not on a codegen cache hit. A warmed
+  variant whose timed passes still compile has had its classes evicted
+  from the cache (``spark.sql.codegen.cache.maxEntries``). The count is
+  JVM-wide, so it includes any other session's compiles in that JVM.
 
 Usage::
 
@@ -46,8 +53,8 @@ shapes live in git history; measure one in place with e.g.::
 
 Prints one ``RESULT {json}`` line: per variant label, ``min`` and
 ``passes`` (build + action seconds per pass), plus per-pass ``build_s``,
-``exec_s``, ``build_jobs`` and ``exec_jobs``; with two variants, also
-``paired_delta_b_minus_a``.
+``exec_s``, ``build_jobs``, ``exec_jobs``, ``build_compiles`` and
+``exec_compiles``; with two variants, also ``paired_delta_b_minus_a``.
 """
 
 from __future__ import annotations
@@ -86,6 +93,11 @@ def _act(df, action: str) -> None:
         df.count()
 
 
+def codegen_compiles(spark) -> int:
+    """Classes compiled by the JVM's code generator so far (cache misses)."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def _timed_run(spark, fn, sf: str, action: str) -> dict:
     """One build + action, each phase under its own job group."""
     sc = spark.sparkContext
@@ -93,12 +105,15 @@ def _timed_run(spark, fn, sf: str, action: str) -> dict:
     build_group, exec_group = f"ab-build-{i}", f"ab-exec-{i}"
     try:
         sc.setJobGroup(build_group, "ab build")
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         df = fn(spark, sf)
         t1 = time.perf_counter()
+        c1 = codegen_compiles(spark)
         sc.setJobGroup(exec_group, "ab exec")
         _act(df, action)
         t2 = time.perf_counter()
+        c2 = codegen_compiles(spark)
     finally:
         sc.setJobGroup(None, None)
         spark.catalog.clearCache()
@@ -109,6 +124,8 @@ def _timed_run(spark, fn, sf: str, action: str) -> dict:
         "exec_s": round(t2 - t1, 3),
         "build_jobs": len(tracker.getJobIdsForGroup(build_group)),
         "exec_jobs": len(tracker.getJobIdsForGroup(exec_group)),
+        "build_compiles": c1 - c0,
+        "exec_compiles": c2 - c1,
     }
 
 
@@ -136,7 +153,7 @@ def measure(spark, specs: list[str], n: int, sf: str, action: str) -> dict:
     for lab, rs in runs.items():
         passes = [r["pass"] for r in rs]
         out[lab] = {"min": min(passes), "passes": passes}
-        for k in ("build_s", "exec_s", "build_jobs", "exec_jobs"):
+        for k in ("build_s", "exec_s", "build_jobs", "exec_jobs", "build_compiles", "exec_compiles"):
             out[lab][k] = [r[k] for r in rs]
     if len(labels) == 2:
         a, b = (out[lab]["passes"] for lab in labels)
