@@ -42,6 +42,40 @@ HEADLINE = [
 ]
 
 
+def _count(name: str, df) -> None:
+    # flagship's rows are its result: it is timed as a collect
+    if name == "flagship":
+        df.collect()
+    else:
+        df.count()
+
+
+def _noop(name: str, df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def sweep(spark, sf_dir: str, act, reps: int) -> dict[str, list[float]]:
+    """Time ``reps`` build + ``act`` runs of every headline query in each of
+    two passes: each query's raw seconds, in run order. The outer pass
+    absorbs minute-scale whole-box load windows (r4 measured the same
+    binary 24% slower suite-wide between two back-to-back runs), the inner
+    reps per-query transients (GC, page-cache churn, C2 still compiling).
+    The raw times are reported next to each min, so box-load noise can be
+    told from code drift without a rerun."""
+    passes: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    for _pass in range(2):
+        for name in HEADLINE:
+            for _ in range(reps):
+                t0 = time.time()
+                act(name, QUERIES[name](spark, sf_dir))
+                passes[name].append(round(time.time() - t0, 3))
+            # Queries are independent: drop persisted blocks so one query's
+            # cache (dedup shingle tables etc.) doesn't pressure the next
+            # query's executors — each measurement starts from a clean store.
+            spark.catalog.clearCache()
+    return passes
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -56,67 +90,30 @@ def main() -> None:
     # working set: this loop generates 341 classes (local[4]), and under
     # Spark's default 100-entry cache a second pass of it recompiled 352
     # (eviction within the pass included). get_spark sizes the cache
-    # (session.py).
+    # (session.py). The noop write is warmed too: the noop sweep otherwise
+    # times the sink's codegen on its first pass (measured ~1 s floors on
+    # trivial queries).
     for name in HEADLINE:
         QUERIES[name](spark, "/root/testdata/sf0.001").count()
-        # r11: also warm the noop-write path per plan shape — the added
-        # noop:<name> sweep below otherwise times the sink's codegen JIT
-        # on its first pass (measured ~1 s floors on trivial queries).
-        QUERIES[name](spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
+        _noop(name, QUERIES[name](spark, "/root/testdata/sf0.001"))
     spark.catalog.clearCache()
 
-    # Two full passes over the suite, 2 reps each, per-query min across all
-    # four measurements. The inner reps absorb per-query transients (GC,
-    # page-cache churn, C2 still compiling); the OUTER pass absorbs
-    # minute-scale whole-box load windows — r4 measured the same binary
-    # 24% slower suite-wide between two back-to-back runs on this shared
-    # box, which is exactly the signature that made r3's official numbers
-    # look like a code regression (the r3 regression probe, last present at
-    # commit 51b8615, measured wrapper clearCache == unwrapped within noise).
-    # Raw per-pass measurements are recorded alongside the min (VERDICT r4
-    # task 7): judges can separate box-load noise from code drift without
-    # rerunning — r3/r4 both saw 24% suite-wide swings between back-to-back
-    # identical runs on this shared box.
-    passes: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    for _pass in range(2):
-        for name in HEADLINE:
-            for _ in range(2):
-                t0 = time.time()
-                df = QUERIES[name](spark, sf_dir)
-                n = df.count() if name not in ("flagship",) else len(df.collect())
-                passes[name].append(round(time.time() - t0, 3))
-            # Queries are independent: drop persisted blocks so one query's
-            # cache (dedup shingle tables etc.) doesn't pressure the next
-            # query's executors — each measurement starts from a clean store.
-            spark.catalog.clearCache()
+    # Per-query min across 2 passes x 2 reps of count().
+    passes = sweep(spark, sf_dir, _count, 2)
     times = {k: min(v) for k, v in passes.items()}
     total = round(sum(times.values()), 3)
 
-    # --- r11 ADDITIVE instrumentation (VERDICT r10 next-round #2/#3) -----
     # The count() action lets Catalyst prune side-effect-free subtrees
     # (left-join elimination, unreferenced sorts), so several queries'
     # count-based seconds understate true cost (decontaminate 0.3 s count
-    # vs 4.2 s noop, r10 probe) AND every count-based number at sf0.1 is
-    # overhead-bound, so 8-core ≈ 32-core and core-scaling is invisible.
-    # Fix, additions only: a second timed sweep through the SAME queries
-    # under the noop sink (guide §1.4 — computes every column of every
+    # vs 4.2 s noop, r10 probe). A second sweep through the SAME queries
+    # times the noop sink (guide §1.4 — computes every column of every
     # row), reported as extra "noop:<name>" entries in `queries` (the
     # contract allows ADDING entries) plus a top-level "noop" map. The
-    # original 20 count-based entries, their passes, and "value" keep
-    # byte-identical semantics for cross-round comparison. "cpus" echoes
-    # the resolved local[n] so the scaling evidence is self-describing.
-    noop_passes: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    for _pass in range(2):
-        for name in HEADLINE:
-            spark.sparkContext.setJobDescription(f"noop:{name}")
-            t0 = time.time()
-            df = QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            noop_passes[name].append(round(time.time() - t0, 3))
-            spark.sparkContext.setJobDescription(None)
-            spark.catalog.clearCache()
+    # 20 count-based entries, their passes, and "value" keep their
+    # semantics for cross-round comparison. "cpus" echoes the resolved
+    # local[n] so the scaling evidence is self-describing.
+    noop_passes = sweep(spark, sf_dir, _noop, 1)
     noop_times = {k: min(v) for k, v in noop_passes.items()}
 
     # Work-dominated core-scaling probe (r11, VERDICT r10 next-round #2):
@@ -156,11 +153,9 @@ def main() -> None:
 
     probe_passes = []
     for _ in range(2):
-        spark.sparkContext.setJobDescription("scale_probe")
         t0 = time.time()
         scale_probe_df().write.format("noop").mode("overwrite").save()
         probe_passes.append(round(time.time() - t0, 3))
-        spark.sparkContext.setJobDescription(None)
 
     queries_out = dict(times)
     queries_out.update({f"noop:{k}": v for k, v in noop_times.items()})

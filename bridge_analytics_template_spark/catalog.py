@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from . import session
 from .partitioning import nanos_columns
 
 TABLES = (
@@ -68,27 +69,6 @@ def index_scratch_dir(
     return os.path.join(tempfile.gettempdir(), f"{name}_{token}")
 
 
-def _ensure_session_defaults(spark: SparkSession) -> None:
-    """Pin the runtime-settable confs correctness and plan quality depend
-    on, so queries behave identically under any caller's session (the
-    verification driver builds its own): UTC timestamps (oracle parity),
-    AQE with partition coalescing, and cores-sized shuffle parallelism
-    instead of the 200 default."""
-    conf = spark.conf
-    conf.set("spark.sql.session.timeZone", "UTC")
-    conf.set("spark.sql.adaptive.enabled", "true")
-    conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    try:
-        if int(conf.get("spark.sql.shuffle.partitions")) == 200:
-            conf.set(
-                "spark.sql.shuffle.partitions",
-                str(spark.sparkContext.defaultParallelism),
-            )
-    except Exception:
-        pass
-
-
 #: Session-scoped scan cache, keyed on the SparkSession OBJECT (a
 #: WeakKeyDictionary, so no id()-reuse aliasing): session → {(sf_dir,
 #: table, mtime_token) → DataFrame}. A DataFrame is an immutable logical
@@ -100,8 +80,8 @@ def _ensure_session_defaults(spark: SparkSession) -> None:
 #: Keyed on session identity, NOT applicationId (ADVICE r5): sibling
 #: sessions (``spark.newSession()``, or a second SparkSession over the same
 #: SparkContext) share one applicationId but have independent session confs
-#: and temp-view catalogs — an appId key would skip ``_ensure_session_
-#: defaults`` for the sibling (UTC/AQE unpinned → timestamp-correctness
+#: and temp-view catalogs — an appId key would skip ``session.apply``
+#: for the sibling (UTC/AQE unpinned → timestamp-correctness
 #: risk) and hand it DataFrames whose temp views land in the FIRST
 #: session's catalog. The cached DataFrames reference their session, so an
 #: entry lives as long as its session — exactly the intended lifetime.
@@ -135,7 +115,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     table's ``ts`` is normalized by :func:`events_source`."""
     state = _SESSIONS.get(spark)
     if state is None:
-        _ensure_session_defaults(spark)
+        session.apply(spark)
         state = {}
         _SESSIONS[spark] = state
     key = (sf_dir, name, _dir_token(table_path(sf_dir, name)))

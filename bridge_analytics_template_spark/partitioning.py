@@ -271,19 +271,6 @@ def _leaf_files(df: DataFrame) -> list[str] | None:
     return files
 
 
-def _parse_bytes(s: str) -> int:
-    """Spark byte-size conf strings: bare ints or with b/k/m/g suffixes
-    (``conf.get`` on an unset size conf returns e.g. ``"134217728b"``)."""
-    s = s.strip().lower()
-    units = {"pb": 1 << 50, "tb": 1 << 40, "gb": 1 << 30, "mb": 1 << 20,
-             "kb": 1 << 10, "p": 1 << 50, "t": 1 << 40, "g": 1 << 30,
-             "m": 1 << 20, "k": 1 << 10, "b": 1}
-    for suf, mult in units.items():
-        if s.endswith(suf):
-            return int(s[: -len(suf)]) * mult
-    return int(s)
-
-
 def leaf_stats(df: DataFrame) -> LeafStats | None:
     """Driver-side stats of the plan's parquet leaves — no Spark job.
 
@@ -295,9 +282,8 @@ def leaf_stats(df: DataFrame) -> LeafStats | None:
         files = _leaf_files(df)
         if files is None or len(files) > _MAX_LEAF_FILES:
             return None
-        conf = df.sparkSession.conf
-        max_part = _parse_bytes(conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20)))
-        open_cost = _parse_bytes(conf.get("spark.sql.files.openCostInBytes", str(4 << 20)))
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        max_part, open_cost = conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
         rows = row_groups = padded = 0
         for f in files:
             if not f.endswith(".parquet"):

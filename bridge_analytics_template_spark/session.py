@@ -33,6 +33,36 @@ import os
 from pyspark.sql import SparkSession
 
 
+def runtime_confs(cores: int) -> dict[str, str]:
+    """The engine's runtime-settable SQL defaults for ``cores`` task slots."""
+    return {
+        "spark.sql.shuffle.partitions": str(cores),
+        # A take's first job reads one wave of partitions, not one
+        # partition: a lookup's limit(2) guard must read every partition
+        # when exactly one row matches, which is then one job instead of a
+        # 1-partition job and a job over the rest. It still stops once the
+        # limit is met; only its first job is wider.
+        "spark.sql.limit.initialNumPartitions": str(cores),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+    }
+
+
+def apply(spark: SparkSession) -> None:
+    """Pin :func:`runtime_confs` on a session built elsewhere (a
+    verification driver's builder, a ``newSession()`` sibling), keeping a
+    shuffle width the caller changed from Spark's 200. Static confs stay
+    with :func:`get_spark`'s builder: a running session refuses them."""
+    conf = spark.conf
+    for key, value in runtime_confs(spark.sparkContext.defaultParallelism).items():
+        if key != "spark.sql.shuffle.partitions" or conf.get(key) == "200":
+            conf.set(key, value)
+
+
 def get_spark(app_name: str = "bridge-analytics-spark", cores: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
@@ -44,25 +74,13 @@ def get_spark(app_name: str = "bridge-analytics-spark", cores: int | None = None
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n))
-        # A take's first job reads one wave of partitions, not one
-        # partition: a lookup's limit(2) guard must read every partition
-        # when exactly one row matches, which is then one job instead of a
-        # 1-partition job and a job over the rest. It still stops once the
-        # limit is met; only its first job is wider.
-        .config("spark.sql.limit.initialNumPartitions", str(n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(map=runtime_confs(n))
         # Debug-only call-site capture costs 3-4 extra py4j round trips per
         # DataFrame method — measured 0.4-0.8 s of pure driver latency on
         # plan-heavy queries (the dedup cascade builds ~700 jvm calls).
         # Production clusters run with it off; errors still carry the full
         # Python traceback.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.sql.parquet.filterPushdown", "true")
         # Static: sized to the measured working set (module docstring).
         .config("spark.sql.codegen.cache.maxEntries", "512")
         .config("spark.ui.enabled", "false")

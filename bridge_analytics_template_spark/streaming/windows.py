@@ -48,14 +48,15 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch path (``catalog.events_source``)."""
     import os
 
-    from ..catalog import _ensure_session_defaults, events_source
+    from .. import session
+    from ..catalog import events_source
     from ..partitioning import estimated_scan_rows
 
     # Pin session defaults (UTC session zone above all): the ntz→timestamp
     # cast below renders wall clocks in the SESSION zone — without this, a
     # caller that never touched catalog.load would get shifted clocks
     # relative to the batch path.
-    _ensure_session_defaults(spark)
+    session.apply(spark)
     table = os.path.join(sf_dir, "events.parquet")
     probe, ts = events_source(spark, table)
     reader = spark.readStream.schema(probe.schema).format("parquet")

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from bridge_analytics_template_spark.catalog import load
 from bridge_analytics_template_spark.lookups import (
     LookupError0,
     LookupErrorMany,
@@ -14,6 +15,7 @@ from bridge_analytics_template_spark.lookups import (
     get_named_entity,
     get_scoped_view,
 )
+from bridge_analytics_template_spark.session import runtime_confs
 
 
 @pytest.fixture(scope="module")
@@ -71,3 +73,21 @@ def test_one_match_scans_every_partition_in_one_job(spark, jobs_of):
         filter_unique(df, F.col("id").isin(0, 399))  # partitions 0 and 3
     with pytest.raises(LookupError0):
         filter_unique(df, F.col("id") == 400)
+
+
+def test_first_load_restores_runtime_defaults_on_a_sibling(spark, sf_dir, jobs_of):
+    """A session built without ``get_spark``'s builder, here a sibling with
+    every runtime default unset, gets them all back from its first
+    ``catalog.load``; until then the one-match lookup takes more than one
+    job, since the first take reads a single partition."""
+    want = runtime_confs(spark.sparkContext.defaultParallelism)
+    sib = spark.newSession()
+    for key in want:
+        sib.conf.unset(key)
+    df = sib.range(0, 400, 1, 4)
+    assert jobs_of(lambda: filter_unique(df, F.col("id") == 399))[1] > 1
+    load(sib, sf_dir, "region")
+    assert {key: sib.conf.get(key) for key in want} == want
+    row, jobs = jobs_of(lambda: filter_unique(df, F.col("id") == 399))
+    assert row["id"] == 399
+    assert jobs == 1

@@ -512,7 +512,7 @@ def test_ensure_parallelism_row_group_aware(spark, tmp_path):
     assert leaf_stats(spark.read.csv(csv)) is None
 
 
-def test_ensure_parallelism_bin_packed_tiny_files(spark, tmp_path):
+def test_ensure_parallelism_bin_packed_tiny_files(spark, tmp_path, sql_conf):
     """Many tiny files do NOT mean many scan partitions: Spark bin-packs
     small leaves (maxPartitionBytes/openCostInBytes), so len(files) >=
     target must not early-return (ADVICE r5). 64 one-row files pack into
@@ -520,11 +520,7 @@ def test_ensure_parallelism_bin_packed_tiny_files(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from bridge_analytics_template_spark.partitioning import (
-        _parse_bytes,
-        ensure_parallelism,
-        leaf_stats,
-    )
+    from bridge_analytics_template_spark.partitioning import ensure_parallelism, leaf_stats
 
     d = tmp_path / "tiny"
     d.mkdir()
@@ -541,9 +537,13 @@ def test_ensure_parallelism_bin_packed_tiny_files(spark, tmp_path):
     widened = ensure_parallelism(df, min_partitions=target)
     assert widened.rdd.getNumPartitions() >= target
 
-    assert _parse_bytes("134217728b") == 128 << 20
-    assert _parse_bytes("4m") == 4 << 20
-    assert _parse_bytes("1024") == 1024
+    # The sizes are Spark's own reading of the confs, units and all.
+    def packed(max_part, open_cost):
+        sql_conf("spark.sql.files.maxPartitionBytes", max_part)
+        sql_conf("spark.sql.files.openCostInBytes", open_cost)
+        return leaf_stats(df).partitions
+
+    assert packed("64kb", "1m") == packed("65536", "1048576") != est
 
 
 def test_asof_nearest_single_shuffle_two_sorts(spark, sf_dir):

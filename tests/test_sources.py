@@ -338,7 +338,7 @@ def test_catalog_sibling_session_gets_own_defaults_and_views(spark):
     """ADVICE r5 (medium): spark.newSession() shares the applicationId but
     has independent confs and a separate temp-view catalog. The scan cache
     must key on SESSION IDENTITY: the sibling gets its own
-    _ensure_session_defaults (UTC pinned) and register_views() must land
+    session.apply (UTC pinned) and register_views() must land
     views in the SIBLING's catalog, visible to its spark.sql."""
     from bridge_analytics_template_spark.catalog import load, register_views
 
@@ -955,7 +955,7 @@ def test_file_view_keeps_spark_schema_outside_the_proven_set(spark, tmp_path, jo
         assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
 
 
-def test_file_view_reads_binary_as_string_when_configured(spark, tmp_path, jobs_of):
+def test_file_view_reads_binary_as_string_when_configured(spark, tmp_path, jobs_of, sql_conf):
     """The conversion obeys the conf of the call; binary map keys, which
     pyarrow reads as bytes, are found by Spark's pass instead."""
     from collections import Counter
@@ -967,23 +967,23 @@ def test_file_view_reads_binary_as_string_when_configured(spark, tmp_path, jobs_
     pq.write_table(pa.table({"b": pa.array([b"a", None]), "ann": ann}), tmp_path / "export-000.parquet")
     scope = str(tmp_path)
     assert file_view(spark, scope).schema["b"].dataType.simpleString() == "binary"
-    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
-    try:
-        assert scope_footers(spark, [scope]).schemas[0].json() == spark.read.parquet(scope).schema.json()
-        view, jobs = jobs_of(lambda: file_view(spark, scope))
-        assert jobs == 0  # Spark's converter reads the binary leaf as a string
-        _assert_same_view(view, _inferred_view(spark, scope))
-        assert view.schema["b"].dataType.simpleString() == "string"
-        got, jobs = jobs_of(lambda: file_view(spark, scope, annotation_col="ann"))
-        assert jobs == 1  # the observed key pass
-        want = file_view_two_pass(spark, scope, "ann")
-        assert got.schema == want.schema and "k" in got.columns
-        assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
-    finally:
-        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    sql_conf("spark.sql.parquet.binaryAsString", "true")
+    assert scope_footers(spark, [scope]).schemas[0].json() == spark.read.parquet(scope).schema.json()
+    view, jobs = jobs_of(lambda: file_view(spark, scope))
+    assert jobs == 0  # Spark's converter reads the binary leaf as a string
+    _assert_same_view(view, _inferred_view(spark, scope))
+    assert view.schema["b"].dataType.simpleString() == "string"
+    got, jobs = jobs_of(lambda: file_view(spark, scope, annotation_col="ann"))
+    assert jobs == 1  # the observed key pass
+    want = file_view_two_pass(spark, scope, "ann")
+    assert got.schema == want.schema and "k" in got.columns
+    assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
 
 
-def test_file_view_converts_under_the_current_conf(spark, tmp_path, jobs_of):
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def test_file_view_converts_under_the_current_conf(spark, tmp_path, jobs_of, sql_conf):
     """One unchanged nanosecond file: Spark's inference error with
     ``nanosAsLong`` off, a ``long`` column at 0 jobs with it on. No schema
     converted under the other setting is reused."""
@@ -993,55 +993,33 @@ def test_file_view_converts_under_the_current_conf(spark, tmp_path, jobs_of):
     ts = pa.array([86_400_000_000_123, None], pa.timestamp("ns", "UTC"))
     pq.write_table(pa.table({"id": ["r0", "r1"], "ts": ts}), tmp_path / "export-000.parquet")
     scope = str(tmp_path)
-    conf = "spark.sql.legacy.parquet.nanosAsLong"
-    before = spark.conf.get(conf, None)
-    try:
-        for _ in range(2):
-            spark.conf.set(conf, "false")
-            with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL") as want:
-                _inferred_view(spark, scope)
-            with pytest.raises(type(want.value)) as got:
-                file_view(spark, scope)
-            assert str(got.value) == str(want.value)
-            spark.conf.set(conf, "true")
-            view, jobs = jobs_of(lambda: file_view(spark, scope))
-            assert jobs == 0
-            assert view.schema["ts"].dataType.simpleString() == "bigint"
-            _assert_same_view(view, _inferred_view(spark, scope))
-    finally:
-        if before is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, before)
+    for _ in range(2):
+        sql_conf(_NANOS_AS_LONG, "false")
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL") as want:
+            _inferred_view(spark, scope)
+        with pytest.raises(type(want.value)) as got:
+            file_view(spark, scope)
+        assert str(got.value) == str(want.value)
+        sql_conf(_NANOS_AS_LONG, "true")
+        view, jobs = jobs_of(lambda: file_view(spark, scope))
+        assert jobs == 0
+        assert view.schema["ts"].dataType.simpleString() == "bigint"
+        _assert_same_view(view, _inferred_view(spark, scope))
 
 
-_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
-
-
-@pytest.fixture
-def nanos_as_long_unset(spark):
-    """The session's ``nanosAsLong`` conf unset for the test, restored after."""
-    before = spark.conf.get(_NANOS_AS_LONG, None)
-    spark.conf.unset(_NANOS_AS_LONG)
-    yield
-    if before is None:
-        spark.conf.unset(_NANOS_AS_LONG)
-    else:
-        spark.conf.set(_NANOS_AS_LONG, before)
-
-
-def test_events_source_leaves_the_conf_for_a_micros_ts(spark, sf_dir, nanos_as_long_unset):
+def test_events_source_leaves_the_conf_for_a_micros_ts(spark, sf_dir, sql_conf):
     """The fixtures' ``ts`` is ``timestamp[us]``: loading the events table
     must not set ``nanosAsLong`` on the caller's session."""
     from bridge_analytics_template_spark.catalog import events_source, table_path
 
+    sql_conf(_NANOS_AS_LONG, None)
     raw, ts = events_source(spark, table_path(sf_dir, "events"))
     assert raw.select(ts.alias("ts")).schema["ts"].dataType.simpleString() == "timestamp"
     assert spark.conf.get(_NANOS_AS_LONG, None) is None
 
 
 @pytest.mark.parametrize("layout", ["file", "directory"])
-def test_events_source_reads_a_nanos_ts(spark, tmp_path, nanos_as_long_unset, layout):
+def test_events_source_reads_a_nanos_ts(spark, tmp_path, sql_conf, layout):
     """A nanosecond ``ts`` still sets the conf and normalizes to the same
     micro-precision UTC instants, truncating the sub-microsecond digits."""
     import pyarrow as pa
@@ -1058,6 +1036,7 @@ def test_events_source_reads_a_nanos_ts(spark, tmp_path, nanos_as_long_unset, la
         path.mkdir()
         pq.write_table(table.slice(0, 2), path / "part-0.parquet")
         pq.write_table(table.slice(2), path / "part-1.parquet")
+    sql_conf(_NANOS_AS_LONG, None)
     raw, ts = events_source(spark, str(path))
     assert spark.conf.get(_NANOS_AS_LONG) == "true"
     got = dict(raw.select("event_id", F.unix_micros(ts)).collect())

@@ -139,7 +139,7 @@ def test_stream_stream_join_equals_batch(spark, sf_dir):
     assert streamed == batch
 
 
-def test_checkpoint_resume_processes_only_new_files(spark, sf_dir, tmp_path):
+def test_checkpoint_resume_processes_only_new_files(spark, sf_dir, tmp_path, sql_conf):
     """Restarting an availableNow stream with the same checkpoint must pick
     up exactly the files added since the last run — the incremental-ingest
     contract that makes per-export batch triggers cheap."""
@@ -156,7 +156,7 @@ def test_checkpoint_resume_processes_only_new_files(spark, sf_dir, tmp_path):
     # Subset schema: only the projected columns, so the test is agnostic to
     # the fixture's ts physical type (nanos-long vs ntz-micros).
     schema = "event_id long, user_id long"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    sql_conf("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def run():
         stream = (

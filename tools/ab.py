@@ -22,14 +22,18 @@ regressions; last present at commit 51b8615):
   if the sign of (B - A) is stable across passes the difference is code,
   if it flips it is noise;
 * every timed run splits into a build (the variant's call, which returns
-  the DataFrame) and an exec (the timed action), each under its own Spark
-  job group, so a pass also reports how long the build took and how many
-  jobs each phase ran. A build job re-executes its whole upstream
-  lineage before the action starts. Jobs a variant starts on its own
-  worker threads are counted only when the thread inherits the caller's
-  local properties (``pyspark.util.inheritable_thread_target``, as the
-  package's driver thread pools do); a plain thread's jobs carry no job
-  group and are not counted;
+  the DataFrame) and an exec (the timed action), each a span of the
+  benchmark's tracer (``perfbench/layers.py``), which times it under a
+  Spark job group of its own and counts its jobs; a span leaves its group
+  set, so each run clears it. A build job re-executes its whole upstream
+  lineage. Jobs a variant starts on its own worker threads are counted
+  only when the thread inherits the caller's local properties
+  (``pyspark.util.inheritable_thread_target``, as the package's driver
+  thread pools do);
+* the tracer also reports the stages both phases ran: ``stages`` (not the
+  skipped ones), ``one_task_stages`` and their ``spill_bytes``, and the
+  driver executor's ``task_s`` and ``shuffle_write_bytes``, JVM-wide like
+  the compile count below;
 * each phase also reports how many classes the JVM's code generator
   compiled during it (``build_compiles``, ``exec_compiles``): the change
   in Spark's ``CodegenMetrics.METRIC_COMPILATION_TIME`` count, which grows
@@ -53,27 +57,26 @@ shapes live in git history; measure one in place with e.g.::
 
 Prints one ``RESULT {json}`` line: per variant label, ``min`` and
 ``passes`` (build + action seconds per pass), plus per-pass ``build_s``,
-``exec_s``, ``build_jobs``, ``exec_jobs``, ``build_compiles`` and
-``exec_compiles``; with two variants, also ``paired_delta_b_minus_a``.
+``exec_s``, ``build_jobs``, ``exec_jobs``, ``build_compiles``,
+``exec_compiles``, ``stages``, ``one_task_stages``, ``task_s``,
+``spill_bytes`` and ``shuffle_write_bytes``; with two variants, also
+``paired_delta_b_minus_a``.
 """
 
 from __future__ import annotations
 
 import argparse
 import importlib
-import itertools
 import json
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from bridge_analytics_template_spark.queries import QUERIES  # noqa: E402
 from bridge_analytics_template_spark.session import get_spark  # noqa: E402
-
-_RUN_IDS = itertools.count()
+from perfbench.layers import SparkCounters, Spans  # noqa: E402
 
 
 def resolve(spec: str):
@@ -99,33 +102,36 @@ def codegen_compiles(spark) -> int:
 
 
 def _timed_run(spark, fn, sf: str, action: str) -> dict:
-    """One build + action, each phase under its own job group."""
-    sc = spark.sparkContext
-    i = next(_RUN_IDS)
-    build_group, exec_group = f"ab-build-{i}", f"ab-exec-{i}"
+    """One build + action, each phase a span of the tracer."""
+    spans = Spans(spark.sparkContext)
+    counters = SparkCounters(spark, spans)
+    counters.begin()
     try:
-        sc.setJobGroup(build_group, "ab build")
         c0 = codegen_compiles(spark)
-        t0 = time.perf_counter()
-        df = fn(spark, sf)
-        t1 = time.perf_counter()
+        with spans("build"):
+            df = fn(spark, sf)
         c1 = codegen_compiles(spark)
-        sc.setJobGroup(exec_group, "ab exec")
-        _act(df, action)
-        t2 = time.perf_counter()
+        with spans("exec"):
+            _act(df, action)
         c2 = codegen_compiles(spark)
     finally:
-        sc.setJobGroup(None, None)
+        spark.sparkContext.setJobGroup(None, None)
         spark.catalog.clearCache()
-    tracker = sc.statusTracker()
+    rec = counters.end()
+    (build_s,), (exec_s,) = spans.times["build"], spans.times["exec"]
     return {
-        "pass": round(t2 - t0, 3),
-        "build_s": round(t1 - t0, 3),
-        "exec_s": round(t2 - t1, 3),
-        "build_jobs": len(tracker.getJobIdsForGroup(build_group)),
-        "exec_jobs": len(tracker.getJobIdsForGroup(exec_group)),
+        "pass": round(build_s + exec_s, 3),
+        "build_s": round(build_s, 3),
+        "exec_s": round(exec_s, 3),
+        "build_jobs": rec["jobs_by_layer"].get("build", 0),
+        "exec_jobs": rec["jobs_by_layer"].get("exec", 0),
         "build_compiles": c1 - c0,
         "exec_compiles": c2 - c1,
+        "stages": rec["stages"],
+        "one_task_stages": rec["one_task_stages"],
+        "task_s": round(rec["task_ms"] / 1000, 3),
+        "spill_bytes": rec["spill_bytes"],
+        "shuffle_write_bytes": rec["shuffle_write_bytes"],
     }
 
 
@@ -153,8 +159,7 @@ def measure(spark, specs: list[str], n: int, sf: str, action: str) -> dict:
     for lab, rs in runs.items():
         passes = [r["pass"] for r in rs]
         out[lab] = {"min": min(passes), "passes": passes}
-        for k in ("build_s", "exec_s", "build_jobs", "exec_jobs", "build_compiles", "exec_compiles"):
-            out[lab][k] = [r[k] for r in rs]
+        out[lab].update({k: [r[k] for r in rs] for k in rs[0] if k != "pass"})
     if len(labels) == 2:
         a, b = (out[lab]["passes"] for lab in labels)
         deltas = [round(tb - ta, 3) for ta, tb in zip(a, b)]

@@ -14,6 +14,10 @@ python tools/check_oracle.py
 # legitimately rotate into the window as `no_oracle` rows.
 python tools/check_oracle.py --first 50
 python -m pytest tests/ -q
+# ab.py run as a script: its import of the benchmark's tracer
+# (perfbench/layers.py), which dump_plans.py also goes through, takes a
+# path the pytest import of tools.ab does not.
+python tools/ab.py flagship --n 1 --sf /root/testdata/sf0.001 --action noop
 # The benchmark's own fault accounting: a planted raising op and a planted
 # wrong answer must each be counted as a failed op.
 python -m pytest perfbench/test_run.py -q

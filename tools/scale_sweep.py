@@ -129,11 +129,15 @@ def main() -> None:
         sentinel = measure_sentinel(spark, args.dir)
         print(f"sentinel (lineitem scan+agg, min of 3): {sentinel:.2f}s", flush=True)
     failures, slow = [], []
+
+    def timed_count(name):
+        t0 = time.time()
+        return QUERIES[name](spark, args.dir).count(), time.time() - t0
+
     for name in names:
         t0 = time.time()
         try:
-            n = QUERIES[name](spark, args.dir).count()
-            dt = time.time() - t0
+            n, dt = timed_count(name)
             over = is_over(
                 dt,
                 abs_budget=budgets.get(name, args.budget),
@@ -147,9 +151,7 @@ def main() -> None:
                 # a real regression stays over, a contended window clears.
                 sentinel_now = max(sentinel, measure_sentinel(spark, args.dir, runs=2))
                 spark.catalog.clearCache()
-                t0 = time.time()
-                n = QUERIES[name](spark, args.dir).count()
-                dt = min(dt, time.time() - t0)
+                dt = min(dt, timed_count(name)[1])
                 over = is_over(
                     dt,
                     abs_budget=budgets.get(name, args.budget),
