@@ -85,31 +85,28 @@ class CoercionSpec:
         return XL_STR_SIZE if name in self.xl_str_cols else DEFAULT_STR_SIZE
 
 
-def coercion_columns(df: DataFrame, spec: CoercionSpec, strict: bool = False) -> list[Column]:
+def coercion_columns(df: DataFrame, spec: CoercionSpec) -> list[Column]:
     """Build the ordered projection of casts — the engine analog of the
     reference's ``orderedColumnIds`` change-set. Column order is preserved;
     only columns whose current type is string are retyped (parity with
     ``copy_from_template.py:195``).
 
-    Permissive by default (``try_cast``): a malformed cell becomes null
-    instead of failing the job — the schema-on-read contract, and the only
-    survivable behavior when one bad record hides in 100 TB. ``strict=True``
-    restores ANSI throwing casts for validation runs."""
+    Permissive (``try_cast``): a malformed cell becomes null instead of
+    failing the job — the schema-on-read contract, and the only survivable
+    behavior when one bad record hides in 100 TB."""
     out: list[Column] = []
     for f in df.schema.fields:
         tgt = spec.target_type(f.name) if isinstance(f.dataType, T.StringType) else None
         if tgt is None:
             out.append(F.col(f.name))
-        elif strict:
-            out.append(F.col(f.name).cast(tgt).alias(f.name))
         else:
             out.append(F.col(f.name).try_cast(tgt).alias(f.name))
     return out
 
 
-def apply_coercion(df: DataFrame, spec: CoercionSpec | None = None, strict: bool = False) -> DataFrame:
+def apply_coercion(df: DataFrame, spec: CoercionSpec | None = None) -> DataFrame:
     """One-pass declarative retype: ``df.select(cast, cast, ...)``."""
-    return df.select(coercion_columns(df, spec or CoercionSpec(), strict))
+    return df.select(coercion_columns(df, spec or CoercionSpec()))
 
 
 def enforce_max_size(df: DataFrame, spec: CoercionSpec | None = None) -> DataFrame:

@@ -4,8 +4,9 @@ A single sort column whose bit-interleaving preserves locality on BOTH
 input dimensions: files written in z-key order get tight min/max ranges on
 each dimension simultaneously, so parquet row-group/file skipping prunes
 on either predicate (a plain sort gives locality on the leading column
-only). This is the layout half of data skipping; the range-clustered
-single-column form is `sources/sink.py::write_clustered`.
+only). This is the layout half of data skipping: pass the key as
+``cluster_expr`` to `sources/manifest_table.py::publish_snapshot`, whose
+``n_files`` write range-clusters on it (on the table key when omitted).
 
 The key is built as one unrolled JVM expression tree (2×bits shift/and/or
 terms — whole-stage codegen compiles it; see NOTES.md lesson 2: unrolled
@@ -16,7 +17,7 @@ bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 
 def zorder_key(x: Column, y: Column, bits: int = 16) -> Column:
@@ -40,23 +41,3 @@ def zorder_sql(x: str, y: str, bits: int = 16) -> str:
         terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return " | ".join(terms)
 
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x: Column,
-    y: Column,
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Write parquet clustered on the z-curve: repartitionByRange on the
-    key gives balanced, key-disjoint files (each file owns a contiguous
-    z-range, hence a bounded rectangle union in (x, y) space)."""
-    keyed = df.withColumn("_zkey", zorder_key(x, y, bits))
-    (
-        keyed.repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

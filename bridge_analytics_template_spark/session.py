@@ -49,6 +49,14 @@ def runtime_confs(cores: int) -> dict[str, str]:
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.parquet.filterPushdown": "true",
+        # Name a whole-stage generated class without its codegen stage id.
+        # AQE numbers a query's codegen stages in the order it creates
+        # them, and that order follows which sibling stage finishes first
+        # (two scans of one cache still being built, as in the prefix-filter
+        # self-join), so an unchanged pipeline could come back under
+        # another id, as a new source that misses the class cache and
+        # compiles again. The id still shows in the plan (``*(n)``).
+        "spark.sql.codegen.useIdInClassName": "false",
     }
 
 

@@ -14,9 +14,8 @@ Layout::
     base/v=N.manifest.json           snapshot N = the member-file list with
                                      per-file row counts and key bounds
 
-Why manifests and not directories (``sources/versioning.py`` keeps the
-directory-per-version form for full-replacement publishes): a deletion that
-touches 0.1% of files must not copy the other 99.9%. A manifest snapshot
+Why manifests and not a directory per version: a deletion that touches
+0.1% of files must not copy the other 99.9%. A manifest snapshot
 references unchanged files VERBATIM — copy-on-write at file granularity,
 which is exactly the Iceberg/Delta data-file reuse contract. The commit
 point is one ``tmp + os.replace`` of the manifest (the same atomicity
@@ -27,8 +26,8 @@ fully intact; ``vacuum`` collects the orphans.
 Erasure plan at scale (``erase_rows``):
 
 1. FILE PRUNING from bounded metadata — the per-file [min, max] key bounds
-   stored in the manifest (the embedded form of ``sources/fileindex.py``'s
-   standalone bounds index) range-semi-join the tombstone keys; a file whose
+   stored in the manifest (a file-level bounds index, written with the
+   files it describes) range-semi-join the tombstone keys; a file whose
    envelope contains no tombstone is reused by reference without being
    opened. Range-clustered publishes make the bounds tight.
 2. EXACT AFFECTED SET — scan only the candidate files, semi-join the
@@ -155,10 +154,6 @@ def _commit_manifest(
 #   (erase/merge/compact) materializes the current spec.
 
 
-def _columns_of(m: dict) -> list[dict] | None:
-    return m.get("columns")
-
-
 def _spec_from_schema(schema: StructType, since: int) -> list[dict]:
     return [
         {
@@ -184,23 +179,14 @@ def _read_entries(
     spec: files are grouped by the generation they were written under (one
     group per schema_id — a handful, never per-file), each group projects
     spec columns present in its physical schema and >= their ``since``
-    generation from bytes, everything else from the column's default. A
-    manifest predating the spec machinery reads as-is."""
+    generation from bytes, everything else from the column's default."""
     files_dir = os.path.join(base, "files")
-    columns = _columns_of(m)
-    if columns is None:
-        if not entries:
-            return spark.createDataFrame(
-                [], StructType.fromJson(json.loads(m["schema"]))
-            )
-        return spark.read.parquet(
-            *(os.path.join(files_dir, e["file"]) for e in entries)
-        )
+    columns = m["columns"]
     if not entries:
         return spark.createDataFrame([], _schema_from_spec(columns))
     groups: dict[int, list[str]] = {}
     for e in entries:
-        groups.setdefault(e.get("schema_id", 1), []).append(e["file"])
+        groups.setdefault(e["schema_id"], []).append(e["file"])
     out = None
     for sid in sorted(groups):
         df = spark.read.parquet(
@@ -234,13 +220,8 @@ def evolve_schema(
     The table key cannot be dropped (pruning metadata lives on it).
     Returns the new version."""
     m = read_manifest(base)
-    columns = _columns_of(m)
-    if columns is None:
-        # upgrade a legacy manifest: current schema becomes generation 1
-        columns = _spec_from_schema(
-            StructType.fromJson(json.loads(m["schema"])), 1
-        )
-    sid = m.get("schema_id", 1) + 1
+    columns = m["columns"]
+    sid = m["schema_id"] + 1
     names = [c["name"] for c in columns]
     for d in drop or []:
         if d == m["key_col"]:
@@ -281,8 +262,12 @@ _BLOOM_MAX_BITS = 1 << 20  # cap: a saturated bloom is a harmless all-pass;
 # past ~100k rows/file the bitmap belongs in a sidecar, not the manifest
 
 
-def _next_pow2(n: int) -> int:
-    return 1 << max(0, (n - 1)).bit_length()
+def _bloom_bits(rows: int) -> int:
+    """Size of a file's bloom: ~10 bits per row rounded up to a power of
+    two, clamped to [_BLOOM_MIN_BITS, _BLOOM_MAX_BITS] — the one sizing
+    rule for the SQL build below and the connector's write-time bitmap."""
+    pow2 = 1 << max(0, 10 * rows - 1).bit_length()
+    return min(_BLOOM_MAX_BITS, max(_BLOOM_MIN_BITS, pow2))
 
 
 def _bloom_position_sql(key_sql: str, i: int, m_sql: str) -> str:
@@ -312,10 +297,7 @@ def _bloom_build(
     rows. Returns (m, {staged part basename: hex bitmap})."""
     if not rows_per_file:
         return _BLOOM_MIN_BITS, {}
-    m = min(
-        _BLOOM_MAX_BITS,
-        max(_BLOOM_MIN_BITS, _next_pow2(10 * max(rows_per_file.values()))),
-    )
+    m = _bloom_bits(max(rows_per_file.values()))
     df = spark.read.parquet(staging).select(
         F.input_file_name().alias("_f"), F.col(key_col).alias("_k")
     )
@@ -427,13 +409,12 @@ def _carry(m: dict, files: list[dict], epochs: list[str] | None = None) -> dict:
     out = {
         "key_col": m["key_col"],
         "schema": m["schema"],
+        "schema_id": m["schema_id"],
+        "columns": m["columns"],
         "files": files,
         "rows": sum(e["rows"] for e in files),
         "epochs": epochs if epochs is not None else m.get("epochs", []),
     }
-    if _columns_of(m) is not None:
-        out["schema_id"] = m.get("schema_id", 1)
-        out["columns"] = m["columns"]
     if m.get("stats_cols"):
         out["stats_cols"] = m["stats_cols"]
     return out
@@ -699,7 +680,7 @@ def erase_rows(
     survivors.write.parquet(staging)
     try:
         new_entries = _ingest_parts(
-            spark, base, staging, key, m.get("schema_id", 1),
+            spark, base, staging, key, m["schema_id"],
             m.get("stats_cols"),
         )
     finally:
@@ -726,16 +707,14 @@ def append_rows(df: DataFrame, base: str, epoch: str | None = None) -> int:
     if epoch is not None and epoch in m.get("epochs", []):
         return _versions(base)[-1]
     staging = os.path.join(base, f"_staging_{uuid.uuid4().hex}")
-    cols = _columns_of(m)
-    if cols is not None:
-        df = df.select(
-            *[F.col(c["name"]).cast(c["type"]).alias(c["name"]) for c in cols]
-        )
+    df = df.select(
+        *[F.col(c["name"]).cast(c["type"]).alias(c["name"]) for c in m["columns"]]
+    )
     df.write.parquet(staging)
     try:
         new_entries = _ingest_parts(
             df.sparkSession, base, staging, m["key_col"],
-            m.get("schema_id", 1), m.get("stats_cols"),
+            m["schema_id"], m.get("stats_cols"),
         )
     finally:
         shutil.rmtree(staging, ignore_errors=True)
@@ -854,7 +833,7 @@ def merge_rows(
     out.write.parquet(staging)
     try:
         new_entries = _ingest_parts(
-            spark, base, staging, key, m.get("schema_id", 1),
+            spark, base, staging, key, m["schema_id"],
             m.get("stats_cols"),
         )
     finally:
@@ -902,7 +881,7 @@ def compact_snapshot(
     df.repartitionByRange(n_files, F.col(m["key_col"])).write.parquet(staging)
     try:
         entries = _ingest_parts(
-            spark, base, staging, m["key_col"], m.get("schema_id", 1),
+            spark, base, staging, m["key_col"], m["schema_id"],
             m.get("stats_cols"),
         )
     finally:
@@ -912,19 +891,23 @@ def compact_snapshot(
     return v
 
 
-def retry_on_conflict(op, retries: int = 5):
+_COMMIT_ATTEMPTS = 5
+
+
+def retry_on_conflict(op):
     """Optimistic-concurrency driver: run ``op`` (a zero-arg closure over
-    one DML call — erase_rows/append_rows/merge_rows/compact_snapshot),
-    retrying on :class:`CommitConflict`. Safe because every DML function
+    one DML call — erase_rows/append_rows/merge_rows/compact_snapshot, or
+    the connector's manifest commit), retrying on :class:`CommitConflict`
+    up to ``_COMMIT_ATTEMPTS`` times. Safe because every DML function
     re-reads the CURRENT manifest at entry, so a retry replans against
     the winner's snapshot rather than replaying a stale one; a conflicted
     attempt's already-ingested parts become orphans vacuum collects (the
     same crash-orphan class the commit protocol already tolerates)."""
-    for attempt in range(retries):
+    for attempt in range(_COMMIT_ATTEMPTS):
         try:
             return op()
         except CommitConflict:
-            if attempt == retries - 1:
+            if attempt == _COMMIT_ATTEMPTS - 1:
                 raise
 
 
@@ -1034,6 +1017,32 @@ def vacuum(
     return removed
 
 
+def _pruned_entries(m: dict, ranges: dict[str, tuple]) -> list[dict]:
+    """The entries of manifest ``m`` whose recorded envelopes can
+    intersect every ``col -> (lo, hi, values)`` range: ``lo``/``hi`` may be
+    None (open side), ``values`` is None or an explicit candidate set. The
+    key column's envelope is the entry's [lo, hi] bounds, a
+    ``stats_cols`` column's its per-file stats; a column with no recorded
+    envelope never prunes (sound). Shared by ``scan_pruned`` and the
+    connector's pushed-filter partition pruning."""
+    key = m["key_col"]
+
+    def may_hold(e: dict) -> bool:
+        for c, (lo, hi, values) in ranges.items():
+            flo, fhi = (
+                (e["lo"], e["hi"]) if c == key else (e.get("stats") or {}).get(c)
+            ) or (None, None)
+            if flo is None or fhi is None:
+                continue
+            if (lo is not None and fhi < lo) or (hi is not None and flo > hi):
+                return False
+            if values is not None and not any(flo <= v <= fhi for v in values):
+                return False
+        return True
+
+    return [e for e in m["files"] if may_hold(e)]
+
+
 def scan_pruned(
     spark: SparkSession, base: str, ranges: dict[str, tuple]
 ) -> DataFrame:
@@ -1055,26 +1064,8 @@ def scan_pruned(
     prunes on either column; a single-column range clustering serves only
     its leading column."""
     m = read_manifest(base)
-    key = m["key_col"]
-    keep = []
-    for e in m["files"]:
-        ok = True
-        for c, (lo, hi) in ranges.items():
-            if c == key:
-                flo, fhi = e["lo"], e["hi"]
-            else:
-                st = (e.get("stats") or {}).get(c)
-                if st is None:
-                    continue
-                flo, fhi = st
-            if flo is None or fhi is None:
-                continue
-            if (lo is not None and fhi < lo) or (hi is not None and flo > hi):
-                ok = False
-                break
-        if ok:
-            keep.append(e)
-    return _read_entries(spark, base, m, keep)
+    ranges = {c: (lo, hi, None) for c, (lo, hi) in ranges.items()}
+    return _read_entries(spark, base, m, _pruned_entries(m, ranges))
 
 
 def table_history(spark: SparkSession, base: str) -> DataFrame:
@@ -1092,7 +1083,7 @@ def table_history(spark: SparkSession, base: str) -> DataFrame:
                 m.get("committed_at"),
                 m["rows"],
                 len(m["files"]),
-                m.get("schema_id", 1),
+                m["schema_id"],
             )
         )
     return spark.createDataFrame(

@@ -20,7 +20,6 @@ def write_partitioned(
     df: DataFrame,
     base_path: str,
     partition_cols: tuple[str, ...] = ("app", "study"),
-    mode: str = "overwrite",
     dynamic_overwrite: bool = False,
 ) -> str:
     """Write ``df`` under ``base_path`` partitioned by the layout columns
@@ -30,7 +29,7 @@ def write_partitioned(
     ``df`` (partitionOverwriteMode=dynamic) — the multi-study semantics:
     re-provisioning one study must not wipe its siblings under the shared
     bucket."""
-    writer = df.write.mode(mode).partitionBy(*partition_cols)
+    writer = df.write.mode("overwrite").partitionBy(*partition_cols)
     if dynamic_overwrite:
         writer = writer.option("partitionOverwriteMode", "dynamic")
     writer.parquet(base_path)
@@ -79,25 +78,3 @@ def read_partitioned(spark: SparkSession, base_path: str) -> DataFrame:
         return spark.read.option("mergeSchema", "true").parquet(base_path)
     return spark.read.parquet(base_path)
 
-
-def write_clustered(
-    df: DataFrame,
-    base_path: str,
-    cluster_cols: tuple[str, ...],
-    num_files: int = 8,
-    mode: str = "overwrite",
-) -> str:
-    """Range-clustered layout: ``repartitionByRange`` splits the key space
-    into ``num_files`` contiguous ranges and ``sortWithinPartitions`` orders
-    rows inside each file. Every output file then covers a disjoint key
-    range, so parquet row-group min/max statistics skip whole files for
-    point/range predicates on the cluster key — the complement of directory
-    partitioning for high-cardinality keys (where one directory per value
-    would explode the namespace)."""
-    (
-        df.repartitionByRange(num_files, *cluster_cols)
-        .sortWithinPartitions(*cluster_cols)
-        .write.mode(mode)
-        .parquet(base_path)
-    )
-    return base_path

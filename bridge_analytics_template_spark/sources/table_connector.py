@@ -36,7 +36,6 @@ surface, priced accordingly and tested value-identical.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -58,7 +57,7 @@ from pyspark.sql.datasource import (
 )
 
 from .manifest_table import (
-    _columns_of,
+    _pruned_entries,
     _spec_from_schema,
     _versions,
     read_manifest,
@@ -83,55 +82,23 @@ def _resolve_manifest(options: dict) -> tuple[str, dict]:
     return base, read_manifest(base, version)
 
 
-def _spec_of(m: dict) -> list[dict]:
-    cols = _columns_of(m)
-    if cols is not None:
-        return cols
-    from pyspark.sql.types import StructType
-
-    return _spec_from_schema(StructType.fromJson(json.loads(m["schema"])), 1)
-
-
 @dataclass
 class _FilePartition(InputPartition):
     path: str
     schema_id: int
 
 
-class _Bound:
-    """Conjunctive [lo, hi] interval accumulated from pushed filters for
-    one column (None = open side)."""
-
-    def __init__(self):
-        self.lo = None
-        self.hi = None
-        self.in_values = None  # tightest: an explicit candidate set
-
-    def narrow_lo(self, v):
-        self.lo = v if self.lo is None else max(self.lo, v)
-
-    def narrow_hi(self, v):
-        self.hi = v if self.hi is None else min(self.hi, v)
-
-    def may_intersect(self, flo, fhi) -> bool:
-        if flo is None or fhi is None:
-            return True  # no recorded envelope -> cannot prune
-        if self.in_values is not None and not any(
-            flo <= v <= fhi for v in self.in_values
-        ):
-            return False
-        if self.lo is not None and fhi < self.lo:
-            return False
-        if self.hi is not None and flo > self.hi:
-            return False
-        return True
+def _narrow(a, b, pick):
+    return b if a is None else pick(a, b)
 
 
 class _ManifestReader(DataSourceReader):
     def __init__(self, options: dict):
         self._base, self._manifest = _resolve_manifest(options)
-        self._spec = _spec_of(self._manifest)
-        self._bounds: dict[str, _Bound] = {}
+        self._spec = self._manifest["columns"]
+        # col -> conjunctive (lo, hi, values) accumulated from pushed
+        # filters (None = open side / no explicit candidate set)
+        self._ranges: dict[str, tuple] = {}
 
     def pushFilters(self, filters):
         """Remember prunable predicates; return EVERY filter as
@@ -144,47 +111,30 @@ class _ManifestReader(DataSourceReader):
             col = col[0] if isinstance(col, tuple) and len(col) == 1 else None
             if col != key and col not in statted:
                 continue
-            b = self._bounds.setdefault(col, _Bound())
+            lo, hi, values = self._ranges.get(col, (None, None, None))
             if isinstance(f, EqualTo):
-                b.narrow_lo(f.value)
-                b.narrow_hi(f.value)
+                lo, hi = _narrow(lo, f.value, max), _narrow(hi, f.value, min)
             elif isinstance(f, In):
                 vs = [v for v in f.value if v is not None]
                 if vs:
-                    b.in_values = (
-                        vs
-                        if b.in_values is None
-                        else [v for v in b.in_values if v in set(vs)]
-                    )
-                    b.narrow_lo(min(vs))
-                    b.narrow_hi(max(vs))
-            elif isinstance(f, GreaterThan) or isinstance(f, GreaterThanOrEqual):
-                b.narrow_lo(f.value)
-            elif isinstance(f, LessThan) or isinstance(f, LessThanOrEqual):
-                b.narrow_hi(f.value)
+                    values = [
+                        v for v in (vs if values is None else values) if v in set(vs)
+                    ]
+                    lo, hi = _narrow(lo, min(vs), max), _narrow(hi, max(vs), min)
+            elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
+                lo = _narrow(lo, f.value, max)
+            elif isinstance(f, (LessThan, LessThanOrEqual)):
+                hi = _narrow(hi, f.value, min)
+            self._ranges[col] = (lo, hi, values)
         return filters  # all re-applied by Spark post-scan
 
     def partitions(self):
-        key = self._manifest["key_col"]
-        out = []
-        for e in self._manifest["files"]:
-            keep = True
-            for col, b in self._bounds.items():
-                if col == key:
-                    flo, fhi = e["lo"], e["hi"]
-                else:
-                    st = (e.get("stats") or {}).get(col)
-                    flo, fhi = (st[0], st[1]) if st else (None, None)
-                if not b.may_intersect(flo, fhi):
-                    keep = False
-                    break
-            if keep:
-                out.append(
-                    _FilePartition(
-                        os.path.join(self._base, "files", e["file"]),
-                        e.get("schema_id", 1),
-                    )
-                )
+        out = [
+            _FilePartition(
+                os.path.join(self._base, "files", e["file"]), e["schema_id"]
+            )
+            for e in _pruned_entries(self._manifest, self._ranges)
+        ]
         # zero surviving files: Spark requires >= 1 partition; emit one
         # sentinel whose read yields nothing
         return out or [_FilePartition("", 1)]
@@ -261,7 +211,8 @@ def _arrow_type(spark_type: str):
 #      files/ and CAS-commits the next manifest version — append unions with
 #      the current file list, overwrite replaces it; an ``epoch`` option makes
 #      the append idempotent under replay (retried batches no-op), and a lost
-#      CAS race re-reads and retries against the new head. ``abort`` removes
+#      CAS race re-reads and retries against the new head (the library's
+#      ``retry_on_conflict``). ``abort`` removes
 #      the staging dir; files moved by a crashed commit stay invisible
 #      (nothing references them until the manifest lands) and are vacuum's
 #      business — identical orphan semantics to the library write paths.
@@ -302,9 +253,9 @@ def _bloom_bitmap(keys, key_type: str) -> tuple[str | None, int | None]:
     }.get(key_type)
     if hasher is None:
         return None, None  # no bloom -> file always MIGHT match (back-compat)
-    from .manifest_table import _BLOOM_K, _BLOOM_MAX_BITS, _BLOOM_MIN_BITS, _next_pow2
+    from .manifest_table import _BLOOM_K, _bloom_bits
 
-    m = min(_BLOOM_MAX_BITS, max(_BLOOM_MIN_BITS, _next_pow2(10 * len(keys))))
+    m = _bloom_bits(len(keys))
     buf = bytearray(m // 8)
     for k in keys:
         # a NULL child leaves the running seed unchanged in Spark's hash
@@ -325,8 +276,8 @@ class _ManifestWriter(DataSourceArrowWriter):
         if _versions(self._base):
             m = read_manifest(self._base)
             self._key = m["key_col"]
-            self._spec = _spec_of(m)
-            self._schema_id = m.get("schema_id", 1)
+            self._spec = m["columns"]
+            self._schema_id = m["schema_id"]
             self._stats_cols = m.get("stats_cols") or []
         else:
             key = options.get("key")
@@ -396,7 +347,7 @@ class _ManifestWriter(DataSourceArrowWriter):
         shutil.rmtree(self._staging, ignore_errors=True)
 
     def _commit(self, msgs: list[_WriteMessage]) -> None:
-        from .manifest_table import CommitConflict, _carry, _commit_manifest
+        from .manifest_table import _carry, _commit_manifest, retry_on_conflict
 
         files_dir = os.path.join(self._base, "files")
         os.makedirs(files_dir, exist_ok=True)
@@ -419,43 +370,40 @@ class _ManifestWriter(DataSourceArrowWriter):
                 e["stats"] = msg.stats
             entries.append(e)
 
-        last_conflict = None
-        for _ in range(5):  # CAS retry loop: entries are final, only the
-            vs = _versions(self._base)  # manifest race re-resolves
-            try:
-                if not vs:
-                    manifest = {
-                        "key_col": self._key,
-                        "schema": self._schema_json,
-                        "schema_id": 1,
-                        "columns": self._spec,
-                        "files": entries,
-                        "rows": sum(e["rows"] for e in entries),
-                        "epochs": [self._epoch] if self._epoch else [],
-                    }
-                    if self._stats_cols:
-                        manifest["stats_cols"] = self._stats_cols
-                    _commit_manifest(self._base, 1, manifest, op="publish")
-                    return
-                m = read_manifest(self._base)
-                if self._epoch and self._epoch in m.get("epochs", []):
-                    # replayed micro-batch: exactly-once means OUR files must
-                    # not land twice — drop them, keep the recorded commit
-                    for e in entries:
-                        os.remove(os.path.join(files_dir, e["file"]))
-                    return
-                files = entries if self._overwrite else m["files"] + entries
-                epochs = m.get("epochs", []) + ([self._epoch] if self._epoch else [])
-                _commit_manifest(
-                    self._base,
-                    vs[-1] + 1,
-                    _carry(m, files, epochs),
-                    op="overwrite" if self._overwrite else "append",
-                )
+        def attempt() -> None:
+            # entries are final; only the manifest race re-resolves
+            vs = _versions(self._base)
+            if not vs:
+                manifest = {
+                    "key_col": self._key,
+                    "schema": self._schema_json,
+                    "schema_id": 1,
+                    "columns": self._spec,
+                    "files": entries,
+                    "rows": sum(e["rows"] for e in entries),
+                    "epochs": [self._epoch] if self._epoch else [],
+                }
+                if self._stats_cols:
+                    manifest["stats_cols"] = self._stats_cols
+                _commit_manifest(self._base, 1, manifest, op="publish")
                 return
-            except CommitConflict as ex:
-                last_conflict = ex
-        raise last_conflict
+            m = read_manifest(self._base)
+            if self._epoch and self._epoch in m.get("epochs", []):
+                # replayed micro-batch: exactly-once means OUR files must
+                # not land twice — drop them, keep the recorded commit
+                for e in entries:
+                    os.remove(os.path.join(files_dir, e["file"]))
+                return
+            files = entries if self._overwrite else m["files"] + entries
+            epochs = m.get("epochs", []) + ([self._epoch] if self._epoch else [])
+            _commit_manifest(
+                self._base,
+                vs[-1] + 1,
+                _carry(m, files, epochs),
+                op="overwrite" if self._overwrite else "append",
+            )
+
+        retry_on_conflict(attempt)
 
 
 class ManifestTableDataSource(DataSource):
@@ -465,7 +413,7 @@ class ManifestTableDataSource(DataSource):
 
     def schema(self) -> str:
         _, m = _resolve_manifest(self.options)
-        return ", ".join(f"`{c['name']}` {c['type']}" for c in _spec_of(m))
+        return ", ".join(f"`{c['name']}` {c['type']}" for c in m["columns"])
 
     def reader(self, schema) -> DataSourceReader:
         return _ManifestReader(dict(self.options))
@@ -513,7 +461,7 @@ class _CDFStreamReader(SimpleDataSourceStreamReader):
         # DataSource.schema()); every span reconciles to it — old-version
         # files project later-added columns as their defaults through the
         # generation rule, so row width always matches the source schema
-        self._fixed_spec = _spec_of(read_manifest(base))
+        self._fixed_spec = read_manifest(base)["columns"]
 
     def initialOffset(self):
         return {"v": self._start}
@@ -543,7 +491,7 @@ class _CDFStreamReader(SimpleDataSourceStreamReader):
                 t = _reconciled_table(
                     os.path.join(self._base, "files", e["file"]),
                     spec,
-                    e.get("schema_id", 1),
+                    e["schema_id"],
                 )
                 for row in zip(*(t.column(i).to_pylist() for i in range(t.num_columns))):
                     c[row] += 1
@@ -586,7 +534,7 @@ class ManifestTableChangesDataSource(DataSource):
     def schema(self) -> str:
         base = self.options["path"]
         m = read_manifest(base)
-        cols = ", ".join(f"`{c['name']}` {c['type']}" for c in _spec_of(m))
+        cols = ", ".join(f"`{c['name']}` {c['type']}" for c in m["columns"])
         return f"{cols}, `_change_type` string"
 
     def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:

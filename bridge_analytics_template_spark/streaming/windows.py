@@ -272,8 +272,7 @@ def run_incremental_rollup(
     — both associative — so batch boundaries never change the result; at
     scale the merge join is keyed on user_id and the rollup stays
     |users|-sized regardless of stream volume. Atomic swap via temp dir +
-    rename keeps readers consistent (same recipe as
-    sources/maintenance.py::compact_parquet)."""
+    rename keeps readers consistent."""
     import shutil
 
     from pyspark.sql import functions as F

@@ -44,6 +44,10 @@ def test_snapshot_isolation_and_erase(spark, sf_dir, tmp_path):
     assert _ids(survivors) == want
     # time travel: v1 unchanged
     assert _ids(read_snapshot(spark, base, 1)) == before
+    # an unpinned read is the latest snapshot; a missing pin raises
+    assert _ids(read_snapshot(spark, base)) == want
+    with pytest.raises(FileNotFoundError):
+        read_snapshot(spark, base, 7)
 
 
 def test_cow_file_reuse_and_bounds_pruning(spark, sf_dir, tmp_path):
@@ -693,6 +697,12 @@ def test_zorder_stats_prune_both_dimensions(spark, sf_dir, tmp_path):
         )
         assert got == want
 
+    # a range no file's envelope reaches selects zero files and still
+    # returns the table's schema
+    none = scan_pruned(spark, zbase, {"user_id": (mu + 1, None)})
+    assert none.count() == 0
+    assert none.schema == read_snapshot(spark, zbase).schema
+
 
 def test_history_ops_and_timestamp_time_travel(spark, tmp_path):
     """Every commit is stamped with its operation kind and wall-clock;
@@ -1080,6 +1090,7 @@ def test_evolve_preserves_stats_cols(spark, tmp_path):
     publish_snapshot(df, base, "k", n_files=4, stats_cols=["v", "w"])
     evolve_schema(base, add=[("tag", "string", "L")])
     assert read_manifest(base)["stats_cols"] == ["v", "w"]
+    before = read_manifest(base)["files"]
     append_rows(
         spark.range(1000, 1100).selectExpr(
             "id AS k", "id * 2 AS v", "id % 7 AS w", "'N' AS tag"
@@ -1091,6 +1102,15 @@ def test_evolve_preserves_stats_cols(spark, tmp_path):
         e for e in read_manifest(base)["files"] if e.get("stats")
     ]
     assert all("v" in e["stats"] for e in new_entries)
+    # the append stats only its own files: existing entries are carried
+    # verbatim, and each new envelope equals one rebuilt from its bytes
+    after = read_manifest(base)["files"]
+    assert after[: len(before)] == before and len(after) > len(before)
+    for e in after[len(before):]:
+        lo, hi = spark.read.parquet(os.path.join(base, "files", e["file"])).agg(
+            F.min("v"), F.max("v")
+        ).first()
+        assert e["stats"]["v"] == [lo, hi]
     # dropping a stats column removes just that envelope declaration
     evolve_schema(base, drop=["w"])
     assert read_manifest(base)["stats_cols"] == ["v"]

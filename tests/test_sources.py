@@ -64,63 +64,27 @@ def test_partitioned_sink_layout(spark, sf_dir):
 
 
 def test_clustered_layout_disjoint_file_ranges(spark, sf_dir, tmp_path):
-    import glob
-
     from bridge_analytics_template_spark.catalog import load
-    from bridge_analytics_template_spark.sources.sink import write_clustered
+    from bridge_analytics_template_spark.sources.manifest_table import (
+        publish_snapshot,
+        read_snapshot,
+    )
 
     path = str(tmp_path / "clustered")
     o = load(spark, sf_dir, "orders")
-    write_clustered(o, path, ("o_orderkey",), num_files=4)
-    files = sorted(glob.glob(f"{path}/part-*.parquet"))
-    assert len(files) >= 2
-    ranges = []
-    for f in files:
-        r = spark.read.parquet(f).agg(
-            F.min("o_orderkey").alias("lo"), F.max("o_orderkey").alias("hi")
-        ).collect()[0]
-        if r["lo"] is not None:
-            ranges.append((r["lo"], r["hi"]))
-    ranges.sort()
+    publish_snapshot(o, path, "o_orderkey", n_files=4)
+    snap = read_snapshot(spark, path)
+    ranges = sorted(
+        (r["lo"], r["hi"])
+        for r in snap.groupBy(F.input_file_name())
+        .agg(F.min("o_orderkey").alias("lo"), F.max("o_orderkey").alias("hi"))
+        .collect()
+    )
+    assert len(ranges) >= 2
     for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
         assert hi_prev <= lo_next  # disjoint key ranges -> min/max file skipping
     # round-trip completeness
-    assert spark.read.parquet(path).count() == o.count()
-
-
-def test_compaction_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
-    import glob
-
-    from bridge_analytics_template_spark.catalog import load
-    from bridge_analytics_template_spark.sources.maintenance import compact_parquet
-
-    path = str(tmp_path / "many_small")
-    o = load(spark, sf_dir, "orders")
-    o.repartition(32).write.parquet(path)
-    before_files = len(glob.glob(f"{path}/part-*.parquet"))
-    n_rows = o.count()
-    compact_parquet(spark, path, target_file_bytes=64 << 20)
-    after_files = len(glob.glob(f"{path}/part-*.parquet"))
-    assert before_files == 32 and after_files < before_files
-    assert spark.read.parquet(path).count() == n_rows
-
-
-def test_versioned_snapshots_pin_and_latest(spark, sf_dir, tmp_path):
-    import pytest
-
-    from bridge_analytics_template_spark.catalog import load
-    from bridge_analytics_template_spark.sources.versioning import read_version, write_version
-
-    base = str(tmp_path / "snapshots")
-    n = load(spark, sf_dir, "nation")
-    v1 = write_version(n, base)
-    v2 = write_version(n.limit(10), base)
-    assert (v1, v2) == (1, 2)
-    assert read_version(spark, base, 1).count() == n.count()
-    assert read_version(spark, base, 2).count() == 10
-    assert read_version(spark, base).count() == 10  # latest
-    with pytest.raises(FileNotFoundError):
-        read_version(spark, base, 7)
+    assert snap.count() == o.count()
 
 
 def test_observed_sink_reports_write_metrics(spark, sf_dir, tmp_path):
@@ -133,27 +97,6 @@ def test_observed_sink_reports_write_metrics(spark, sf_dir, tmp_path):
     metrics = write_partitioned_observed(o, str(tmp_path / "obs"))
     assert metrics["rows_written"] == o.count()
     assert metrics["n_study"] == 3
-
-
-def test_snapshot_diff_classifies_changes(spark, sf_dir, tmp_path):
-    from bridge_analytics_template_spark.catalog import load
-    from bridge_analytics_template_spark.sources.versioning import snapshot_diff, write_version
-
-    base = str(tmp_path / "diffsnap")
-    n = load(spark, sf_dir, "nation")
-    write_version(n, base)  # v1: all 25 nations
-    v2 = (
-        n.filter(F.col("n_nationkey") != 0)  # delete key 0
-        .withColumn(  # update key 1's name
-            "n_name", F.when(F.col("n_nationkey") == 1, F.lit("RENAMED")).otherwise(F.col("n_name"))
-        )
-        .unionByName(  # insert key 99
-            spark.createDataFrame([(99, "NEWLAND", 0)], "n_nationkey int, n_name string, n_regionkey int")
-        )
-    )
-    write_version(v2, base)
-    changes = {r["n_nationkey"]: r["change"] for r in snapshot_diff(spark, base, 1, 2, ["n_nationkey"]).collect()}
-    assert changes == {0: "delete", 1: "update", 99: "insert"}
 
 
 def test_python_stream_datasource_matches_batch(spark):
@@ -212,65 +155,6 @@ def test_wholetext_reader_one_row_per_file(spark, tmp_path):
     assert sorted(r.value for r in whole.collect()) == ["line one\nline two\n", "solo"]
     lines = read_text_files(spark, str(tmp_path))
     assert sorted(r.value for r in lines.collect()) == ["line one", "line two", "solo"]
-
-
-def test_file_index_prunes_scan_and_preserves_results(spark, sf_dir, tmp_path):
-    """Manifest pruning: a range-clustered write gives tight per-file
-    bounds; a narrow range query reads a strict subset of files yet returns
-    exactly the full-scan answer; a disjoint range reads zero files."""
-    from bridge_analytics_template_spark.catalog import load
-    from bridge_analytics_template_spark.sources.fileindex import (
-        build_file_index,
-        prune_files,
-        pruned_read,
-    )
-
-    path = str(tmp_path / "orders_rc")
-    load(spark, sf_dir, "orders").repartitionByRange(8, "o_totalprice").write.parquet(path)
-    idx = build_file_index(spark, path, ["o_totalprice"])
-    n_files = idx.count()
-    assert n_files == 8
-
-    lo, hi = 1000.0, 2000.0
-    picked = prune_files(idx, {"o_totalprice": (lo, hi)})
-    assert 0 < len(picked) < n_files  # pruning actually happened
-
-    got = pruned_read(spark, idx, {"o_totalprice": (lo, hi)}, path)
-    want = (
-        spark.read.parquet(path)
-        .filter((F.col("o_totalprice") >= lo) & (F.col("o_totalprice") <= hi))
-    )
-    assert got.count() == want.count()
-    assert got.subtract(want).count() == 0 and want.subtract(got).count() == 0
-
-    # disjoint range: zero files selected, empty result, full schema kept
-    none = pruned_read(spark, idx, {"o_totalprice": (1e12, None)}, path)
-    assert none.count() == 0
-    assert none.schema == spark.read.parquet(path).schema
-
-
-def test_file_index_incremental_update(spark, sf_dir, tmp_path):
-    """Appending files and updating the manifest indexes ONLY the new
-    files; the updated manifest equals a from-scratch rebuild."""
-    from bridge_analytics_template_spark.catalog import load
-    from bridge_analytics_template_spark.sources.fileindex import (
-        build_file_index,
-        update_file_index,
-    )
-
-    path = str(tmp_path / "orders_inc")
-    o = load(spark, sf_dir, "orders")
-    o.filter(F.col("o_orderkey") % 2 == 0).repartitionByRange(4, "o_totalprice").write.parquet(path)
-    idx0 = build_file_index(spark, path, ["o_totalprice"]).persist()
-    assert idx0.count() == 4
-    o.filter(F.col("o_orderkey") % 2 == 1).repartitionByRange(3, "o_totalprice").write.mode(
-        "append"
-    ).parquet(path)
-    idx1 = update_file_index(spark, idx0, path, ["o_totalprice"])
-    rebuilt = build_file_index(spark, path, ["o_totalprice"])
-    assert idx1.count() == 7
-    assert idx1.subtract(rebuilt).count() == 0 and rebuilt.subtract(idx1).count() == 0
-    idx0.unpersist()
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path):

@@ -356,6 +356,75 @@ def test_native_writer_abort_leaves_table_intact(spark, tmp_path):
     assert not [d for d in os.listdir(base) if d.startswith("_staging_")]
 
 
+def test_native_writer_survives_lost_cas_race(spark, tmp_path):
+    """A rival commit lands the version the connector's append was about
+    to commit (injected once, as in test_commit_conflict_cas). The append
+    loses the CAS, re-reads the head and commits on top of it: its rows
+    land exactly once, the rival's commit survives, and the staging dir
+    is gone. Spark runs a Python writer's commit in a worker process, so
+    the race is injected by a test-local writer subclass, which travels
+    to that worker by value."""
+    import os
+    import uuid
+    from collections import Counter
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import bridge_analytics_template_spark.sources.manifest_table as mt
+
+    base = str(tmp_path / "race")
+    publish_snapshot(spark.range(0, 10).selectExpr("id AS k", "id AS v"), base, "k")
+    rival_file = "part-rival.parquet"
+    pq.write_table(
+        pa.table({"k": pa.array([100], pa.int64()), "v": pa.array([1], pa.int64())}),
+        os.path.join(base, "files", rival_file),
+    )
+    rival = {"file": rival_file, "rows": 1, "lo": 100, "hi": 100,
+             "bloom": None, "bloom_m": None, "schema_id": 1}
+
+    class RacedWriter(tc._ManifestWriter):
+        def commit(self, messages):
+            real = mt._commit_manifest
+            raced = []
+
+            def racing(b, version, manifest, op="commit"):
+                if not raced:  # the rival wins the first attempt only
+                    raced.append(version)
+                    head = mt.read_manifest(b)
+                    real(b, version, mt._carry(head, head["files"] + [rival]), "rival")
+                real(b, version, manifest, op)
+
+            mt._commit_manifest = racing
+            try:
+                tc._ManifestWriter.commit(self, messages)
+            finally:
+                mt._commit_manifest = real
+
+    # a format name of its own: a registered name cannot be replaced
+    name = f"manifest_table_raced_{uuid.uuid4().hex[:8]}"
+
+    class RacedSource(tc.ManifestTableDataSource):
+        @classmethod
+        def name(cls):
+            return name
+
+        def writer(self, schema, overwrite):
+            return RacedWriter(dict(self.options), schema, overwrite)
+
+    spark.dataSource.register(RacedSource)
+    spark.range(200, 205).selectExpr("id AS k", "id AS v").write.format(
+        name
+    ).mode("append").save(base)
+
+    assert read_manifest(base, 2)["op"] == "rival"
+    m = read_manifest(base)
+    assert m["op"] == "append" and m["rows"] == 16
+    got = Counter(r["k"] for r in read_snapshot(spark, base).collect())
+    assert got == Counter([*range(10), 100, *range(200, 205)])
+    assert not [d for d in os.listdir(base) if d.startswith("_staging_")]
+
+
 def test_cdf_every_batching_rebuilds_head(spark, tmp_path):
     """CDF apply-feed invariant, exhaustively over BATCHINGS: for EVERY
     composition of the version range [0..head] into contiguous spans —

@@ -11,9 +11,10 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from bridge_analytics_template_spark.operators.zorder import (
-    write_zordered,
-    zorder_key,
+from bridge_analytics_template_spark.operators.zorder import zorder_key
+from bridge_analytics_template_spark.sources.manifest_table import (
+    publish_snapshot,
+    read_manifest,
 )
 
 
@@ -40,11 +41,13 @@ def test_zordered_files_bound_both_dims(spark, tmp_path):
     rows = [(x, y) for x in range(64) for y in range(64)]
     df = spark.createDataFrame(rows, "x long, y long")
     path = str(tmp_path / "zorder")
-    write_zordered(df, path, F.col("x"), F.col("y"), n_files=16, bits=6)
-    files = glob.glob(f"{path}/part-*.parquet")
+    publish_snapshot(
+        df, path, "x", n_files=16, cluster_expr=zorder_key(F.col("x"), F.col("y"), bits=6)
+    )
+    files = read_manifest(path)["files"]
     assert len(files) == 16
-    for f in files:
-        pdf = pd.read_parquet(f)
+    for e in files:
+        pdf = pd.read_parquet(f"{path}/files/{e['file']}")
         assert pdf["x"].max() - pdf["x"].min() <= 16
         assert pdf["y"].max() - pdf["y"].min() <= 16
 

@@ -13,7 +13,9 @@ python tools/check_oracle.py
 # (approx/ANN/iterative, each with an oracled twin or accuracy pin)
 # legitimately rotate into the window as `no_oracle` rows.
 python tools/check_oracle.py --first 50
-python -m pytest tests/ -q
+# The tier-1 suite under the same wall-clock bound as ROADMAP.md's Tier-1
+# verify command, so CI fails where that gate would.
+timeout -k 10 2670 python -m pytest tests/ -q
 # ab.py run as a script: its import of the benchmark's tracer
 # (perfbench/layers.py), which dump_plans.py also goes through, takes a
 # path the pytest import of tools.ab does not.
